@@ -121,6 +121,23 @@ def binary_from_segments(data: np.ndarray, seg_bytes: np.ndarray):
     )
 
 
+def binary_stream(arr) -> tuple[np.ndarray, np.ndarray]:
+    """Inverse of ``binary_from_segments``: a pa.binary array (or a
+    one-chunk ChunkedArray) → (its values back to back as a uint8 view,
+    int64 offsets of each value into that stream, length n+1, from 0).
+    Zero-copy; honours the array's slice offset."""
+    if hasattr(arr, "chunks"):
+        arr = arr.chunk(0)
+    bufs = arr.buffers()
+    offs = np.frombuffer(bufs[1], dtype=np.int32)[
+        arr.offset : arr.offset + len(arr) + 1
+    ].astype(np.int64)
+    if bufs[2] is None:
+        return np.empty(0, dtype=np.uint8), offs - offs[0]
+    data = np.frombuffer(bufs[2], dtype=np.uint8)[offs[0] : offs[-1]]
+    return data, offs - offs[0]
+
+
 def positions_encode(
     flat_pos: np.ndarray, counts: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:

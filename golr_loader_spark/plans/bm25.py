@@ -40,6 +40,7 @@ from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.functions.codec import varint_decode
 from golr_loader_spark.functions.tokenize import analyze_query
 from golr_loader_spark.plans.build_index import InvertedIndex
+from golr_loader_spark.plans.tombstones import DEAD_EVERYWHERE
 
 
 def bm25_idf(n_docs: int, df: int) -> float:
@@ -163,9 +164,6 @@ def score_exact(
 # ------------------------------------------------------------ block-max
 
 
-_DEAD_EVERYWHERE = np.iinfo(np.int64).max
-
-
 def _norm_excl(exclude_ids):
     """Normalize an exclusion spec to ``(ids sorted asc, dead_below)``
     or None. Three accepted shapes:
@@ -203,7 +201,7 @@ def _norm_excl(exclude_ids):
     arr = np.unique(np.asarray(exclude_ids, dtype=np.int64))
     if not len(arr):
         return None
-    return arr, np.full(len(arr), _DEAD_EVERYWHERE, dtype=np.int64)
+    return arr, np.full(len(arr), DEAD_EVERYWHERE, dtype=np.int64)
 
 
 def broadcast_excl(spark, exclude_ids):

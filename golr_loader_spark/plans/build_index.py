@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.functions.codec import (
     binary_from_segments as _binary_from_segments,
+    binary_stream as _binary_stream,
     varint_encode_with_sizes,
 )
 from golr_loader_spark.functions.tokenize import tokenize
@@ -232,16 +233,7 @@ def _encode_batches(cfg: IndexConfig) -> "callable":
             if rb.num_columns > 5:
                 # positional: flat byte stream + per-row sizes straight
                 # from the Arrow binary buffers (no per-row objects)
-                pcol = rb.column(5)
-                pbufs = pcol.buffers()
-                poffs = np.frombuffer(pbufs[1], dtype=np.int32)[
-                    pcol.offset : pcol.offset + len(pcol) + 1
-                ].astype(np.int64)
-                pdata = (
-                    np.frombuffer(pbufs[2], dtype=np.uint8)
-                    if pbufs[2] is not None
-                    else np.empty(0, dtype=np.uint8)
-                )
+                pdata, poffs = _binary_stream(rb.column(5))
                 psizes = np.diff(poffs)
             else:
                 poffs = pdata = psizes = None
@@ -578,6 +570,36 @@ def _sort_token_batches(
 _SPILL_BUCKETS = 16
 
 
+def _spill_targets(b: pa.RecordBatch, shift: np.int64) -> np.ndarray:
+    """Spill sub-bucket of each token row, from its whole (term, fcode,
+    bucket) group key: a hot term's rows spread over its doc-id
+    buckets instead of piling into one sub-bucket. Vocab-level term
+    hashing (same pattern as _pack_batches): the per-row cost is one
+    integer gather and one splitmix64 round, not a per-row crc32.
+
+    The key is salted differently from `_pack_batches`' partition key:
+    the rows of one reduce partition all share that key modulo the
+    partition count, so reusing it could send them to one sub-bucket."""
+    from zlib import crc32
+
+    d = pa.compute.dictionary_encode(b.column(0))
+    codes = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    vh = np.fromiter(
+        (crc32(t.encode()) for t in d.dictionary.to_pylist()),
+        dtype=np.uint64, count=len(d.dictionary),
+    )
+    fcodes = b.column(1).to_numpy(zero_copy_only=False).astype(np.uint64)
+    buckets = np.right_shift(
+        b.column(2).to_numpy(zero_copy_only=False).astype(np.int64), shift
+    ).astype(np.uint64)
+    key = _mix64(
+        vh[codes]
+        ^ (fcodes * np.uint64(0x9E3779B97F4A7C15))
+        ^ (buckets * np.uint64(0xBF58476D1CE4E5B9))
+    )
+    return (key % np.uint64(_SPILL_BUCKETS)).astype(np.int64)
+
+
 def _unpack_encode(cfg: IndexConfig, spill_bytes: int = 0) -> "callable":
     """mapInArrow stage: (pid, blob) rows of one reduce partition →
     postings blocks. Deserializes the blobs, sorts with ONE numpy
@@ -586,41 +608,39 @@ def _unpack_encode(cfg: IndexConfig, spill_bytes: int = 0) -> "callable":
 
     **Bounded memory (external-bucket spill).** When the partition's
     buffered token bytes exceed ``spill_bytes`` (>0), rows are routed
-    into ``_SPILL_BUCKETS`` term-hash sub-bucket files on local disk
-    (Arrow IPC streams). A term's rows always share a sub-bucket, so
-    sub-buckets partition the (term, fcode, bucket) group space —
-    and since block content never depends on the order of distinct
-    groups within a reduce partition, sorting + encoding the
-    sub-buckets ONE AT A TIME yields the byte-identical block table
-    with peak memory ~ partition/``_SPILL_BUCKETS`` instead of the
-    whole partition (the packed analog of the flat path's Tungsten
-    spill; parity gated by tests/test_packed_spill.py)."""
+    into ``_SPILL_BUCKETS`` sub-bucket files on local disk (Arrow IPC
+    streams) by a hash of their (term, fcode, bucket) group key
+    (`_spill_targets`). A group's rows always share a sub-bucket, so
+    sub-buckets partition the group space — and since block content
+    never depends on the order of distinct groups within a reduce
+    partition, sorting + encoding the sub-buckets ONE AT A TIME yields
+    the byte-identical block table with peak memory ~ partition/
+    ``_SPILL_BUCKETS`` instead of the whole partition (the packed
+    analog of the flat path's Tungsten spill; parity gated by
+    tests/test_packed_spill.py). The bound is the largest sub-bucket;
+    a hot term no longer sets it alone, because its rows spread over
+    its ``2**bucket_bits`` doc-id buckets. Spill files are closed and
+    removed however the task ends."""
     schema = _token_arrow_schema(cfg)
     encode = _encode_batches(cfg)
+    shift = np.int64(max(0, cfg.id_space_bits - cfg.bucket_bits))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import contextlib
         import os
         import shutil
         import tempfile
-        from zlib import crc32
 
         parts: list[pa.RecordBatch] = []
         nbytes = 0
         spill_dir: str | None = None
         writers: list = []
-        files: list = []
+        # owns every spill writer and file: closed before the read-back,
+        # and in `finally` however the task ends
+        spill = contextlib.ExitStack()
 
         def _route(b: pa.RecordBatch) -> None:
-            # vocab-level term hashing (same pattern as _pack_batches):
-            # per-row cost is one integer gather, not a per-row crc32
-            d = pa.compute.dictionary_encode(b.column(0))
-            codes = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            vocab = d.dictionary.to_pylist()
-            vh = np.fromiter(
-                (crc32(t.encode()) % _SPILL_BUCKETS for t in vocab),
-                dtype=np.int64, count=len(vocab),
-            )
-            tgt = vh[codes]
+            tgt = _spill_targets(b, shift)
             order = np.argsort(tgt)
             take = pa.array(order)
             srb = pa.RecordBatch.from_arrays(
@@ -658,11 +678,11 @@ def _unpack_encode(cfg: IndexConfig, spill_bytes: int = 0) -> "callable":
                                 prefix="golr_spill_", dir=base
                             )
                             for i in range(_SPILL_BUCKETS):
-                                fh = open(
+                                fh = spill.enter_context(open(
                                     os.path.join(spill_dir, f"b{i}.arrow"), "wb"
-                                )
-                                files.append(fh)
+                                ))
                                 writers.append(pa.ipc.new_stream(fh, schema))
+                                spill.callback(writers[-1].close)
                             for p in parts:
                                 _route(p)
                             parts = []
@@ -673,27 +693,29 @@ def _unpack_encode(cfg: IndexConfig, spill_bytes: int = 0) -> "callable":
                 if srb is not None:
                     yield from encode(iter([srb]))
                 return
-            for w in writers:
-                w.close()
-            for fh in files:
-                fh.close()
+            spill.close()
 
             def _sorted_subbuckets() -> Iterator[pa.RecordBatch]:
                 for i in range(_SPILL_BUCKETS):
                     path = os.path.join(spill_dir, f"b{i}.arrow")
-                    with pa.ipc.open_stream(path) as rd:
-                        sub = list(rd)
+                    with pa.OSFile(path, "rb") as src:
+                        sub = list(pa.ipc.open_stream(src))
                     srb = _sort_token_batches(sub, schema)
                     if srb is not None:
-                        # sub-buckets never share a (term, fcode)
-                        # group, so the encoder's pending-group
+                        # sub-buckets never share a (term, fcode,
+                        # bucket) group, so the encoder's pending-group
                         # carryover flushes naturally at boundaries
                         yield srb
 
             yield from encode(_sorted_subbuckets())
         finally:
-            if spill_dir is not None:
-                shutil.rmtree(spill_dir, ignore_errors=True)
+            # a failed task must not hold its spill files open until
+            # the worker's next garbage collection
+            try:
+                spill.close()
+            finally:
+                if spill_dir is not None:
+                    shutil.rmtree(spill_dir, ignore_errors=True)
 
     return run
 

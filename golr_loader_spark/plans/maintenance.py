@@ -16,43 +16,59 @@ this module provides it with Lucene's two-phase semantics:
   surviving corpus (asserted in tests/test_maintenance.py) and the
   tombstone table resets.
 
-Compaction plan shape at scale: the block table shuffles ONCE on its
-own (term, field, bucket) key — the same skew-safe bound as the build
-(a bucket holds ≤ n_docs/2**bucket_bits postings per term) — and each
-group decodes, masks, and re-encodes with the build's vectorized
-codec, also re-packing underfull blocks. The tombstone set rides a
-Spark broadcast (a delete batch of 10M ids is ~80 MB — fine; a
-tombstone set rivaling the corpus itself should be expressed as a
-rebuild instead).
+Compaction plan shape: the block table shuffles ONCE on its own
+(term, field, bucket) key — the same skew-safe bound as the build (a
+bucket holds ≤ n_docs/2**bucket_bits postings per term) — and each
+partition's block rows, sorted by (list, segment, block_id), stream
+through ONE ``mapInArrow`` kernel. Per Arrow batch it decodes every
+block's doc ids, tfs, dls and positions in one numpy pass, applies the
+liveDocs mask, lexsorts by (list, doc_id) and re-encodes all lists with
+one call of the build's vectorized encoder, also re-packing underfull
+blocks; a list cut by the batch boundary is carried into the next
+batch, so a task holds one batch plus one list. Python is entered once
+per partition, never once per list: in a per-list plan the Python-UDF
+boundary, not the codec, dominates the task time. The
+tombstone set rides a Spark broadcast (a delete batch of 10M ids is
+~80 MB — fine; a tombstone set rivaling the corpus itself should be
+expressed as a rebuild instead).
+
+Upsert segments are built on the packed path
+(``build_index.build_postings_packed``), and the metadata-sized tables —
+tombstones (``plans.tombstones``) and the fast upsert's stats — are read
+and written with pyarrow on the driver, not by Spark jobs.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Iterable
+from collections.abc import Iterable, Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from golr_loader_spark.config import IndexConfig
-from golr_loader_spark.functions.codec import varint_decode
+from golr_loader_spark.functions.codec import binary_stream, varint_decode
 from golr_loader_spark.plans.build_index import (
     InvertedIndex,
     _encode_groups,
     derived_stats,
     derived_term_stats,
 )
+from golr_loader_spark.plans.tombstones import (
+    DEAD_EVERYWHERE,
+    append_tombstones,
+    read_tombstones,
+    rewrite_tombstones,
+)
 
-_POSTING_COLS = [
-    "term", "field", "bucket", "block_id", "n", "doc_id_first",
-    "doc_ids", "tfs", "dls", "max_tf", "min_dl", "tf_sum", "segment",
-]
+_LIST_KEY = ("term", "field", "bucket")
 
-_DEAD_EVERYWHERE = np.iinfo(np.int64).max
-
+_STATS_SCHEMA = pa.schema(
+    [("field", pa.string()), ("avgdl", pa.float64()), ("n_docs", pa.int64())]
+)
 
 def delete_docs(
     spark: SparkSession, root: str, ids: Iterable[int], dead_below: int | None = None
@@ -61,11 +77,11 @@ def delete_docs(
     query time: the mask is a set union). ``dead_below`` defaults to
     "dead in every segment" (a hard delete); fast upserts pass their
     new segment number so only OLDER copies of the doc die."""
-    db = _DEAD_EVERYWHERE if dead_below is None else int(dead_below)
-    ids = [int(i) for i in ids]
-    spark.createDataFrame(
-        [(i, db) for i in ids], "doc_id long, dead_below long"
-    ).write.mode("append").parquet(f"{root}/tombstones")
+    append_tombstones(
+        root,
+        [int(i) for i in ids],
+        DEAD_EVERYWHERE if dead_below is None else int(dead_below),
+    )
 
 
 def load_tombstones(spark: SparkSession, root: str) -> tuple[np.ndarray, np.ndarray]:
@@ -73,21 +89,8 @@ def load_tombstones(spark: SparkSession, root: str) -> tuple[np.ndarray, np.ndar
     scorers accept (bm25._norm_excl semantics; duplicate ids resolve
     to the MAX dead_below — latest operation wins). Tables written
     before the segment upgrade carry no dead_below column → hard
-    deletes."""
-    path = f"{root}/tombstones"
-    if not os.path.isdir(path):
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    t = spark.read.option("mergeSchema", "true").parquet(path)
-    if "dead_below" not in t.columns:
-        t = t.withColumn("dead_below", F.lit(_DEAD_EVERYWHERE))
-    else:
-        t = t.fillna({"dead_below": _DEAD_EVERYWHERE})
-    rows = t.groupBy("doc_id").agg(F.max("dead_below").alias("db")).collect()
-    rows.sort(key=lambda r: r["doc_id"])
-    return (
-        np.array([r["doc_id"] for r in rows], dtype=np.int64),
-        np.array([r["db"] for r in rows], dtype=np.int64),
-    )
+    deletes. Read on the driver (``plans.tombstones``), no Spark job."""
+    return read_tombstones(root)
 
 
 def load_tombstone_ids(spark: SparkSession, root: str) -> np.ndarray:
@@ -130,98 +133,154 @@ def _swap_tables(root: str, tmp: str, tables: tuple) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _list_starts(tbl: pa.Table) -> np.ndarray:
+    """Row indices where a (term, field, bucket) list begins, over
+    block rows grouped by list."""
+    n = tbl.num_rows
+    first = np.zeros(n, dtype=bool)
+    first[0] = True
+    for c in _LIST_KEY:
+        col = tbl.column(c)
+        first[1:] |= pc.not_equal(col.slice(1), col.slice(0, n - 1)).to_numpy(
+            zero_copy_only=False
+        )
+    return np.flatnonzero(first)
+
+
+def _compact_blocks(
+    tbl: pa.Table, starts: np.ndarray, excl, cfg: IndexConfig
+) -> pa.RecordBatch | None:
+    """Decode, mask and re-encode whole lists in one numpy pass.
+
+    ``tbl`` holds complete lists, each in (segment, block_id) order and
+    beginning at ``starts``. Every block's doc ids, tfs, dls and
+    positions are decoded at once (varint streams concatenate), postings
+    dead under ``excl`` dropped, each list re-sorted by doc_id (a stable
+    sort: ties keep segment order) and all lists encoded by ONE
+    ``_encode_groups`` call — which re-packs underfull blocks and drops
+    lists with no survivors. None when nothing survives."""
+    from golr_loader_spark.functions.codec import positions_encode
+    from golr_loader_spark.plans.bm25 import _live_of
+    from golr_loader_spark.plans.phrase import _decode_positions
+
+    n = tbl.column("n").to_numpy().astype(np.int64)
+    firsts = tbl.column("doc_id_first").to_numpy().astype(np.int64)
+    deltas = varint_decode(binary_stream(tbl.column("doc_ids"))[0]).astype(np.int64)
+    g = np.cumsum(deltas)
+    ids = g + np.repeat(firsts - g[np.cumsum(n) - n], n)
+    tfs = varint_decode(binary_stream(tbl.column("tfs"))[0]).astype(np.int64)
+    dls = varint_decode(binary_stream(tbl.column("dls"))[0]).astype(np.int64)
+    has_pos = "poss" in tbl.column_names
+    if has_pos:
+        # absolute positions survive compaction unchanged; only the
+        # per-posting segmentation is re-derived after the mask
+        pos_flat = _decode_positions(binary_stream(tbl.column("poss"))[0], tfs)
+    is_start = np.zeros(tbl.num_rows, dtype=np.int64)
+    is_start[starts] = 1
+    lid = np.repeat(np.cumsum(is_start) - 1, n)
+    if excl is not None:
+        segs = np.repeat(tbl.column("segment").to_numpy().astype(np.int64), n)
+        keep = _live_of(ids, segs, excl)
+        if has_pos:
+            pos_flat = pos_flat[np.repeat(keep, tfs)]
+        ids, tfs, dls, lid = ids[keep], tfs[keep], dls[keep], lid[keep]
+    if not len(ids):
+        return None
+    # multi-segment lists (upsert appends) interleave doc ranges across
+    # blocks — re-sort so each compacted list is globally doc_id-ordered
+    # (smallest deltas, format contract)
+    order = np.lexsort((ids, lid))
+    pos_kw = {}
+    if has_pos:
+        # gather each surviving posting's position run in the new doc
+        # order, then re-delta-encode (vectorized)
+        bounds = np.cumsum(tfs) - tfs
+        cnt_o = tfs[order]
+        gidx = np.repeat(bounds[order], cnt_o) + (
+            np.arange(int(cnt_o.sum())) - np.repeat(np.cumsum(cnt_o) - cnt_o, cnt_o)
+        )
+        pdat, psiz = positions_encode(pos_flat[gidx], cnt_o)
+        pos_kw = {"pos_data": pdat, "pos_sizes": psiz}
+    counts = np.bincount(lid, minlength=len(starts))
+    live = np.flatnonzero(counts)
+    heads = pa.array(starts[live])
+    rb = _encode_groups(
+        tbl.column("term").take(heads).combine_chunks(),
+        tbl.column("field").take(heads).combine_chunks(),
+        tbl.column("bucket").to_numpy()[starts[live]],
+        np.concatenate([[0], np.cumsum(counts[live])]),
+        ids[order],
+        tfs[order],
+        dls[order],
+        cfg,
+        **pos_kw,
+    )
+    # all survivors land in segment 0
+    return rb.append_column(
+        "segment", pa.array(np.zeros(rb.num_rows, dtype=np.int32))
+    )
+
+
+def _compact_batches(excl, cfg: IndexConfig) -> "callable":
+    """mapInArrow body over block rows sorted by (term, field, bucket,
+    segment, block_id): each Arrow batch's complete lists go through
+    ``_compact_blocks`` together; the batch's last list may continue in
+    the next batch, so its rows are carried over and prepended to it
+    (as ``_encode_batches`` carries its pending group). A task holds
+    one batch plus one list."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        carry: pa.Table | None = None
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            tbl = pa.Table.from_batches([rb])
+            if carry is not None:
+                tbl = pa.concat_tables([carry, tbl]).combine_chunks()
+            starts = _list_starts(tbl)
+            last = int(starts[-1])
+            carry = tbl.slice(last)
+            if last:
+                out = _compact_blocks(tbl.slice(0, last), starts[:-1], excl, cfg)
+                if out is not None:
+                    yield out
+        if carry is not None:
+            out = _compact_blocks(carry, np.zeros(1, dtype=np.int64), excl, cfg)
+            if out is not None:
+                yield out
+
+    return run
+
+
 def compact_postings(
     postings: DataFrame, tombstone_ids: np.ndarray, cfg: IndexConfig
 ) -> DataFrame:
     """Rewrite the block table without tombstoned postings.
 
     Each (term, field, bucket) list is decoded whole, masked, and
-    re-encoded as one group — which both drops deleted postings and
-    re-packs underfull blocks to ``cfg.block_size``; lists losing all
-    postings disappear. Delta/varint streams, block-max bounds, and
-    tf_sum are all recomputed by the build's own encoder, so a
-    compacted index is byte-compatible with a fresh build. All
-    surviving postings land in segment 0 (the Lucene merge: segment
-    tombstones from fast upserts are resolved physically).
+    re-encoded — which both drops deleted postings and re-packs
+    underfull blocks to ``cfg.block_size``; lists losing all postings
+    disappear. Delta/varint streams, block-max bounds, and tf_sum are
+    all recomputed by the build's own encoder, so a compacted index is
+    byte-compatible with a fresh build. All surviving postings land in
+    segment 0 (the Lucene merge: segment tombstones from fast upserts
+    are resolved physically).
+
+    Plan: one exchange of the block rows on (term, field, bucket), a
+    sort of the block rows within partitions, then ONE ``mapInArrow``
+    task per partition (``_compact_batches``) — no Python call per
+    list.
 
     ``tombstone_ids``: plain id array (dead everywhere) or the
     ``(ids, dead_below)`` pair from ``load_tombstones``."""
-    from golr_loader_spark.functions.codec import positions_encode
-    from golr_loader_spark.plans.bm25 import _live_of, _norm_excl
-    from golr_loader_spark.plans.phrase import _decode_positions
+    from golr_loader_spark.plans.bm25 import broadcast_excl
 
-    spark = postings.sparkSession
-    tomb_b = spark.sparkContext.broadcast(_norm_excl(tombstone_ids))
+    excl = broadcast_excl(postings.sparkSession, tombstone_ids)
     has_pos = "poss" in postings.columns
-    # output column order = schema order (poss before segment)
-    posting_cols = [c for c in _POSTING_COLS if c != "segment"]
-    if has_pos:
-        posting_cols.append("poss")
-    posting_cols.append("segment")
-
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        term, fld, bucket = key
-        sort_cols = [c for c in ("segment", "block_id") if c in pdf.columns]
-        pdf = pdf.sort_values(sort_cols, kind="stable")
-        n_per_block = pdf["n"].to_numpy(np.int64)
-        firsts = pdf["doc_id_first"].to_numpy(np.int64)
-        deltas = varint_decode(b"".join(pdf["doc_ids"])).astype(np.int64)
-        g = np.cumsum(deltas)
-        starts = np.concatenate([[0], np.cumsum(n_per_block)])[:-1]
-        ids = g + np.repeat(firsts - g[starts], n_per_block)
-        tfs = varint_decode(b"".join(pdf["tfs"])).astype(np.int64)
-        dls = varint_decode(b"".join(pdf["dls"])).astype(np.int64)
-        if has_pos:
-            # absolute positions survive compaction unchanged; only
-            # the per-posting segmentation is re-derived post-mask
-            pos_flat = _decode_positions(b"".join(pdf["poss"]), tfs)
-        excl = tomb_b.value
-        if excl is not None:
-            segs = (
-                np.repeat(pdf["segment"].to_numpy(np.int64), n_per_block)
-                if "segment" in pdf.columns
-                else np.zeros(len(ids), dtype=np.int64)
-            )
-            keep = _live_of(ids, segs, excl)
-        else:
-            keep = np.ones(len(ids), dtype=bool)
-        m = int(keep.sum())
-        if m == 0:
-            return pd.DataFrame({c: [] for c in posting_cols})
-        if has_pos:
-            pos_flat = pos_flat[np.repeat(keep, tfs)]
-        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        # multi-segment lists (incremental/upsert appends) interleave
-        # doc ranges across blocks — re-sort so the compacted list is
-        # globally doc_id-ordered (smallest deltas, format contract)
-        order = np.argsort(ids, kind="stable")
-        pos_kw = {}
-        if has_pos:
-            # gather each surviving posting's position run in the new
-            # doc order, then re-delta-encode (vectorized)
-            bounds = (np.cumsum(tfs) - tfs).astype(np.int64)
-            cnt_o = tfs[order]
-            total = int(cnt_o.sum())
-            gidx = np.repeat(bounds[order], cnt_o) + (
-                np.arange(total) - np.repeat(np.cumsum(cnt_o) - cnt_o, cnt_o)
-            )
-            pdat, psiz = positions_encode(pos_flat[gidx], cnt_o)
-            pos_kw = {"pos_data": pdat, "pos_sizes": psiz}
-        rb = _encode_groups(
-            pa.array([term]),
-            pa.array([fld]),
-            np.array([bucket]),
-            np.array([0, m], dtype=np.int64),
-            ids[order],
-            tfs[order],
-            dls[order],
-            cfg,
-            **pos_kw,
-        )
-        out = rb.to_pandas()
-        out["segment"] = np.int32(0)
-        return out
-
+    if "segment" not in postings.columns:
+        postings = postings.withColumn("segment", F.lit(0))
+    cols = [*_LIST_KEY, "segment", "block_id", "n", "doc_id_first",
+            "doc_ids", "tfs", "dls"] + (["poss"] if has_pos else [])
     schema = (
         "term string, field string, bucket int, block_id int, n int, "
         "doc_id_first long, doc_ids binary, tfs binary, dls binary, "
@@ -229,7 +288,12 @@ def compact_postings(
         + (", poss binary" if has_pos else "")
         + ", segment int"
     )
-    return postings.groupBy("term", "field", "bucket").applyInPandas(fn, schema)
+    return (
+        postings.select(*cols)
+        .repartition(*_LIST_KEY)
+        .sortWithinPartitions(*_LIST_KEY, "segment", "block_id")
+        .mapInArrow(_compact_batches(excl, cfg), schema)
+    )
 
 
 def compact_index(
@@ -254,7 +318,7 @@ def compact_index(
         removed = int(n_docs_removed)
     else:
         removed = (
-            0 if excl is None else int((excl[1] == _DEAD_EVERYWHERE).sum())
+            0 if excl is None else int((excl[1] == DEAD_EVERYWHERE).sum())
         )
     new_postings = compact_postings(index.postings, tombstone_ids, index.cfg).persist(
         StorageLevel.MEMORY_AND_DISK
@@ -296,11 +360,8 @@ def upsert_docs(
          docs manifest is rewritten.
     A later ``compact_root`` re-packs the segments into globally
     doc_id-sorted lists."""
-    import shutil
-
-    from golr_loader_spark.functions.tokenize import tokenize
     from golr_loader_spark.plans.build_index import (
-        build_postings,
+        build_postings_packed,
         read_index,
         write_index,
     )
@@ -331,11 +392,11 @@ def upsert_docs(
     # upserts into ONE compaction mask; hard deletes stay pending so
     # their stats-staleness contract is unchanged
     t_ids, t_db = load_tombstones(spark, root)
-    seg_mask = t_db != _DEAD_EVERYWHERE
+    seg_mask = t_db != DEAD_EVERYWHERE
     comb_ids = np.concatenate([existing_ids, t_ids[seg_mask]])
     comb_db = np.concatenate(
         [
-            np.full(len(existing_ids), _DEAD_EVERYWHERE, dtype=np.int64),
+            np.full(len(existing_ids), DEAD_EVERYWHERE, dtype=np.int64),
             t_db[seg_mask],
         ]
     )
@@ -346,7 +407,7 @@ def upsert_docs(
     )
     from pyspark import StorageLevel
 
-    fresh = build_postings(tokenize(documents, cfg), cfg)
+    fresh = build_postings_packed(documents, cfg)
     merged = base.unionByName(fresh).persist(StorageLevel.MEMORY_AND_DISK)
     merged.count()  # materialize once: 3 table writes + stats reuse it
     n_docs = ix.n_docs - len(existing_ids) + n_incoming
@@ -381,15 +442,13 @@ def upsert_docs(
     live_again = set(incoming_ids)
     remaining = [
         int(i) for i, db in zip(t_ids, t_db)
-        if db == _DEAD_EVERYWHERE and int(i) not in live_again
+        if db == DEAD_EVERYWHERE and int(i) not in live_again
     ]
     _swap_tables(
         root, tmp,
         tuple(["postings", "term_stats", "stats", "docs"] + doc_tables),
     )
-    shutil.rmtree(f"{root}/tombstones", ignore_errors=True)
-    if remaining:
-        delete_docs(spark, root, remaining)
+    rewrite_tombstones(root, remaining, DEAD_EVERYWHERE)
     return {"updated": int(len(existing_ids)), "added": int(n_incoming - len(existing_ids))}
 
 
@@ -575,7 +634,7 @@ def compact_root(spark: SparkSession, root: str, cfg: IndexConfig | None = None)
     t_ids, t_db = load_tombstones(spark, root)
     if not len(t_ids):
         return 0
-    tomb = t_ids[t_db == _DEAD_EVERYWHERE]  # hard deletes: leave the corpus
+    tomb = t_ids[t_db == DEAD_EVERYWHERE]  # hard deletes: leave the corpus
     ix = read_index(spark, root, cfg)
     new_ix = compact_index(ix, (t_ids, t_db))
     new_ix.postings.count()  # materialize BEFORE overwriting the source
@@ -639,8 +698,9 @@ def upsert_docs_fast(
     data loss. Stats writes are last and swap atomically."""
     import shutil
 
-    from golr_loader_spark.functions.tokenize import tokenize
-    from golr_loader_spark.plans.build_index import build_postings
+    import pyarrow.parquet as pq
+
+    from golr_loader_spark.plans.build_index import build_postings_packed
 
     cfg = cfg or IndexConfig()
     docs_path = f"{root}/docs"
@@ -668,7 +728,7 @@ def upsert_docs_fast(
     from pyspark import StorageLevel
 
     fresh = (
-        build_postings(tokenize(documents, cfg), cfg)
+        build_postings_packed(documents, cfg)
         .withColumn("segment", F.lit(new_seg))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -701,34 +761,35 @@ def upsert_docs_fast(
     # 3. tombstone the superseded copies (old segments only) and
     #    withdraw any pending tombstones on re-upserted ids (revive)
     t_ids, t_db = load_tombstones(spark, root)
-    live_again = set(incoming_ids)
-    keep_rows = [
-        (int(i), int(db)) for i, db in zip(t_ids, t_db) if int(i) not in live_again
-    ] + [(int(i), new_seg) for i in existing_ids]
-    shutil.rmtree(f"{root}/tombstones", ignore_errors=True)
-    if keep_rows:
-        spark.createDataFrame(
-            keep_rows, "doc_id long, dead_below long"
-        ).write.mode("append").parquet(f"{root}/tombstones")
+    still_dead = ~np.isin(t_ids, np.asarray(incoming_ids, dtype=np.int64))
+    rewrite_tombstones(
+        root,
+        np.concatenate([t_ids[still_dead], np.asarray(existing_ids, dtype=np.int64)]),
+        np.concatenate([t_db[still_dead], np.full(len(existing_ids), new_seg, dtype=np.int64)]),
+    )
     # 4. stats: n_docs exact; avgdl numerator keeps the dead copies'
-    #    mass until compaction (documented staleness)
+    #    mass until compaction (documented staleness). Metadata-sized:
+    #    read and written on the driver, no Spark job
     old_stats = {
         r["field"]: (float(r["avgdl"]), int(r["n_docs"]))
-        for r in spark.read.parquet(f"{root}/stats").collect()
+        for r in pq.read_table(f"{root}/stats").to_pylist()
     }
     n_old = max((n for _a, n in old_stats.values()), default=0)
     n_new = n_old + n_added
-    fields = set(old_stats) | set(fresh_sums)
     stats_rows = []
-    for fld in sorted(fields):
+    for fld in sorted(set(old_stats) | set(fresh_sums)):
         avg_old, _n = old_stats.get(fld, (0.0, n_old))
         total = avg_old * n_old + fresh_sums.get(fld, 0)
-        stats_rows.append((fld, total / n_new if n_new else 0.0, n_new))
+        stats_rows.append(
+            {"field": fld, "avgdl": total / n_new if n_new else 0.0, "n_docs": n_new}
+        )
     tmp = f"{root}/.stats_tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    spark.createDataFrame(
-        stats_rows, "field string, avgdl double, n_docs long"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/stats")
+    os.makedirs(f"{tmp}/stats")
+    pq.write_table(
+        pa.Table.from_pylist(stats_rows, schema=_STATS_SCHEMA),
+        f"{tmp}/stats/part-00000.parquet",
+    )
     # 5. docs manifest rewrite (metadata-sized)
     new_meta = meta.join(incoming, "doc_id", "left_anti").unionByName(
         documents.select(

@@ -185,35 +185,13 @@ class LocalSearcher:
         self._rgix = _RowGroupIndex(f"{root}/postings")
         self.term_stats = pads.dataset(f"{root}/term_stats", format="parquet")
         # tombstones (plans.maintenance.delete_docs): Lucene liveDocs —
-        # deleted docs are masked out of every result until compaction
-        import glob as _glob
-        import os as _os
-
+        # deleted docs are masked out of every result until compaction.
         # (ids, dead_below) pair — the scorers' per-segment liveDocs
-        # shape (bm25._norm_excl resolves duplicates to max dead_below)
-        self.tombstones = None
-        if _os.path.isdir(f"{root}/tombstones"):
-            files = _glob.glob(f"{root}/tombstones/*.parquet")
-            if files:
-                import numpy as _np
+        # shape, duplicates already resolved to their max dead_below
+        from golr_loader_spark.plans.tombstones import read_tombstones
 
-                ids_parts, db_parts = [], []
-                for f in files:
-                    t = pq.read_table(f)
-                    ids = t["doc_id"].to_numpy(zero_copy_only=False)
-                    ids_parts.append(ids)
-                    if "dead_below" in t.schema.names:
-                        db_parts.append(
-                            t["dead_below"].to_numpy(zero_copy_only=False)
-                        )
-                    else:  # pre-segment tombstones: hard deletes
-                        db_parts.append(
-                            _np.full(len(ids), _np.iinfo(_np.int64).max, dtype=_np.int64)
-                        )
-                self.tombstones = (
-                    _np.concatenate(ids_parts),
-                    _np.concatenate(db_parts),
-                )
+        t_ids, t_db = read_tombstones(root)
+        self.tombstones = (t_ids, t_db) if len(t_ids) else None
         stats = pq.read_table(f"{root}/stats").to_pylist()
         self.avgdl = {r["field"]: float(r["avgdl"]) for r in stats}
         self.n_docs = max(int(r["n_docs"]) for r in stats) if stats else 0
@@ -2647,18 +2625,14 @@ class LocalSearcher:
         if self.tombstones is not None:
             import numpy as _np
 
-            t_ids, t_db = self.tombstones
-            # raw concatenated tombstone files: unsorted, ids may
-            # repeat (upsert then delete) — the latest operation wins,
-            # i.e. the MAX dead_below of the id's entries
-            hits = _np.flatnonzero(t_ids == d)
-            if len(hits):
-                from golr_loader_spark.plans.bm25 import _DEAD_EVERYWHERE
+            from golr_loader_spark.plans.tombstones import DEAD_EVERYWHERE
 
-                if int(t_db[hits].max()) == _DEAD_EVERYWHERE:
-                    # dead in every segment → gone; segment-scoped
-                    # tombstones only mask OLD copies, the newest stays
-                    return None
+            t_ids, t_db = self.tombstones
+            i = int(_np.searchsorted(t_ids, d))
+            if i < len(t_ids) and t_ids[i] == d and t_db[i] == DEAD_EVERYWHERE:
+                # dead in every segment → gone; segment-scoped
+                # tombstones only mask OLD copies, the newest stays
+                return None
         out = self.fetch([d], fields)
         return out.get(d)
 
