@@ -12,7 +12,7 @@
 SF_DIR ?= /root/testdata/sf0.01
 TIMEOUT ?= 180
 
-.PHONY: check oracles plans sanity test bench
+.PHONY: check oracles plans sanity test bench perf-smoke
 
 check: oracles plans sanity
 
@@ -30,3 +30,8 @@ test:
 
 bench:
 	python bench.py
+
+# the benchmark on tiny corpora, then its own tests (a few minutes)
+perf-smoke:
+	python3 perfbench/run.py --smoke
+	python3 -m pytest perfbench/tests -q

@@ -671,7 +671,11 @@ def _q24_scored(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
     function returns a driver-built LocalTableScan of ≤50 rows)."""
     d = load(spark, sf, "documents")
     terms = ["data", "query", "spark"]  # sorted: replay fold order
-    toks = F.split(F.lower(F.col("text")), " ")
+    # a NULL text is a doc with no tokens (dl = 0), as in SQL_Q24:
+    # non-ANSI Spark sizes a NULL array as -1 (legacy sizeOfNull)
+    toks = F.coalesce(
+        F.split(F.lower(F.col("text")), " "), F.array().cast("array<string>")
+    )
     # materialize the split once per row (the q17 codegen trap:
     # inlining it into each filter would re-split per term)
     base = (

@@ -57,8 +57,10 @@ nothing, an exact pruned search rescues membership — strictly more
 faithful to the match condition than Lucene's scorer. Exact phrases
 (``slop=0``) use the vectorized chain matcher (Lucene
 ExactPhraseScorer analog; each match contributes slop factor 1).
-The serving path (``LocalSearcher.search_phrase``) shares the same
-bucket factory, so both paths agree bit-for-bit.
+Each factory's matcher core (``score_group.lists``) takes decoded
+per-term lists: Spark feeds it one bucket per applyInPandas call,
+while ``LocalSearcher.search_phrase`` feeds it every bucket at once
+from its cached per-term lists, so both paths agree bit-for-bit.
 """
 
 from __future__ import annotations
@@ -334,37 +336,53 @@ def phrase_search_positional(
     return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
-def _decode_positional_lists(pdf: pd.DataFrame, excl) -> dict[str, tuple]:
-    """Decode one bucket group's positional posting blocks →
-    {term: (doc_ids, tfs, dls, flat_positions)} with tombstone/segment
-    masking applied (``excl`` is bm25._norm_excl-normalized). Shared
-    by the phrase and span-near bucket factories."""
-    from golr_loader_spark.plans.bm25 import _live_of, _row_segments
+def _decode_positional_lists(cols, excl) -> dict[str, tuple]:
+    """Decode positional posting blocks → {term: (doc_ids, tfs, dls,
+    flat_positions)} with tombstone/segment masking applied (``excl``
+    is bm25._norm_excl-normalized). ``cols`` is a DataFrame (an
+    applyInPandas bucket group) or a dict of numpy arrays (the serving
+    read, any number of buckets).
 
-    per_term: dict[str, tuple] = {}
-    for term, rows in pdf.groupby("term", sort=False):
-        # all of the term's blocks decode in four varint calls: the
-        # streams are self-delimiting, so the concatenated buffers
-        # decode in one vectorized pass each; per-block doc_id bases
-        # are re-applied with a segmented cumsum, and the position
-        # stream segments at cumsum(tfs) boundaries (block streams
-        # hold exactly Σtf varints each, so concatenation composes)
-        n_pb = rows["n"].to_numpy(np.int64)
-        firsts = rows["doc_id_first"].to_numpy(np.int64)
-        g = np.cumsum(varint_decode(b"".join(rows["doc_ids"])).astype(np.int64))
-        starts = np.concatenate([[0], np.cumsum(n_pb)])[:-1]
-        ids = g + np.repeat(firsts - g[starts], n_pb)
-        tfs = varint_decode(b"".join(rows["tfs"])).astype(np.int64)
-        dls = varint_decode(b"".join(rows["dls"])).astype(np.int64)
-        pos = _decode_positions(b"".join(rows["poss"]), tfs)
-        if excl is not None:
-            keep = _live_of(ids, np.repeat(_row_segments(rows), n_pb), excl)
-            if not keep.all():
-                pos = pos[np.repeat(keep, tfs)]
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        if len(ids):
-            per_term[term] = (ids, tfs, dls, pos)
-    return per_term
+    One np.unique and one lexsort on (term, bucket, segment, block_id)
+    put every term's blocks in one contiguous run in a deterministic
+    order; then the whole table decodes in four varint calls (the
+    streams are self-delimiting, so concatenated buffers decode in one
+    pass; per-block doc_id bases are re-applied with a segmented
+    cumsum, and the position stream splits at cumsum(tfs) since each
+    block holds exactly Σtf varints)."""
+    from golr_loader_spark.plans.bm25 import _live_of
+
+    if not isinstance(cols, dict):
+        cols = {c: cols[c].to_numpy() for c in cols.columns}
+    zeros = np.zeros(len(cols["term"]), dtype=np.int64)
+    seg = cols["segment"].astype(np.int64) if "segment" in cols else zeros
+    bucket = cols["bucket"].astype(np.int64) if "bucket" in cols else zeros
+    t_uniq, t_codes = np.unique(cols["term"], return_inverse=True)
+    order = np.lexsort((cols["block_id"].astype(np.int64), seg, bucket, t_codes))
+    n_pb = cols["n"].astype(np.int64)[order]
+    firsts = cols["doc_id_first"].astype(np.int64)[order]
+    g = np.cumsum(varint_decode(b"".join(cols["doc_ids"][order])).astype(np.int64))
+    ids = g + np.repeat(firsts - g[np.cumsum(n_pb) - n_pb], n_pb)
+    tfs = varint_decode(b"".join(cols["tfs"][order])).astype(np.int64)
+    dls = varint_decode(b"".join(cols["dls"][order])).astype(np.int64)
+    pos = _decode_positions(b"".join(cols["poss"][order]), tfs)
+    tid = np.repeat(t_codes[order], n_pb)
+    if excl is not None:
+        keep = _live_of(ids, np.repeat(seg[order], n_pb), excl)
+        if not keep.all():
+            pos = pos[np.repeat(keep, tfs)]
+            ids, tfs, dls, tid = ids[keep], tfs[keep], dls[keep], tid[keep]
+    # per-term posting and position ranges (tid is sorted)
+    cut = np.searchsorted(tid, np.arange(len(t_uniq) + 1))
+    pcut = np.concatenate(([0], np.cumsum(tfs)))[cut]
+    return {
+        t_uniq[i]: (
+            ids[cut[i]:cut[i + 1]], tfs[cut[i]:cut[i + 1]],
+            dls[cut[i]:cut[i + 1]], pos[pcut[i]:pcut[i + 1]],
+        )
+        for i in range(len(t_uniq))
+        if cut[i + 1] > cut[i]
+    }
 
 
 def _lucene_sloppy_freq(
@@ -490,45 +508,113 @@ def _min_span_with_repeats(
     return best
 
 
-def _sloppy_bucket_freqs(
+def _sloppy_freqs(
     comp: dict[str, np.ndarray],
     seq: list[tuple[str, int]],
-    cand_ids: np.ndarray,
+    n_cand: int,
     P: int,
     slop: int,
 ) -> np.ndarray:
-    """Per-candidate-doc Lucene sloppy phrase frequencies for one
-    bucket. ``comp[t]`` is term t's sorted composite (dense doc index
-    × P + position) occurrence array. Doc slicing is one vectorized
-    searchsorted per term; the per-doc sweep is bounded by the doc's
-    own phrase-term occurrences (candidates already contain every
-    term, so selective phrases visit few docs). Only the ``slop>0``
-    path pays this — exact phrases keep the fully-vectorized chain."""
+    """Per-candidate-doc Lucene sloppy phrase frequencies. ``comp[t]``
+    is term t's sorted composite (dense doc index × P + position)
+    occurrence array. Doc slicing is one vectorized searchsorted per
+    term; the per-doc sweep is bounded by the doc's own phrase-term
+    occurrences (candidates already contain every term, so selective
+    phrases visit few docs). Only the ``slop>0`` path pays this —
+    exact phrases keep the fully-vectorized chain."""
     uts = list(dict.fromkeys(t for t, _p in seq))
-    bounds = {}
-    base = np.asarray(
-        [int(j) * P for j in range(len(cand_ids))], dtype=np.int64
-    )
-    for t in uts:
-        a = comp[t]
-        bounds[t] = (np.searchsorted(a, base), np.searchsorted(a, base + P))
+    base = np.arange(n_cand, dtype=np.int64) * P
+    bounds = {
+        t: (np.searchsorted(comp[t], base), np.searchsorted(comp[t], base + P))
+        for t in uts
+    }
     offs = [p for _t, p in seq]
     terms = [t for t, _p in seq]
-    out = np.zeros(len(cand_ids), dtype=np.float64)
-    for j in range(len(cand_ids)):
+    out = np.zeros(n_cand, dtype=np.float64)
+    for j in range(n_cand):
         per_t = {}
-        ok = True
         for t in uts:
             lo, hi = bounds[t][0][j], bounds[t][1][j]
             if hi <= lo:
-                ok = False
                 break
             per_t[t] = comp[t][lo:hi] - np.int64(j) * P
-        if not ok:
-            continue
-        arrs = [per_t[t] - o for t, o in zip(terms, offs)]
-        out[j] = _lucene_sloppy_freq(arrs, offs, terms, slop)
+        else:
+            arrs = [per_t[t] - o for t, o in zip(terms, offs)]
+            out[j] = _lucene_sloppy_freq(arrs, offs, terms, slop)
     return out
+
+
+# ---- matcher building blocks shared by the phrase and span-near cores.
+# A core takes {term: (doc_ids, tfs, dls, positions)} — one bucket's
+# lists (applyInPandas) or every bucket's at once (serving): matching
+# and scoring are per doc and a doc's postings never leave its bucket,
+# so both give the same rows.
+
+_EMPTY = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
+
+
+def _candidates(per_term: dict, terms) -> np.ndarray:
+    """Sorted ids of the docs holding every one of ``terms`` (empty
+    when a term has no live posting)."""
+    cand = None
+    for t in terms:
+        if t not in per_term:
+            return _EMPTY[0]
+        u = np.unique(per_term[t][0])
+        cand = u if cand is None else np.intersect1d(cand, u, assume_unique=True)
+    return cand
+
+
+def _composite_keys(per_term: dict, terms, cand: np.ndarray):
+    """→ ({term: sorted (dense candidate index × P + position) keys},
+    P). Dense indices keep the keys inside int64 even for xxhash
+    doc_ids; P exceeds every position, so key // P is the doc."""
+    P = 2
+    for t in terms:
+        pos_t = per_term[t][3]
+        if len(pos_t):
+            P = max(P, int(pos_t.max()) + 2)
+    comp: dict[str, np.ndarray] = {}
+    for t in terms:
+        # look each POSTING up once, then expand to its occurrences
+        ids_t, tfs_t, _dls_t, pos_t = per_term[t]
+        di = np.minimum(np.searchsorted(cand, ids_t), len(cand) - 1)
+        ok = np.repeat(cand[di] == ids_t, tfs_t)
+        keys = np.repeat(di.astype(np.int64) * P, tfs_t)[ok] + pos_t[ok]
+        comp[t] = np.sort(keys, kind="stable")
+    return comp, P
+
+
+def _tf_dl_at(lst: tuple, cand: np.ndarray):
+    """(tf, dl) of each candidate doc in one term's list, as float64."""
+    ids, tfs, dls, _pos = lst
+    o = np.argsort(ids, kind="stable")
+    sel = np.searchsorted(ids[o], cand)
+    return tfs[o][sel].astype(np.float64), dls[o][sel].astype(np.float64)
+
+
+def _bm25(w: float, tf, dl, k1: float, b: float, avgdl: float):
+    return w * tf / (tf + k1 * ((1.0 - b) + b * dl / avgdl))
+
+
+def _match_counts(keys: np.ndarray, P: int, n_cand: int) -> np.ndarray:
+    """Matches per candidate doc from the matched occurrence keys."""
+    return np.bincount(
+        (keys // P).astype(np.int64), minlength=n_cand
+    ).astype(np.float64)
+
+
+def _pandas_face(lists, excl):
+    """The applyInPandas face of a matcher core: decode the bucket
+    group, match, frame the rows. ``.lists`` is the pandas-free core
+    (the serving entry), so Spark and serving share one matcher."""
+
+    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        docs, sc = lists(_decode_positional_lists(pdf, excl))
+        return pd.DataFrame({"doc_id": docs, "score": sc})
+
+    score_group.lists = lists
+    return score_group
 
 
 def _phrase_bucket_factory(
@@ -542,73 +628,38 @@ def _phrase_bucket_factory(
     scoring: str,
     excl,
 ):
-    """The per-bucket positional matcher + scorer shared by the
-    distributed path and ``serve.LocalSearcher.search_phrase`` (same
-    factory pattern as ``bm25._score_bucket_factory``, so the two
-    paths are bit-identical by construction). ``excl`` is already
+    """The positional phrase matcher + scorer shared by the
+    distributed path and ``serve.LocalSearcher.search_phrase``:
+    ``score_group(pdf)`` for applyInPandas and ``score_group.lists``
+    for decoded lists (see ``_pandas_face``), so the two paths are
+    bit-identical by construction. ``excl`` is already
     ``bm25._norm_excl``-normalized. Returns None when no phrase term
     carries idf weight (guaranteed-empty result)."""
-    from golr_loader_spark.plans.bm25 import _live_of
+    from golr_loader_spark.plans.bm25 import _topk_by_score
 
     terms_seq = [t for t, _p in seq]
+    terms_u = list(dict.fromkeys(terms_seq))
     qpos = [p for _t, p in seq]
-    uterms = sorted(set(terms_seq))
     sum_idf = sum(idf.get((t, field), 0.0) for t in terms_seq)
     if sum_idf <= 0.0:
         return None
     wt = cfg.fields[field][1] * sum_idf * (cfg.k1 + 1.0)
     k1, b = cfg.k1, cfg.b
     q_span = qpos[-1] - qpos[0]
+    t0 = terms_seq[0]
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        def empty() -> pd.DataFrame:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": np.int64, "score": np.float64}
-            )
-
-        per_term = _decode_positional_lists(pdf, excl)
-        if any(t not in per_term for t in terms_seq):
-            return empty()
-
-        # conjunctive candidate docs (every phrase term present)
-        cand_ids = None
-        for t in dict.fromkeys(terms_seq):
-            u = np.unique(per_term[t][0])
-            cand_ids = (
-                u if cand_ids is None
-                else np.intersect1d(cand_ids, u, assume_unique=True)
-            )
-        if cand_ids is None or len(cand_ids) == 0:
-            return empty()
-
-        # composite (dense doc index, position) occurrence keys —
-        # dense indices keep doc*P + pos inside int64 even for xxhash
-        # doc_ids
-        P = 2
-        for t in dict.fromkeys(terms_seq):
-            pos_t = per_term[t][3]
-            if len(pos_t):
-                P = max(P, int(pos_t.max()) + 2)
-        comp: dict[str, np.ndarray] = {}
-        for t in dict.fromkeys(terms_seq):
-            ids_t, tfs_t, _dls_t, pos_t = per_term[t]
-            docrep = np.repeat(ids_t, tfs_t)
-            di = np.searchsorted(cand_ids, docrep)
-            dic = np.minimum(di, len(cand_ids) - 1)
-            ok = cand_ids[dic] == docrep
-            comp[t] = np.sort(dic[ok].astype(np.int64) * P + pos_t[ok])
-
-        t0 = terms_seq[0]
+    def lists(per_term: dict) -> tuple[np.ndarray, np.ndarray]:
+        cand_ids = _candidates(per_term, terms_u)
+        if not len(cand_ids):
+            return _EMPTY
+        comp, P = _composite_keys(per_term, terms_u, cand_ids)
         if slop > 0:
             # Lucene SloppyPhraseScorer semantics: adjusted-position
             # windows ≤ slop (REORDERED terms admissible — a
             # transposition costs 2), freq = Σ 1/(1+matchLength) over
             # the pq sweep's matches, repeats occupy distinct
             # positions. Per-doc sweep; only sloppy queries pay it.
-            freq = _sloppy_bucket_freqs(comp, seq, cand_ids, P, slop)
-            hit = freq > 0
-            if not hit.any():
-                return empty()
+            freq = _sloppy_freqs(comp, seq, len(cand_ids), P, slop)
         else:
             # exact phrase: greedy minimal chain, vectorized over ALL
             # first-term occurrences at once (each exact match
@@ -626,40 +677,25 @@ def _phrase_bucket_factory(
                 ok &= (nxt // P) == (cur // P)  # stayed inside the doc
                 valid &= ok
                 cur = np.where(ok, nxt, cur)
-            extra = (cur - start) - q_span
-            match = valid & (extra <= slop)
-            if not match.any():
-                return empty()
-            freq = np.bincount(
-                (start[match] // P).astype(np.int64), minlength=len(cand_ids)
-            ).astype(np.float64)
-            hit = freq > 0
-
+            match = valid & ((cur - start) - q_span <= slop)
+            freq = _match_counts(start[match], P, len(cand_ids))
+        hit = freq > 0
+        if not hit.any():
+            return _EMPTY
         if scoring == "terms":
             # per-term BM25 sum in sorted term order — float-for-float
             # the fold phrase_search runs (single-field configs)
             score = np.zeros(len(cand_ids), dtype=np.float64)
-            for t in uterms:  # sorted
+            for t in sorted(terms_u):
                 w_t = cfg.fields[field][1] * idf.get((t, field), 0.0) * (k1 + 1.0)
-                ids_t, tfs_t, dls_t, _pos_t = per_term[t]
-                o = np.argsort(ids_t, kind="stable")
-                sel = np.searchsorted(ids_t[o], cand_ids)
-                tf_t = tfs_t[o][sel].astype(np.float64)
-                dl_t = dls_t[o][sel].astype(np.float64)
-                score += w_t * tf_t / (tf_t + k1 * ((1.0 - b) + b * dl_t / avgdl))
+                tf_t, dl_t = _tf_dl_at(per_term[t], cand_ids)
+                score += _bm25(w_t, tf_t, dl_t, k1, b, avgdl)
         else:
             # Lucene PhraseWeight: tf = phrase frequency
-            ids0, _tfs0, dls0, _pos0 = per_term[t0]
-            o = np.argsort(ids0, kind="stable")
-            dl = dls0[o][np.searchsorted(ids0[o], cand_ids)].astype(np.float64)
-            score = wt * freq / (freq + k1 * ((1.0 - b) + b * dl / avgdl))
-        docs, sc = cand_ids[hit], score[hit]
-        if k < len(docs):  # skip the sort when nothing truncates
-            order = np.lexsort((docs, -sc))[:k]
-            docs, sc = docs[order], sc[order]
-        return pd.DataFrame({"doc_id": docs, "score": sc})
+            score = _bm25(wt, freq, _tf_dl_at(per_term[t0], cand_ids)[1], k1, b, avgdl)
+        return _topk_by_score(cand_ids[hit], score[hit], k)
 
-    return score_group
+    return _pandas_face(lists, excl)
 
 
 def _span_bucket_factory(
@@ -672,9 +708,10 @@ def _span_bucket_factory(
     k: int,
     excl,
 ):
-    """Per-bucket UNORDERED span-near matcher (Lucene SpanNearQuery,
+    """UNORDERED span-near matcher (Lucene SpanNearQuery,
     inOrder=false): a doc matches when some width-``window`` position
-    window contains at least one occurrence of every term.
+    window contains at least one occurrence of every term. Same two
+    faces as ``_phrase_bucket_factory``.
 
     Exact and fully vectorized: every minimal covering window contains
     an occurrence of the anchor term (``uterms[0]``, the sorted-first
@@ -689,6 +726,8 @@ def _span_bucket_factory(
     window − 1; score = BM25 with idf = Σ idf(term) over the distinct
     terms — same fold/tie-break discipline as the phrase scorer.
     Returns None when no term carries idf weight."""
+    from golr_loader_spark.plans.bm25 import _topk_by_score
+
     sum_idf = sum(idf.get((t, field), 0.0) for t in uterms)
     if sum_idf <= 0.0:
         return None
@@ -697,43 +736,13 @@ def _span_bucket_factory(
     anchor = uterms[0]
     others = uterms[1:]
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        def empty() -> pd.DataFrame:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": np.int64, "score": np.float64}
-            )
-
-        per_term = _decode_positional_lists(pdf, excl)
-        if any(t not in per_term for t in uterms):
-            return empty()
-        cand_ids = None
-        for t in uterms:
-            u = np.unique(per_term[t][0])
-            cand_ids = (
-                u if cand_ids is None
-                else np.intersect1d(cand_ids, u, assume_unique=True)
-            )
-        if cand_ids is None or len(cand_ids) == 0:
-            return empty()
-
-        P = 2
-        for t in uterms:
-            pos_t = per_term[t][3]
-            if len(pos_t):
-                P = max(P, int(pos_t.max()) + 2)
-        comp: dict[str, np.ndarray] = {}
-        for t in uterms:
-            ids_t, tfs_t, _d, pos_t = per_term[t]
-            docrep = np.repeat(ids_t, tfs_t)
-            di = np.searchsorted(cand_ids, docrep)
-            dic = np.minimum(di, len(cand_ids) - 1)
-            ok = cand_ids[dic] == docrep
-            comp[t] = np.sort(dic[ok].astype(np.int64) * P + pos_t[ok])
-
+    def lists(per_term: dict) -> tuple[np.ndarray, np.ndarray]:
+        cand_ids = _candidates(per_term, uterms)
+        if not len(cand_ids):
+            return _EMPTY
+        comp, P = _composite_keys(per_term, uterms, cand_ids)
         A = comp[anchor]
         n = len(A)
-        if n == 0:
-            return empty()
         doc_of = A // P
         # bracketing occurrences of each other term around each anchor
         preds, succs, pred_ok, succ_ok = [], [], [], []
@@ -766,24 +775,14 @@ def _span_bucket_factory(
                 hi = np.maximum(hi, v)
             span = hi - lo
             best = np.where(ok & (span < best), span, best)
-        match = best <= window - 1
-        if not match.any():
-            return empty()
-        freq = np.bincount(
-            (A[match] // P).astype(np.int64), minlength=len(cand_ids)
-        ).astype(np.float64)
+        freq = _match_counts(A[best <= window - 1], P, len(cand_ids))
         hit = freq > 0
-        ids0, _t0, dls0, _p0 = per_term[anchor]
-        o = np.argsort(ids0, kind="stable")
-        dl = dls0[o][np.searchsorted(ids0[o], cand_ids)].astype(np.float64)
-        score = wt * freq / (freq + k1 * ((1.0 - b) + b * dl / avgdl))
-        docs, sc = cand_ids[hit], score[hit]
-        if k < len(docs):  # skip the sort when nothing truncates
-            order = np.lexsort((docs, -sc))[:k]
-            docs, sc = docs[order], sc[order]
-        return pd.DataFrame({"doc_id": docs, "score": sc})
+        if not hit.any():
+            return _EMPTY
+        score = _bm25(wt, freq, _tf_dl_at(per_term[anchor], cand_ids)[1], k1, b, avgdl)
+        return _topk_by_score(cand_ids[hit], score[hit], k)
 
-    return score_group
+    return _pandas_face(lists, excl)
 
 
 def span_near_search(

@@ -254,22 +254,24 @@ class LocalSearcher:
             & pc.field("field").isin(list(self.cfg.fields)),
         ).to_pandas()
 
-    # BM25 scoring reads exactly these block columns — never the
-    # positional ``poss`` blobs or ``tf_sum`` (pruned at the parquet
-    # read, guide §6: ReadSchema should list only what is used)
+    # the block columns serving reads: BM25 scoring's, plus the
+    # positional ``poss`` blobs the phrase and span matchers decode
+    # (absent on non-positional roots) — never ``tf_sum`` (pruned at
+    # the parquet read, guide §6: ReadSchema should list only what is
+    # used)
     _SCORE_COLS = [
         "term", "field", "bucket", "block_id", "n", "doc_id_first",
-        "doc_ids", "tfs", "dls", "max_tf", "min_dl", "segment",
+        "doc_ids", "tfs", "dls", "max_tf", "min_dl", "segment", "poss",
     ]
 
-    def _read_score_cols(self, terms: list[str]) -> dict | None:
-        """Per-term RAW block cache + pandas-free read for the BM25
-        scoring path: returns {column: numpy array} over all of
-        ``terms``'s blocks (cfg fields only), serving repeated terms
-        from ``_term_blocks`` (the Lucene terms-dictionary-to-blocks
-        analog of DecodedListCache, one level rawer; entries are
-        immutable between refresh() calls, which rebuild the cache).
-        None when a dataset-scan fallback is needed."""
+    def _read_score_cols(self, terms: list[str]) -> dict:
+        """Per-term RAW block cache + pandas-free read for the serving
+        paths: returns {column: numpy array} over all of ``terms``'s
+        blocks (cfg fields only), serving repeated terms from
+        ``_term_blocks`` (the Lucene terms-dictionary-to-blocks analog
+        of DecodedListCache, one level rawer; entries are immutable
+        between refresh() calls, which rebuild the cache). Roots
+        without usable footer stats fall back to a dataset scan."""
         import numpy as _np
 
         cache = self._term_blocks
@@ -284,7 +286,11 @@ class LocalSearcher:
         if missing:
             raw = self._rgix.read(missing, columns=self._SCORE_COLS)
             if raw is None:
-                return None
+                names = set(self.postings.schema.names)
+                raw = self.postings.to_table(
+                    filter=pc.field("term").isin(missing),
+                    columns=[c for c in self._SCORE_COLS if c in names],
+                )
             mask = pc.and_(
                 pc.is_in(raw["term"], value_set=pa.array(missing)),
                 pc.is_in(raw["field"], value_set=pa.array(list(self.cfg.fields))),
@@ -348,17 +354,7 @@ class LocalSearcher:
         import numpy as _np
 
         cols = self._read_score_cols(read_terms)
-        if cols is None:
-            # missing footer stats → per-query dataset scan fallback
-            blocks = self._read_blocks(read_terms)
-            if not len(blocks):
-                return []
-            cols = {
-                c: blocks[c].to_numpy()
-                for c in blocks.columns
-                if c in self._SCORE_COLS
-            }
-        if not cols or not len(cols["term"]):
+        if not cols:
             return []
         score_group = _score_bucket_factory(
             weights, self.avgdl, self.cfg, k,
@@ -518,6 +514,48 @@ class LocalSearcher:
         weights = self._weights_of(self._term_rows(terms))
         return self._score(weights, terms, k)
 
+    def _positional_topk(
+        self, score_group, uterms: list[str], field: str, k: int, what: str
+    ) -> list[tuple[int, float]]:
+        """Top-k of a ``plans.phrase`` matcher core (``score_group.lists``)
+        run ONCE over every bucket — exact, since matching and scoring
+        are per doc and a doc's postings never leave its bucket. Each
+        term's list is decoded once, tombstone-masked, and kept in
+        ``_list_cache`` under ("pos", term, field): one entry per list,
+        the scope of the raw ``_term_blocks`` entries it is decoded from
+        (per-bucket entries measured slower and evicted BM25 lists from
+        the shared LRU). No pandas object is built."""
+        import numpy as _np
+
+        from golr_loader_spark.plans.bm25 import _norm_excl
+        from golr_loader_spark.plans.phrase import _decode_positional_lists
+
+        if score_group is None:
+            return []
+        per_term = {t: self._list_cache.get(("pos", t, field)) for t in uterms}
+        missing = [t for t, v in per_term.items() if v is None]
+        if missing:
+            cols = self._read_score_cols(missing)
+            if cols and "poss" not in cols:
+                raise ValueError(
+                    f"{what} needs a positional index root — build "
+                    "with IndexConfig(positions=True)"
+                )
+            decoded = {}
+            if cols:
+                here = cols["field"] == field
+                decoded = _decode_positional_lists(
+                    {c: v[here] for c, v in cols.items()},
+                    _norm_excl(self.tombstones),
+                )
+            for t in missing:
+                # () caches a term with no live posting in ``field``
+                per_term[t] = decoded.get(t, ())
+                self._list_cache.put(("pos", t, field), per_term[t])
+        docs, sc = score_group.lists({t: v for t, v in per_term.items() if v})
+        order = _np.lexsort((docs, -sc))[:k]
+        return [(int(docs[i]), float(sc[i])) for i in order]
+
     def search_phrase(
         self,
         phrase: str,
@@ -528,12 +566,12 @@ class LocalSearcher:
     ) -> list[tuple[int, float]]:
         """Serving-path (sloppy) PhraseQuery over a POSITIONAL index
         root (written with ``IndexConfig(positions=True)``). Runs the
-        SAME per-bucket matcher factory as the distributed
-        ``plans.phrase.phrase_search_positional`` — results identical
-        by construction; see that function for the matching/scoring
-        semantics."""
+        matcher core of the distributed
+        ``plans.phrase.phrase_search_positional`` once over the cached,
+        decoded per-term lists of every bucket (``_positional_topk``) —
+        results identical by construction; see that function for the
+        matching/scoring semantics."""
         from golr_loader_spark.functions.tokenize import analyze_phrase
-        from golr_loader_spark.plans.bm25 import _norm_excl
         from golr_loader_spark.plans.phrase import _phrase_bucket_factory
 
         field = field or next(iter(self.cfg.fields))
@@ -549,32 +587,9 @@ class LocalSearcher:
             for r in self._term_rows(uterms)
         }
         score_group = _phrase_bucket_factory(
-            seq, idf, field, self.avgdl[field], self.cfg, k, slop, scoring,
-            _norm_excl(self.tombstones),
+            seq, idf, field, self.avgdl[field], self.cfg, k, slop, scoring, None,
         )
-        if score_group is None:
-            return []
-        blocks = self._read_blocks(uterms)
-        if not len(blocks):
-            return []
-        if "poss" not in blocks.columns:
-            raise ValueError(
-                "search_phrase needs a positional index root — build "
-                "with IndexConfig(positions=True)"
-            )
-        blocks = blocks[blocks["field"] == field]
-        if not len(blocks):
-            return []
-        parts = [
-            score_group(pdf) for _b, pdf in blocks.groupby("bucket", sort=False)
-        ]
-        allp = pd.concat(parts, ignore_index=True)
-        allp = allp.sort_values(
-            ["score", "doc_id"], ascending=[False, True], ignore_index=True
-        ).head(k)
-        return [
-            (int(r.doc_id), float(r.score)) for r in allp.itertuples(index=False)
-        ]
+        return self._positional_topk(score_group, uterms, field, k, "search_phrase")
 
     def search_span_near(
         self,
@@ -584,11 +599,11 @@ class LocalSearcher:
         field: str | None = None,
     ) -> list[tuple[int, float]]:
         """Serving-path unordered span-near (Lucene SpanNearQuery
-        inOrder=false) over a positional root — same bucket-matcher
-        factory as the distributed ``plans.phrase.span_near_search``,
-        results identical by construction."""
+        inOrder=false) over a positional root — the matcher core of the
+        distributed ``plans.phrase.span_near_search`` over the same
+        cached per-term lists as ``search_phrase``, results identical
+        by construction."""
         from golr_loader_spark.functions.tokenize import analyze_phrase
-        from golr_loader_spark.plans.bm25 import _norm_excl
         from golr_loader_spark.plans.phrase import _span_bucket_factory
 
         field = field or next(iter(self.cfg.fields))
@@ -607,32 +622,9 @@ class LocalSearcher:
             for r in self._term_rows(uterms)
         }
         score_group = _span_bucket_factory(
-            uterms, window, idf, field, self.avgdl[field], self.cfg, k,
-            _norm_excl(self.tombstones),
+            uterms, window, idf, field, self.avgdl[field], self.cfg, k, None,
         )
-        if score_group is None:
-            return []
-        blocks = self._read_blocks(uterms)
-        if not len(blocks):
-            return []
-        if "poss" not in blocks.columns:
-            raise ValueError(
-                "search_span_near needs a positional index root — build "
-                "with IndexConfig(positions=True)"
-            )
-        blocks = blocks[blocks["field"] == field]
-        if not len(blocks):
-            return []
-        parts = [
-            score_group(pdf) for _b, pdf in blocks.groupby("bucket", sort=False)
-        ]
-        allp = pd.concat(parts, ignore_index=True)
-        allp = allp.sort_values(
-            ["score", "doc_id"], ascending=[False, True], ignore_index=True
-        ).head(k)
-        return [
-            (int(r.doc_id), float(r.score)) for r in allp.itertuples(index=False)
-        ]
+        return self._positional_topk(score_group, uterms, field, k, "search_span_near")
 
     def search_dismax(
         self, query: str, qf, k: int = 10, tie: float = 0.0, mm=0,
