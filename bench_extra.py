@@ -4,7 +4,8 @@ attributed, without touching the FROZEN driver harness (bench.py).
 
 Phases (each labeled via setJobDescription):
   tokenize_base / tokenize_pos     — mapInArrow tokenizer only, noop
-  postings_base / postings_pos     — tokenize + wide shuffle + encode, noop
+  postings_base / postings_pos     — build_postings_packed (tokenize+pack →
+                                     exchange → unpack+sort+encode), noop
   build_base / build_pos           — the full bench.py build_index arm
                                      (persist + term_stats), same shape
 
@@ -40,7 +41,7 @@ def main() -> None:
     from golr_loader_spark.functions.tokenize import tokenize
     from golr_loader_spark.plans.build_index import (
         build_index,
-        build_postings,
+        build_postings_packed,
     )
     from golr_loader_spark.plans.documents import (
         assign_dense_ids,
@@ -85,23 +86,13 @@ def main() -> None:
 
     def run_phase(ph: str) -> None:
         if ph == "tokenize_base":
-            timed(ph, lambda d: noop(tokenize(assign_dense_ids(d), cfg, field_codes=True)))
+            timed(ph, lambda d: noop(tokenize(assign_dense_ids(d), cfg)))
         elif ph == "tokenize_pos":
-            timed(ph, lambda d: noop(tokenize(assign_dense_ids(d), cfgp, field_codes=True)))
+            timed(ph, lambda d: noop(tokenize(assign_dense_ids(d), cfgp)))
         elif ph == "postings_base":
-            timed(
-                ph,
-                lambda d: noop(
-                    build_postings(tokenize(assign_dense_ids(d), cfg, field_codes=True), cfg)
-                ),
-            )
+            timed(ph, lambda d: noop(build_postings_packed(assign_dense_ids(d), cfg)))
         elif ph == "postings_pos":
-            timed(
-                ph,
-                lambda d: noop(
-                    build_postings(tokenize(assign_dense_ids(d), cfgp, field_codes=True), cfgp)
-                ),
-            )
+            timed(ph, lambda d: noop(build_postings_packed(assign_dense_ids(d), cfgp)))
         elif ph in ("build_base", "build_pos"):
             c = cfg if ph == "build_base" else cfgp
 

@@ -60,13 +60,7 @@ def cmd_build(args) -> None:
         positions=args.positions,
     )
     t0 = time.perf_counter()
-    build_index_checkpointed(
-        docs,
-        args.out,
-        cfg,
-        n_doc_splits=args.doc_splits,
-        n_bucket_groups=args.bucket_groups,
-    )
+    build_index_checkpointed(docs, args.out, cfg, n_bucket_groups=args.bucket_groups)
     wall = time.perf_counter() - t0
     n = corpus.count()
     print(json.dumps({"index": args.out, "docs": n, "wall_s": round(wall, 1),
@@ -125,7 +119,6 @@ def main(argv: list[str] | None = None) -> None:
     b = sub.add_parser("build", help="checkpointed index build (resumable)")
     b.add_argument("--corpus", required=True)
     b.add_argument("--out", required=True)
-    b.add_argument("--doc-splits", type=int, default=4)
     b.add_argument("--bucket-groups", type=int, default=4)
     b.add_argument("--bucket-bits", type=int, default=5)
     b.add_argument("--block-size", type=int, default=128)

@@ -435,7 +435,7 @@ def _field_arrays(
     {pos, codes, vocab, tf, dl, cpos} AFTER the vocab-level min_len
     filter (dl recomputed over kept rows — the Σtf invariant), or
     None when the field yields no tokens. Shared by ``tokenize`` and
-    the packed build path (plans.build_index) so both emit
+    the index build's pack stage (plans.build_index) so both emit
     byte-identical token rows."""
     r = _ANALYZERS[analyzer](texts, positional=positional, chain=chain, raw=True)
     if r is None:
@@ -472,23 +472,18 @@ def _field_arrays(
 def tokenize(
     documents: DataFrame,
     cfg: IndexConfig | None = None,
-    field_codes: bool = False,
 ) -> DataFrame:
-    """documents → (doc_id, field, term, tf, dl).
+    """documents → flat token rows (doc_id, field, term, tf, dl[,
+    positions]).
 
     Each configured field name must be a string column of
     ``documents``. tf is complete per output row because one document
-    occupies exactly one input row of the Arrow batch; dl (the doc's
-    token count in that field) rides along so downstream BM25 stages
-    never join a separate doc-length table — one fewer wide shuffle
-    in the index build.
-
-    ``field_codes=True`` (the index-build fast path): the field
-    column is emitted as ``fcode`` — the field's int position in
-    ``cfg.fields`` — instead of the field-name string. The Arrow→JVM
-    boundary then converts a constant int column instead of tens of
-    millions of UTF8 strings, and ``build_postings`` consumes the
-    code directly (its shuffle carries fcode anyway).
+    occupies exactly one input row of the Arrow batch, and dl (the
+    doc's token count in that field) rides along. This is the token
+    table for statistics and analysis jobs (``term_stats``,
+    ``doc_lengths``, corpus stats, oracles); the index build never
+    materializes it — its pack stage calls the same ``_field_arrays``
+    kernel, so both emit identical token rows.
     """
     import pyarrow as pa
 
@@ -507,8 +502,7 @@ def tokenize(
     cols = ["doc_id"] + [f for f, _ in field_spec]
 
     out_fields = [
-        ("doc_id", pa.int64()),
-        ("fcode", pa.int32()) if field_codes else ("field", pa.string()),
+        ("doc_id", pa.int64()), ("field", pa.string()),
         ("term", pa.string()), ("tf", pa.int32()), ("dl", pa.int32()),
     ]
     if positional:
@@ -529,8 +523,7 @@ def tokenize(
                 continue
             doc_ids = rb.column(0).to_numpy(zero_copy_only=False)
             for fi, (fname, analyzer) in enumerate(field_spec):
-                ci = fi + 1
-                texts = rb.column(ci).to_pandas()
+                texts = rb.column(fi + 1).to_pandas()
                 r = _field_arrays(texts, analyzer, positional, chain, min_len)
                 if r is None:
                     continue
@@ -538,17 +531,12 @@ def tokenize(
                 tf, dl_rows, cpos = r["tf"], r["dl"], r["cpos"]
                 n = len(pos)
                 vocab_arr = pa.array(vocab, type=pa.string())
-                field_arr = (
-                    pa.array(np.full(n, fi, dtype=np.int32))
-                    if field_codes
-                    else pa.compute.take(
-                        pa.array([fname], type=pa.string()),
-                        pa.array(np.zeros(n, dtype=np.int32)),
-                    )
-                )
                 arrays = [
                     pa.array(doc_ids[pos], type=pa.int64()),
-                    field_arr,
+                    pa.compute.take(
+                        pa.array([fname], type=pa.string()),
+                        pa.array(np.zeros(n, dtype=np.int32)),
+                    ),
                     pa.compute.take(vocab_arr, pa.array(codes)),
                     pa.array(tf.astype(np.int32)),
                     pa.array(dl_rows),
@@ -559,6 +547,4 @@ def tokenize(
                 yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
     schema = TOKENS_SCHEMA_POS if positional else TOKENS_SCHEMA
-    if field_codes:
-        schema = schema.replace("field string", "fcode int")
     return documents.select(*cols).mapInArrow(run, schema=schema)

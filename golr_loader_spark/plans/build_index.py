@@ -30,9 +30,11 @@ Physical design (SURVEY.md §4.2):
 * Postings are written range-partitioned + sorted by term so parquet
   row-group min/max stats prune query-term lookups at the scan.
 
-All heavy lifting is Catalyst (groupBy partial aggregation, AQE);
-Python appears once, in the Arrow-native block encoder (zero-copy
-ListArray buffers, loops only over term-groups, never posting rows).
+Python appears in two mapInArrow stages around the one exchange
+(tokenize+pack, unpack+sort+encode — see ``build_postings_packed``);
+both are numpy passes over whole batches, never loops over posting
+rows. Every build — one-shot, checkpointed, streaming, upsert — runs
+that one pipeline.
 """
 
 from __future__ import annotations
@@ -42,6 +44,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute  # noqa: F401 — binds pa.compute in Python workers
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,8 +54,6 @@ from golr_loader_spark.functions.codec import (
     binary_stream as _binary_stream,
     varint_encode_with_sizes,
 )
-from golr_loader_spark.functions.tokenize import tokenize
-
 POSTINGS_SCHEMA = pa.schema(
     [
         ("term", pa.string()),
@@ -194,176 +195,78 @@ def _encode_groups(
     return pa.RecordBatch.from_arrays(arrays, schema=POSTINGS_SCHEMA)
 
 
-def _encode_batches(cfg: IndexConfig) -> "callable":
-    """Streaming flat-row block encoder for mapInArrow.
-
-    Input batches are FLAT posting rows (term, fcode, doc_id, tf,
-    dl), hash-partitioned by (term, fcode, bucket-of(doc_id)) and
-    sorted by (term, fcode, doc_id) within the partition — ``fcode``
-    is the field's integer position in ``cfg.fields`` and the bucket
-    is NOT shipped: it is a monotone function of doc_id, so the
-    (term, fcode, doc_id) sort already yields contiguous
-    (term, field, bucket) runs, and the encoder re-derives it with
-    one vectorized shift (guide §2.3: shuffle keys, not derivable
-    metadata — dropping the field string + bucket int cut the wide
-    shuffle's row width by ~25%). Group boundaries are detected
-    vectorized; the (possibly incomplete) trailing group of each
-    batch is carried over and prepended to the next, so NO posting
-    list is ever materialized as a single row — the giant-row /
-    executor-OOM failure mode of collect_list on a hot term simply
-    cannot occur, at any scale."""
+def _encode_sorted(rb: pa.RecordBatch, cfg: IndexConfig) -> pa.RecordBatch:
+    """Block encoder over one batch of token rows (term, fcode, doc_id,
+    tf, dl[, positions]) sorted by (term, fcode, doc_id) and holding
+    every row of each (term, fcode, bucket) group it touches — the
+    unpack stage's whole sorted partition, or one spill sub-bucket.
+    ``fcode`` is the field's integer position in ``cfg.fields``; the
+    bucket is not shipped: it is a monotone function of doc_id, so the
+    sort already yields contiguous (term, field, bucket) runs, and it is
+    re-derived here with one vectorized shift. Group boundaries are
+    found vectorized, then one `_encode_groups` call encodes them all."""
     field_names = list(cfg.fields)
     shift = np.int64(max(0, cfg.id_space_bits - cfg.bucket_bits))
+    terms = rb.column(0)
+    fcodes = rb.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+    ids = rb.column(2).to_numpy(zero_copy_only=False)
+    tfs = rb.column(3).to_numpy(zero_copy_only=False)
+    dls = rb.column(4).to_numpy(zero_copy_only=False)
+    # same arithmetic shift as bucket_of (monotone, sign-preserving)
+    buckets = np.right_shift(ids.astype(np.int64), shift).astype(np.int32)
+    pdata = psizes = None
+    if rb.num_columns > 5:
+        # positional: flat byte stream + per-row sizes straight from
+        # the Arrow binary buffers (no per-row objects)
+        pdata, poffs = _binary_stream(rb.column(5))
+        psizes = np.diff(poffs)
 
-    def encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pend: dict | None = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            terms = rb.column(0)
-            fcodes = rb.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-            ids = rb.column(2).to_numpy(zero_copy_only=False)
-            tfs = rb.column(3).to_numpy(zero_copy_only=False)
-            dls = rb.column(4).to_numpy(zero_copy_only=False)
-            # bucket re-derived from doc_id: same arithmetic shift as
-            # bucket_of (monotone, sign-preserving)
-            buckets = np.right_shift(ids.astype(np.int64), shift).astype(
-                np.int32
-            )
-            if rb.num_columns > 5:
-                # positional: flat byte stream + per-row sizes straight
-                # from the Arrow binary buffers (no per-row objects)
-                pdata, poffs = _binary_stream(rb.column(5))
-                psizes = np.diff(poffs)
-            else:
-                poffs = pdata = psizes = None
-
-            # group keys without string compares: dictionary-encode
-            # terms (codes are appearance-ordered, fine — we only need
-            # equal-key runs and input is grouped); fcodes arrive as
-            # ints already.
-            tcodes = pa.compute.dictionary_encode(terms).indices.to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            bmin = np.int64(buckets.min())
-            brange = np.int64(buckets.max()) - bmin + 1
-            key = (tcodes * len(field_names) + fcodes) * brange + (
-                buckets.astype(np.int64) - bmin
-            )
-
-            if pend is not None:
-                # pending tail continues iff first key here equals its
-                # key fingerprint (same term/field/bucket values)
-                cont = (
-                    pend["term"] == terms[0].as_py()
-                    and pend["fcode"] == int(fcodes[0])
-                    and pend["bucket"] == int(buckets[0])
-                )
-                if cont:
-                    ne = key != key[0]
-                    head_len = int(np.argmax(ne)) if ne.any() else len(key)
-                    pend["ids"] = np.concatenate([pend["ids"], ids[:head_len]])
-                    pend["tfs"] = np.concatenate([pend["tfs"], tfs[:head_len]])
-                    pend["dls"] = np.concatenate([pend["dls"], dls[:head_len]])
-                    if psizes is not None:
-                        pend["pdata"] = np.concatenate(
-                            [pend["pdata"], pdata[poffs[0] : poffs[head_len]]]
-                        )
-                        pend["psizes"] = np.concatenate(
-                            [pend["psizes"], psizes[:head_len]]
-                        )
-                        poffs, psizes = poffs[head_len:], psizes[head_len:]
-                    terms, fcodes = terms[head_len:], fcodes[head_len:]
-                    buckets, ids = buckets[head_len:], ids[head_len:]
-                    tfs, dls, key = tfs[head_len:], dls[head_len:], key[head_len:]
-                    if len(ids) == 0:
-                        continue
-                out = _flush_pend(pend, cfg)
-                if out is not None:
-                    yield out
-                pend = None
-
-            # boundaries of sorted keys
-            change = np.flatnonzero(np.diff(key) != 0) + 1
-            offs = np.concatenate([[0], change, [len(key)]])
-            # last group → pend (may continue in the next batch)
-            last_lo = int(offs[-2])
-            pend = {
-                "term": terms[last_lo].as_py(),
-                "fcode": int(fcodes[last_lo]),
-                "field": field_names[int(fcodes[last_lo])],
-                "bucket": int(buckets[last_lo]),
-                "ids": ids[last_lo:].copy(),
-                "tfs": tfs[last_lo:].copy(),
-                "dls": dls[last_lo:].copy(),
-            }
-            if psizes is not None:
-                pend["pdata"] = pdata[poffs[last_lo] : poffs[-1]].copy()
-                pend["psizes"] = psizes[last_lo:].copy()
-            if len(offs) > 2:
-                g_starts = offs[:-2].astype(np.int64)
-                yield _encode_groups(
-                    terms.take(pa.array(g_starts)),
-                    pa.compute.take(
-                        pa.array(field_names, type=pa.string()),
-                        pa.array(fcodes[g_starts], type=pa.int64()),
-                    ),
-                    buckets[g_starts],
-                    offs[:-1] - 0,
-                    ids[:last_lo],
-                    tfs[:last_lo],
-                    dls[:last_lo],
-                    cfg,
-                    pos_data=(
-                        pdata[poffs[0] : poffs[last_lo]]
-                        if psizes is not None
-                        else None
-                    ),
-                    pos_sizes=psizes[:last_lo] if psizes is not None else None,
-                )
-        if pend is not None:
-            out = _flush_pend(pend, cfg)
-            if out is not None:
-                yield out
-
-    return encode
-
-
-def _flush_pend(pend: dict, cfg: IndexConfig):
-    if len(pend["ids"]) == 0:
-        return None
+    # group keys without string compares: dictionary-encode terms
+    # (codes are appearance-ordered, fine — only equal-key runs matter
+    # and the input is grouped); fcodes arrive as ints already
+    tcodes = pa.compute.dictionary_encode(terms).indices.to_numpy(
+        zero_copy_only=False
+    ).astype(np.int64)
+    bmin = np.int64(buckets.min())
+    brange = np.int64(buckets.max()) - bmin + 1
+    key = (tcodes * len(field_names) + fcodes) * brange + (
+        buckets.astype(np.int64) - bmin
+    )
+    change = np.flatnonzero(np.diff(key) != 0) + 1
+    offs = np.concatenate([[0], change, [len(key)]]).astype(np.int64)
+    g_starts = offs[:-1]
     return _encode_groups(
-        pa.array([pend["term"]]),
-        pa.array([pend["field"]]),
-        np.array([pend["bucket"]]),
-        np.array([0, len(pend["ids"])], dtype=np.int64),
-        pend["ids"],
-        pend["tfs"],
-        pend["dls"],
+        terms.take(pa.array(g_starts)),
+        pa.compute.take(
+            pa.array(field_names, type=pa.string()),
+            pa.array(fcodes[g_starts], type=pa.int64()),
+        ),
+        buckets[g_starts],
+        offs,
+        ids,
+        tfs,
+        dls,
         cfg,
-        pos_data=pend.get("pdata"),
-        pos_sizes=pend.get("psizes"),
+        pos_data=pdata,
+        pos_sizes=psizes,
     )
 
 
 # ---------------------------------------------------------------------------
-# Packed build path (guide §2.3/§8: the boundary crossings, not the
-# kernels, dominated the build — so cross the boundary with a few
-# binary blob rows instead of tens of millions of flat token rows).
+# The build (guide §2.3/§8: the boundary crossings, not the kernels,
+# dominate a build — so cross the boundary with a few binary blob rows
+# instead of tens of millions of flat token rows).
 #
-# The flat pipeline converts every token row JVM→Arrow→Python twice
-# (tokenizer out, encoder in) and Tungsten-sorts the flat rows in
-# between; stage probes at 240k docs showed those conversions + sort
-# at ~13 s of a ~21 s build while the numpy kernels cost <1 s. The
-# packed path keeps the SAME shuffle keys and the SAME encoder
-# arithmetic but moves token rows as serialized Arrow IPC batches:
+# Converting every token row JVM→Arrow→Python and Tungsten-sorting the
+# flat rows cost ~13 s of a ~21 s build at 240k docs while the numpy
+# kernels cost <1 s. Token rows therefore move as serialized Arrow IPC
+# batches:
 #
 #   tokenize+pack (mapInArrow over documents)
 #     → (pid int, blob binary) rows, one blob per reduce partition
 #       per input batch — the tokenizer groups its token rows by the
-#       target reduce partition (hash of (term, fcode, bucket), the
-#       exact key set of the flat exchange) and serializes each
-#       group's columnar slice;
+#       target reduce partition (hash of (term, fcode, bucket)) and
+#       serializes each group's columnar slice;
 #   Exchange hashpartitioning(pid)
 #     → moves ~n_red blob rows per map task instead of millions of
 #       flat rows (pid values are chosen via _partition_lut so
@@ -371,17 +274,23 @@ def _flush_pend(pend: dict, cfg: IndexConfig):
 #       partition — no balls-in-bins collision skew, guide §2.5);
 #   unpack+sort+encode (mapInArrow)
 #     → deserializes the partition's blobs, ONE numpy lexsort on
-#       (dictionary code, fcode, doc_id) replaces the Tungsten sort,
-#       then streams through the SAME `_encode_batches` kernel —
-#       block output is byte-identical to the flat path.
+#       (dictionary code, fcode, doc_id) in place of a Tungsten sort,
+#       then one `_encode_sorted` call per sorted batch.
 #
 # Memory: the unpack stage buffers one reduce partition's token rows
 # (columnar, ~tens of MB at bench scale); partition count scales with
-# cluster parallelism (waves × defaultParallelism), so per-task
-# buffers shrink as the cluster grows — and
-# `spark.golr_loader.build.packed=false` restores the flat
-# Tungsten-sort plan (which spills) for memory-constrained clusters.
+# cluster parallelism (_WAVES × defaultParallelism), so per-task
+# buffers shrink as the cluster grows, and past
+# `spark.golr_loader.build.packed_spill_mb` a partition spills to
+# group-disjoint sub-bucket files (see `_unpack_encode`).
 # ---------------------------------------------------------------------------
+
+# reduce partitions per core. Unpack tasks are light (numpy sort, no
+# Tungsten sort memory pressure), so the knee is 2 waves (measured at
+# 240k docs / local[32]: builds 7.4 s at 2 waves vs 8.2 s at 4, and
+# every later query over the persisted block table schedules half the
+# scan tasks).
+_WAVES = 2
 
 _PARTITION_LUT_CACHE: dict[int, "np.ndarray"] = {}
 
@@ -603,8 +512,8 @@ def _spill_targets(b: pa.RecordBatch, shift: np.int64) -> np.ndarray:
 def _unpack_encode(cfg: IndexConfig, spill_bytes: int = 0) -> "callable":
     """mapInArrow stage: (pid, blob) rows of one reduce partition →
     postings blocks. Deserializes the blobs, sorts with ONE numpy
-    lexsort (`_sort_token_batches`), then streams the sorted rows
-    through the same `_encode_batches` kernel as the flat path.
+    lexsort (`_sort_token_batches`), then encodes the sorted rows with
+    one `_encode_sorted` call.
 
     **Bounded memory (external-bucket spill).** When the partition's
     buffered token bytes exceed ``spill_bytes`` (>0), rows are routed
@@ -615,14 +524,12 @@ def _unpack_encode(cfg: IndexConfig, spill_bytes: int = 0) -> "callable":
     never depends on the order of distinct groups within a reduce
     partition, sorting + encoding the sub-buckets ONE AT A TIME yields
     the byte-identical block table with peak memory ~ partition/
-    ``_SPILL_BUCKETS`` instead of the whole partition (the packed
-    analog of the flat path's Tungsten spill; parity gated by
+    ``_SPILL_BUCKETS`` instead of the whole partition (parity gated by
     tests/test_packed_spill.py). The bound is the largest sub-bucket;
     a hot term no longer sets it alone, because its rows spread over
     its ``2**bucket_bits`` doc-id buckets. Spill files are closed and
     removed however the task ends."""
     schema = _token_arrow_schema(cfg)
-    encode = _encode_batches(cfg)
     shift = np.int64(max(0, cfg.id_space_bits - cfg.bucket_bits))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -691,23 +598,18 @@ def _unpack_encode(cfg: IndexConfig, spill_bytes: int = 0) -> "callable":
             if spill_dir is None:
                 srb = _sort_token_batches(parts, schema)
                 if srb is not None:
-                    yield from encode(iter([srb]))
+                    yield _encode_sorted(srb, cfg)
                 return
             spill.close()
-
-            def _sorted_subbuckets() -> Iterator[pa.RecordBatch]:
-                for i in range(_SPILL_BUCKETS):
-                    path = os.path.join(spill_dir, f"b{i}.arrow")
-                    with pa.OSFile(path, "rb") as src:
-                        sub = list(pa.ipc.open_stream(src))
-                    srb = _sort_token_batches(sub, schema)
-                    if srb is not None:
-                        # sub-buckets never share a (term, fcode,
-                        # bucket) group, so the encoder's pending-group
-                        # carryover flushes naturally at boundaries
-                        yield srb
-
-            yield from encode(_sorted_subbuckets())
+            for i in range(_SPILL_BUCKETS):
+                path = os.path.join(spill_dir, f"b{i}.arrow")
+                with pa.OSFile(path, "rb") as src:
+                    sub = list(pa.ipc.open_stream(src))
+                # sub-buckets never share a (term, fcode, bucket)
+                # group, so each one encodes on its own
+                srb = _sort_token_batches(sub, schema)
+                if srb is not None:
+                    yield _encode_sorted(srb, cfg)
         finally:
             # a failed task must not hold its spill files open until
             # the worker's next garbage collection
@@ -724,27 +626,25 @@ def build_postings_packed(
     documents: DataFrame,
     cfg: IndexConfig | None = None,
 ) -> DataFrame:
-    """documents → postings via the packed boundary (see the section
-    comment above). Same reduce-key set, same encoder, byte-identical
-    blocks; the exchange moves ~n_red blob rows per map task instead
-    of every token row, and the Tungsten sort disappears into one
-    numpy lexsort per reduce task."""
+    """documents(doc_id, <cfg.fields>) → compressed block-max postings
+    (see the section comment above): tokenize+pack → one exchange of
+    ~n_red blob rows per map task → unpack, one numpy lexsort and the
+    block encoder per reduce task. The encoder needs no corpus
+    statistic, so the whole build is one unbroken job, and the bucket
+    key bounds per-group work to ≤ n_docs / 2**bucket_bits postings
+    however hot a term is.
+
+    Every build goes through here: ``build_index``, the checkpointed
+    build (one call per bucket group), the streaming build (one per
+    micro-batch) and the fast upsert (one per segment). Segment 0 is
+    the base build; fast upserts append blocks under higher segment
+    numbers, and compaction folds everything back to segment 0."""
     cfg = cfg or IndexConfig()
     spark = documents.sparkSession
-    # packed reduce tasks are light (numpy sort, no Tungsten sort
-    # memory pressure), so the knee is 2 waves, not the flat path's 4
-    # (measured at 240k/local[32]: builds 7.4 s @2 vs 8.2 s @4, and
-    # every later query over the persisted block table schedules half
-    # the scan tasks). Same scale-adaptive form: waves ×
-    # defaultParallelism, floored by spark.sql.shuffle.partitions.
-    waves = int(
-        spark.conf.get(
-            "spark.golr_loader.build.packed_waves",
-            spark.conf.get("spark.golr_loader.build.waves", "2"),
-        )
-    )
+    # scale-adaptive: _WAVES × defaultParallelism, floored by
+    # spark.sql.shuffle.partitions
     n_red = max(
-        spark.sparkContext.defaultParallelism * waves,
+        spark.sparkContext.defaultParallelism * _WAVES,
         int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
     )
     lut = _partition_lut(spark, n_red)
@@ -752,8 +652,7 @@ def build_postings_packed(
     # disables). Default 1024: never trips at bench scale (~25 MB per
     # reduce partition at 240k docs / 64 partitions) but bounds a
     # pathological partition's memory to ~1/16th of its token bytes
-    # on memory-constrained deployments without falling all the way
-    # back to the flat Tungsten plan.
+    # on memory-constrained deployments.
     spill_mb = float(
         spark.conf.get("spark.golr_loader.build.packed_spill_mb", "1024")
     )
@@ -773,108 +672,6 @@ def build_postings_packed(
         packed.repartition(n_red, F.col("pid"))
         .mapInArrow(_unpack_encode(cfg, spill_bytes), spark_schema)
         .withColumn("segment", F.lit(0))
-    )
-
-
-def build_postings(
-    tokens: DataFrame,
-    cfg: IndexConfig | None = None,
-) -> DataFrame:
-    """tokens(doc_id, field, term, tf, dl) → compressed block-max
-    postings.
-
-    Plan: hash-repartition flat token rows on (term, fcode,
-    bucket-of(doc_id)) — the bucket is hashed as an inline expression
-    and the field travels as an int code, so the exchange rows are
-    (term, fcode, doc_id, tf, dl[, positions]) only — then Tungsten-
-    sort within partitions on (term, fcode, doc_id) (bucket is
-    monotone in doc_id, so this equals the (term, field, bucket,
-    doc_id) order the encoder needs), and stream through the
-    Arrow-native block encoder, which re-derives buckets with one
-    vectorized shift. This is the engine's only wide shuffle, it
-    moves flat columnar rows (never materialized lists — a
-    collect_list of a hot term would be a single giant JVM row, the
-    classic skew OOM), and the bucket key bounds per-group work to
-    ≤ n_docs / 2**bucket_bits postings regardless of term hotness.
-    The encoder needs no corpus statistic, so the lineage tokenize →
-    shuffle → encode is one unbroken job — no stats barrier in the
-    middle.
-
-    Shuffle sizing: the exchange uses an EXPLICIT partition count of
-    ``spark.golr_loader.build.waves`` (default 4) × the session's
-    defaultParallelism, floored by ``spark.sql.shuffle.partitions`` —
-    multi-wave, scale-adaptive, never a local constant. With exactly
-    one task per core a stage's wall is the max over concurrent
-    tasks, so reduce-key imbalance and node slowdowns amplify with
-    cluster width; a few waves per core lets fast cores absorb
-    stragglers and keeps per-task sorts in executor memory (measured
-    at 240k docs / local[32]: 1 wave 32.6s base / 46.0s positional,
-    4 waves 21.3 / 24.9).
-    """
-    cfg = cfg or IndexConfig()
-
-    tk = tokens
-    if "dl" not in tk.columns:
-        tk = tk.join(doc_lengths(tokens), on=["doc_id", "field"])
-
-    positional = cfg.positions and "positions" in tk.columns
-    # Shuffle-row diet (guide §2.3): the exchange carries (term,
-    # fcode:int, doc_id, tf, dl[, positions]) — the field STRING is
-    # replaced by its integer position in cfg.fields and the bucket
-    # is not shipped at all (it is a monotone function of doc_id; the
-    # partitioner hashes the inline expression and the encoder
-    # re-derives it with one vectorized shift). Because bucket is
-    # monotone in doc_id, sorting by (term, fcode, doc_id) yields the
-    # exact same contiguous (term, field, bucket, doc_id-ascending)
-    # runs the encoder needs.
-    field_names = list(cfg.fields)
-    if "fcode" in tk.columns:
-        # tokenize(field_codes=True) already emitted the int code —
-        # no string column ever existed on this path
-        fcode = F.col("fcode")
-    else:
-        fcode = F.lit(None).cast("int")
-        for i in range(len(field_names) - 1, -1, -1):
-            fcode = F.when(F.col("field") == field_names[i], F.lit(i)).otherwise(
-                fcode
-            )
-    cols = [F.col("term"), fcode.alias("_fc"), F.col("doc_id"),
-            F.col("tf"), F.col("dl")]
-    if positional:
-        cols.append(F.col("positions"))
-    spark = tk.sparkSession
-    # Multi-wave reduce sizing, scale-adaptive: a few waves per core
-    # lets fast cores absorb stragglers (see docstring); derived from
-    # the session's parallelism/shuffle config, never a constant.
-    # measured at 240k docs / local[32]: 1 wave 32.6s base / 46.0s
-    # positional, 2 waves 22.1/32.7, 4 waves 21.3/24.9, 8 waves
-    # 20.7/25.4 — 4 is the knee (stragglers absorbed, per-task sorts
-    # smaller) and stays sane at cluster scale (reduce partitions =
-    # 4× total cores, with shuffle.partitions as the floor)
-    waves = int(spark.conf.get("spark.golr_loader.build.waves", "4"))
-    n_red = max(
-        spark.sparkContext.defaultParallelism * waves,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
-    bucket_expr = bucket_of(F.col("doc_id"), cfg.bucket_bits, cfg.id_space_bits)
-    flat = (
-        tk.select(*cols)
-        .repartition(n_red, F.col("term"), F.col("_fc"), bucket_expr)
-        .sortWithinPartitions("term", "_fc", "doc_id")
-    )
-    spark_schema = (
-        "term string, field string, bucket int, block_id int, n int, "
-        "doc_id_first long, doc_ids binary, tfs binary, dls binary, "
-        "max_tf int, min_dl int, tf_sum long"
-    )
-    if positional:
-        spark_schema += ", poss binary"
-    # segment 0 = the base build. Fast upserts append blocks under
-    # higher segment numbers; per-segment liveDocs (bm25._norm_excl)
-    # kill only the superseded copies. Compaction folds everything
-    # back to segment 0.
-    return flat.mapInArrow(_encode_batches(cfg), spark_schema).withColumn(
-        "segment", F.lit(0)
     )
 
 
@@ -947,20 +744,9 @@ def build_index(
     from pyspark import StorageLevel
 
     cfg = cfg or IndexConfig()
-    spark = documents.sparkSession
-    packed = (
-        spark.conf.get("spark.golr_loader.build.packed", "true").lower()
-        == "true"
+    postings = build_postings_packed(documents, cfg).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    if packed:
-        # default: the packed-boundary plan (blob exchange + in-encoder
-        # sort — see build_postings_packed); flat Tungsten-sort plan
-        # stays available for memory-constrained clusters
-        postings = build_postings_packed(documents, cfg)
-    else:
-        tokens = tokenize(documents, cfg, field_codes=True)
-        postings = build_postings(tokens, cfg)
-    postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
     if n_docs is None:
         n_docs = documents.count()  # ids unique by construction
     return InvertedIndex(

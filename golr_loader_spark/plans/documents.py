@@ -90,7 +90,9 @@ def assign_dense_ids(
 
       1. range-bucket rows by the high bits of the hash id (uniform,
          monotone) — ``range_buckets`` parallel groups;
-      2. count per bucket (tiny driver-side cumulative offsets);
+      2. count per bucket (tiny driver-side cumulative offsets); the
+         same job counts (doc_id, repo, path, commit) keys held by
+         more than one row, and any such key raises ``ValueError``;
       3. row_number within each bucket ordered by (hash, repo, path,
          commit) — the tie-break makes order total even under hash
          collisions;
@@ -119,10 +121,26 @@ def assign_dense_ids(
     rb = F.shiftrightunsigned(F.col("doc_id"), 64 - bits)
     keys = ["doc_id", "repo", "path", "commit"]
     narrow = documents.select(*keys).withColumn("_rb", rb)
-    counts = {
-        int(r["_rb"]): int(r["n"])
-        for r in narrow.groupBy("_rb").agg(F.count("*").alias("n")).collect()
-    }
+    # per-range counts, and in the same job the number of full keys
+    # held by more than one row: such rows would each match every
+    # mapping row of their key in the attach below and come out twice
+    per_range = (
+        narrow.groupBy("_rb", *keys)
+        .agg(F.count("*").alias("c"))
+        .groupBy("_rb")
+        .agg(
+            F.sum("c").alias("n"),
+            F.count(F.when(F.col("c") > 1, 1)).alias("dup_keys"),
+        )
+        .collect()
+    )
+    dup_keys = sum(int(r["dup_keys"]) for r in per_range)
+    if dup_keys:
+        raise ValueError(
+            f"assign_dense_ids: {dup_keys} duplicate (doc_id, repo, path, "
+            "commit) keys; deduplicate the documents first"
+        )
+    counts = {int(r["_rb"]): int(r["n"]) for r in per_range}
     offsets, acc = {}, 0
     for b in sorted(counts):
         offsets[b] = acc

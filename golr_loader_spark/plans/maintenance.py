@@ -32,7 +32,7 @@ tombstone set rides a Spark broadcast (a delete batch of 10M ids is
 ~80 MB — fine; a tombstone set rivaling the corpus itself should be
 expressed as a rebuild instead).
 
-Upsert segments are built on the packed path
+Upsert segments are built by the index build itself
 (``build_index.build_postings_packed``), and the metadata-sized tables —
 tombstones (``plans.tombstones``) and the fast upsert's stats — are read
 and written with pyarrow on the driver, not by Spark jobs.
@@ -225,9 +225,8 @@ def _compact_batches(excl, cfg: IndexConfig) -> "callable":
     """mapInArrow body over block rows sorted by (term, field, bucket,
     segment, block_id): each Arrow batch's complete lists go through
     ``_compact_blocks`` together; the batch's last list may continue in
-    the next batch, so its rows are carried over and prepended to it
-    (as ``_encode_batches`` carries its pending group). A task holds
-    one batch plus one list."""
+    the next batch, so its rows are carried over and prepended to it.
+    A task holds one batch plus one list."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         carry: pa.Table | None = None

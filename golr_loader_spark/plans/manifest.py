@@ -9,21 +9,20 @@ lineage manifest table, so a killed build resumes exactly where it
 stopped (north rule: "resumable from checkpoint with per-partition
 lineage + metrics").
 
-Two checkpointed phases, each a set of independent idempotent splits:
+The unit of commit is a **bucket group**: a contiguous range of the
+monotone doc-id buckets (``_bucket_groups``). Each group's commit
+filters ``documents`` to its bucket range, builds that subset's
+compressed block-max postings with the one packed build
+(``build_postings_packed``), writes ``postings/group=G`` plus its term
+stats, and appends a manifest row with the group's lineage: rows in,
+a checksum rolling up the per-row ``content_sha256`` invariant, blocks
+out and wall ms. Every (term, field, bucket) list lives in exactly one
+group, so the groups' block tables together are the one-shot build's.
+Corpus stats and the merged term stats are two more commits, derived
+from the written block tables.
 
-* **Phase A — tokenize** (one pass over the corpus, per doc-split):
-  documents filtered by ``pmod(doc_id, n_doc_splits)`` → tokens with
-  doc length and bucket attached → parquet under
-  ``tokens/split=S/bucket=B``. Lineage: rows in/out, a corpus
-  sha256-derived checksum (the per-row content-sha invariant rolled
-  up per split), wall ms.
-* **Phase B — postings** (per contiguous bucket-group): reads only
-  the ``bucket=B`` directories of its group (partition pruning — no
-  re-scan of the corpus, no re-tokenize), builds compressed block-max
-  postings, writes ``postings/group=G``.
-
-A crash between a split's data write and its manifest append simply
-re-runs that split; the data write is a directory overwrite, so the
+A crash between a group's data write and its manifest append simply
+re-runs that group; the data write is a directory overwrite, so the
 commit is idempotent (the optimistic-commit analog of an Iceberg
 snapshot, which this layout stands in for — the sandbox lacks the
 Iceberg jars).
@@ -38,11 +37,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from golr_loader_spark.config import IndexConfig
-from golr_loader_spark.functions.tokenize import tokenize
 from golr_loader_spark.plans.build_index import (
     InvertedIndex,
+    _write_config,
     bucket_of,
-    build_postings,
+    build_postings_packed,
+    derived_stats,
+    derived_term_stats,
 )
 
 MANIFEST_SCHEMA = (
@@ -111,23 +112,34 @@ def _bucket_groups(cfg: IndexConfig, n_groups: int) -> list[list[int]]:
     return out
 
 
+def _lineage_aggs() -> list:
+    """(n, ck): the row count and Σ crc32(content_sha256) of a document
+    set — the per-row content-sha invariant rolled up."""
+    return [
+        F.count("*").alias("n"),
+        F.coalesce(F.sum(F.crc32(F.col("content_sha256"))), F.lit(0)).alias("ck"),
+    ]
+
+
 def build_index_checkpointed(
     documents: DataFrame,
     root: str,
     cfg: IndexConfig | None = None,
-    n_doc_splits: int = 4,
     n_bucket_groups: int = 4,
     stop_after_commits: int | None = None,
 ) -> InvertedIndex:
     """Build (or resume building) a persistent index at ``root``.
 
-    ``stop_after_commits`` kills the build after that many split
-    commits (testing hook for kill-and-resume). Re-invoking with the
-    same arguments resumes from the manifest and completes.
+    ``stop_after_commits`` kills the build after that many commits
+    (testing hook for kill-and-resume). Re-invoking with the same
+    arguments resumes from the manifest and completes.
     """
     cfg = cfg or IndexConfig()
     spark = documents.sparkSession
     prog = _progress(spark, root)
+    # first: serving restores the exact analyzer from it, and
+    # verify_lineage re-derives the bucket groups from it
+    _write_config(cfg, root)
     commits = 0
 
     def commit_gate() -> None:
@@ -136,65 +148,37 @@ def build_index_checkpointed(
         if stop_after_commits is not None and commits >= stop_after_commits:
             raise StopBuild(f"injected stop after {commits} commits")
 
-    # ---- Phase A: tokenize per doc-split --------------------------------
-    for s in range(n_doc_splits):
-        if prog.done("tokenize", s):
-            continue
-        t0 = time.perf_counter()
-        sub = documents.filter(F.pmod(F.col("doc_id"), F.lit(n_doc_splits)) == s)
-        # lineage checksum: rolls up the per-row content_sha256 invariant
-        agg = sub.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum(F.crc32(F.col("content_sha256"))), F.lit(0)).alias("ck"),
-        ).collect()[0]
-        toks = tokenize(sub, cfg).withColumn(
-            "bucket", bucket_of(F.col("doc_id"), cfg.bucket_bits, cfg.id_space_bits)
-        )
-        out = f"{root}/tokens/split={s}"
-        toks.write.mode("overwrite").partitionBy("bucket").parquet(out)
-        n_out = spark.read.parquet(out).count()
-        _append_manifest(
-            spark, root, "tokenize", s, int(agg["n"]), n_out, int(agg["ck"]),
-            int((time.perf_counter() - t0) * 1000),
-        )
-        commit_gate()
-
-    # ---- Phase B: postings per bucket-group ------------------------------
-    groups = _bucket_groups(cfg, n_bucket_groups)
-    for g, buckets in enumerate(groups):
+    # ---- Postings per bucket group ---------------------------------------
+    bucket = bucket_of(F.col("doc_id"), cfg.bucket_bits, cfg.id_space_bits)
+    for g, buckets in enumerate(_bucket_groups(cfg, n_bucket_groups)):
         if prog.done("postings", g):
             continue
         t0 = time.perf_counter()
-        toks_g = spark.read.option("basePath", f"{root}/tokens").parquet(
-            f"{root}/tokens/split=*"
-        ).filter(F.col("bucket").isin(buckets))
-        postings = build_postings(toks_g.drop("split"), cfg)
+        sub = documents.filter(bucket.between(buckets[0], buckets[-1]))
+        lineage = sub.agg(*_lineage_aggs()).collect()[0]
         out = f"{root}/postings/group={g}"
         (
-            postings.repartitionByRange(4, "term")
+            build_postings_packed(sub, cfg)
+            .repartitionByRange(4, "term")
             .sortWithinPartitions("term", "field", "bucket", "block_id")
             .write.mode("overwrite")
             # small row groups → term-sorted stats prune point lookups
             .option("parquet.block.size", str(4 << 20))
             .parquet(out)
         )
-        # term stats derive from the just-written block table — no
-        # second scan of the (much larger) token files
-        from golr_loader_spark.plans.build_index import derived_term_stats
-
-        tstats = derived_term_stats(spark.read.parquet(out))
-        tstats.write.mode("overwrite").parquet(f"{root}/term_stats_partial/group={g}")
-        n_out = spark.read.parquet(out).count()
+        written = spark.read.parquet(out)
+        derived_term_stats(written).write.mode("overwrite").parquet(
+            f"{root}/term_stats_partial/group={g}"
+        )
         _append_manifest(
-            spark, root, "postings", g, -1, n_out, 0,
+            spark, root, "postings", g, int(lineage["n"]), written.count(),
+            int(lineage["ck"]),
             int((time.perf_counter() - t0) * 1000),
         )
         commit_gate()
 
-    # ---- Corpus stats: derived from the block table (no token scan) ------
+    # ---- Corpus stats: derived from the block table ----------------------
     if not prog.done("stats", 0):
-        from golr_loader_spark.plans.build_index import derived_stats
-
         t0 = time.perf_counter()
         n_docs = documents.count()  # ids unique by construction
         post_all = spark.read.option("basePath", f"{root}/postings").parquet(
@@ -210,9 +194,6 @@ def build_index_checkpointed(
 
     # ---- Finalize: merge per-group term stats ----------------------------
     if not prog.done("finalize", 0):
-        from golr_loader_spark.plans.build_index import _write_config
-
-        _write_config(cfg, root)  # serving restores the exact analyzer
         t0 = time.perf_counter()
         partials = spark.read.option(
             "basePath", f"{root}/term_stats_partial"
@@ -257,29 +238,40 @@ def build_metrics(spark: SparkSession, root: str) -> DataFrame:
 
 
 def verify_lineage(documents: DataFrame, spark: SparkSession, root: str) -> bool:
-    """Re-derive the phase-A content checksums from the source and
-    compare with the manifest — the per-row sha256 invariant of
-    BASELINE.json surfaced as an auditable index property."""
+    """Re-derive each bucket group's content checksum from the source
+    and compare with the manifest — the per-row sha256 invariant of
+    BASELINE.json surfaced as an auditable index property. The bucket
+    groups come from the build's own ``{root}/config.json``."""
+    from golr_loader_spark.plans.serve import _load_config
+
     m = _read_manifest(spark, root)
-    if m is None:
+    cfg = _load_config(root)
+    if m is None or cfg is None:
         return False
     recorded = {
         r["split_id"]: (r["rows_in"], r["checksum"])
-        for r in m.filter(F.col("phase") == "tokenize").collect()
+        for r in m.filter(F.col("phase") == "postings").collect()
     }
-    n_splits = len(recorded)
-    actual = (
-        documents.withColumn("s", F.pmod(F.col("doc_id"), F.lit(n_splits)))
-        .groupBy("s")
-        .agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum(F.crc32(F.col("content_sha256"))), F.lit(0)).alias("ck"),
+    group_of = {
+        b: g
+        for g, buckets in enumerate(_bucket_groups(cfg, len(recorded)))
+        for b in buckets
+    }
+    actual = {g: (0, 0) for g in range(len(recorded))}
+    per_bucket = (
+        documents.groupBy(
+            bucket_of(F.col("doc_id"), cfg.bucket_bits, cfg.id_space_bits).alias("b")
         )
+        .agg(*_lineage_aggs())
         .collect()
     )
-    return all(
-        recorded.get(int(r["s"])) == (r["n"], int(r["ck"])) for r in actual
-    ) and len(actual) == n_splits
+    for r in per_bucket:
+        g = group_of.get(int(r["b"]))
+        if g is None:
+            return False
+        n, ck = actual[g]
+        actual[g] = (n + int(r["n"]), ck + int(r["ck"]))
+    return actual == recorded
 
 
 __all__ = [

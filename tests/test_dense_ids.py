@@ -92,3 +92,26 @@ def test_broadcast_and_fallback_paths_agree(spark):
     }
     assert m_fast == m_slow
     assert sorted(fast.columns) == sorted(slow.columns)
+
+
+@pytest.mark.parametrize("broadcast_threshold", [2_000_000, 0])
+def test_duplicate_keys_raise(spark, broadcast_threshold):
+    """Two rows sharing (doc_id, repo, path, commit) would each match
+    both mapping rows of the broadcast attach and come out twice; the
+    id assignment refuses such a corpus instead of duplicating rows."""
+    docs = flatten_documents(synth_corpus(spark, 60, seed=3))
+    dup = docs.unionByName(docs.limit(1))
+    with pytest.raises(ValueError, match="duplicate"):
+        assign_dense_ids(dup, range_buckets=8, broadcast_threshold=broadcast_threshold)
+
+
+def test_hash_collision_keeps_distinct_rows(spark):
+    """Two docs that share a hash id but not the full key still get one
+    dense id each (the 4-key attach), and no row is duplicated."""
+    docs = flatten_documents(synth_corpus(spark, 60, seed=3))
+    first = docs.limit(1).collect()[0]
+    twin = docs.limit(1).withColumn("path", F.concat(F.col("path"), F.lit(".twin")))
+    out = assign_dense_ids(docs.unionByName(twin), range_buckets=8)
+    rows = out.select("doc_id", "doc_hash").collect()
+    assert sorted(r["doc_id"] for r in rows) == list(range(61))
+    assert sum(r["doc_hash"] == first["doc_id"] for r in rows) == 2

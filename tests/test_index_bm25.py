@@ -14,7 +14,7 @@ from golr_loader_spark.functions.tokenize import analyze_query, tokenize
 from golr_loader_spark.plans.bm25 import score_exact, search, search_batch
 from golr_loader_spark.plans.build_index import (
     build_index,
-    build_postings,
+    build_postings_packed,
     corpus_stats,
     doc_lengths,
     read_index,
@@ -109,10 +109,9 @@ def test_write_read_index_roundtrip(spark, corpus_ix, tmp_path):
 
 
 def test_encoder_carryover_small_arrow_batches(spark, corpus_ix):
-    """Groups split across Arrow batches must be stitched by the
-    encoder's carry-over; tiny maxRecordsPerBatch forces many splits."""
+    """Tiny Arrow batches (maxRecordsPerBatch) split every stage's input
+    many times; the block table must not depend on where they fall."""
     docs, cfg, tokens, dls, stats, ix = corpus_ix
-    from golr_loader_spark.plans.build_index import build_postings
 
     key = ["term", "field", "bucket", "block_id"]
     baseline = {
@@ -123,7 +122,7 @@ def test_encoder_carryover_small_arrow_batches(spark, corpus_ix):
     try:
         small = {
             tuple(r[k] for k in key): (r["n"], r["doc_id_first"], r["doc_ids"])
-            for r in build_postings(tokenize(docs, cfg), cfg).collect()
+            for r in build_postings_packed(docs, cfg).collect()
         }
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")

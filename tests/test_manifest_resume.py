@@ -32,16 +32,16 @@ def test_kill_and_resume_equals_one_shot(spark, docs, tmp_path):
     cfg = IndexConfig()
     root = str(tmp_path / "ckpt")
 
-    # killed mid-build after 3 split commits
+    # killed mid-build after 3 group commits
     with pytest.raises(StopBuild):
         build_index_checkpointed(
-            docs, root, cfg, n_doc_splits=3, n_bucket_groups=3, stop_after_commits=3
+            docs, root, cfg, n_bucket_groups=3, stop_after_commits=3
         )
     m1 = build_metrics(spark, root)
-    assert m1.count() == 3  # exactly the committed splits
+    assert m1.count() == 3  # exactly the committed groups
 
     # resume to completion
-    ix = build_index_checkpointed(docs, root, cfg, n_doc_splits=3, n_bucket_groups=3)
+    ix = build_index_checkpointed(docs, root, cfg, n_bucket_groups=3)
     m2 = build_metrics(spark, root).collect()
     phases = {(r["phase"], r["split_id"]) for r in m2}
     assert ("stats", 0) in phases and ("finalize", 0) in phases
@@ -54,7 +54,7 @@ def test_kill_and_resume_equals_one_shot(spark, docs, tmp_path):
 
     # resume on a complete build is a no-op (manifest row count stable)
     n_before = len(m2)
-    build_index_checkpointed(docs, root, cfg, n_doc_splits=3, n_bucket_groups=3)
+    build_index_checkpointed(docs, root, cfg, n_bucket_groups=3)
     assert build_metrics(spark, root).count() == n_before
 
 
@@ -70,9 +70,9 @@ def test_kill_and_resume_on_dense_ids(spark, docs, tmp_path):
 
     with pytest.raises(StopBuild):
         build_index_checkpointed(
-            ddocs, root, cfg, n_doc_splits=2, n_bucket_groups=2, stop_after_commits=2
+            ddocs, root, cfg, n_bucket_groups=2, stop_after_commits=2
         )
-    ix = build_index_checkpointed(ddocs, root, cfg, n_doc_splits=2, n_bucket_groups=2)
+    ix = build_index_checkpointed(ddocs, root, cfg, n_bucket_groups=2)
     one_shot = build_index(ddocs, cfg)
     assert _topk(ix) == _topk(one_shot)
     assert verify_lineage(ddocs, spark, root)
@@ -83,7 +83,7 @@ def test_kill_and_resume_on_dense_ids(spark, docs, tmp_path):
 
 def test_lineage_checksum_roundtrip(spark, docs, tmp_path):
     root = str(tmp_path / "lin")
-    build_index_checkpointed(docs, root, n_doc_splits=2, n_bucket_groups=2)
+    build_index_checkpointed(docs, root, n_bucket_groups=2)
     assert verify_lineage(docs, spark, root)
     # a corpus that differs in one row fails the invariant
     tampered = docs.withColumn(
@@ -97,6 +97,56 @@ def test_lineage_checksum_roundtrip(spark, docs, tmp_path):
 def test_loaded_index_matches_after_reload(spark, docs, tmp_path):
     root = str(tmp_path / "reload")
     cfg = IndexConfig()
-    ix = build_index_checkpointed(docs, root, cfg, n_doc_splits=2, n_bucket_groups=2)
+    ix = build_index_checkpointed(docs, root, cfg, n_bucket_groups=2)
     ix2 = load_checkpointed_index(spark, root, cfg)
     assert _topk(ix2) == _topk(ix)
+
+
+@pytest.mark.parametrize("dense_ids", [True, False], ids=["dense", "hash"])
+def test_resumed_block_table_equals_one_shot(
+    spark, docs, tmp_path, monkeypatch, block_fingerprint, plan_nodes, dense_ids
+):
+    """Killed after 2 of 3 bucket-group commits and resumed, the
+    written block table is the one-shot build's, and each group is
+    built by the one packed pipeline: tokenize+pack → Exchange →
+    unpack+sort+encode, with no Tungsten Sort."""
+    from golr_loader_spark.plans import manifest
+    from golr_loader_spark.plans.documents import assign_dense_ids
+
+    if dense_ids:
+        src = assign_dense_ids(docs).cache()
+        cfg = IndexConfig(id_space_bits=max(2, (src.count() - 1).bit_length()))
+    else:
+        src, cfg = docs, IndexConfig()
+    root = str(tmp_path / "groups")
+
+    built = []
+    packed = manifest.build_postings_packed
+
+    def recording_packed(*a, **k):
+        built.append(packed(*a, **k))
+        return built[-1]
+
+    monkeypatch.setattr(manifest, "build_postings_packed", recording_packed)
+    with pytest.raises(StopBuild):
+        build_index_checkpointed(src, root, cfg, n_bucket_groups=3, stop_after_commits=2)
+    assert [(r["phase"], r["split_id"]) for r in build_metrics(spark, root).collect()] == [
+        ("postings", 0), ("postings", 1)
+    ]
+    ix = build_index_checkpointed(src, root, cfg, n_bucket_groups=3)
+    assert len(built) == 3  # each group built once, across the kill
+
+    one_shot = build_index(src, cfg)
+    assert block_fingerprint(ix.postings) == block_fingerprint(one_shot.postings)
+    ts = sorted(tuple(r) for r in ix.term_stats.collect())
+    assert ts == sorted(tuple(r) for r in one_shot.term_stats.collect())
+    assert verify_lineage(src, spark, root)
+
+    # the group's own operators, above the cached documents (whose
+    # plan the tree string repeats below them)
+    nodes = plan_nodes(built[0])
+    nodes = nodes[: nodes.index("InMemoryTableScan")]
+    ex = nodes.index("Exchange")
+    assert nodes[ex - 1 : ex + 2] == ["MapInArrow", "Exchange", "MapInArrow"]
+    assert nodes.count("Exchange") == 1 and "Sort" not in nodes
+    one_shot.postings.unpersist()

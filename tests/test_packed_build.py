@@ -1,8 +1,8 @@
-"""Packed-boundary build path (plans.build_index.build_postings_packed):
-the blob-exchange plan must produce the EXACT block table of the flat
-tokenize→shuffle→sort→encode plan — base, positional, and hash-id
-(sparse bucket) corpora — and build_index must route through it by
-default with the flat plan still reachable via conf.
+"""The index build (plans.build_index.build_postings_packed) must
+produce the EXACT block table of the flat tokenize→shuffle→sort→encode
+build it replaced — base, positional, and hash-id (sparse bucket)
+corpora — pinned by the flat build's fingerprints (``flat_goldens``),
+and build_index must go through it.
 """
 
 from __future__ import annotations
@@ -14,8 +14,8 @@ from golr_loader_spark.corpus import synth_corpus
 from golr_loader_spark.functions.tokenize import tokenize
 from golr_loader_spark.plans.build_index import (
     build_index,
-    build_postings,
     build_postings_packed,
+    term_stats,
 )
 from golr_loader_spark.plans.documents import assign_dense_ids, flatten_documents
 
@@ -32,46 +32,34 @@ def dense(docs):
     return assign_dense_ids(docs).cache()
 
 
-def _rows(df, cols):
-    return sorted(tuple(r) for r in df.select(cols).collect())
-
-
 @pytest.mark.parametrize("positional", [False, True])
-def test_packed_equals_flat_dense(spark, dense, positional):
+def test_packed_equals_flat_dense(spark, dense, positional, block_fingerprint, flat_goldens):
     cfg = IndexConfig(
         bucket_bits=4,
         id_space_bits=max(2, (N - 1).bit_length()),
         positions=positional,
     )
-    flat = build_postings(tokenize(dense, cfg, field_codes=True), cfg)
     packed = build_postings_packed(dense, cfg)
-    cols = flat.columns
-    assert _rows(packed, cols) == _rows(flat, cols)
+    golden = flat_goldens["dense_positional" if positional else "dense"]
+    assert block_fingerprint(packed) == golden
 
 
-def test_packed_equals_flat_hash_ids(spark, docs):
+def test_packed_equals_flat_hash_ids(spark, docs, block_fingerprint, flat_goldens):
     # 64-bit hash ids: negative doc_ids, arithmetic-shift buckets,
-    # sparse id space — exercises the packed path's bucket/pid math
-    # away from the dense fast case
+    # sparse id space — exercises the bucket/pid math away from the
+    # dense fast case
     cfg = IndexConfig(bucket_bits=5, id_space_bits=64)
-    flat = build_postings(tokenize(docs, cfg, field_codes=True), cfg)
     packed = build_postings_packed(docs, cfg)
-    cols = flat.columns
-    assert _rows(packed, cols) == _rows(flat, cols)
+    assert block_fingerprint(packed) == flat_goldens["hash_ids"]
 
 
-def test_build_index_conf_routes_both_paths(spark, dense):
+def test_build_index_matches_flat_golden(spark, dense, block_fingerprint, flat_goldens):
     cfg = IndexConfig(bucket_bits=4, id_space_bits=max(2, (N - 1).bit_length()))
-    ix_packed = build_index(dense, cfg, n_docs=N)
-    try:
-        spark.conf.set("spark.golr_loader.build.packed", "false")
-        ix_flat = build_index(dense, cfg, n_docs=N)
-    finally:
-        spark.conf.set("spark.golr_loader.build.packed", "true")
-    cols = ix_flat.postings.columns
-    assert _rows(ix_packed.postings, cols) == _rows(ix_flat.postings, cols)
-    ts = sorted(tuple(r) for r in ix_packed.term_stats.collect())
-    ts2 = sorted(tuple(r) for r in ix_flat.term_stats.collect())
-    assert ts == ts2
-    ix_packed.postings.unpersist()
-    ix_flat.postings.unpersist()
+    ix = build_index(dense, cfg, n_docs=N)
+    assert block_fingerprint(ix.postings) == flat_goldens["dense"]
+    # term stats derived from the block table equal those counted over
+    # the flat token rows
+    got = sorted(tuple(r) for r in ix.term_stats.collect())
+    want = sorted(tuple(r) for r in term_stats(tokenize(dense, cfg)).collect())
+    assert got == want
+    ix.postings.unpersist()

@@ -3,7 +3,8 @@ reduce partition's buffered token bytes exceed
 ``spark.golr_loader.build.packed_spill_mb``, the unpack stage routes
 rows into term-hash sub-bucket spill files (disjoint (term, fcode)
 group sets) and sorts+encodes them one sub-bucket at a time — bounded
-memory, and the block table must stay EXACTLY the flat path's.
+memory, and the block table must stay EXACTLY the one the flat
+token-row build produced (its fingerprints, ``flat_goldens``).
 """
 
 from __future__ import annotations
@@ -12,10 +13,8 @@ import pytest
 
 from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.corpus import synth_corpus
-from golr_loader_spark.functions.tokenize import tokenize
 from golr_loader_spark.plans.build_index import (
     _token_arrow_schema,
-    build_postings,
     build_postings_packed,
 )
 from golr_loader_spark.plans.documents import assign_dense_ids, flatten_documents
@@ -34,53 +33,40 @@ def dense(docs):
     return assign_dense_ids(docs).cache()
 
 
-def _rows(df, cols):
-    return sorted(tuple(r) for r in df.select(cols).collect())
+def _built_with_spill(spill_mb: str, docs, cfg, block_fingerprint):
+    spark = docs.sparkSession
+    try:
+        spark.conf.set(SPILL_CONF, spill_mb)
+        return block_fingerprint(build_postings_packed(docs, cfg))
+    finally:
+        spark.conf.unset(SPILL_CONF)
 
 
 @pytest.mark.parametrize("positional", [False, True])
-def test_spilled_equals_flat(spark, dense, positional):
+def test_spilled_equals_flat(spark, dense, positional, block_fingerprint, flat_goldens):
     cfg = IndexConfig(
         bucket_bits=4,
         id_space_bits=max(2, (N - 1).bit_length()),
         positions=positional,
     )
-    flat = build_postings(tokenize(dense, cfg, field_codes=True), cfg)
-    try:
-        # ~50 KB threshold: every reduce partition trips the spill
-        spark.conf.set(SPILL_CONF, "0.05")
-        spilled = build_postings_packed(dense, cfg)
-        cols = flat.columns
-        assert _rows(spilled, cols) == _rows(flat, cols)
-    finally:
-        spark.conf.unset(SPILL_CONF)
+    golden = flat_goldens["dense_positional" if positional else "dense"]
+    # ~50 KB threshold: every reduce partition trips the spill
+    assert _built_with_spill("0.05", dense, cfg, block_fingerprint) == golden
 
 
-def test_spilled_equals_flat_hash_ids(spark, docs):
+def test_spilled_equals_flat_hash_ids(spark, docs, block_fingerprint, flat_goldens):
     # 64-bit hash ids (negative doc_ids, sparse buckets) through the
     # spill path
     cfg = IndexConfig(bucket_bits=5, id_space_bits=64)
-    flat = build_postings(tokenize(docs, cfg, field_codes=True), cfg)
-    try:
-        spark.conf.set(SPILL_CONF, "0.05")
-        spilled = build_postings_packed(docs, cfg)
-        cols = flat.columns
-        assert _rows(spilled, cols) == _rows(flat, cols)
-    finally:
-        spark.conf.unset(SPILL_CONF)
+    got = _built_with_spill("0.05", docs, cfg, block_fingerprint)
+    assert got == flat_goldens["hash_ids"]
 
 
-def test_zero_disables_spill(spark, dense):
+def test_zero_disables_spill(spark, dense, block_fingerprint, flat_goldens):
     # packed_spill_mb=0 → pure in-memory path (the pre-spill behavior)
     cfg = IndexConfig(bucket_bits=4, id_space_bits=max(2, (N - 1).bit_length()))
-    flat = build_postings(tokenize(dense, cfg, field_codes=True), cfg)
-    try:
-        spark.conf.set(SPILL_CONF, "0")
-        packed = build_postings_packed(dense, cfg)
-        cols = flat.columns
-        assert _rows(packed, cols) == _rows(flat, cols)
-    finally:
-        spark.conf.unset(SPILL_CONF)
+    got = _built_with_spill("0", dense, cfg, block_fingerprint)
+    assert got == flat_goldens["dense"]
 
 
 # ------------------------------------------------- spill hygiene (unit)
@@ -148,15 +134,10 @@ def spill_dir(tmp_path, monkeypatch):
 def test_spill_handles_closed_when_encode_fails(spill_dir, monkeypatch):
     from golr_loader_spark.plans import build_index as bi
 
-    def failing_encoder(cfg):
-        def encode(batches):
-            for _b in batches:
-                raise RuntimeError("encode failed")
-            yield from ()
+    def failing_encoder(rb, cfg):
+        raise RuntimeError("encode failed")
 
-        return encode
-
-    monkeypatch.setattr(bi, "_encode_batches", failing_encoder)
+    monkeypatch.setattr(bi, "_encode_sorted", failing_encoder)
     cfg = IndexConfig(bucket_bits=2, id_space_bits=6)
     _tokens, batches = _token_input(cfg)
     # the exception (and its traceback, which pins the failed frame)
@@ -221,7 +202,7 @@ def test_skewed_spill_encodes_identically_in_process():
     assert blocks(1) == blocks(0)
 
 
-def test_skewed_vocabulary_spilled_equals_flat(spark):
+def test_skewed_vocabulary_spilled_equals_flat(spark, block_fingerprint, flat_goldens):
     # a term in every doc, dominating its doc-id buckets
     rows = [
         (d, " ".join(["hot"] * (1 + d % 5) + [f"w{d % 7}", f"u{d}"]))
@@ -232,11 +213,6 @@ def test_skewed_vocabulary_spilled_equals_flat(spark):
         fields={"text": ("simple", 1.0)}, bucket_bits=3, id_space_bits=9,
         block_size=16, positions=True,
     )
-    flat = build_postings(tokenize(docs, cfg, field_codes=True), cfg)
-    try:
-        spark.conf.set(SPILL_CONF, "0.001")
-        spilled = build_postings_packed(docs, cfg)
-        cols = flat.columns
-        assert _rows(spilled, cols) == _rows(flat, cols)
-    finally:
-        spark.conf.unset(SPILL_CONF)
+    for spill_mb in ("0.001", "0"):
+        got = _built_with_spill(spill_mb, docs, cfg, block_fingerprint)
+        assert got == flat_goldens["skewed_positional"], spill_mb

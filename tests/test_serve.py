@@ -25,7 +25,7 @@ def roots(spark, tmp_path_factory):
     write_index(ix, r1, term_partitions=4)
     # stats path expected by LocalSearcher: write_index writes stats/
     r2 = str(tmp_path_factory.mktemp("serve") / "ckpt")
-    build_index_checkpointed(docs, r2, cfg, n_doc_splits=2, n_bucket_groups=2)
+    build_index_checkpointed(docs, r2, cfg, n_bucket_groups=2)
     return docs, cfg, ix, r1, r2
 
 
