@@ -252,6 +252,8 @@ def verify_lineage(documents: DataFrame, spark: SparkSession, root: str) -> bool
         r["split_id"]: (r["rows_in"], r["checksum"])
         for r in m.filter(F.col("phase") == "postings").collect()
     }
+    if not recorded:
+        return False
     group_of = {
         b: g
         for g, buckets in enumerate(_bucket_groups(cfg, len(recorded)))
