@@ -69,12 +69,20 @@ def cmd_build(args) -> None:
 
 
 def cmd_query(args) -> None:
+    import dataclasses
+
     from golr_loader_spark.config import IndexConfig
     from golr_loader_spark.plans.bm25 import search
     from golr_loader_spark.plans.manifest import load_checkpointed_index
+    from golr_loader_spark.plans.serve import _load_config
 
     spark = _spark("golr-query")
-    cfg = IndexConfig(bucket_bits=args.bucket_bits, block_size=args.block_size)
+    # the root's own config.json (analyzers, chain, layout); a root
+    # without one gets the build command's defaults. Layout flags
+    # override it only when given.
+    cfg = _load_config(args.index) or IndexConfig(bucket_bits=5)
+    given = {"bucket_bits": args.bucket_bits, "block_size": args.block_size}
+    cfg = dataclasses.replace(cfg, **{k: v for k, v in given.items() if v is not None})
     ix = load_checkpointed_index(spark, args.index, cfg)
     t0 = time.perf_counter()
     if args.phrase:
@@ -141,8 +149,10 @@ def main(argv: list[str] | None = None) -> None:
     q.add_argument("--index", required=True)
     q.add_argument("--q", required=True)
     q.add_argument("-k", type=int, default=10)
-    q.add_argument("--bucket-bits", type=int, default=5)
-    q.add_argument("--block-size", type=int, default=128)
+    q.add_argument("--bucket-bits", type=int, default=None,
+                   help="default: the index's config.json")
+    q.add_argument("--block-size", type=int, default=None,
+                   help="default: the index's config.json")
     q.add_argument(
         "--phrase",
         action="store_true",

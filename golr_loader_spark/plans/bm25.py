@@ -12,8 +12,10 @@ Two rank-identical paths (SURVEY.md §7 stages 4+8):
 
 * ``search`` / ``search_batch`` — the production path over the
   compressed block-max index: per doc-range bucket, admissible
-  block-max pruning then vectorized scoring inside ``applyInPandas``.
-  Pruning invariant: a block B of list t is skipped only if
+  block-max pruning then vectorized scoring inside ``applyInPandas``,
+  both in one list-level core (``_score_lists`` over
+  ``_decode_lists`` output) that ``serve.LocalSearcher`` also runs,
+  once per query over whole-index lists. Pruning invariant: a block B of list t is skipped only if
   ``ub_t(B) + Σ_{t'≠t} max_ub_{t'} < θ`` where θ is the k-th largest
   *lower bound* from the strongest list's exact partial scores —
   every doc touching a skipped block therefore has true score < θ ≤
@@ -237,92 +239,85 @@ def _row_segments(rows: pd.DataFrame) -> np.ndarray:
     return np.zeros(len(rows), dtype=np.int64)
 
 
-def _sort_blocks(rows: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic block order within a list: (segment, block_id).
-    Appended segments restart block_id at 0, so block_id alone would
-    leave equal keys to an unstable sort — nondeterministic float
-    accumulation order."""
-    cols = [c for c in ("segment", "block_id") if c in rows.columns]
-    return rows.sort_values(cols, kind="stable")
+def _decode_lists(cols, excl) -> dict[tuple[str, str], tuple]:
+    """Decode BM25 posting blocks → {(term, field): (doc_ids, tfs, dls,
+    blk, max_tf, min_dl)} with tombstone/segment masking applied
+    (``excl`` is ``_norm_excl``-normalized) — the BM25 twin of
+    ``phrase._decode_positional_lists``. ``cols`` is a DataFrame (an
+    applyInPandas bucket group) or a dict of numpy arrays (the serving
+    read, any number of buckets).
 
-
-def _block_cols(pdf) -> dict:
-    """Normalize a bucket group to a dict of bare numpy arrays.
-    Accepts either a pandas DataFrame (the applyInPandas distributed
-    path) or an already-converted dict (the serving path, which
-    slices numpy views per bucket and never touches pandas — see
-    serve.LocalSearcher._score; profiling put pandas frame
-    construction/slicing at ~45% of serve query wall)."""
-    if isinstance(pdf, dict):
-        return pdf
-    cols = {
-        c: pdf[c].to_numpy()
-        for c in ("term", "field", "block_id", "n", "doc_id_first",
-                  "max_tf", "min_dl", "doc_ids", "tfs", "dls")
-    }
-    if "segment" in pdf.columns:
-        cols["segment"] = pdf["segment"].to_numpy()
-    if "bucket" in pdf.columns:
-        cols["bucket"] = pdf["bucket"].to_numpy()
-    return cols
-
-
-def _grouped_arrays(pdf):
-    """One numpy lexsort replaces the kernel's per-group pandas work:
-    factorize (term, field) via np.unique, sort the whole bucket by
-    (term, field, segment, block_id) — so every (term, field) list is
-    a CONTIGUOUS slice with its blocks already in deterministic
-    decode order — and hand back bare numpy/object arrays. Profiling
-    (240k docs, 20-query serve batch) showed pandas groupby +
-    sort_values + column access at >60% of query wall; this path does
-    the same grouping in two np.unique calls and one lexsort.
-    Accepts a DataFrame or a dict of numpy arrays (``_block_cols``)."""
-    cols = _block_cols(pdf)
-    terms = cols["term"]
-    fields = cols["field"]
-    n_rows = len(terms)
-    seg = (
-        cols["segment"].astype(np.int64)
-        if "segment" in cols
-        else np.zeros(n_rows, dtype=np.int64)
-    )
-    blk = cols["block_id"].astype(np.int64)
-    t_uniq, t_codes = np.unique(terms, return_inverse=True)
-    f_uniq, f_codes = np.unique(fields, return_inverse=True)
-    order = np.lexsort((blk, seg, f_codes, t_codes))
-    ga = {
-        "n": cols["n"].astype(np.int64)[order],
-        "first": cols["doc_id_first"].astype(np.int64)[order],
-        "max_tf": cols["max_tf"].astype(np.float64)[order],
-        "min_dl": cols["min_dl"].astype(np.float64)[order],
-        "doc_ids": cols["doc_ids"][order],
-        "tfs": cols["tfs"][order],
-        "dls": cols["dls"][order],
-        "seg": seg[order],
-    }
-    tc = t_codes[order]
-    fc = f_codes[order]
-    key = tc * (len(f_uniq) + 1) + fc
-    change = np.flatnonzero(np.diff(key)) + 1
-    bounds = np.concatenate(([0], change, [n_rows]))
-    groups = [
-        (t_uniq[tc[s]], f_uniq[fc[s]], int(s), int(e))
-        for s, e in zip(bounds[:-1], bounds[1:])
-    ]
-    return ga, groups
+    One np.unique per key column and one lexsort on (term, field,
+    bucket, segment, block_id) put every list's blocks in one
+    contiguous run in a deterministic order (appended segments restart
+    block_id at 0, so block_id alone would leave ties); then the whole
+    table decodes in three varint calls (the streams are
+    self-delimiting; per-block doc_id bases are re-applied with a
+    segmented cumsum). ``blk`` maps each live posting to its block's
+    index in the list, and ``max_tf``/``min_dl`` are the per-block
+    bounds, so block-max pruning selects postings with ``keep[blk]``
+    instead of decoding again. The stored bounds still cover masked
+    postings, so pruning on them stays admissible. Lists with no live
+    posting are left out."""
+    if not isinstance(cols, dict):
+        cols = {c: cols[c].to_numpy() for c in cols.columns}
+    n_rows = len(cols["term"])
+    if not n_rows:
+        return {}
+    zeros = np.zeros(n_rows, dtype=np.int64)
+    seg = cols["segment"].astype(np.int64) if "segment" in cols else zeros
+    bucket = cols["bucket"].astype(np.int64) if "bucket" in cols else zeros
+    t_uniq, t_codes = np.unique(cols["term"], return_inverse=True)
+    f_uniq, f_codes = np.unique(cols["field"], return_inverse=True)
+    nf = len(f_uniq)
+    lid = t_codes * nf + f_codes
+    order = np.lexsort((cols["block_id"].astype(np.int64), seg, bucket, lid))
+    n_pb = cols["n"].astype(np.int64)[order]
+    firsts = cols["doc_id_first"].astype(np.int64)[order]
+    g = np.cumsum(varint_decode(b"".join(cols["doc_ids"][order])).astype(np.int64))
+    ids = g + np.repeat(firsts - g[np.cumsum(n_pb) - n_pb], n_pb)
+    tfs = varint_decode(b"".join(cols["tfs"][order])).astype(np.float64)
+    dls = varint_decode(b"".join(cols["dls"][order])).astype(np.float64)
+    blk = np.repeat(np.arange(n_rows, dtype=np.int32), n_pb)
+    if excl is not None:
+        keep = _live_of(ids, seg[order][blk], excl)
+        if not keep.all():
+            ids, tfs, dls, blk = ids[keep], tfs[keep], dls[keep], blk[keep]
+    max_tf = cols["max_tf"].astype(np.float64)[order]
+    min_dl = cols["min_dl"].astype(np.float64)[order]
+    # per-list block and posting ranges (lid[order] and blk are sorted)
+    bcut = np.searchsorted(lid[order], np.arange(len(t_uniq) * nf + 1))
+    pcut = np.searchsorted(blk, bcut)
+    out = {}
+    for i in np.flatnonzero(pcut[1:] > pcut[:-1]):
+        b0, b1, p0, p1 = bcut[i], bcut[i + 1], pcut[i], pcut[i + 1]
+        out[(t_uniq[i // nf], f_uniq[i % nf])] = (
+            ids[p0:p1], tfs[p0:p1], dls[p0:p1], blk[p0:p1] - np.int32(b0),
+            max_tf[b0:b1], min_dl[b0:b1],
+        )
+    return out
 
 
 class DecodedListCache:
-    """Bounded LRU of DECODED posting lists keyed (bucket, term,
-    field) — the Solr filterCache/queryResultCache analog at the
-    decode layer. The round-3 raw-block cache measured nothing (reads
-    were already cheap; the p95 query is decode-bound — see BENCH.md
-    negative result); this caches the DECODE OUTPUT (ids/tfs/dls,
-    tombstone-masked), which profiling puts at ~30% of query wall.
-    Valid for one searcher lifetime: the mmap'd block table and the
-    tombstone mask are both fixed between ``refresh()`` calls, and
-    refresh builds a new cache. Entries are read-only by kernel
-    contract (every consumer derives new arrays)."""
+    """Bounded LRU of decoded posting lists — the Solr filterCache
+    analog at the decode layer. ``LocalSearcher`` keeps two key shapes
+    in one instance (``_list_cache``):
+
+    * ``("bm25", term)`` → {field: (doc_ids, tfs, dls, blk, max_tf,
+      min_dl)}: the term's tombstone-masked lists in every configured
+      field, over all buckets (``_decode_lists``); ``{}`` caches a term
+      with no live posting;
+    * ``("pos", term, field)`` → (doc_ids, tfs, dls, positions): one
+      positional list (``phrase._decode_positional_lists``); ``()``
+      caches an absent one.
+
+    A second instance (``_term_blocks``) keyed by the bare term holds
+    the raw block rows both shapes are decoded from. All three scopes
+    are one term over every bucket, so a query of n terms misses at
+    most n entries of each. Valid for one searcher lifetime: the mmap'd
+    block table and the tombstone mask are both fixed between
+    ``refresh()`` calls, and refresh builds a new cache. Entries are
+    read-only by kernel contract (every consumer derives new arrays)."""
 
     def __init__(self, max_entries: int = 4096):
         from collections import OrderedDict
@@ -352,11 +347,12 @@ def _acc_by_doc(all_ids: list, all_contribs: list):
     LIST ORDER (the oracle's (field, term) float-accumulation order —
     identical arithmetic to the previous sort+searchsorted shape).
 
-    Returns ``(uniq, scores, aux)``. Dense doc-id spans — a bucket's
-    ids all live in one compact range because the bucket IS the id's
-    high bits — use a direct-indexed buffer: O(span) instead of the
-    O(n log n) unique sort + per-list searchsorted. Sparse spans
-    (64-bit hash ids) keep the sort shape. ``aux`` is
+    Returns ``(uniq, scores, aux)``. Dense doc-id spans — dense ids
+    over a bucket or a whole index, where postings cover a good share
+    of the id range — use a direct-indexed buffer: O(span) instead of
+    the O(n log n) unique sort + per-list searchsorted. Sparse spans
+    (64-bit hash ids, rare terms over a large index) keep the sort
+    shape. ``aux`` is
     ``(lo, rank)`` in dense mode (rank maps id-lo → index into uniq,
     valid for the UNFILTERED uniq) or ``None`` in sparse mode."""
     cat = np.concatenate(all_ids) if len(all_ids) > 1 else all_ids[0]
@@ -434,6 +430,131 @@ def query_analyzer(cfg: IndexConfig) -> str:
     return next(iter(analyzers)) if len(analyzers) == 1 else "code"
 
 
+_EMPTY = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
+
+
+def _must_groups(
+    required_terms: set[str] | None, required_groups: list[set[str]] | None
+) -> list[set[str]]:
+    """MUST constraints as any-of groups: plain required terms are
+    singleton groups; ``required_groups`` (Lucene's SCORING_BOOLEAN
+    rewrite of a MUST prefix/fuzzy — a required disjunction of its
+    expansions) demand ≥1 match within each group."""
+    return [
+        *([{t} for t in sorted(required_terms)] if required_terms else []),
+        *(required_groups or []),
+    ]
+
+
+def _score_lists(
+    lists: dict[tuple[str, str], tuple],
+    weights: dict[tuple[str, str], float],
+    avgdl_by_field: dict[str, float],
+    cfg: IndexConfig,
+    k: int,
+    groups: list[set[str]] | None = None,
+    prohibited: set | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The BM25 scoring core: decoded lists (``_decode_lists``) in,
+    top-k ``(doc_ids, scores)`` out — unsorted when nothing truncates
+    (k ≥ matches). Every scorer runs it: the Spark single-query and
+    batch scorers once per bucket group, ``LocalSearcher`` once per
+    query over whole-index lists. Each run is exact on its own: a doc's
+    postings all sit in one bucket, and the pruning rule below only
+    needs θ to be a lower bound of the true k-th best score of the docs
+    it sees, so the top-k of the union equals the merge of per-bucket
+    top-k sets, bit for bit.
+
+    * Weighted lists accumulate in (field, term) order — the oracle's
+      float order (``_acc_by_doc``).
+    * θ is the k-th largest exact partial score of the strongest list
+      (a lower bound of the k-th best). A block B of list t is skipped
+      when ub_t(B) + Σ_{t'≠t} max_ub_{t'} < θ, with ub = wt·max_tf /
+      (max_tf + k1(1−b+b·min_dl/avgdl)) ≥ wt·w(tf, dl) for every
+      posting in B (w rises with tf, falls with dl); every doc touching
+      a skipped block scores below θ, so after ``score ≥ θ`` every
+      survivor is complete-scored.
+    * ``groups`` (``_must_groups``, Lucene MUST): a doc survives only
+      if it matches ≥1 member of every group, in any field; members
+      are bare terms or (term, field) pairs.
+    * ``prohibited`` (Lucene MUST_NOT): bare terms or (term, field)
+      pairs whose lists are read for membership only; any doc in them
+      is dropped before the top-k.
+
+    Pruning is off under MUST and MUST_NOT: a skipped block would
+    erase a doc's term membership, or hide a doc whose rank rises once
+    prohibited docs are removed. It is off, too, when a weight is
+    negative (a stale df above n_docs after fast upserts gives idf < 0,
+    and a negative boost does the same): a partial score is then no
+    lower bound of the total."""
+    k1, b = cfg.k1, cfg.b
+    neg_sets: list[np.ndarray] = []
+    scoring = []  # [(field, term, wt, decoded list)]
+    for (term, field), lst in lists.items():
+        if prohibited and (term in prohibited or (term, field) in prohibited):
+            neg_sets.append(lst[0])
+            continue
+        wt = weights.get((term, field))
+        if wt is not None:
+            scoring.append((field, term, wt, lst))
+    if not scoring:
+        return _EMPTY
+    if groups:
+        avail = {t for _f, t, *_ in scoring} | {(t, f) for f, t, *_ in scoring}
+        if any(not (g & avail) for g in groups):
+            return _EMPTY  # some MUST group has no live posting
+    scoring.sort(key=lambda x: (x[0], x[1]))  # oracle's (field, term) order
+
+    theta = -np.inf
+    if not groups and not prohibited and all(x[2] >= 0.0 for x in scoring):
+        ubs = [
+            wt * mt / (mt + k1 * ((1.0 - b) + b * md / avgdl_by_field[f]))
+            for f, _t, wt, (*_p, mt, md) in scoring
+        ]
+        max_ub = np.array([u.max() for u in ubs])
+        sum_max_ub = max_ub.sum()
+        si = int(np.argmax(max_ub))
+        s_field, _t, s_wt, (s_ids, s_tf, s_dl, *_r) = scoring[si]
+        if len(s_ids) >= k:
+            s_avg = avgdl_by_field[s_field]
+            partial = s_wt * s_tf / (s_tf + k1 * ((1.0 - b) + b * s_dl / s_avg))
+            theta = np.partition(partial, len(partial) - k)[len(partial) - k]
+
+    all_ids, all_contribs = [], []
+    pruned_any = False
+    for li, (field, _term, wt, (ids, tf, dl, blk, *_bounds)) in enumerate(scoring):
+        if np.isfinite(theta):
+            keep = ubs[li] + (sum_max_ub - max_ub[li]) >= theta
+            if not keep.all():
+                pruned_any = True
+                sel = keep[blk]
+                ids, tf, dl = ids[sel], tf[sel], dl[sel]
+        avg = avgdl_by_field[field]
+        all_ids.append(ids)
+        all_contribs.append(wt * tf / (tf + k1 * ((1.0 - b) + b * dl / avg)))
+    uniq, scores, aux = _acc_by_doc(all_ids, all_contribs)
+    if pruned_any:
+        ok = scores >= theta  # complete-scored docs only
+        uniq, scores = uniq[ok], scores[ok]
+    if groups:
+        n_match = np.zeros(len(uniq), dtype=np.int32)
+        for g in groups:
+            g_lists = [
+                ids for ids, (f, t, *_r) in zip(all_ids, scoring)
+                if t in g or (t, f) in g
+            ]
+            n_match += _member_mask(len(uniq), g_lists, aux, uniq)
+        ok = n_match == len(groups)
+        uniq, scores = uniq[ok], scores[ok]
+    if neg_sets:
+        # prohibited lists may hold docs matching no scoring term, so
+        # the test runs on ids, not the rank table
+        neg = np.unique(np.concatenate(neg_sets))
+        ok = ~np.isin(uniq, neg, assume_unique=True)
+        uniq, scores = uniq[ok], scores[ok]
+    return _topk_by_score(uniq, scores, k)
+
+
 def _score_bucket_factory(
     weights: dict[tuple[str, str], float],
     avgdl_by_field: dict[str, float],
@@ -441,224 +562,36 @@ def _score_bucket_factory(
     k: int,
     required_terms: set[str] | None = None,
     exclude_ids=None,
-    prohibited_terms: set[str] | None = None,
+    prohibited_terms: set | None = None,
     required_groups: list[set[str]] | None = None,
-    list_cache: DecodedListCache | None = None,
 ):
-    """Per-bucket single-query scorer (the batch path uses
-    _score_bucket_multi_factory). pdf columns: term, field,
-    block_id, n, doc_id_first, doc_ids, tfs, dls, max_tf, min_dl.
+    """The applyInPandas face of ``_score_lists`` for one query: decode
+    the bucket group's lists (``_decode_lists``) and score them. pdf
+    columns: term, field, block_id, n, doc_id_first, doc_ids, tfs, dls,
+    max_tf, min_dl (+ segment, bucket). Used by ``search``,
+    ``search_boolean``, the prefix/wildcard/fuzzy expansions, mlt,
+    ``lucene`` term clauses and ``facets``.
 
-    ``prohibited_terms`` (Lucene MUST_NOT): docs containing any
-    prohibited term in any configured field are dropped before the
-    top-k. Prohibited lists are decoded for MEMBERSHIP only — never
-    scored — and, because a doc's postings all live in its own
-    doc-range bucket, the membership test is complete within the
-    group. Block-max pruning is disabled in this mode (a pruned
-    scoring block below θ could hide a legit doc whose rank rises
-    once prohibited docs are removed).
-    Block upper bound: ub = wt·max_tf/(max_tf + k1(1−b+b·min_dl/avgdl))
-    ≥ wt·w(tf, dl) for every posting in the block (w is monotone ↑tf,
-    ↓dl), so pruning on it stays admissible; the bound is closed here
-    at query time — the encoder never needed avgdl.
-
-    ``required_terms`` switches to CONJUNCTIVE (Lucene MUST) mode: a
-    doc survives only if it matches EVERY required term (in any
-    field). Block-max pruning is disabled there — a pruned block would
-    silently erase a doc's term membership — and the filter runs after
-    full accumulation, so surviving scores stay bit-identical to the
-    disjunctive scorer's.
-
-    ``exclude_ids`` drops tombstoned docs at decode time (Lucene
-    liveDocs semantics: deleted docs vanish from results immediately,
-    while corpus/block statistics stay stale until compaction — see
-    plans.maintenance). Accepts a plain id array (dead everywhere) or
-    an ``(ids, dead_below)`` pair for per-SEGMENT liveDocs (see
-    ``_norm_excl`` — how fast upserts kill only the older copies of a
-    doc). Masking inside the decoder keeps every consumer — theta
-    seeding, pruning, accumulation, MUST filtering — consistent on
-    live postings only; the stored block bounds still cover the masked
-    postings, so pruning stays admissible."""
-    k1, b = cfg.k1, cfg.b
+    ``required_terms`` (Lucene MUST, singleton groups) and
+    ``required_groups`` (any-of groups) gate docs; ``prohibited_terms``
+    (Lucene MUST_NOT) drops docs holding any of them — membership is
+    complete within the group because a doc's postings all live in its
+    own doc-range bucket. ``exclude_ids`` drops tombstoned docs at
+    decode time (Lucene liveDocs: deleted docs vanish from results at
+    once, while statistics stay stale until compaction — see
+    plans.maintenance): a plain id array (dead everywhere), an
+    ``(ids, dead_below)`` pair for per-segment liveDocs, or a
+    ``broadcast_excl`` Broadcast (see ``_norm_excl``)."""
     excl = _norm_excl(exclude_ids)
-
-    def decode_idx(ga: dict, idx) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Decode the blocks at ``idx`` (a slice or ascending index
-        array into the lexsorted bucket arrays) in three varint calls
-        (the streams are self-delimiting, so concatenated buffers
-        decode in one vectorized pass; per-block doc_id bases are
-        re-applied with a segmented cumsum). ~100× fewer numpy
-        dispatches than per-block decoding on hot terms."""
-        n_per_block = ga["n"][idx]
-        firsts = ga["first"][idx]
-        deltas = varint_decode(b"".join(ga["doc_ids"][idx])).astype(np.int64)
-        g = np.cumsum(deltas)
-        starts = np.concatenate([[0], np.cumsum(n_per_block)])[:-1]
-        ids = g + np.repeat(firsts - g[starts], n_per_block)
-        tfs = varint_decode(b"".join(ga["tfs"][idx])).astype(np.float64)
-        dls = varint_decode(b"".join(ga["dls"][idx])).astype(np.float64)
-        if excl is not None:
-            segs = np.repeat(ga["seg"][idx], n_per_block)
-            keep = _live_of(ids, segs, excl)
-            if not keep.all():
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        return ids, tfs, dls
-
-    def decode_full(ga, bucket_id, term, field, s, e):
-        """Full-slice decode with the optional decoded-list cache
-        (serving path; see DecodedListCache). Pruned subset decodes
-        never cache — they are query-dependent."""
-        if list_cache is None:
-            return decode_idx(ga, slice(s, e))
-        key = (bucket_id, term, field)
-        hit = list_cache.get(key)
-        if hit is None:
-            hit = decode_idx(ga, slice(s, e))
-            list_cache.put(key, hit)
-        return hit
-
-    _EMPTY = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
-
-    def score_arrays(cols) -> tuple[np.ndarray, np.ndarray]:
-        """Array-core scorer: dict-of-numpy (or DataFrame) in,
-        (doc_ids, scores) out — the serving path's pandas-free entry
-        (see _block_cols)."""
-
-        def empty() -> tuple[np.ndarray, np.ndarray]:
-            return _EMPTY
-
-        # MUST constraints as any-of groups: plain required_terms are
-        # singleton groups; required_groups (Lucene's SCORING_BOOLEAN
-        # rewrite of a MUST prefix/fuzzy — a required disjunction of
-        # its expansions) demand ≥1 match within each group
-        groups: list[set[str]] = [
-            *([{t} for t in sorted(required_terms)] if required_terms else []),
-            *(required_groups or []),
-        ]
-        required = bool(groups)
-        cols = _block_cols(cols)
-        ga, bucket_groups = _grouped_arrays(cols)
-        bucket_id = int(cols["bucket"][0]) if (
-            list_cache is not None and "bucket" in cols and len(cols["bucket"])
-        ) else -1
-        neg_sets: list[np.ndarray] = []
-        lists = []  # [(field, term, (s, e), wt, avgdl, ubs)]
-        for term, field, s, e in bucket_groups:
-            # prohibited entries are bare terms (any field) or
-            # (term, field) pairs (field-restricted MUST_NOT)
-            if prohibited_terms and (
-                term in prohibited_terms or (term, field) in prohibited_terms
-            ):
-                if field in cfg.fields:
-                    ids, _tf, _dl = decode_full(ga, bucket_id, term, field, s, e)
-                    if len(ids):
-                        neg_sets.append(ids)
-                continue
-            wt = weights.get((term, field))
-            if wt is None:
-                continue
-            avg = avgdl_by_field[field]
-            mt = ga["max_tf"][s:e]
-            md = ga["min_dl"][s:e]
-            ubs = wt * mt / (mt + k1 * ((1.0 - b) + b * md / avg))
-            lists.append((field, term, (s, e), wt, avg, ubs))
-        if not lists:
-            return empty()
-        if required:
-            avail = {t for _f, t, *_ in lists}
-            avail |= {(t, f) for f, t, *_ in lists}
-            if any(not (g & avail) for g in groups):
-                # some required group has no postings in this bucket →
-                # no doc here can satisfy the conjunction
-                return empty()
-        lists.sort(key=lambda x: (x[0], x[1]))  # oracle's (field, term) order
-        max_ub = np.array([ubs.max() for *_x, ubs in lists])
-        sum_max_ub = max_ub.sum()
-
-        # θ from the strongest list's exact partial scores (lower
-        # bounds). Conjunctive / MUST_NOT modes: no pruning — a
-        # dropped block would erase term membership / hide a doc whose
-        # rank rises after prohibited docs are removed.
-        theta = -np.inf
-        si = int(np.argmax(max_ub))
-        s_field, s_term, (s_s, s_e), s_wt, s_avg, _ = lists[si]
-        s_ids, s_tf, s_dl = decode_full(ga, bucket_id, s_term, s_field, s_s, s_e)
-        if len(s_ids) >= k and not required and not neg_sets and not prohibited_terms:
-            partial = s_wt * s_tf / (s_tf + k1 * ((1.0 - b) + b * s_dl / s_avg))
-            theta = np.partition(partial, len(partial) - k)[len(partial) - k]
-
-        acc: dict[int, float] = {}
-        all_ids, all_contribs, all_terms = [], [], []
-        all_fields: list[str] = []
-        pruned_any = False
-        for li, (field, term, (gs, ge), wt, avg, ubs) in enumerate(lists):
-            others = sum_max_ub - max_ub[li]
-            keep = ubs + others >= theta
-            idx: slice | np.ndarray = slice(gs, ge)
-            if not keep.all():
-                pruned_any = True
-                idx = np.arange(gs, ge)[keep]
-                if not len(idx):
-                    continue
-            if li == si and keep.all():
-                ids, tf, dl = s_ids, s_tf, s_dl
-            elif keep.all():
-                ids, tf, dl = decode_full(ga, bucket_id, term, field, gs, ge)
-            else:
-                ids, tf, dl = decode_idx(ga, idx)
-            contrib = wt * tf / (tf + k1 * ((1.0 - b) + b * dl / avg))
-            all_ids.append(ids)
-            all_contribs.append(contrib)
-            all_terms.append(term)
-            all_fields.append(field)
-        if not all_ids:
-            return empty()
-        # accumulate in (field, term) list order → oracle float order
-        uniq, scores, aux = _acc_by_doc(all_ids, all_contribs)
-        if pruned_any and np.isfinite(theta):
-            ok = scores >= theta  # complete-scored docs only (see module doc)
-            uniq, scores = uniq[ok], scores[ok]
-            aux = None  # rank table no longer aligns (unused: pruning
-            # and MUST/MUST_NOT are mutually exclusive modes)
-        if required:
-            # Lucene MUST: a doc is satisfied if it matches ANY group
-            # term in ANY field; keep docs satisfying every group
-            # (singleton groups = plain conjunctive terms)
-            n_match = np.zeros(len(uniq), dtype=np.int32)
-            for g in groups:
-                # group members are bare terms (any field) or
-                # (term, field) pairs (field-restricted MUST)
-                g_lists = [
-                    i
-                    for i, lt, lf in zip(all_ids, all_terms, all_fields)
-                    if lt in g or (lt, lf) in g
-                ]
-                if not g_lists:
-                    return empty()
-                n_match += _member_mask(len(uniq), g_lists, aux, uniq)
-            ok = n_match == len(groups)
-            uniq, scores = uniq[ok], scores[ok]
-            aux = None
-        if neg_sets:
-            # Lucene MUST_NOT: membership in any prohibited term's
-            # postings (any field) disqualifies. Prohibited lists may
-            # contain docs matching no scoring term, so the span mask
-            # is built over the id range, not the rank table.
-            neg = np.unique(np.concatenate(neg_sets))
-            ok = ~np.isin(uniq, neg, assume_unique=True)
-            uniq, scores = uniq[ok], scores[ok]
-        # top-k by (score desc, doc_id asc); when nothing truncates
-        # (k >= group size — phrase-mode search_lucene, grouped_topk,
-        # fq paths run with k = corpus size) skip the sort: the global
-        # TakeOrdered downstream orders anyway, and the per-bucket
-        # sort of the full match set is pure waste
-        return _topk_by_score(uniq, scores, k)
+    groups = _must_groups(required_terms, required_groups)
 
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        uniq, scores = score_arrays(pdf)
+        uniq, scores = _score_lists(
+            _decode_lists(pdf, excl), weights, avgdl_by_field, cfg, k,
+            groups, prohibited_terms,
+        )
         return pd.DataFrame({"doc_id": uniq, "score": scores})
 
-    score_group.arrays = score_arrays
     return score_group
 
 
@@ -667,135 +600,41 @@ def _score_bucket_multi_factory(
     avgdl_by_field: dict[str, float],
     cfg: IndexConfig,
     k: int,
-    query_terms: dict[int, set],
     required_terms: dict | None = None,
-    exclude_ids: "np.ndarray | None" = None,
+    exclude_ids=None,
 ):
-    """Per-BUCKET scorer for the batch path: scores EVERY query of the
-    batch inside one group call, decoding each (term, field) posting
-    list exactly once and reusing it across all queries that touch it.
+    """Per-BUCKET scorer for the batch path: decodes each (term, field)
+    list of the bucket once (``_decode_lists``) and runs ``_score_lists``
+    for every query of the batch over it. ``weights`` is keyed
+    (query_id, term, field); ``required_terms`` maps a query id to its
+    MUST terms.
 
     Why not per-(query, bucket) groups: that plan joins postings to a
     query-term table BEFORE the shuffle, duplicating every block once
     per matching query — with hot terms shared by most of the batch
     ("def", "return"), shuffle volume multiplies by the batch size.
-    Here each block crosses the wire once; per-bucket work is shared:
-    decode is cached per (term, field), block upper bounds are reused,
-    and only the per-query theta/pruning/accumulation differ. Rank and
-    scores are bit-identical to the single-query scorer (same decode,
-    same (field, term) accumulation order, same pruning rule);
+    Here each block crosses the wire once and is decoded once. Scores
+    are bit-identical to the single-query scorer (same core);
     parallelism is n_buckets (cfg.bucket_bits — size it to the
-    cluster), no longer n_queries × n_buckets."""
-    k1, b = cfg.k1, cfg.b
+    cluster), not n_queries × n_buckets."""
     excl = _norm_excl(exclude_ids)
+    per_query: dict[int, dict[tuple[str, str], float]] = {}
+    for (qid, t, f), w in weights.items():
+        per_query.setdefault(qid, {})[(t, f)] = w
+    queries = [
+        (qid, wq, _must_groups((required_terms or {}).get(qid), None))
+        for qid, wq in sorted(per_query.items())
+    ]
 
     def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        # same numpy-native grouping as the single-query kernel: one
-        # lexsort, contiguous (term, field) slices, no pandas below
-        ga, bucket_groups = _grouped_arrays(pdf)
-        groups: dict[tuple, slice] = {}
-        meta: dict[tuple, tuple] = {}
-        for term, field, s, e in bucket_groups:
-            groups[(term, field)] = slice(s, e)
-            meta[(term, field)] = (ga["max_tf"][s:e], ga["min_dl"][s:e])
-        cache: dict[tuple, tuple] = {}
-
-        def decoded(key: tuple):
-            """(ids, tfs, dls, n_per_block, live_mask|None) — decoded
-            once per bucket, shared by every query touching the list."""
-            if key not in cache:
-                sl = groups[key]
-                n_per_block = ga["n"][sl]
-                firsts = ga["first"][sl]
-                deltas = varint_decode(b"".join(ga["doc_ids"][sl])).astype(np.int64)
-                g = np.cumsum(deltas)
-                starts = np.concatenate([[0], np.cumsum(n_per_block)])[:-1]
-                ids = g + np.repeat(firsts - g[starts], n_per_block)
-                tfs = varint_decode(b"".join(ga["tfs"][sl])).astype(np.float64)
-                dls = varint_decode(b"".join(ga["dls"][sl])).astype(np.float64)
-                live = (
-                    _live_of(ids, np.repeat(ga["seg"][sl], n_per_block), excl)
-                    if excl is not None
-                    else None
-                )
-                cache[key] = (ids, tfs, dls, n_per_block, live)
-            return cache[key]
-
+        lists = _decode_lists(pdf, excl)
         outs = []
-        for qid, qterms in query_terms.items():
-            lists = []
-            for (term, field), rows in groups.items():
-                if term not in qterms:
-                    continue
-                wt = weights.get((qid, term, field))
-                if wt is None:
-                    continue
-                mt, md = meta[(term, field)]
-                avg = avgdl_by_field[field]
-                ubs = wt * mt / (mt + k1 * ((1.0 - b) + b * md / avg))
-                lists.append((field, term, (term, field), wt, avg, ubs))
-            if not lists:
-                continue
-            required = required_terms.get(qid, set()) if required_terms else set()
-            if required and not required <= {t for _f, t, *_ in lists}:
-                continue
-            lists.sort(key=lambda x: (x[0], x[1]))  # oracle's accumulation order
-            max_ub = np.array([ubs.max() for *_x, ubs in lists])
-            sum_max_ub = max_ub.sum()
-
-            theta = -np.inf
-            si = int(np.argmax(max_ub))
-            s_field, _t, s_key, s_wt, s_avg, _u = lists[si]
-            s_ids, s_tf, s_dl, _nb, s_live = decoded(s_key)
-            if s_live is not None:
-                s_ids, s_tf, s_dl = s_ids[s_live], s_tf[s_live], s_dl[s_live]
-            if len(s_ids) >= k and not required:
-                partial = s_wt * s_tf / (s_tf + k1 * ((1.0 - b) + b * s_dl / s_avg))
-                theta = np.partition(partial, len(partial) - k)[len(partial) - k]
-
-            acc_ids, acc_contribs, acc_terms = [], [], []
-            pruned_any = False
-            for li, (field, term, key, wt, avg, ubs) in enumerate(lists):
-                others = sum_max_ub - max_ub[li]
-                keep = ubs + others >= theta
-                if not keep.all():
-                    pruned_any = True
-                ids, tf, dl, n_per_block, live = decoded(key)
-                if keep.all() and live is None:
-                    pass  # full cached arrays
-                else:
-                    mask = np.repeat(keep, n_per_block)
-                    if live is not None:
-                        mask &= live
-                    ids, tf, dl = ids[mask], tf[mask], dl[mask]
-                if not len(ids):
-                    continue
-                contrib = wt * tf / (tf + k1 * ((1.0 - b) + b * dl / avg))
-                acc_ids.append(ids)
-                acc_contribs.append(contrib)
-                acc_terms.append(term)
-            if not acc_ids:
-                continue
-            # list-order accumulation (oracle float order); dense-span
-            # direct indexing when the bucket's ids are compact
-            uniq, scores, aux = _acc_by_doc(acc_ids, acc_contribs)
-            if pruned_any and np.isfinite(theta):
-                ok = scores >= theta
-                uniq, scores = uniq[ok], scores[ok]
-                aux = None  # pruning and MUST are mutually exclusive
-            if required:
-                n_match = np.zeros(len(uniq), dtype=np.int32)
-                for t in required:
-                    t_lists = [
-                        i for i, lt in zip(acc_ids, acc_terms) if lt == t
-                    ]
-                    n_match += _member_mask(len(uniq), t_lists, aux, uniq)
-                ok = n_match == len(required)
-                uniq, scores = uniq[ok], scores[ok]
-            uniq, scores = _topk_by_score(uniq, scores, k)
-            out = pd.DataFrame({"doc_id": uniq, "score": scores})
-            out.insert(0, "query_id", np.int32(qid))
-            outs.append(out)
+        for qid, wq, groups in queries:
+            uniq, scores = _score_lists(lists, wq, avgdl_by_field, cfg, k, groups)
+            if len(uniq):
+                outs.append(pd.DataFrame(
+                    {"query_id": np.int32(qid), "doc_id": uniq, "score": scores}
+                ))
         if not outs:
             return pd.DataFrame(
                 {"query_id": pd.Series([], dtype=np.int32),
@@ -1435,10 +1274,8 @@ def search_batch(
     cand = index.postings.filter(
         F.col("term").isin(all_terms) & F.col("field").isin(list(cfg.fields))
     )
-    query_term_sets = {qid: set(analyze_query(q, qan, cfg.chain)) for qid, q in queries.items()}
     fn = _score_bucket_multi_factory(
-        weights, avgdl, cfg, k, query_term_sets, required_terms=required,
-        exclude_ids=exclude_ids,
+        weights, avgdl, cfg, k, required_terms=required, exclude_ids=exclude_ids,
     )
     per_bucket = cand.groupBy("bucket").applyInPandas(
         fn, schema="query_id int, doc_id long, score double"

@@ -62,12 +62,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from golr_loader_spark.config import IndexConfig
-from golr_loader_spark.functions.codec import varint_decode
 from golr_loader_spark.functions.tokenize import analyze_query
 from golr_loader_spark.plans.bm25 import (
     _avgdl,
+    _decode_lists,
     _idf_table,
-    _live_of,
     _norm_excl,
 )
 from golr_loader_spark.plans.build_index import InvertedIndex
@@ -123,37 +122,17 @@ def _decode_contrib_lists(
     excl,
 ) -> dict[tuple[str, str], tuple[np.ndarray, np.ndarray]]:
     """Decode each weighted (term, field) list of the group →
-    {(term, field): (doc_ids, bm25_contribs)}. Concatenated-buffer
-    varint decode (three calls per list), deterministic
-    (segment, block_id) block order, tombstone masking."""
-    from golr_loader_spark.plans.bm25 import _grouped_arrays
-
+    {(term, field): (doc_ids, bm25_contribs)} — ``bm25._decode_lists``
+    (deterministic block order, tombstone masking) plus the per-posting
+    BM25 contribution."""
     k1, b = cfg.k1, cfg.b
     out: dict[tuple[str, str], tuple[np.ndarray, np.ndarray]] = {}
-    # numpy-native grouping (one lexsort, contiguous slices in
-    # deterministic block order) — same kernel discipline as bm25
-    ga, bucket_groups = _grouped_arrays(pdf)
-    for term, field, s, e in bucket_groups:
+    for (term, field), (ids, tfs, dls, *_bounds) in _decode_lists(pdf, excl).items():
         wt = weights.get((term, field))
         if wt is None:
             continue
-        sl = slice(s, e)
-        n_pb = ga["n"][sl]
-        firsts = ga["first"][sl]
-        g = np.cumsum(varint_decode(b"".join(ga["doc_ids"][sl])).astype(np.int64))
-        starts = np.concatenate([[0], np.cumsum(n_pb)])[:-1]
-        ids = g + np.repeat(firsts - g[starts], n_pb)
-        tfs = varint_decode(b"".join(ga["tfs"][sl])).astype(np.float64)
-        dls = varint_decode(b"".join(ga["dls"][sl])).astype(np.float64)
-        if excl is not None:
-            keep = _live_of(ids, np.repeat(ga["seg"][sl], n_pb), excl)
-            if not keep.all():
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        if not len(ids):
-            continue
         avg = avgdl_by_field[field]
-        contrib = wt * tfs / (tfs + k1 * ((1.0 - b) + b * dls / avg))
-        out[(term, field)] = (ids, contrib)
+        out[(term, field)] = (ids, wt * tfs / (tfs + k1 * ((1.0 - b) + b * dls / avg)))
     return out
 
 

@@ -164,13 +164,15 @@ def assign_dense_ids(
         )
         # 4-key equi-join (not doc_id alone): under a hash collision
         # two docs share doc_id but get DISTINCT dense ids — the full
-        # key keeps the attach exact, matching the window tie-break
+        # key keeps the attach exact, matching the window tie-break.
+        # NULL-safe, so a row with a NULL repo/path/commit keeps its id
+        # (the duplicate count's groupBy treats NULLs as equal too)
         joined = documents.join(
             F.broadcast(mapping),
-            (F.col("doc_id") == F.col("_m_hash"))
-            & (F.col("repo") == F.col("_m_repo"))
-            & (F.col("path") == F.col("_m_path"))
-            & (F.col("commit") == F.col("_m_commit")),
+            F.col("doc_id").eqNullSafe(F.col("_m_hash"))
+            & F.col("repo").eqNullSafe(F.col("_m_repo"))
+            & F.col("path").eqNullSafe(F.col("_m_path"))
+            & F.col("commit").eqNullSafe(F.col("_m_commit")),
         )
         return joined.select(
             *[

@@ -47,7 +47,9 @@ Execution maps onto the engine's existing machinery, so every clause
 type keeps its already-oracled semantics:
 
 * term clauses → ``bm25._score_bucket_factory`` (one bucket-grouped
-  job); MUST prefix/fuzzy become required ANY-OF GROUPS over their
+  job running the BM25 core ``bm25._score_lists`` per bucket — the
+  same core ``LocalSearcher`` runs once over whole-index lists); MUST
+  prefix/fuzzy become required ANY-OF GROUPS over their
   expansions — exactly Lucene's rewrite of a MUST multi-term query
   into a required disjunction;
 * MUST_NOT prefix/fuzzy → their expansions join the prohibited set

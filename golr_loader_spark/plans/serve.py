@@ -21,6 +21,7 @@ from __future__ import annotations
 import glob
 import math
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -30,7 +31,10 @@ import pyarrow.parquet as pq
 from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.functions.tokenize import analyze_query
 from golr_loader_spark.plans.bm25 import (
-    _score_bucket_factory,
+    _decode_lists,
+    _must_groups,
+    _norm_excl,
+    _score_lists,
     bm25_idf,
     query_analyzer,
 )
@@ -265,15 +269,16 @@ class LocalSearcher:
     ]
 
     def _read_score_cols(self, terms: list[str]) -> dict:
-        """Per-term RAW block cache + pandas-free read for the serving
-        paths: returns {column: numpy array} over all of ``terms``'s
-        blocks (cfg fields only), serving repeated terms from
-        ``_term_blocks`` (the Lucene terms-dictionary-to-blocks analog
-        of DecodedListCache, one level rawer; entries are immutable
-        between refresh() calls, which rebuild the cache). Roots
-        without usable footer stats fall back to a dataset scan."""
-        import numpy as _np
-
+        """Raw block rows of ``terms`` (cfg fields only) as {column:
+        numpy array}, concatenated over the terms; {} when none has
+        blocks. This is the read under both decoded shapes of
+        ``_list_cache`` (``_bm25_lists``, ``_positional_topk``), so it
+        runs only for terms whose decoded entry missed. Each term's rows
+        are one ``_term_blocks`` entry (the Lucene terms-dictionary-to-
+        blocks analog, one level rawer than the decoded lists; immutable
+        between refresh() calls, which rebuild the cache); the terms
+        that miss there share one row-group read. Roots without usable
+        footer stats fall back to a dataset scan."""
         cache = self._term_blocks
         have: dict[str, dict | bool] = {}
         missing = []
@@ -301,12 +306,12 @@ class LocalSearcher:
                 for name in tbl.column_names
             }
             tarr = cols["term"]
-            order = _np.argsort(tarr, kind="stable")
+            order = np.argsort(tarr, kind="stable")
             sorted_cols = {k: v[order] for k, v in cols.items()}
             st = sorted_cols["term"]
-            bounds = _np.flatnonzero(st[1:] != st[:-1]) + 1
-            starts = _np.concatenate(([0], bounds)) if len(st) else []
-            ends = _np.concatenate((bounds, [len(st)])) if len(st) else []
+            bounds = np.flatnonzero(st[1:] != st[:-1]) + 1
+            starts = np.concatenate(([0], bounds)) if len(st) else []
+            ends = np.concatenate((bounds, [len(st)])) if len(st) else []
             present: dict[str, dict] = {}
             for s, e in zip(starts, ends):
                 present[st[s]] = {k: v[s:e] for k, v in sorted_cols.items()}
@@ -322,7 +327,7 @@ class LocalSearcher:
         if len(parts) == 1:
             return parts[0]
         return {
-            k: _np.concatenate([p[k] for p in parts]) for k in parts[0]
+            k: np.concatenate([p[k] for p in parts]) for k in parts[0]
         }
 
     def _weights_of(self, ts: list[dict]) -> dict[tuple[str, str], float]:
@@ -335,53 +340,58 @@ class LocalSearcher:
             if r["field"] in self.cfg.fields
         }
 
+    def _bm25_lists(self, terms: list[str]) -> dict[tuple[str, str], tuple]:
+        """{(term, field): decoded list} over every bucket for ``terms``
+        (``bm25._decode_lists``, tombstone-masked). Each term's lists in
+        all configured fields are one ``_list_cache`` entry under
+        ("bm25", term) — the scope of the raw ``_term_blocks`` entry
+        they are decoded from; the terms that miss are read through
+        ``_read_score_cols`` and decoded together. ``_list_cache =
+        None`` decodes on every call."""
+        cache = self._list_cache
+        per_term = {
+            t: None if cache is None else cache.get(("bm25", t))
+            for t in dict.fromkeys(terms)
+        }
+        missing = [t for t, v in per_term.items() if v is None]
+        if missing:
+            cols = self._read_score_cols(missing)
+            for t in missing:
+                per_term[t] = {}
+            if cols:
+                decoded = _decode_lists(cols, _norm_excl(self.tombstones))
+                for (t, f), lst in decoded.items():
+                    per_term[t][f] = lst
+            if cache is not None:
+                for t in missing:
+                    cache.put(("bm25", t), per_term[t])
+        return {
+            (t, f): lst for t, by_field in per_term.items()
+            for f, lst in by_field.items()
+        }
+
     def _score(
         self,
         weights: dict[tuple[str, str], float],
         read_terms: list[str],
         k: int,
         required: set[str] | None = None,
-        prohibited: set[str] | None = None,
+        prohibited: set | None = None,
         required_groups: list[set[str]] | None = None,
     ) -> list[tuple[int, float]]:
-        """Shared scoring core: read blocks for ``read_terms``
-        (scoring ∪ prohibited), run the SAME bucket scorer as the
-        distributed path per bucket group, merge top-k. The whole
-        path is numpy-only (``score_group.arrays`` + ``_block_cols``):
-        profiling showed pandas frame construction/slicing at ~45% of
-        query wall, so the serving path slices numpy views per bucket
-        and never builds a DataFrame."""
-        import numpy as _np
-
-        cols = self._read_score_cols(read_terms)
-        if not cols:
-            return []
-        score_group = _score_bucket_factory(
-            weights, self.avgdl, self.cfg, k,
-            required_terms=required, exclude_ids=self.tombstones,
-            prohibited_terms=prohibited, required_groups=required_groups,
-            list_cache=self._list_cache,
+        """BM25 top-k: the Spark scorers' core (``bm25._score_lists``)
+        run ONCE over the whole-index lists of ``read_terms`` (scoring ∪
+        prohibited) from ``_bm25_lists`` — no bucket loop, no pandas.
+        Exact, because a doc's postings never leave its bucket and the
+        core's pruning is admissible for any set of buckets (see
+        ``_score_lists``); results equal the Spark plans'."""
+        lists = self._bm25_lists(read_terms)
+        ids, sc = _score_lists(
+            lists, weights, self.avgdl, self.cfg, k,
+            _must_groups(required, required_groups), prohibited,
         )
-        buckets = cols["bucket"].astype(_np.int64)
-        order = _np.argsort(buckets, kind="stable")
-        sorted_cols = {kk: v[order] for kk, v in cols.items()}
-        sb = buckets[order]
-        bounds = _np.flatnonzero(sb[1:] != sb[:-1]) + 1
-        starts = _np.concatenate(([0], bounds))
-        ends = _np.concatenate((bounds, [len(sb)]))
-        ids_parts, sc_parts = [], []
-        for s, e in zip(starts, ends):
-            sub = {kk: v[s:e] for kk, v in sorted_cols.items()}
-            ids, sc = score_group.arrays(sub)
-            if len(ids):
-                ids_parts.append(ids)
-                sc_parts.append(sc)
-        if not ids_parts:
-            return []
-        all_ids = _np.concatenate(ids_parts)
-        all_sc = _np.concatenate(sc_parts)
-        sel = _np.lexsort((all_ids, -all_sc))[:k]
-        return [(int(all_ids[i]), float(all_sc[i])) for i in sel]
+        order = np.lexsort((ids, -sc))
+        return [(int(ids[i]), float(sc[i])) for i in order]
 
     def search(
         self, query: str, k: int = 10, mode: str = "or"
@@ -525,9 +535,6 @@ class LocalSearcher:
         the scope of the raw ``_term_blocks`` entries it is decoded from
         (per-bucket entries measured slower and evicted BM25 lists from
         the shared LRU). No pandas object is built."""
-        import numpy as _np
-
-        from golr_loader_spark.plans.bm25 import _norm_excl
         from golr_loader_spark.plans.phrase import _decode_positional_lists
 
         if score_group is None:
@@ -553,7 +560,7 @@ class LocalSearcher:
                 per_term[t] = decoded.get(t, ())
                 self._list_cache.put(("pos", t, field), per_term[t])
         docs, sc = score_group.lists({t: v for t, v in per_term.items() if v})
-        order = _np.lexsort((docs, -sc))[:k]
+        order = np.lexsort((docs, -sc))[:k]
         return [(int(docs[i]), float(sc[i])) for i in order]
 
     def search_phrase(

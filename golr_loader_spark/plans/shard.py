@@ -275,6 +275,8 @@ class ShardedSearcher:
     ):
         if not roots:
             raise ValueError("need at least one shard root")
+        if parallel not in (False, True):
+            raise ValueError(f"parallel must be a bool, got {parallel!r}")
         # Transport choice — SolrCloud scatters to shards concurrently,
         # but there each shard is a separate PROCESS on (usually) a
         # separate node, so the coordinator's threads merely wait on
@@ -284,17 +286,16 @@ class ShardedSearcher:
         #   LocalSearchers. In-process thread-per-shard CONTENDS on the
         #   GIL instead of overlapping (measured, 60k docs, 20-query
         #   p95, min-of-4 interleaved: 2 shards 276 ms sequential vs
-        #   367 ms threaded; 4 shards 279 ms vs 754 ms).
-        # * parallel=True / "process": one worker PROCESS per shard
-        #   (fork; persistent LocalSearcher each) + a thread-per-shard
-        #   scatter whose threads only wait on pipe reads — the GIL is
-        #   released during the wait, so per-shard work genuinely
-        #   overlaps. This is the SolrCloud topology.
-        # * parallel="threads": the measured-losing in-process thread
-        #   transport, kept for A/B runs.
+        #   367 ms threaded; 4 shards 279 ms vs 754 ms), so there is no
+        #   thread transport.
+        # * parallel=True: one worker PROCESS per shard (fork;
+        #   persistent LocalSearcher each) + a thread-per-shard scatter
+        #   whose threads only wait on pipe reads — the GIL is released
+        #   during the wait, so per-shard work genuinely overlaps. This
+        #   is the SolrCloud topology.
         self._pool = None
         self._proxies: list[_ShardProxy] | None = None
-        if parallel and parallel != "threads" and len(roots) > 1:
+        if parallel and len(roots) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
             self._proxies = [_ShardProxy(r, cfg) for r in roots]
@@ -310,10 +311,6 @@ class ShardedSearcher:
         self.cfg = self.shards[0].cfg
         self.n_docs = self.shards[0].n_docs
         self.avgdl = self.shards[0].avgdl
-        if parallel == "threads" and len(self.shards) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            self._pool = ThreadPoolExecutor(max_workers=len(self.shards))
 
     def _fanout(self, fns: list) -> list:
         """Run per-shard thunks concurrently, results in shard order

@@ -13,9 +13,10 @@ across commits.
 Query-time semantics over an incrementally-built index: posting
 blocks for one (term, field, bucket) may arrive from several commits
 with interleaved doc ranges. Each commit is its own segment, so every
-list has a total (segment, block_id) order, and the scorer
-accumulates per doc (``bm25._score_bucket_factory``, per bucket) — it
-never assumes doc order across blocks.
+list has a total (bucket, segment, block_id) order
+(``bm25._decode_lists``), and the scoring core accumulates per doc
+(``bm25._score_lists``, per bucket on Spark and over whole-index lists
+in ``LocalSearcher``) — it never assumes doc order across blocks.
 
 Also provided: the windowed streaming aggregation demo
 (watermark + tumbling window) over the events table, the Structured

@@ -42,3 +42,48 @@ def test_build_has_no_doc_splits_flag(tmp_path):
     with pytest.raises(SystemExit):
         main(["build", "--corpus", str(tmp_path), "--out", str(tmp_path / "x"),
               "--doc-splits", "2"])
+
+
+def test_query_uses_the_index_config(spark, tmp_path, capsys):
+    """``query`` restores the IndexConfig persisted in the root's
+    config.json: a positional root with a one-analyzer field set and a
+    stopword chain answers ``query --phrase`` like the library handed
+    that config. (Analyzed with the CLI's own defaults instead, the
+    phrase keeps the stopword, which has no postings, and matches
+    nothing.)"""
+    from golr_loader_spark.config import IndexConfig
+    from golr_loader_spark.corpus import synth_corpus
+    from golr_loader_spark.plans.documents import flatten_documents
+    from golr_loader_spark.plans.manifest import build_index_checkpointed
+    from golr_loader_spark.plans.phrase import phrase_search_positional
+
+    root = str(tmp_path / "index")
+    cfg = IndexConfig(
+        fields={"content": ("simple", 1.0)}, bucket_bits=3, positions=True,
+        stopwords=("the",),
+    )
+    docs = flatten_documents(synth_corpus(spark, 200, seed=5, partitions=2))
+    build_index_checkpointed(docs, root, cfg, n_bucket_groups=2)
+    assert _load_config(root) == cfg
+    ix = load_checkpointed_index(spark, root, cfg)
+
+    # a phrase with the stopword inside: "<w> the <w>"
+    phrase, want = None, []
+    for row in docs.select("content").limit(20).collect():
+        words = row["content"].split()
+        for i in range(1, len(words) - 1):
+            if words[i] != "the" or "the" in (words[i - 1], words[i + 1]):
+                continue
+            phrase = " ".join(words[i - 1 : i + 2])
+            want = [
+                {"doc_id": r["doc_id"], "score": round(r["score"], 6)}
+                for r in phrase_search_positional(ix, phrase, k=5, cfg=cfg).collect()
+            ]
+            break
+        if want:
+            break
+    assert want, "no '<w> the <w>' window in the first documents"
+
+    main(["query", "--index", root, "--q", phrase, "--phrase", "-k", "5"])
+    (got,) = _json_lines(capsys.readouterr().out)
+    assert got["hits"] == want

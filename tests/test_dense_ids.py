@@ -115,3 +115,19 @@ def test_hash_collision_keeps_distinct_rows(spark):
     rows = out.select("doc_id", "doc_hash").collect()
     assert sorted(r["doc_id"] for r in rows) == list(range(61))
     assert sum(r["doc_hash"] == first["doc_id"] for r in rows) == 2
+
+
+@pytest.mark.parametrize("broadcast_threshold", [2_000_000, 0])
+def test_null_key_columns_keep_their_rows(spark, broadcast_threshold):
+    """Rows whose repo, path or commit is NULL still get one dense id
+    each: the attach compares the four keys NULL-safely, as the
+    duplicate-key count's groupBy already does."""
+    docs = flatten_documents(synth_corpus(spark, 60, seed=3))
+    h = F.abs(F.col("doc_id"))
+    for col, r in (("repo", 0), ("path", 1), ("commit", 2)):
+        docs = docs.withColumn(col, F.when(h % 5 == r, F.lit(None)).otherwise(F.col(col)))
+    assert docs.filter(F.col("repo").isNull() | F.col("path").isNull()).count() > 0
+    out = assign_dense_ids(docs, range_buckets=8, broadcast_threshold=broadcast_threshold)
+    rows = out.select("doc_id", "doc_hash").collect()
+    assert sorted(r["doc_id"] for r in rows) == list(range(60))
+    assert {r["doc_hash"] for r in rows} == {r["doc_id"] for r in docs.collect()}

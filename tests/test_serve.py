@@ -123,6 +123,9 @@ def test_term_block_cache_serves_identical_results(spark, roots):
     docs, cfg, ix, r1, r2 = roots
     ls = LocalSearcher(r1, cfg)
     first = [ls.search(q, k=10) for q in QUERIES]
+    # repeats would come from the decoded lists; bypass them so the
+    # second pass reads through the raw-block cache
+    ls._list_cache = None
     hits_before = ls._term_blocks.hits
     second = [ls.search(q, k=10) for q in QUERIES]
     assert second == first

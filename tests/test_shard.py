@@ -196,20 +196,19 @@ def test_matching_ids_parity(pair):
 
 def test_parallel_scatter_optin_identical(roots, cfg):
     """parallel=True (process-per-shard scatter since round 5; see
-    test_shard_process.py for the full surface) and parallel="threads"
-    (the measured-losing in-process thread transport, kept for A/B)
-    are opt-in transport choices, never semantic ones: identical
-    results to the sequential default on ranked, facet, and grouped
-    operations."""
+    test_shard_process.py for the full surface) is an opt-in transport
+    choice, never a semantic one: identical results to the sequential
+    default on ranked, facet, and grouped operations. The sequential
+    and process transports are the only two."""
     _root, shard_roots, _docs = roots
     seq = ShardedSearcher(shard_roots, cfg)
-    thr = ShardedSearcher(shard_roots, cfg, parallel="threads")
-    assert seq._pool is None and thr._pool is not None and thr._proxies is None
+    assert seq._pool is None and seq._proxies is None
+    with pytest.raises(ValueError, match="bool"):
+        ShardedSearcher(shard_roots, cfg, parallel="threads")
     with ShardedSearcher(shard_roots, cfg, parallel=True) as par:
         assert par._pool is not None and par._proxies is not None
         for q in QUERIES:
             assert par.search(q, k=10) == seq.search(q, k=10), q
-            assert thr.search(q, k=10) == seq.search(q, k=10), q
         assert par.facet_counts("def", "lang") == seq.facet_counts("def", "lang")
         assert par.grouped_topk("lang", "def return", k_groups=3) == (
             seq.grouped_topk("lang", "def return", k_groups=3)
