@@ -144,7 +144,7 @@ def test_stream_reproduces_golden(roots, name):
 
 
 @pytest.mark.parametrize("name", sorted(GOLDENS))
-def test_boolean_and_prefix_match_spark(spark, roots, name):
+def test_served_queries_match_spark(spark, roots, name):
     root, cfg = roots[name]
     ix = read_index(spark, root, cfg)
     excl = load_tombstones(spark, root)
