@@ -314,10 +314,12 @@ class DecodedListCache:
     A second instance (``_term_blocks``) keyed by the bare term holds
     the raw block rows both shapes are decoded from. All three scopes
     are one term over every bucket, so a query of n terms misses at
-    most n entries of each. Valid for one searcher lifetime: the mmap'd
-    block table and the tombstone mask are both fixed between
-    ``refresh()`` calls, and refresh builds a new cache. Entries are
-    read-only by kernel contract (every consumer derives new arrays)."""
+    most n entries of each. ``max_entries`` counts entries, not bytes:
+    a ("bm25", term) entry holds every bucket's postings of the term.
+    Valid for one searcher lifetime: the mmap'd block table and the
+    tombstone mask are both fixed between ``refresh()`` calls, and
+    refresh builds a new cache. Entries are read-only by kernel
+    contract (every consumer derives new arrays)."""
 
     def __init__(self, max_entries: int = 4096):
         from collections import OrderedDict

@@ -1,14 +1,14 @@
 """Interleaved A/B of two revisions on one perfbench workload.
 
     python3 scripts/ab.py REV_A REV_B --workload serve|lifecycle --pairs N
-        [--seconds 12] [--seed0 1] [--out FILE] [--workdir DIR] [--keep]
+        [--seed0 1] [--out FILE]
 
-Exports the committed tree of each revision (``git archive``) into its
-own directory under ``--workdir`` (default: a new directory in the
-system temp dir), then runs ``python3 perfbench/run.py --workload W
---seed S --seconds T --trace 0`` in each, pair by pair: pair i uses seed
-``seed0 + i``, and the side that runs first alternates (A first on even
-pairs). Each run is a fresh process, so no state carries between them.
+Exports the committed tree of each revision (``git archive``) into a
+temporary directory, then runs ``python3 perfbench/run.py --workload W
+--seed S --seconds 12 --trace 0`` in each, pair by pair: pair i uses
+seed ``seed0 + i``, and the side that runs first alternates (A first on
+even pairs). Each run is a fresh process, so no state carries between
+them.
 
 Prints, per end-to-end metric of ``BENCHMARK.json``, the median, q1 and
 q3 of each side, the median paired ratio B/A and the number of pairs in
@@ -22,16 +22,15 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import subprocess
 import sys
-import tarfile
 import tempfile
 import time
 
 import numpy as np
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SECONDS = 12  # perfbench run length, as BENCHMARK.json documents it
 
 
 def _git(*args: str) -> str:
@@ -44,27 +43,29 @@ def export_tree(rev: str, dest: str) -> str:
     """The committed files of ``rev`` under ``dest``; returns the sha."""
     sha = _git("rev-parse", "--verify", f"{rev}^{{commit}}")
     os.makedirs(dest)
-    tar_path = dest + ".tar"
-    _git("archive", "--format=tar", "-o", tar_path, sha)
-    with tarfile.open(tar_path) as tf:
-        tf.extractall(dest, filter="data")
-    os.remove(tar_path)
+    archive = subprocess.Popen(
+        ["git", "archive", "--format=tar", sha], cwd=ROOT, stdout=subprocess.PIPE
+    )
+    subprocess.run(["tar", "-x", "-C", dest], stdin=archive.stdout, check=True)
+    archive.stdout.close()
+    if archive.wait() != 0:
+        raise RuntimeError(f"git archive {sha} exited {archive.returncode}")
     return sha
 
 
-def run_once(tree: str, workload: str, seed: int, seconds: float, log) -> dict:
+def run_once(tree: str, workload: str, seed: int) -> dict:
     """One ``perfbench/run.py --trace 0`` run → its closing JSON object."""
     cmd = [
         sys.executable, "perfbench/run.py", "--workload", workload,
-        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0",
+        "--seed", str(seed), "--seconds", str(SECONDS), "--trace", "0",
     ]
     proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
-    log.write(proc.stdout)
-    log.write(proc.stderr)
-    log.flush()
     last = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
     if proc.returncode != 0 or not last:
-        raise RuntimeError(f"{' '.join(cmd)} in {tree} exited {proc.returncode}")
+        raise RuntimeError(
+            f"{' '.join(cmd)} in {tree} exited {proc.returncode}:\n"
+            + "\n".join(proc.stderr.splitlines()[-20:])
+        )
     return json.loads(last[-1])
 
 
@@ -109,59 +110,43 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("rev_b")
     ap.add_argument("--workload", required=True, choices=("serve", "lifecycle"))
     ap.add_argument("--pairs", type=int, required=True)
-    ap.add_argument("--seconds", type=float, default=12.0)
     ap.add_argument("--seed0", type=int, default=1)
     ap.add_argument("--out", default=None, help="also write the JSON record here")
-    ap.add_argument("--workdir", default=None, help="where the trees are exported")
-    ap.add_argument("--keep", action="store_true", help="keep the exported trees")
     args = ap.parse_args(argv)
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         metrics = json.load(fh)["end_to_end"]
-    work = args.workdir or tempfile.mkdtemp(prefix="ab-")
-    os.makedirs(work, exist_ok=True)
-    trees = {"A": os.path.join(work, "A"), "B": os.path.join(work, "B")}
-    shas = {}
-    try:
-        for side, rev in (("A", args.rev_a), ("B", args.rev_b)):
-            shas[side] = export_tree(rev, trees[side])
+    with tempfile.TemporaryDirectory(prefix="ab-") as work:
+        trees = {"A": os.path.join(work, "A"), "B": os.path.join(work, "B")}
+        shas = {side: export_tree(rev, trees[side])
+                for side, rev in (("A", args.rev_a), ("B", args.rev_b))}
         runs: dict[str, list] = {"A": [], "B": []}
         pairs = []
-        with open(os.path.join(work, "runs.log"), "a") as log:
-            for i in range(args.pairs):
-                seed = args.seed0 + i
-                order = ("A", "B") if i % 2 == 0 else ("B", "A")
-                got = {}
-                for side in order:
-                    t0 = time.perf_counter()
-                    got[side] = run_once(
-                        trees[side], args.workload, seed, args.seconds, log
+        for i in range(args.pairs):
+            seed = args.seed0 + i
+            order = ("A", "B") if i % 2 == 0 else ("B", "A")
+            for side in order:
+                t0 = time.perf_counter()
+                got = run_once(trees[side], args.workload, seed)
+                print(
+                    f"pair {i + 1}/{args.pairs} seed {seed} {side}: "
+                    + " ".join(
+                        f"{k}={v['value']:.4g}" for k, v in got["metrics"].items()
                     )
-                    print(
-                        f"pair {i + 1}/{args.pairs} seed {seed} {side}: "
-                        + " ".join(
-                            f"{k}={v['value']:.4g}" for k, v in got[side]["metrics"].items()
-                        )
-                        + f" failed={got[side]['failed']}"
-                        + f" ({time.perf_counter() - t0:.0f} s)",
-                        file=sys.stderr, flush=True,
-                    )
-                    runs[side].append(got[side])
-                pairs.append({"seed": seed, "first": order[0]})
-        record = {
-            "workload": args.workload,
-            "revs": {"A": [args.rev_a, shas["A"]], "B": [args.rev_b, shas["B"]]},
-            "seconds": args.seconds,
-            "pairs": pairs,
-            **summarize(runs, metrics),
-            "runs": runs,
-        }
-    finally:
-        if not args.keep:
-            for tree in trees.values():
-                shutil.rmtree(tree, ignore_errors=True)
-            if args.workdir is None:
-                shutil.rmtree(work, ignore_errors=True)
+                    + f" failed={got['failed']}"
+                    + f" ({time.perf_counter() - t0:.0f} s)",
+                    file=sys.stderr, flush=True,
+                )
+                runs[side].append(got)
+            pairs.append({"seed": seed, "first": order[0]})
+    record = {
+        "workload": args.workload,
+        "revs": {"A": [args.rev_a, shas["A"]], "B": [args.rev_b, shas["B"]]},
+        "seconds": SECONDS,
+        "pairs": pairs,
+        **summarize(runs, metrics),
+        "runs": runs,
+    }
 
     for name, s in record["metrics"].items():
         a, b = s["A"], s["B"]
