@@ -199,3 +199,19 @@ def test_scan_fallback_matches_row_group_reads(cfg, live_root):
         ["data", "query"], 3
     )
     assert scan.search("data query spark", k=5) == ls.search("data query spark", k=5)
+
+
+def test_phrase_serving_with_decoded_cache_off(cfg, live_root):
+    """``_list_cache = None`` (decode on every call, the mode the BM25
+    path already honours) serves the same phrase, span-near and Lucene
+    phrase-clause answers as the cached searcher."""
+    on, off = LocalSearcher(live_root, cfg), LocalSearcher(live_root, cfg)
+    off._list_cache = None
+    for phrase in PHRASES:
+        for slop in (0, 2):
+            want = on.search_phrase(phrase, slop=slop)
+            assert off.search_phrase(phrase, slop=slop) == want, (phrase, slop)
+    for terms in (["data", "query"], ["spark", "data", "query"]):
+        assert off.search_span_near(terms, 3) == on.search_span_near(terms, 3)
+    for q in ('"data query" spark', '+data -"query data"'):
+        assert off.query(q) == on.query(q), q
