@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.plans.build_index import InvertedIndex
-from golr_loader_spark.plans.lucene import _exec, fq_doc_ids, parse_lucene
+from golr_loader_spark.plans.lucene import _match, fq_doc_ids, parse_lucene
 
 SCORE_MODES = ("none", "max", "total", "avg")
 
@@ -79,7 +79,7 @@ def block_join_parent(
         index, which, cfg=cfg, exclude_ids=exclude_ids,
         max_expansions=max_expansions,
     )
-    kids = _exec(
+    kids = _match(
         index, parse_lucene(child_query), cfg, exclude_ids, max_expansions,
         None,
     )
@@ -176,7 +176,7 @@ def _local_parent_partials(
     from golr_loader_spark.plans.lucene import parse_lucene as _p
 
     parents = searcher._fq_ids_local(which, max_expansions)
-    kid_scores = searcher._exec_clauses_local(
+    kid_scores = searcher._lucene_scores(
         _p(child_query), max_expansions, None
     ) or {}
     blocks = _local_blocks(searcher, block_field)

@@ -768,7 +768,15 @@ def _guard_expansion(base: DataFrame, max_expansions: int, what: str) -> None:
     distinct terms (the limit bounds the job), so a pathological
     expansion ('a*' against a billion-term vocabulary) raises
     TooManyClauses without ever pulling the expansion to the driver."""
-    n = base.select("term").distinct().limit(max_expansions + 1).count()
+    check_expansion(
+        base.select("term").distinct().limit(max_expansions + 1).count(),
+        max_expansions, what,
+    )
+
+
+def check_expansion(n: int, max_expansions: int, what: str) -> None:
+    """The TooManyClauses check of every face: a multi-term clause
+    whose expansion holds ``n`` distinct terms raises past the cap."""
     if n > max_expansions:
         raise ValueError(
             f"{what} expands to >{max_expansions} terms "

@@ -118,7 +118,7 @@ def _resolve_features_distributed(
     exclude_ids,
     max_expansions: int,
 ) -> dict[str, dict[int, float]]:
-    from golr_loader_spark.plans.lucene import _exec, parse_lucene
+    from golr_loader_spark.plans.lucene import _match, parse_lucene
 
     ids = [did for did, _ in block]
     out: dict[str, dict[int, float]] = {}
@@ -128,7 +128,7 @@ def _resolve_features_distributed(
         elif f.kind == "constant":
             out[f.name] = {did: float(f.param) for did in ids}
         elif f.kind == "solr_query":
-            m = _exec(
+            m = _match(
                 index, parse_lucene(str(f.param)), cfg, exclude_ids,
                 max_expansions, None,
             )
@@ -154,12 +154,12 @@ def _resolve_features_distributed(
 
 
 def _first_pass(index, query, cfg, exclude_ids, max_expansions):
-    from golr_loader_spark.plans.lucene import _exec, parse_lucene
+    from golr_loader_spark.plans.lucene import _match, parse_lucene
 
     clauses = parse_lucene(query)
     if not clauses:
         return None
-    return _exec(index, clauses, cfg, exclude_ids, max_expansions, None)
+    return _match(index, clauses, cfg, exclude_ids, max_expansions, None)
 
 
 def extract_features(

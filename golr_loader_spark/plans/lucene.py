@@ -43,23 +43,31 @@ the same front door. Supported syntax:
 Unsupported (clear ``ValueError``): ``field:(...)`` grouped field
 queries, conditional mm specs.
 
-Execution maps onto the engine's existing machinery, so every clause
-type keeps its already-oracled semantics:
+Execution is one planner, two executors and one explain. ``_plan``
+makes every decision a clause list implies and records it in a
+``_Plan``: Group/Phrase vs term clauses, the unknown-field error,
+expansion of Term/Prefix/Wildcard/TermRange/Fuzzy nodes to index
+terms under the ``max_expansions`` cap (Lucene TooManyClauses), the
+empty-MUST and pure-negation outcomes, clause-additive weights, MUST
+any-of groups (Lucene's rewrite of a MUST multi-term query into a
+required disjunction), the prohibited set, and — positives first —
+how each phrase/group clause joins the result: inner under a
+MUST-gated result, right outer under a SHOULD-only one (the MUST
+clause defines the match set), left/full outer for SHOULD, anti for
+MUST_NOT. Term MUST_NOTs are checked inside the scorer, and once more
+at the end only when a join admitted docs the scorer never saw.
 
-* term clauses → ``bm25._score_bucket_factory`` (one bucket-grouped
-  job running the BM25 core ``bm25._score_lists`` per bucket — the
-  same core ``LocalSearcher`` runs once over whole-index lists); MUST
-  prefix/fuzzy become required ANY-OF GROUPS over their
-  expansions — exactly Lucene's rewrite of a MUST multi-term query
-  into a required disjunction;
-* MUST_NOT prefix/fuzzy → their expansions join the prohibited set
-  (decoded for membership in-bucket, no extra shuffle);
-* phrase clauses → ``phrase.phrase_search_positional`` (PhraseWeight
-  scoring), combined relationally: MUST phrases inner-join and add
-  their score, SHOULD phrases outer/left-join and add, MUST_NOT
-  phrases anti-join. Phrase clause sets are complete (k = corpus
-  size): at scale these are selective semi/anti joins, the shape AQE
-  broadcasts.
+A face supplies only what differs: term expansion (Spark: a filter on
+``term_stats``, capped distributed-side; serving: the in-memory term
+dictionary) and the idf rows. ``_run`` applies a plan with
+``bm25._score_bucket_factory`` (the BM25 core ``bm25._score_lists``
+per bucket), ``phrase.phrase_search_positional`` (complete phrase
+sets, k = corpus size: selective semi/anti joins at scale, the shape
+AQE broadcasts) and DataFrame joins; ``LocalSearcher._run_plan``
+applies the same plan with the same core over whole-index lists,
+``search_phrase`` and dict joins. ``_explain_plan`` walks the plan
+for one doc from the face's point reads, so an explanation cannot
+drift from the execution.
 
 Scores are Lucene BooleanQuery semantics: the sum of the matching
 clauses' scores; ranking (score desc, doc_id asc) as everywhere.
@@ -68,7 +76,7 @@ clauses' scores; ranking (score desc, doc_id asc) as everywhere.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -77,9 +85,7 @@ from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.functions.tokenize import analyze_query
 from golr_loader_spark.plans.bm25 import (
     _avgdl,
-    _df_sums,
     _score_bucket_factory,
-    bm25_idf,
     query_analyzer,
 )
 from golr_loader_spark.plans.build_index import InvertedIndex
@@ -406,87 +412,452 @@ def _parse_level(
     return [(occ, node) for occ, node, _e in clauses], pos
 
 
-def _expand_prefix(
-    index: InvertedIndex, cfg: IndexConfig, p: str, max_expansions: int,
-    fields: list[str] | None = None,
-) -> list:
-    from golr_loader_spark.plans.bm25 import _guard_expansion
-
-    base = index.term_stats.filter(
-        F.col("term").startswith(p.lower())
-        & F.col("field").isin(list(fields or cfg.fields))
-    )
-    _guard_expansion(base, max_expansions, f"prefix '{p}'")
-    return base.select("term", "field", "df").collect()
+def _query_clauses(query: str, cfg: IndexConfig) -> list[tuple[str, object]]:
+    """A q string → its clause list, with query-time synonyms when the
+    config carries them."""
+    clauses = parse_lucene(query)
+    if cfg.query_synonyms:
+        clauses = expand_synonyms(clauses, cfg.query_synonyms)
+    return clauses
 
 
-def _expand_fuzzy(
-    index: InvertedIndex, cfg: IndexConfig, t: str, max_edits: int,
-    max_expansions: int, fields: list[str] | None = None,
-) -> list:
-    from golr_loader_spark.plans.bm25 import _guard_expansion
-
-    q = t.lower()
-    # length pre-band evaluates before the costlier levenshtein and
-    # prunes most of the vocabulary scan (see bm25.search_fuzzy)
-    base = index.term_stats.filter(
-        F.col("field").isin(list(fields or cfg.fields))
-        & F.length(F.col("term")).between(len(q) - max_edits, len(q) + max_edits)
-        & (F.levenshtein(F.col("term"), F.lit(q)) <= max_edits)
-    )
-    _guard_expansion(base, max_expansions, f"fuzzy '{t}'~{max_edits}")
-    return base.select("term", "field", "df").collect()
+def _filter_clauses(fq, cfg: IndexConfig) -> tuple[list[tuple[str, object]], bool]:
+    """Solr fq → (clauses to match, negated). A string runs the query
+    analyzer like a q string, synonyms included; a pre-parsed clause
+    list is taken verbatim. An all-MUST_NOT fq implies *:*
+    (SolrQueryParser's pure-negative rewrite): its clauses flip to
+    SHOULD and ``negated`` says the filter is the live doc universe
+    minus their match set."""
+    clauses = _query_clauses(fq, cfg) if isinstance(fq, str) else list(fq)
+    if clauses and all(occ == MUST_NOT for occ, _n in clauses):
+        return [(SHOULD, n) for _o, n in clauses], True
+    return clauses, False
 
 
-def _expand_wildcard(
-    index: InvertedIndex, cfg: IndexConfig, pattern: str,
-    max_expansions: int, fields: list[str] | None = None,
-) -> list:
-    """Lucene WildcardQuery expansion: anchored regex over the term
-    dictionary with the literal prefix pushed down as a range seek
-    (CompiledAutomaton.commonPrefix analog), cap-guarded
-    distributed-side like prefix/fuzzy/range."""
+# ------------------------------------------------------------- planner
+
+# How a phrase or group clause meets the result accumulated before it:
+# it becomes the result (BASE), is subtracted (ANTI), or joins it with
+# the named Spark join type and adds its score.
+BASE, ANTI = "base", "left_anti"
+
+
+@dataclass
+class _Plan:
+    """A clause list planned against one index.
+
+    * ``terms`` — (occur, index terms, fields, boost) per term-like
+      clause, in query order;
+    * ``empty`` — why nothing can match when a MUST clause expanded to
+      no index term (planning stops there);
+    * ``weights`` — clause-additive BM25 weight per (term, field);
+      ``groups`` — MUST any-of groups over the weighted members;
+      ``prohibited`` — MUST_NOT members (a bare term, or (term, field)
+      for a field-restricted clause); ``read`` — what the scorer reads
+      (empty when no term clause scores);
+    * ``steps`` — (occur, node, sub-plan, how) per phrase or group
+      clause, positives first; ``how`` is None for a group that
+      matches nothing;
+    * ``none`` — the whole plan matches nothing; ``vet`` — the result
+      can hold docs the scorer never checked against ``prohibited``,
+      so they are filtered at the end."""
+
+    terms: list
+    empty: str | None = None
+    weights: dict = field(default_factory=dict)
+    groups: list = field(default_factory=list)
+    prohibited: set = field(default_factory=set)
+    read: list = field(default_factory=list)
+    steps: list = field(default_factory=list)
+    none: bool = True
+    vet: bool = False
+
+    def scorer_k(self, k: int | None, n_docs: int) -> int:
+        """The scorer may truncate to ``k`` only when no step follows."""
+        return k if k is not None and not self.steps else n_docs
+
+
+def _describe(node) -> str:
+    """A multi-term node as the TooManyClauses message names it."""
+    if isinstance(node, TermRange):
+        return f"range [{node.lo or '*'} TO {node.hi or '*'}]"
+    if isinstance(node, Fuzzy):
+        return f"fuzzy '{node.text.lower()}'~{node.max_edits}"
+    kind = "prefix" if isinstance(node, Prefix) else "wildcard"
+    return f"{kind} '{node.text.lower()}'"
+
+
+def _plan(
+    clauses: list[tuple[str, object]],
+    cfg: IndexConfig,
+    expand,
+    idf,
+    max_expansions: int,
+) -> _Plan:
+    """Plan a clause list. ``expand(node, fields, max_expansions)`` →
+    the index terms a Prefix, Wildcard, TermRange or Fuzzy node expands
+    to in ``fields``, capped through ``bm25.check_expansion``;
+    ``idf(terms)`` → {(term, field): idf}. Groups are planned
+    recursively, in the order the executors meet them."""
+    qan = query_analyzer(cfg)
+    # a clause with field: restricts both its scoring AND its
+    # MUST/MUST_NOT membership test to that field
+    term_clauses: list[tuple[str, set[str], list[str], float]] = []
+    rel: list[tuple[str, object]] = []  # Phrase and Group clauses
+    for occur, node in clauses:
+        if isinstance(node, Group):
+            rel.append((occur, node))
+            continue
+        nf = getattr(node, "field", None)
+        if nf is not None and nf not in cfg.fields:
+            raise ValueError(f"unknown field {nf!r} (config: {list(cfg.fields)})")
+        if isinstance(node, Phrase):
+            rel.append((occur, node))
+            continue
+        fields = [nf] if nf else list(cfg.fields)
+        if isinstance(node, Term):
+            an = cfg.fields[nf][0] if nf else qan
+            terms = set(analyze_query(node.text, an, cfg.chain))
+        else:
+            terms = expand(node, fields, max_expansions)
+        if not terms:
+            if occur == MUST:
+                return _Plan(
+                    term_clauses,
+                    empty=f"MUST clause {node!r} matches no indexed term",
+                )
+            continue
+        term_clauses.append((occur, terms, fields, node.boost))
+
+    p = _Plan(term_clauses)
+    should: set[str] = set()
+    for occur, terms, fields, _boost in term_clauses:
+        restricted = len(fields) < len(cfg.fields)
+        members = (
+            {(t, f) for t in terms for f in fields} if restricted
+            else set(terms)
+        )
+        if occur == MUST_NOT:
+            p.prohibited |= members
+        else:
+            should |= terms
+            if occur == MUST:
+                # one analyzed query word can yield several index
+                # terms (code analyzer subwords) — any satisfies the
+                # clause, all of them score
+                p.groups.append(members)
+    none = False
+    if should:
+        idfs = idf(sorted(should))
+        # clause-additive weights (Lucene clause boosts; two clauses
+        # hitting the same (term, field) sum — scoring is linear in
+        # the weight)
+        for occur, terms, fields, boost in term_clauses:
+            if occur == MUST_NOT:
+                continue
+            for t in terms:
+                for f in fields:
+                    i = idfs.get((t, f))
+                    if i is not None:
+                        p.weights[(t, f)] = p.weights.get((t, f), 0.0) + (
+                            boost * cfg.fields[f][1] * i * (cfg.k1 + 1.0)
+                        )
+        avail = set(p.weights) | {t for (t, _f) in p.weights}
+        none = any(not (g & avail) for g in p.groups)  # no indexed term
+        p.groups = [g & avail for g in p.groups]
+        prohib_terms = {m if isinstance(m, str) else m[0] for m in p.prohibited}
+        p.read = sorted(should | prohib_terms)
+
+    has_base, has_must, vet = bool(should), bool(p.groups), False
+    # positives first: a MUST_NOT phrase/group must subtract from the
+    # final positive set regardless of its position in the query
+    for occur, node in sorted(rel, key=lambda c: c[0] == MUST_NOT):
+        sub = (
+            _plan(list(node.clauses), cfg, expand, idf, max_expansions)
+            if isinstance(node, Group) else None
+        )
+        if sub is not None and sub.none:
+            how = None  # a group matching nothing contributes nothing
+        elif occur == MUST_NOT:
+            how = ANTI
+        elif not has_base:
+            # the clause's set is the result, never seen by the scorer
+            how, has_base, vet = BASE, True, True
+            has_must = occur == MUST
+        elif occur == MUST:
+            # a MUST-gated result intersects; a SHOULD-only one keeps
+            # every clause doc (Lucene BooleanQuery: the MUST clause
+            # defines the match set), its optional score coalesced to 0
+            how = "inner" if has_must else "right_outer"
+            vet = vet or not has_must
+            has_must = True
+        else:
+            how = "left_outer" if has_must else "full_outer"
+            vet = vet or not has_must
+        p.steps.append((occur, node, sub, how))
+        if how is None and occur == MUST:
+            # a required subquery matching nothing empties the whole
+            # result, like any MUST clause
+            none = True
+            break
+    p.none = none or not has_base
+    p.vet = bool(p.prohibited) and vet
+    return p
+
+
+def _explain_plan(
+    plan: _Plan,
+    doc_id: int,
+    cfg: IndexConfig,
+    avgdl: dict[str, float],
+    tfdl,
+    phrase_score,
+) -> dict:
+    """Lucene Explanation of ``doc_id`` under a plan, for every face:
+    ``tfdl(terms)`` → {(term, field): (tf, dl)} of the doc (a point
+    read), ``phrase_score(node)`` → the doc's unboosted phrase score or
+    None. See ``explain_lucene`` for the dict."""
+    out: dict = {
+        "doc_id": doc_id, "matches": True, "score": 0.0, "clauses": [],
+    }
+
+    def miss(reason: str) -> dict:
+        out.update(matches=False, reason=reason, score=0.0)
+        return out
+
+    if plan.empty:
+        return miss(plan.empty)
+    all_terms = sorted({t for _o, ts, _f, _b in plan.terms for t in ts})
+    found = tfdl(all_terms) if all_terms else {}
+    # MUST_NOT term membership disqualifies
+    for occur, terms, fields, _boost in plan.terms:
+        if occur != MUST_NOT:
+            continue
+        for (t, f) in found:
+            if t in terms and f in fields:
+                return miss(f"doc contains prohibited term {t!r} in {f!r}")
+    # term MUST groups: any member (term in any listed field) present
+    for occur, terms, fields, _boost in plan.terms:
+        if occur == MUST and not any(
+            t in terms and f in fields for (t, f) in found
+        ):
+            return miss(f"MUST clause over {sorted(terms)[:5]} not matched")
+
+    term_entries = []
+    bool_score = 0.0
+    for (t, f) in sorted(found, key=lambda x: (x[1], x[0])):
+        wt = plan.weights.get((t, f))
+        if wt is None:
+            continue
+        tf, dl = found[(t, f)]
+        contrib = wt * tf / (
+            tf + cfg.k1 * ((1.0 - cfg.b) + cfg.b * dl / avgdl[f])
+        )
+        bool_score += contrib
+        term_entries.append(
+            {
+                "term": t, "field": f, "tf": tf, "dl": dl,
+                "avgdl": avgdl[f], "weight": wt, "contribution": contrib,
+            }
+        )
+    if term_entries:
+        out["clauses"].append(
+            {"kind": "terms", "score": bool_score, "terms": term_entries}
+        )
+    total = bool_score
+    matched_any = bool(term_entries)
+
+    for occur, node, sub, _how in plan.steps:
+        if isinstance(node, Phrase):
+            ps = phrase_score(node)
+            ps = None if ps is None else ps * float(node.boost)
+            entry = {
+                "kind": "phrase", "text": node.text, "slop": node.slop,
+                "field": node.field, "occur": occur,
+                "matched": ps is not None, "score": ps or 0.0,
+            }
+        else:
+            sx = _explain_plan(sub, doc_id, cfg, avgdl, tfdl, phrase_score)
+            ps = (
+                sx["score"] * float(node.boost)
+                if sx["matches"] and sx["clauses"] else None
+            )
+            entry = {
+                "kind": "group", "occur": occur, "boost": node.boost,
+                "matched": ps is not None, "score": ps or 0.0,
+                "explanation": sx,
+            }
+        if occur == MUST_NOT:
+            if ps is not None:
+                return miss(f"doc matches prohibited {entry['kind']}")
+            continue
+        if occur == MUST and ps is None:
+            return miss(f"MUST {entry['kind']} not matched")
+        out["clauses"].append(entry)
+        if ps is not None:
+            total += ps
+            matched_any = True
+
+    if not matched_any:
+        return miss("no positive clause matched")
+    out["score"] = total
+    return out
+
+
+# ---------------------------------------------------------- Spark face
+
+
+def _expand(
+    index: InvertedIndex, node, fields: list[str], max_expansions: int
+) -> set[str]:
+    """Multi-term expansion against the term dictionary table: Prefix
+    (TermsEnum.seekCeil analog), Wildcard (anchored regex with the
+    literal prefix pushed down, CompiledAutomaton.commonPrefix analog),
+    TermRange (lexicographic slice; ``*`` endpoints open) and Fuzzy
+    (Levenshtein). The cap is checked distributed-side, before any
+    collect (``bm25._guard_expansion``)."""
     from golr_loader_spark.plans.bm25 import (
         _guard_expansion,
         wildcard_literal_prefix,
         wildcard_regex,
     )
 
-    p = pattern.lower()
-    cond = F.col("term").rlike(wildcard_regex(p)) & F.col("field").isin(
-        list(fields or cfg.fields)
-    )
-    pref = wildcard_literal_prefix(p)
-    if pref:
-        cond &= F.col("term").startswith(pref)
-    base = index.term_stats.filter(cond)
-    _guard_expansion(base, max_expansions, f"wildcard '{p}'")
-    return base.select("term", "field", "df").collect()
-
-
-def _expand_range(
-    index: InvertedIndex, cfg: IndexConfig, tr: TermRange,
-    max_expansions: int, fields: list[str] | None = None,
-) -> list:
-    """Lucene TermRangeQuery expansion: lexicographic term-dictionary
-    slice (the Spark analog of TermsEnum.seekCeil + walk-to-upper),
-    cap-guarded distributed-side like prefix/fuzzy. Both bounds open
-    (``[* TO *]``) matches the whole vocabulary — guarded by the same
-    cap."""
-    from golr_loader_spark.plans.bm25 import _guard_expansion
-
     c = F.col("term")
-    cond = F.col("field").isin(list(fields or cfg.fields))
-    if tr.lo is not None:
-        cond &= (c >= tr.lo) if tr.include_lo else (c > tr.lo)
-    if tr.hi is not None:
-        cond &= (c <= tr.hi) if tr.include_hi else (c < tr.hi)
+    cond = F.col("field").isin(fields)
+    if isinstance(node, Prefix):
+        cond &= c.startswith(node.text.lower())
+    elif isinstance(node, Wildcard):
+        p = node.text.lower()
+        cond &= c.rlike(wildcard_regex(p))
+        if wildcard_literal_prefix(p):
+            cond &= c.startswith(wildcard_literal_prefix(p))
+    elif isinstance(node, TermRange):
+        if node.lo is not None:
+            cond &= (c >= node.lo) if node.include_lo else (c > node.lo)
+        if node.hi is not None:
+            cond &= (c <= node.hi) if node.include_hi else (c < node.hi)
+    else:
+        # length pre-band evaluates before the costlier levenshtein and
+        # prunes most of the vocabulary scan (see bm25.search_fuzzy)
+        q, m = node.text.lower(), node.max_edits
+        cond &= F.length(c).between(len(q) - m, len(q) + m) & (
+            F.levenshtein(c, F.lit(q)) <= m
+        )
     base = index.term_stats.filter(cond)
-    _guard_expansion(
-        base, max_expansions,
-        f"range [{tr.lo or '*'} TO {tr.hi or '*'}]",
+    _guard_expansion(base, max_expansions, _describe(node))
+    return {r["term"] for r in base.select("term").collect()}
+
+
+def _spark_plan(
+    index: InvertedIndex, clauses, cfg: IndexConfig, max_expansions: int
+) -> _Plan:
+    from golr_loader_spark.plans.bm25 import _idf_table
+
+    return _plan(
+        clauses, cfg,
+        lambda node, fields, m: _expand(index, node, fields, m),
+        lambda terms: _idf_table(index, terms),
+        max_expansions,
     )
-    return base.select("term", "field", "df").collect()
+
+
+def _run(
+    index: InvertedIndex,
+    plan: _Plan,
+    cfg: IndexConfig,
+    exclude_ids,
+    k: int | None,
+) -> DataFrame | None:
+    """Apply a plan with Spark → full (doc_id, score) match set, None
+    when nothing matches: term clauses through one bucket-grouped
+    scorer job, phrase steps through ``phrase_search_positional``
+    (complete, k = corpus size), group steps recursively, each step
+    joined as the plan says."""
+    from golr_loader_spark.plans.phrase import phrase_search_positional
+
+    if plan.none:
+        return None
+    out = None
+    if plan.read:
+        cand = index.postings.filter(
+            F.col("term").isin(plan.read)
+            & F.col("field").isin(list(cfg.fields))
+        )
+        fn = _score_bucket_factory(
+            plan.weights,
+            _avgdl(index),
+            cfg,
+            plan.scorer_k(k, index.n_docs),
+            exclude_ids=exclude_ids,
+            prohibited_terms=plan.prohibited or None,
+            required_groups=plan.groups or None,
+        )
+        out = cand.groupBy("bucket").applyInPandas(
+            fn, schema="doc_id long, score double"
+        )
+    for _occur, node, sub, how in plan.steps:
+        if how is None:
+            continue
+        part = (
+            phrase_search_positional(
+                index, node.text, k=index.n_docs, slop=node.slop,
+                cfg=cfg, exclude_ids=exclude_ids, field=node.field,
+            )
+            if isinstance(node, Phrase)
+            else _run(index, sub, cfg, exclude_ids, None)
+        ).select(
+            "doc_id", (F.col("score") * F.lit(float(node.boost))).alias("_ps")
+        )
+        if how == BASE:
+            out = part.withColumnRenamed("_ps", "score")
+        elif how == ANTI:
+            out = out.join(part.select("doc_id"), on="doc_id", how=ANTI)
+        else:
+            out = out.join(part, on="doc_id", how=how).select(
+                "doc_id",
+                (
+                    F.coalesce(F.col("score"), F.lit(0.0))
+                    + F.coalesce(F.col("_ps"), F.lit(0.0))
+                ).alias("score"),
+            )
+    if plan.vet:
+        # apply term MUST_NOTs relationally (decode only the prohibited
+        # terms' doc_id streams). Docs the scorer DID emit hold no
+        # prohibited term, so re-filtering them is a no-op.
+        from golr_loader_spark.plans.phrase import decode_postings
+
+        bare = sorted(m for m in plan.prohibited if isinstance(m, str))
+        pairs = sorted(m for m in plan.prohibited if not isinstance(m, str))
+        neg = decode_postings(
+            index,
+            sorted({*bare, *(t for t, _f in pairs)}),
+            cfg,
+            exclude_ids=exclude_ids,
+        )
+        cond = F.col("term").isin(bare) if bare else F.lit(False)
+        for t, f in pairs:
+            cond = cond | ((F.col("term") == t) & (F.col("field") == f))
+        neg = neg.filter(cond).select("doc_id").distinct()
+        out = out.join(neg, on="doc_id", how=ANTI)
+    return out
+
+
+def _match(
+    index: InvertedIndex,
+    clauses: list[tuple[str, object]],
+    cfg: IndexConfig,
+    exclude_ids,
+    max_expansions: int,
+    k: int | None,
+) -> DataFrame | None:
+    """A clause list → full (doc_id, score) match set, None when nothing
+    matches. ``k`` is a truncation hint honored only when the plan has
+    no relational step (callers needing the complete set — fq, rerank,
+    elevation, block joins — pass None)."""
+    return _run(
+        index, _spark_plan(index, clauses, cfg, max_expansions), cfg,
+        exclude_ids, k,
+    )
 
 
 def search_lucene(
@@ -509,16 +880,14 @@ def search_lucene(
     cfg = cfg or index.cfg
     spark = index.postings.sparkSession
     empty = spark.createDataFrame([], "doc_id long, score double")
-    clauses = parse_lucene(query)
-    if cfg.query_synonyms:
-        clauses = expand_synonyms(clauses, cfg.query_synonyms)
+    clauses = _query_clauses(query, cfg)
     if not clauses:
         return empty
     # Under fq the complete match set must be scored BEFORE the filter
     # intersects it: fq-passing docs ranked below k among pre-filter
     # matches would otherwise be lost (mirrors bm25.search's
     # `k if fq is None else n_docs` invariant).
-    out = _exec(
+    out = _match(
         index, clauses, cfg, exclude_ids, max_expansions,
         k if fq is None else None,
     )
@@ -549,287 +918,43 @@ def fq_doc_ids(
     common drill-down shape — matches by decoding ONLY doc_id streams
     (``facets.matching_doc_ids``, no scoring); anything richer
     (phrases, prefixes, groups, field selectors) runs the full
-    executor and keeps just the ids. Either way the result is the
-    COMPLETE match set (no top-k truncation), suitable for semi-joins
-    from ``search_lucene`` / ``facet_counts``."""
+    executor and keeps just the ids. A pure-negative fq is the live
+    universe (``facets.all_doc_ids``) minus the match set of its
+    flipped clauses (``_filter_clauses``). Either way the result is
+    the COMPLETE match set (no top-k truncation), suitable for
+    semi-joins from ``search_lucene`` / ``facet_counts``."""
     from golr_loader_spark.plans.build_index import bucket_of
-    from golr_loader_spark.plans.facets import matching_doc_ids
+    from golr_loader_spark.plans.facets import all_doc_ids, matching_doc_ids
 
     cfg = cfg or index.cfg
     spark = index.postings.sparkSession
-    clauses = parse_lucene(fq) if isinstance(fq, str) else list(fq)
-    if cfg.query_synonyms and isinstance(fq, str):
-        # Solr runs the query analyzer (incl. SynonymGraphFilter) on
-        # fq strings too; pre-parsed clause lists are taken verbatim
-        clauses = expand_synonyms(clauses, cfg.query_synonyms)
+    empty = spark.createDataFrame([], "bucket int, doc_id long")
+    clauses, negated = _filter_clauses(fq, cfg)
     if not clauses:
-        return spark.createDataFrame([], "bucket int, doc_id long")
+        return empty
     occurs = {occ for occ, _n in clauses}
-    if occurs == {MUST_NOT}:
-        # Solr explicitly supports pure-negative filter queries by
-        # implying *:* (SolrQueryParser's all-negative rewrite): the
-        # match set is the live doc universe minus the negated match
-        # set. Flip the clauses positive, execute, and anti-join from
-        # all_doc_ids.
-        from golr_loader_spark.plans.facets import all_doc_ids
-
-        flipped = [(SHOULD, n) for _o, n in clauses]
-        neg = _exec(index, flipped, cfg, exclude_ids, max_expansions, None)
-        universe = all_doc_ids(index, cfg=cfg, exclude_ids=exclude_ids)
-        if neg is None:
-            return universe
-        return universe.join(
-            neg.select("doc_id"), on="doc_id", how="left_anti"
-        ).select("bucket", "doc_id")
     all_bare_terms = all(
         isinstance(n, Term) and n.field is None for _o, n in clauses
     )
     if all_bare_terms and (occurs == {SHOULD} or occurs == {MUST}):
-        q = " ".join(n.text for _o, n in clauses)
-        mode = "and" if occurs == {MUST} else "or"
-        return matching_doc_ids(
-            index, q, cfg=cfg, mode=mode, exclude_ids=exclude_ids
+        ids = matching_doc_ids(
+            index, " ".join(n.text for _o, n in clauses), cfg=cfg,
+            mode="and" if occurs == {MUST} else "or",
+            exclude_ids=exclude_ids,
         )
-    out = _exec(index, clauses, cfg, exclude_ids, max_expansions, None)
-    if out is None:
-        return spark.createDataFrame([], "bucket int, doc_id long")
-    return out.select("doc_id").withColumn(
-        "bucket", bucket_of(F.col("doc_id"), cfg.bucket_bits, cfg.id_space_bits)
+    else:
+        out = _match(index, clauses, cfg, exclude_ids, max_expansions, None)
+        ids = empty if out is None else out.select(
+            bucket_of(
+                F.col("doc_id"), cfg.bucket_bits, cfg.id_space_bits
+            ).alias("bucket"),
+            "doc_id",
+        )
+    if not negated:
+        return ids
+    return all_doc_ids(index, cfg=cfg, exclude_ids=exclude_ids).join(
+        ids.select("doc_id"), on="doc_id", how=ANTI
     ).select("bucket", "doc_id")
-
-
-def _exec(
-    index: InvertedIndex,
-    clauses: list[tuple[str, object]],
-    cfg: IndexConfig,
-    exclude_ids,
-    max_expansions: int,
-    k: int | None,
-) -> DataFrame | None:
-    """Execute a clause list → full (doc_id, score) match set, or
-    None when nothing positive matches. ``k`` is a truncation hint
-    honored only when the result needs no relational post-joins
-    (callers needing the complete set — nested groups, fq — pass
-    None)."""
-    from golr_loader_spark.plans.phrase import phrase_search_positional
-
-    spark = index.postings.sparkSession
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    qan = query_analyzer(cfg)
-
-    # (occur, terms, fields, boost) per term-like clause; a clause
-    # with field: restricts both its scoring AND its MUST/MUST_NOT
-    # membership test to that field
-    term_clauses: list[tuple[str, set[str], list[str], float]] = []
-    rel: list[tuple[str, object]] = []  # Phrase and Group clauses
-    for occur, node in clauses:
-        if isinstance(node, Group):
-            rel.append((occur, node))
-            continue
-        nf = getattr(node, "field", None)
-        if nf is not None and nf not in cfg.fields:
-            raise ValueError(f"unknown field {nf!r} (config: {list(cfg.fields)})")
-        if isinstance(node, Phrase):
-            rel.append((occur, node))
-            continue
-        fields = [nf] if nf else list(cfg.fields)
-        if isinstance(node, Term):
-            an = cfg.fields[nf][0] if nf else qan
-            terms = set(analyze_query(node.text, an, cfg.chain))
-        elif isinstance(node, TermRange):
-            rows = _expand_range(index, cfg, node, max_expansions, fields)
-            terms = {r["term"] for r in rows}
-        elif isinstance(node, Wildcard):
-            rows = _expand_wildcard(
-                index, cfg, node.text, max_expansions, fields
-            )
-            terms = {r["term"] for r in rows}
-        else:
-            rows = (
-                _expand_prefix(index, cfg, node.text, max_expansions, fields)
-                if isinstance(node, Prefix)
-                else _expand_fuzzy(
-                    index, cfg, node.text, node.max_edits, max_expansions,
-                    fields,
-                )
-            )
-            terms = {r["term"] for r in rows}
-        if not terms:
-            if occur == MUST:
-                return None  # a MUST clause matching nothing
-            continue
-        term_clauses.append((occur, terms, fields, node.boost))
-
-    should_terms: set[str] = set()
-    groups: list[set] = []  # members: bare term or (term, field)
-    prohibited: set = set()
-    for occur, terms, fields, _boost in term_clauses:
-        restricted = len(fields) < len(cfg.fields)
-        members = (
-            {(t, f) for t in terms for f in fields} if restricted
-            else set(terms)
-        )
-        if occur == MUST_NOT:
-            prohibited |= members
-        else:
-            should_terms |= terms
-            if occur == MUST:
-                # one analyzed query word can yield several index
-                # terms (code analyzer subwords) — any satisfies the
-                # clause, all of them score
-                groups.append(members)
-
-    if not should_terms and not any(o != MUST_NOT for o, _n in rel):
-        return None  # nothing positive to match (pure negation)
-
-    bool_df = None
-    if should_terms:
-        from golr_loader_spark.plans.bm25 import _idf_table
-
-        idf = _idf_table(index, sorted(should_terms))
-        # clause-additive weights (Lucene clause boosts; two clauses
-        # hitting the same (term, field) sum — scoring is linear in
-        # the weight)
-        weights: dict[tuple[str, str], float] = {}
-        for occur, terms, fields, boost in term_clauses:
-            if occur == MUST_NOT:
-                continue
-            for t in terms:
-                for f in fields:
-                    i = idf.get((t, f))
-                    if i is None or f not in cfg.fields:
-                        continue
-                    weights[(t, f)] = weights.get((t, f), 0.0) + (
-                        boost * cfg.fields[f][1] * i * (cfg.k1 + 1.0)
-                    )
-        avail = set(weights) | {t for (t, _f) in weights}
-        if any(not (g & avail) for g in groups):
-            return None  # a MUST group has no indexed term
-        groups = [g & avail for g in groups]
-        prohib_terms = {m if isinstance(m, str) else m[0] for m in prohibited}
-        cand = index.postings.filter(
-            F.col("term").isin(sorted(should_terms | prohib_terms))
-            & F.col("field").isin(list(cfg.fields))
-        )
-        fn = _score_bucket_factory(
-            weights,
-            _avgdl(index),
-            cfg,
-            k if (k is not None and not rel) else index.n_docs,
-            exclude_ids=exclude_ids,
-            prohibited_terms=prohibited or None,
-            required_groups=groups or None,
-        )
-        bool_df = cand.groupBy("bucket").applyInPandas(
-            fn, schema="doc_id long, score double"
-        )
-
-    out = bool_df
-    has_must = bool(groups)
-    # True once `out` holds docs the bucket scorer never emitted (and
-    # therefore never checked against term-level MUST_NOTs) — those
-    # need the relational prohibited anti-join at the end
-    unvetted = False
-    # positives first: a MUST_NOT phrase/group must subtract from the
-    # final positive set regardless of its position in the query
-    rel.sort(key=lambda c: c[0] == MUST_NOT)
-    for occur, node in rel:
-        if isinstance(node, Phrase):
-            pdf = (
-                phrase_search_positional(
-                    index, node.text, k=index.n_docs, slop=node.slop,
-                    cfg=cfg, exclude_ids=exclude_ids, field=node.field,
-                )
-                .withColumnRenamed("score", "_ps")
-                .withColumn("_ps", F.col("_ps") * F.lit(float(node.boost)))
-            )
-        else:  # nested Group: recurse for its COMPLETE match set
-            sub = _exec(
-                index, list(node.clauses), cfg, exclude_ids,
-                max_expansions, None,
-            )
-            if sub is None:
-                if occur == MUST:
-                    # a required subquery matching nothing empties the
-                    # whole result, like any MUST clause
-                    return None
-                continue
-            pdf = sub.withColumnRenamed("score", "_ps").withColumn(
-                "_ps", F.col("_ps") * F.lit(float(node.boost))
-            )
-        if occur == MUST_NOT:
-            if out is not None:
-                out = out.join(pdf.select("doc_id"), on="doc_id", how="left_anti")
-            continue
-        if out is None:
-            out = pdf.withColumnRenamed("_ps", "score")
-            unvetted = True
-            if occur == MUST:
-                has_must = True
-            continue
-        if occur == MUST:
-            if has_must:
-                # the accumulated side is already MUST-gated: the
-                # phrase/group intersects it (both clauses required)
-                out = (
-                    out.join(pdf, on="doc_id", how="inner")
-                    .withColumn("score", F.col("score") + F.col("_ps"))
-                    .drop("_ps")
-                )
-            else:
-                # accumulated side is SHOULD-only: Lucene BooleanQuery
-                # semantics make the MUST clause define the match set;
-                # keep EVERY clause doc, coalescing the optional
-                # boolean contribution to 0
-                out = (
-                    out.join(pdf, on="doc_id", how="right_outer")
-                    .withColumn(
-                        "score",
-                        F.coalesce(F.col("score"), F.lit(0.0))
-                        + F.col("_ps"),
-                    )
-                    .drop("_ps")
-                )
-                unvetted = True
-            has_must = True
-        else:  # SHOULD phrase/group
-            how = "left_outer" if has_must else "full_outer"
-            if how == "full_outer":
-                unvetted = True
-            out = (
-                out.join(pdf, on="doc_id", how=how)
-                .withColumn(
-                    "score",
-                    F.coalesce(F.col("score"), F.lit(0.0))
-                    + F.coalesce(F.col("_ps"), F.lit(0.0)),
-                )
-                .drop("_ps")
-            )
-    if out is None:
-        return None
-    if prohibited and (bool_df is None or unvetted):
-        # `out` holds docs the bucket scorer never vetted (phrase/
-        # group-only positives, or joins that admitted docs outside
-        # the boolean match set): apply term MUST_NOTs relationally
-        # (decode only the prohibited terms' doc_id streams). Docs the
-        # scorer DID emit hold no prohibited term, so re-filtering
-        # them is a no-op.
-        from golr_loader_spark.plans.phrase import decode_postings
-
-        bare = sorted(m for m in prohibited if isinstance(m, str))
-        pairs = sorted(m for m in prohibited if not isinstance(m, str))
-        neg = decode_postings(
-            index,
-            sorted({*bare, *(t for t, _f in pairs)}),
-            cfg,
-            exclude_ids=exclude_ids,
-        )
-        cond = F.col("term").isin(bare) if bare else F.lit(False)
-        for t, f in pairs:
-            cond = cond | ((F.col("term") == t) & (F.col("field") == f))
-        neg = neg.filter(cond).select("doc_id").distinct()
-        out = out.join(neg, on="doc_id", how="left_anti")
-    return out
 
 
 def _phrase_doc_score(
@@ -899,215 +1024,32 @@ def explain_lucene(
     with a ``reason`` — when the doc fails a MUST clause or contains
     a MUST_NOT member; the score then reflects Lucene's "did not
     match" (0.0). When it matches, summing in the reported clause
-    order reproduces ``search_lucene``'s score for the doc."""
-    cfg = cfg or index.cfg
-    return _explain_clauses(
-        index, parse_lucene(query), int(doc_id), cfg, exclude_ids,
-        max_expansions,
-    )
-
-
-def _explain_clauses(
-    index: InvertedIndex,
-    clauses: list[tuple[str, object]],
-    doc_id: int,
-    cfg: IndexConfig,
-    exclude_ids,
-    max_expansions: int,
-) -> dict:
-    from golr_loader_spark.plans.bm25 import _avgdl, _idf_table
+    order reproduces ``search_lucene``'s score for the doc. The
+    doc's postings and phrase scores are point reads of its own
+    bucket, not a corpus query."""
     from golr_loader_spark.plans.build_index import bucket_of
     from golr_loader_spark.plans.phrase import decode_postings
 
-    out: dict = {
-        "doc_id": doc_id, "matches": True, "score": 0.0, "clauses": [],
-    }
-    qan = query_analyzer(cfg)
-    term_clauses: list[tuple[str, set[str], list[str], float]] = []
-    rel: list[tuple[str, object]] = []
-    for occur, node in clauses:
-        if isinstance(node, Group):
-            rel.append((occur, node))
-            continue
-        nf = getattr(node, "field", None)
-        if nf is not None and nf not in cfg.fields:
-            raise ValueError(f"unknown field {nf!r} (config: {list(cfg.fields)})")
-        if isinstance(node, Phrase):
-            rel.append((occur, node))
-            continue
-        fields = [nf] if nf else list(cfg.fields)
-        if isinstance(node, Term):
-            an = cfg.fields[nf][0] if nf else qan
-            terms = set(analyze_query(node.text, an, cfg.chain))
-        elif isinstance(node, TermRange):
-            terms = {
-                r["term"]
-                for r in _expand_range(index, cfg, node, max_expansions, fields)
-            }
-        elif isinstance(node, Prefix):
-            terms = {
-                r["term"]
-                for r in _expand_prefix(index, cfg, node.text, max_expansions, fields)
-            }
-        elif isinstance(node, Wildcard):
-            terms = {
-                r["term"]
-                for r in _expand_wildcard(
-                    index, cfg, node.text, max_expansions, fields
-                )
-            }
-        else:
-            terms = {
-                r["term"]
-                for r in _expand_fuzzy(
-                    index, cfg, node.text, node.max_edits, max_expansions, fields
-                )
-            }
-        if not terms:
-            if occur == MUST:
-                out["matches"] = False
-                out["reason"] = f"MUST clause {node!r} matches no indexed term"
-                return out
-            continue
-        term_clauses.append((occur, terms, fields, node.boost))
+    cfg = cfg or index.cfg
+    doc_id = int(doc_id)
+    in_doc = (F.col("doc_id") == doc_id) & (
+        F.col("bucket")
+        == bucket_of(F.lit(doc_id), cfg.bucket_bits, cfg.id_space_bits)
+    )
 
-    # point lookup: decode this doc's (term, field) postings only
-    all_terms = sorted({t for _o, ts, _f, _b in term_clauses for t in ts})
-    tfdl: dict[tuple[str, str], tuple[int, int]] = {}
-    if all_terms:
-        flat = (
-            decode_postings(index, all_terms, cfg, exclude_ids=exclude_ids)
-            .filter(
-                (F.col("doc_id") == doc_id)
-                & (
-                    F.col("bucket")
-                    == bucket_of(
-                        F.lit(doc_id), cfg.bucket_bits, cfg.id_space_bits
-                    )
-                )
-            )
+    def tfdl(terms):
+        return {
+            (r["term"], r["field"]): (int(r["tf"]), int(r["dl"]))
+            for r in decode_postings(index, terms, cfg, exclude_ids=exclude_ids)
+            .filter(in_doc)
             .collect()
-        )
-        tfdl = {
-            (r["term"], r["field"]): (int(r["tf"]), int(r["dl"])) for r in flat
         }
 
-    # clause-additive weights, exactly _exec's
-    idf = _idf_table(index, all_terms) if all_terms else {}
-    weights: dict[tuple[str, str], float] = {}
-    for occur, terms, fields, boost in term_clauses:
-        if occur == MUST_NOT:
-            continue
-        for t in terms:
-            for f in fields:
-                i = idf.get((t, f))
-                if i is None or f not in cfg.fields:
-                    continue
-                weights[(t, f)] = weights.get((t, f), 0.0) + (
-                    boost * cfg.fields[f][1] * i * (cfg.k1 + 1.0)
-                )
-
-    # MUST_NOT term membership disqualifies
-    for occur, terms, fields, _boost in term_clauses:
-        if occur != MUST_NOT:
-            continue
-        for (t, f) in tfdl:
-            if t in terms and f in fields:
-                out["matches"] = False
-                out["reason"] = f"doc contains prohibited term {t!r} in {f!r}"
-                out["score"] = 0.0
-                return out
-
-    # term MUST groups: any member (term in any listed field) present
-    for occur, terms, fields, _boost in term_clauses:
-        if occur != MUST:
-            continue
-        if not any(t in terms and f in fields for (t, f) in tfdl):
-            out["matches"] = False
-            out["reason"] = (
-                f"MUST clause over {sorted(terms)[:5]} not matched"
-            )
-            out["score"] = 0.0
-            return out
-
-    avgdl = _avgdl(index)
-    term_entries = []
-    bool_score = 0.0
-    for (t, f) in sorted(tfdl, key=lambda x: (x[1], x[0])):
-        wt = weights.get((t, f))
-        if wt is None:
-            continue
-        tf, dl = tfdl[(t, f)]
-        contrib = wt * tf / (
-            tf + cfg.k1 * ((1.0 - cfg.b) + cfg.b * dl / avgdl[f])
-        )
-        bool_score += contrib
-        term_entries.append(
-            {
-                "term": t, "field": f, "tf": tf, "dl": dl,
-                "avgdl": avgdl[f], "weight": wt, "contribution": contrib,
-            }
-        )
-    if term_entries:
-        out["clauses"].append(
-            {"kind": "terms", "score": bool_score, "terms": term_entries}
-        )
-    total = bool_score
-    matched_any = bool(term_entries)
-
-    rel.sort(key=lambda c: c[0] == MUST_NOT)
-    for occur, node in rel:
-        if isinstance(node, Phrase):
-            ps = _phrase_doc_score(index, node, doc_id, cfg, exclude_ids)
-            ps = None if ps is None else ps * float(node.boost)
-            entry = {
-                "kind": "phrase", "text": node.text, "slop": node.slop,
-                "field": node.field, "occur": occur,
-                "matched": ps is not None, "score": ps or 0.0,
-            }
-        else:
-            sub = _explain_clauses(
-                index, list(node.clauses), doc_id, cfg, exclude_ids,
-                max_expansions,
-            )
-            ps = (
-                sub["score"] * float(node.boost)
-                if sub["matches"] and (sub["clauses"] or sub["score"])
-                else None
-            )
-            # a group that structurally matches with score 0 still
-            # counts as matched when any sub-clause matched
-            if sub["matches"] and sub["clauses"]:
-                ps = sub["score"] * float(node.boost)
-            entry = {
-                "kind": "group", "occur": occur, "boost": node.boost,
-                "matched": ps is not None, "score": ps or 0.0,
-                "explanation": sub,
-            }
-        if occur == MUST_NOT:
-            if ps is not None:
-                out["matches"] = False
-                out["reason"] = f"doc matches prohibited {entry['kind']}"
-                out["score"] = 0.0
-                return out
-            continue
-        if occur == MUST and ps is None:
-            out["matches"] = False
-            out["reason"] = f"MUST {entry['kind']} not matched"
-            out["score"] = 0.0
-            return out
-        out["clauses"].append(entry)
-        if ps is not None:
-            total += ps
-            matched_any = True
-
-    if not matched_any:
-        out["matches"] = False
-        out["reason"] = "no positive clause matched"
-        out["score"] = 0.0
-        return out
-    out["score"] = total
-    return out
+    return _explain_plan(
+        _spark_plan(index, parse_lucene(query), cfg, max_expansions),
+        doc_id, cfg, _avgdl(index), tfdl,
+        lambda ph: _phrase_doc_score(index, ph, doc_id, cfg, exclude_ids),
+    )
 
 
 def search_elevated(
@@ -1137,7 +1079,7 @@ def search_elevated(
     spark = index.postings.sparkSession
     elevate = [int(d) for d in (elevate or [])]
     excl_set = {int(d) for d in (exclude or [])}
-    base = _exec(
+    base = _match(
         index, parse_lucene(query), cfg, exclude_ids, max_expansions, None
     )
     if base is None:

@@ -21,7 +21,7 @@ contributes only when k > N via one more bounded TakeOrdered — no
 global window, no single-partition shuffle, no unbounded collect.
 
 Serving twin: ``LocalSearcher.rerank`` (dict merge over
-``_exec_clauses_local`` complete sets). Sharded twin:
+``_lucene_scores`` complete sets). Sharded twin:
 ``ShardedSearcher.rerank`` scatter-gathers complete per-shard match
 sets for both passes (doc spaces are disjoint, scores globally
 comparable — same argument as the top-k merge) and applies the same
@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.plans.build_index import InvertedIndex
-from golr_loader_spark.plans.lucene import _exec, parse_lucene
+from golr_loader_spark.plans.lucene import _match, parse_lucene
 
 
 def rerank_search(
@@ -60,7 +60,7 @@ def rerank_search(
     cfg = cfg or index.cfg
     spark = index.postings.sparkSession
     empty = spark.createDataFrame([], "doc_id long, score double")
-    first = _exec(
+    first = _match(
         index, parse_lucene(query), cfg, exclude_ids, max_expansions, None
     )
     if first is None:
@@ -70,7 +70,7 @@ def rerank_search(
         .limit(rerank_docs)
         .withColumnRenamed("score", "s1")
     )
-    second = _exec(
+    second = _match(
         index, parse_lucene(rerank_query), cfg, exclude_ids, max_expansions,
         None,
     )

@@ -36,6 +36,7 @@ from golr_loader_spark.plans.bm25 import (
     _norm_excl,
     _score_lists,
     bm25_idf,
+    check_expansion,
     query_analyzer,
 )
 
@@ -137,6 +138,30 @@ class _RowGroupIndex:
             for fi, rgs in hits.items()
         ]
         return pa.concat_tables(parts)
+
+
+def _join_scores(
+    acc: dict[int, float], part: dict[int, float], how: str
+) -> dict[int, float]:
+    """One relational step of a Lucene plan over {doc_id: score} dicts
+    — the dict face of the Spark joins in ``lucene._run``: ``part``
+    becomes the result, is subtracted, or is joined (inner, left/right
+    or full outer) with the scores added, a missing side counting 0."""
+    from golr_loader_spark.plans.lucene import ANTI, BASE
+
+    if how == BASE:
+        return dict(part)
+    if how == ANTI:
+        return {d: s for d, s in acc.items() if d not in part}
+    if how == "inner":
+        keys = [d for d in acc if d in part]
+    elif how == "left_outer":
+        keys = acc
+    elif how == "right_outer":
+        keys = part
+    else:
+        keys = {**acc, **part}
+    return {d: acc.get(d, 0.0) + part.get(d, 0.0) for d in keys}
 
 
 def _load_config(root: str) -> IndexConfig | None:
@@ -330,6 +355,12 @@ class LocalSearcher:
             k: np.concatenate([p[k] for p in parts]) for k in parts[0]
         }
 
+    def _idf(self, terms: list[str]) -> dict[tuple[str, str], float]:
+        return {
+            (r["term"], r["field"]): bm25_idf(self.n_docs, int(r["df"]))
+            for r in self._term_rows(terms)
+        }
+
     def _weights_of(self, ts: list[dict]) -> dict[tuple[str, str], float]:
         return {
             (r["term"], r["field"]): (
@@ -463,10 +494,7 @@ class LocalSearcher:
         terms = sorted(t for t in self._vocab_terms() if t.startswith(p))
         if not terms:
             return []
-        if len(terms) > max_expansions:
-            raise ValueError(
-                f"prefix '{p}' expands to >{max_expansions} terms"
-            )
+        check_expansion(len(terms), max_expansions, f"prefix '{p}'")
         weights = self._weights_of(self._term_rows(terms))
         return self._score(weights, terms, k)
 
@@ -486,10 +514,7 @@ class LocalSearcher:
         terms = sorted(_wildcard_terms(self._vocab_terms(), p))
         if not terms:
             return []
-        if len(terms) > max_expansions:
-            raise ValueError(
-                f"wildcard '{p}' expands to >{max_expansions} terms"
-            )
+        check_expansion(len(terms), max_expansions, f"wildcard '{p}'")
         weights = self._weights_of(self._term_rows(terms))
         return self._score(weights, terms, k)
 
@@ -517,10 +542,7 @@ class LocalSearcher:
         )
         if not terms:
             return []
-        if len(terms) > max_expansions:
-            raise ValueError(
-                f"fuzzy '{q}'~{max_edits} expands to {len(terms)} terms"
-            )
+        check_expansion(len(terms), max_expansions, f"fuzzy '{q}'~{max_edits}")
         weights = self._weights_of(self._term_rows(terms))
         return self._score(weights, terms, k)
 
@@ -534,12 +556,17 @@ class LocalSearcher:
         ``_list_cache`` under ("pos", term, field): one entry per list,
         the scope of the raw ``_term_blocks`` entries it is decoded from
         (per-bucket entries measured slower and evicted BM25 lists from
-        the shared LRU). No pandas object is built."""
+        the shared LRU). No pandas object is built. ``_list_cache =
+        None`` decodes on every call."""
         from golr_loader_spark.plans.phrase import _decode_positional_lists
 
         if score_group is None:
             return []
-        per_term = {t: self._list_cache.get(("pos", t, field)) for t in uterms}
+        cache = self._list_cache
+        per_term = {
+            t: None if cache is None else cache.get(("pos", t, field))
+            for t in uterms
+        }
         missing = [t for t, v in per_term.items() if v is None]
         if missing:
             cols = self._read_score_cols(missing)
@@ -558,7 +585,8 @@ class LocalSearcher:
             for t in missing:
                 # () caches a term with no live posting in ``field``
                 per_term[t] = decoded.get(t, ())
-                self._list_cache.put(("pos", t, field), per_term[t])
+                if cache is not None:
+                    cache.put(("pos", t, field), per_term[t])
         docs, sc = score_group.lists({t: v for t, v in per_term.items() if v})
         order = np.lexsort((docs, -sc))[:k]
         return [(int(docs[i]), float(sc[i])) for i in order]
@@ -589,10 +617,7 @@ class LocalSearcher:
         if not seq:
             return []
         uterms = sorted({t for t, _p in seq})
-        idf = {
-            (r["term"], r["field"]): bm25_idf(self.n_docs, int(r["df"]))
-            for r in self._term_rows(uterms)
-        }
+        idf = self._idf(uterms)
         score_group = _phrase_bucket_factory(
             seq, idf, field, self.avgdl[field], self.cfg, k, slop, scoring, None,
         )
@@ -624,10 +649,7 @@ class LocalSearcher:
         )
         if not uterms:
             return []
-        idf = {
-            (r["term"], r["field"]): bm25_idf(self.n_docs, int(r["df"]))
-            for r in self._term_rows(uterms)
-        }
+        idf = self._idf(uterms)
         score_group = _span_bucket_factory(
             uterms, window, idf, field, self.avgdl[field], self.cfg, k, None,
         )
@@ -1202,25 +1224,20 @@ class LocalSearcher:
         fq: str | None = None,
     ) -> list[tuple[int, float]]:
         """Serving-path Lucene query string (see ``plans.lucene`` for
-        syntax and semantics) — term/prefix/fuzzy/range clauses
-        through the shared bucket scorer (MUST multi-term clauses as
-        required any-of groups), phrase clauses through
-        ``search_phrase``, parenthesized groups recursively, combined
-        with BooleanQuery score summation. ``fq``: non-scoring filter
-        query (match-set restriction). Mirrors ``lucene.search_lucene``
-        clause for clause."""
-        from golr_loader_spark.plans.lucene import expand_synonyms, parse_lucene
+        syntax and semantics): planned by ``lucene._plan``, the planner
+        of ``lucene.search_lucene``, and applied by the serving executor
+        (``_run_plan``). ``fq``: non-scoring filter query (match-set
+        restriction)."""
+        from golr_loader_spark.plans.lucene import _query_clauses
 
-        clauses = parse_lucene(querystring)
-        if self.cfg.query_synonyms:
-            clauses = expand_synonyms(clauses, self.cfg.query_synonyms)
+        clauses = _query_clauses(querystring, self.cfg)
         if not clauses:
             return []
         # Under fq, score the complete match set (k hint None) before
         # the filter intersects it — truncating first loses fq-passing
         # docs ranked below k pre-filter (same invariant as
         # lucene.search_lucene / bm25.search).
-        scores = self._exec_clauses_local(
+        scores = self._lucene_scores(
             clauses, max_expansions, k if fq is None else None
         )
         if scores is None:
@@ -1350,7 +1367,7 @@ class LocalSearcher:
             parse_lucene,
         )
 
-        base = self._exec_clauses_local(
+        base = self._lucene_scores(
             parse_lucene(query), max_expansions, None
         ) or {}
         return elevate_lists(base, elevate, exclude, k)
@@ -1410,10 +1427,10 @@ class LocalSearcher:
         clauses = parse_lucene(querystring)
         if not clauses:
             return []
-        first = self._exec_clauses_local(clauses, max_expansions, None)
+        first = self._lucene_scores(clauses, max_expansions, None)
         if first is None:
             return []
-        second = self._exec_clauses_local(
+        second = self._lucene_scores(
             parse_lucene(rerank_query), max_expansions, None
         )
         out = rerank_lists(
@@ -1442,7 +1459,7 @@ class LocalSearcher:
         clauses = parse_lucene(querystring)
         if not clauses:
             return []
-        first = self._exec_clauses_local(clauses, max_expansions, None)
+        first = self._lucene_scores(clauses, max_expansions, None)
         if first is None:
             return []
         block_ids = [
@@ -1458,7 +1475,7 @@ class LocalSearcher:
             elif f.kind == "constant":
                 vals[f.name] = {int(d): float(f.param) for d in block_ids}
             elif f.kind == "solr_query":
-                m = self._exec_clauses_local(
+                m = self._lucene_scores(
                     parse_lucene(str(f.param)), max_expansions, None
                 )
                 vals[f.name] = (
@@ -1503,245 +1520,117 @@ class LocalSearcher:
 
     def _fq_ids_local(self, fq, max_expansions: int = 1024) -> set[int]:
         """Solr fq → doc_id match set (serving twin of
-        ``lucene.fq_doc_ids``), including the Solr pure-negative
-        rewrite: an all-MUST_NOT fq implies *:* — the live universe
-        minus the negated match set (SolrQueryParser's all-negative
-        handling). Complete set, never top-k truncated."""
-        from golr_loader_spark.plans.lucene import (
-            MUST_NOT,
-            SHOULD,
-            expand_synonyms,
-            parse_lucene,
-        )
+        ``lucene.fq_doc_ids``); a pure-negative fq is the live universe
+        minus the match set of its flipped clauses
+        (``lucene._filter_clauses``). Complete set, never top-k
+        truncated."""
+        from golr_loader_spark.plans.lucene import _filter_clauses
 
-        clauses = parse_lucene(fq) if isinstance(fq, str) else list(fq)
-        if self.cfg.query_synonyms and isinstance(fq, str):
-            clauses = expand_synonyms(clauses, self.cfg.query_synonyms)
+        clauses, negated = _filter_clauses(fq, self.cfg)
         if not clauses:
             return set()
-        occurs = {occ for occ, _n in clauses}
-        if occurs == {MUST_NOT}:
-            flipped = [(SHOULD, n) for _o, n in clauses]
-            neg = self._exec_clauses_local(flipped, max_expansions, None)
-            universe = self._all_doc_ids_local()
-            if neg is None:
-                return set(universe)
-            return universe - {int(d) for d in neg}
-        fset = self._exec_clauses_local(clauses, max_expansions, None)
-        return {int(d) for d in fset} if fset is not None else set()
+        found = self._lucene_scores(clauses, max_expansions, None) or {}
+        ids = {int(d) for d in found}
+        return self._all_doc_ids_local() - ids if negated else ids
 
-    def _exec_clauses_local(
+    def _expand(self, node, fields: list[str], max_expansions: int) -> set[str]:
+        """Serving face of the planner's multi-term expansion
+        (``lucene._expand`` is the Spark one): a walk over the
+        in-memory term dictionary — prefix seek, wildcard regex with
+        the literal prefix short-circuit, lexicographic range or banded
+        Levenshtein — kept to the terms indexed in ``fields``."""
+        from golr_loader_spark.plans.bm25 import check_expansion
+        from golr_loader_spark.plans.lucene import (
+            Prefix,
+            TermRange,
+            Wildcard,
+            _describe,
+        )
+
+        vocab = self._vocab_terms()
+        if isinstance(node, TermRange):
+            cand = [
+                t
+                for t in vocab
+                if (
+                    node.lo is None
+                    or (t >= node.lo if node.include_lo else t > node.lo)
+                )
+                and (
+                    node.hi is None
+                    or (t <= node.hi if node.include_hi else t < node.hi)
+                )
+            ]
+        elif isinstance(node, Prefix):
+            p = node.text.lower()
+            cand = [t for t in vocab if t.startswith(p)]
+        elif isinstance(node, Wildcard):
+            cand = _wildcard_terms(vocab, node.text.lower())
+        else:
+            t0 = node.text.lower()
+            cand = [t for t in vocab if _lev_le(t0, t, node.max_edits)]
+        terms = {r["term"] for r in self._term_rows(cand) if r["field"] in fields}
+        check_expansion(len(terms), max_expansions, _describe(node))
+        return terms
+
+    def _plan(self, clauses: list, max_expansions: int):
+        from golr_loader_spark.plans.lucene import _plan
+
+        return _plan(clauses, self.cfg, self._expand, self._idf, max_expansions)
+
+    def _lucene_scores(
         self,
         clauses: list,
         max_expansions: int,
         k: int | None,
     ) -> dict[int, float] | None:
-        """Execute a clause list → complete {doc_id: score} match set
-        (None when nothing positive matches). ``k`` is a truncation
-        hint honored only when no relational post-combination follows
-        (nested groups / fq callers pass None). The Spark-free mirror
-        of ``lucene._exec``."""
-        from golr_loader_spark.functions.tokenize import analyze_query
-        from golr_loader_spark.plans.lucene import (
-            Group,
-            Phrase,
-            Prefix,
-            Term,
-            TermRange,
-            Wildcard,
-        )
+        """A clause list → complete {doc_id: score} match set, None when
+        nothing matches. ``k`` is a truncation hint honored only when
+        the plan has no relational step (nested groups / fq callers
+        pass None)."""
+        return self._run_plan(self._plan(clauses, max_expansions), k)
 
-        qan = query_analyzer(self.cfg)
-        term_clauses: list[tuple[str, set[str], list[str], float]] = []
-        rel: list[tuple[str, object]] = []  # Phrase and Group clauses
-        vocab = None
-        for occur, node in clauses:
-            if isinstance(node, Group):
-                rel.append((occur, node))
-                continue
-            nf = getattr(node, "field", None)
-            if nf is not None and nf not in self.cfg.fields:
-                raise ValueError(
-                    f"unknown field {nf!r} (config: {list(self.cfg.fields)})"
-                )
-            if isinstance(node, Phrase):
-                rel.append((occur, node))
-                continue
-            fields = [nf] if nf else list(self.cfg.fields)
-            if isinstance(node, Term):
-                an = self.cfg.fields[nf][0] if nf else qan
-                terms = set(analyze_query(node.text, an, self.cfg.chain))
-            else:
-                if vocab is None:
-                    vocab = self._vocab_terms()
-                if isinstance(node, Prefix):
-                    p = node.text.lower()
-                    cand_t = [t for t in vocab if t.startswith(p)]
-                elif isinstance(node, Wildcard):
-                    cand_t = _wildcard_terms(vocab, node.text.lower())
-                elif isinstance(node, TermRange):
-                    cand_t = [
-                        t
-                        for t in vocab
-                        if (
-                            node.lo is None
-                            or (t >= node.lo if node.include_lo else t > node.lo)
-                        )
-                        and (
-                            node.hi is None
-                            or (t <= node.hi if node.include_hi else t < node.hi)
-                        )
-                    ]
-                else:
-                    t0 = node.text.lower()
-                    cand_t = [
-                        t for t in vocab if _lev_le(t0, t, node.max_edits)
-                    ]
-                terms = {
-                    r["term"]
-                    for r in self._term_rows(cand_t)
-                    if r["field"] in fields
-                }
-                if len(terms) > max_expansions:
-                    raise ValueError(
-                        f"clause expands to >{max_expansions} terms"
-                    )
-            if not terms:
-                if occur == "MUST":
-                    return None
-                continue
-            term_clauses.append(
-                (occur, terms, fields, getattr(node, "boost", 1.0))
-            )
+    def _run_plan(self, plan, k: int | None) -> dict[int, float] | None:
+        """Apply a ``lucene._plan`` — the serving executor: term clauses
+        through ``_score`` over whole-index lists, phrase steps through
+        ``search_phrase``, group steps recursively, each step a dict
+        join of the kind the plan chose."""
+        from golr_loader_spark.plans.lucene import Phrase
 
-        should: set[str] = set()
-        groups: list[set] = []
-        prohibited: set = set()
-        for occur, terms, fields, _boost in term_clauses:
-            restricted = len(fields) < len(self.cfg.fields)
-            members = (
-                {(t, f) for t in terms for f in fields} if restricted
-                else set(terms)
-            )
-            if occur == "MUST_NOT":
-                prohibited |= members
-            else:
-                should |= terms
-                if occur == "MUST":
-                    groups.append(members)
-
-        if not should and not any(o != "MUST_NOT" for o, _n in rel):
+        if plan.none:
             return None
         scores: dict[int, float] = {}
-        matched_bool = False
-        if should:
-            idf = {
-                (r["term"], r["field"]): bm25_idf(self.n_docs, int(r["df"]))
-                for r in self._term_rows(sorted(should))
-            }
-            weights: dict[tuple[str, str], float] = {}
-            for occur, terms, fields, boost in term_clauses:
-                if occur == "MUST_NOT":
-                    continue
-                for t in terms:
-                    for f in fields:
-                        i = idf.get((t, f))
-                        if i is None or f not in self.cfg.fields:
-                            continue
-                        weights[(t, f)] = weights.get((t, f), 0.0) + (
-                            boost * self.cfg.fields[f][1] * i
-                            * (self.cfg.k1 + 1.0)
-                        )
-            avail = set(weights) | {t for (t, _f) in weights}
-            if any(not (g & avail) for g in groups):
-                return None
-            prohib_names = {
-                m if isinstance(m, str) else m[0] for m in prohibited
-            }
-            res = self._score(
-                weights,
-                sorted(should | prohib_names),
-                k if (k is not None and not rel) else self.n_docs,
-                prohibited=prohibited or None,
-                required_groups=[g & avail for g in groups] or None,
-            )
-            scores = dict(res)
-            matched_bool = True
-        has_must = bool(groups)
-        # True once `scores` holds docs the boolean scorer never
-        # emitted (so never checked against term MUST_NOTs) — those
-        # need the membership-based prohibited filter at the end
-        unvetted = False
-        # positives first: a MUST_NOT phrase/group must subtract from
-        # the final positive set regardless of clause order
-        rel.sort(key=lambda c: c[0] == "MUST_NOT")
-        for occur, node in rel:
-            if isinstance(node, Phrase):
-                pres = {
-                    d: s * float(node.boost)
-                    for d, s in self.search_phrase(
-                        node.text, k=self.n_docs, slop=node.slop,
-                        field=node.field,
-                    )
-                }
-            else:  # nested Group: recurse for its COMPLETE match set
-                sub = self._exec_clauses_local(
-                    list(node.clauses), max_expansions, None
+        if plan.read:
+            scores = dict(
+                self._score(
+                    plan.weights,
+                    plan.read,
+                    plan.scorer_k(k, self.n_docs),
+                    prohibited=plan.prohibited or None,
+                    required_groups=plan.groups or None,
                 )
-                if sub is None:
-                    if occur == "MUST":
-                        return None
-                    continue
-                pres = {d: s * float(node.boost) for d, s in sub.items()}
-            if occur == "MUST_NOT":
-                if matched_bool or scores:
-                    scores = {
-                        d: s for d, s in scores.items() if d not in pres
-                    }
+            )
+        for _occur, node, sub, how in plan.steps:
+            if how is None:
                 continue
-            if not matched_bool and not scores and occur in ("MUST", "SHOULD"):
-                scores = dict(pres)
-                matched_bool = True
-                unvetted = True
-                if occur == "MUST":
-                    has_must = True
-                continue
-            if occur == "MUST":
-                if has_must:
-                    # boolean side already MUST-gated: intersect
-                    scores = {
-                        d: s + pres[d] for d, s in scores.items() if d in pres
-                    }
-                else:
-                    # boolean side is SHOULD-only: Lucene BooleanQuery
-                    # semantics — the MUST phrase defines the match
-                    # set; keep every phrase doc, SHOULD contribution
-                    # coalesced to 0
-                    scores = {
-                        d: scores.get(d, 0.0) + ps
-                        for d, ps in pres.items()
-                    }
-                    unvetted = True
-                has_must = True
-            else:
-                if has_must:
-                    scores = {
-                        d: s + pres.get(d, 0.0) for d, s in scores.items()
-                    }
-                else:
-                    for d, ps in pres.items():
-                        scores[d] = scores.get(d, 0.0) + ps
-                    unvetted = True
-        if prohibited and (not should or unvetted):
-            # `scores` holds docs the boolean scorer never vetted
-            # (phrase/group-only positives, or clauses that admitted
-            # docs outside the boolean match set): drop docs holding
-            # any prohibited term (decode-only membership read; field-
-            # restricted members mask only their field's postings)
+            part = (
+                self.search_phrase(
+                    node.text, k=self.n_docs, slop=node.slop, field=node.field,
+                )
+                if isinstance(node, Phrase)
+                else self._run_plan(sub, None).items()
+            )
+            scores = _join_scores(
+                scores, {d: s * float(node.boost) for d, s in part}, how
+            )
+        if plan.vet:
+            # drop docs holding any prohibited term (decode-only
+            # membership read; field-restricted members mask only their
+            # field's postings)
             from golr_loader_spark.plans.facets import _match_bucket_factory
 
             tmap: dict[str, list[str]] = {}
-            for m in prohibited:
+            for m in plan.prohibited:
                 if isinstance(m, str):
                     tmap[m] = list(self.cfg.fields)
                 else:
@@ -1805,10 +1694,7 @@ class LocalSearcher:
         out: dict = {"doc_id": int(doc_id), "score": 0.0, "terms": []}
         if not terms:
             return out
-        idf = {
-            (r["term"], r["field"]): bm25_idf(self.n_docs, int(r["df"]))
-            for r in self._term_rows(terms)
-        }
+        idf = self._idf(terms)
         found = self._doc_tfdl(terms, doc_id)
         total = 0.0
         for (t, f) in sorted(found, key=lambda k: (k[1], k[0])):
@@ -1836,216 +1722,24 @@ class LocalSearcher:
         self, query: str, doc_id: int, max_expansions: int = 1024
     ) -> dict:
         """Serving-path full-query explanation (Solr debugQuery over
-        every clause type) — the Spark-free mirror of
-        ``lucene.explain_lucene``: same output shape, same clause
-        semantics, totals reproduce ``LocalSearcher.query``'s score
-        for the doc."""
-        from golr_loader_spark.plans.lucene import parse_lucene
+        every clause type): ``lucene._explain_plan`` — the explain of
+        both faces — over the plan ``query`` runs, with this searcher's
+        point reads (``_doc_tfdl``, ``search_phrase``). Same dict as
+        ``lucene.explain_lucene``; totals reproduce
+        ``LocalSearcher.query``'s score for the doc."""
+        from golr_loader_spark.plans.lucene import _explain_plan, parse_lucene
 
-        return self._explain_clauses_local(
-            parse_lucene(query), int(doc_id), max_expansions
+        doc_id = int(doc_id)
+        return _explain_plan(
+            self._plan(parse_lucene(query), max_expansions),
+            doc_id, self.cfg, self.avgdl,
+            lambda terms: self._doc_tfdl(terms, doc_id),
+            lambda ph: dict(
+                self.search_phrase(
+                    ph.text, k=self.n_docs, slop=ph.slop, field=ph.field,
+                )
+            ).get(doc_id),
         )
-
-    def _explain_clauses_local(
-        self, clauses: list, doc_id: int, max_expansions: int
-    ) -> dict:
-        from golr_loader_spark.functions.tokenize import analyze_query
-        from golr_loader_spark.plans.lucene import (
-            Group,
-            Phrase,
-            Prefix,
-            Term,
-            TermRange,
-            Wildcard,
-        )
-
-        out: dict = {
-            "doc_id": doc_id, "matches": True, "score": 0.0, "clauses": [],
-        }
-        qan = query_analyzer(self.cfg)
-        term_clauses: list[tuple[str, set[str], list[str], float]] = []
-        rel: list[tuple[str, object]] = []
-        vocab = None
-        for occur, node in clauses:
-            if isinstance(node, Group):
-                rel.append((occur, node))
-                continue
-            nf = getattr(node, "field", None)
-            if nf is not None and nf not in self.cfg.fields:
-                raise ValueError(
-                    f"unknown field {nf!r} (config: {list(self.cfg.fields)})"
-                )
-            if isinstance(node, Phrase):
-                rel.append((occur, node))
-                continue
-            fields = [nf] if nf else list(self.cfg.fields)
-            if isinstance(node, Term):
-                an = self.cfg.fields[nf][0] if nf else qan
-                terms = set(analyze_query(node.text, an, self.cfg.chain))
-            else:
-                if vocab is None:
-                    vocab = self._vocab_terms()
-                if isinstance(node, Prefix):
-                    p = node.text.lower()
-                    cand_t = [t for t in vocab if t.startswith(p)]
-                elif isinstance(node, Wildcard):
-                    cand_t = _wildcard_terms(vocab, node.text.lower())
-                elif isinstance(node, TermRange):
-                    cand_t = [
-                        t
-                        for t in vocab
-                        if (
-                            node.lo is None
-                            or (t >= node.lo if node.include_lo else t > node.lo)
-                        )
-                        and (
-                            node.hi is None
-                            or (t <= node.hi if node.include_hi else t < node.hi)
-                        )
-                    ]
-                else:
-                    t0 = node.text.lower()
-                    cand_t = [
-                        t for t in vocab if _lev_le(t0, t, node.max_edits)
-                    ]
-                terms = {
-                    r["term"]
-                    for r in self._term_rows(cand_t)
-                    if r["field"] in fields
-                }
-                if len(terms) > max_expansions:
-                    raise ValueError(
-                        f"clause expands to >{max_expansions} terms"
-                    )
-            if not terms:
-                if occur == "MUST":
-                    out["matches"] = False
-                    out["reason"] = (
-                        f"MUST clause {node!r} matches no indexed term"
-                    )
-                    return out
-                continue
-            term_clauses.append(
-                (occur, terms, fields, getattr(node, "boost", 1.0))
-            )
-
-        all_terms = sorted({t for _o, ts, _f, _b in term_clauses for t in ts})
-        tfdl = self._doc_tfdl(all_terms, doc_id)
-        idf = {
-            (r["term"], r["field"]): bm25_idf(self.n_docs, int(r["df"]))
-            for r in self._term_rows(all_terms)
-        } if all_terms else {}
-        weights: dict[tuple[str, str], float] = {}
-        for occur, terms, fields, boost in term_clauses:
-            if occur == "MUST_NOT":
-                continue
-            for t in terms:
-                for f in fields:
-                    i = idf.get((t, f))
-                    if i is None or f not in self.cfg.fields:
-                        continue
-                    weights[(t, f)] = weights.get((t, f), 0.0) + (
-                        boost * self.cfg.fields[f][1] * i
-                        * (self.cfg.k1 + 1.0)
-                    )
-
-        for occur, terms, fields, _boost in term_clauses:
-            if occur != "MUST_NOT":
-                continue
-            for (t, f) in tfdl:
-                if t in terms and f in fields:
-                    out["matches"] = False
-                    out["reason"] = (
-                        f"doc contains prohibited term {t!r} in {f!r}"
-                    )
-                    return out
-        for occur, terms, fields, _boost in term_clauses:
-            if occur != "MUST":
-                continue
-            if not any(t in terms and f in fields for (t, f) in tfdl):
-                out["matches"] = False
-                out["reason"] = f"MUST clause over {sorted(terms)[:5]} not matched"
-                return out
-
-        term_entries = []
-        bool_score = 0.0
-        for (t, f) in sorted(tfdl, key=lambda x: (x[1], x[0])):
-            wt = weights.get((t, f))
-            if wt is None:
-                continue
-            tf, dl = tfdl[(t, f)]
-            avg = self.avgdl[f]
-            contrib = wt * tf / (
-                tf + self.cfg.k1 * ((1.0 - self.cfg.b) + self.cfg.b * dl / avg)
-            )
-            bool_score += contrib
-            term_entries.append(
-                {
-                    "term": t, "field": f, "tf": tf, "dl": dl,
-                    "avgdl": avg, "weight": wt, "contribution": contrib,
-                }
-            )
-        if term_entries:
-            out["clauses"].append(
-                {"kind": "terms", "score": bool_score, "terms": term_entries}
-            )
-        total = bool_score
-        matched_any = bool(term_entries)
-
-        rel.sort(key=lambda c: c[0] == "MUST_NOT")
-        for occur, node in rel:
-            if isinstance(node, Phrase):
-                pres = dict(
-                    self.search_phrase(
-                        node.text, k=self.n_docs, slop=node.slop,
-                        field=node.field,
-                    )
-                )
-                ps = pres.get(doc_id)
-                ps = None if ps is None else ps * float(node.boost)
-                entry = {
-                    "kind": "phrase", "text": node.text, "slop": node.slop,
-                    "field": node.field, "occur": occur,
-                    "matched": ps is not None, "score": ps or 0.0,
-                }
-            else:
-                sub = self._explain_clauses_local(
-                    list(node.clauses), doc_id, max_expansions
-                )
-                ps = (
-                    sub["score"] * float(node.boost)
-                    if sub["matches"] and sub["clauses"]
-                    else None
-                )
-                entry = {
-                    "kind": "group", "occur": occur, "boost": node.boost,
-                    "matched": ps is not None, "score": ps or 0.0,
-                    "explanation": sub,
-                }
-            if occur == "MUST_NOT":
-                if ps is not None:
-                    out["matches"] = False
-                    out["reason"] = f"doc matches prohibited {entry['kind']}"
-                    out["score"] = 0.0
-                    return out
-                continue
-            if occur == "MUST" and ps is None:
-                out["matches"] = False
-                out["reason"] = f"MUST {entry['kind']} not matched"
-                out["score"] = 0.0
-                return out
-            out["clauses"].append(entry)
-            if ps is not None:
-                total += ps
-                matched_any = True
-
-        if not matched_any:
-            out["matches"] = False
-            out["reason"] = "no positive clause matched"
-            out["score"] = 0.0
-            return out
-        out["score"] = total
-        return out
 
     # ------------------------------------------------------------ facets
 

@@ -922,7 +922,7 @@ class ShardedSearcher:
         clauses = parse_lucene(query)
         parts = self._fanout(
             [
-                (lambda s=s: s._exec_clauses_local(
+                (lambda s=s: s._lucene_scores(
                     clauses, max_expansions, None
                 ))
                 for s in self.shards
@@ -1000,8 +1000,8 @@ class ShardedSearcher:
         parts = self._fanout(
             [
                 (lambda s=s: (
-                    s._exec_clauses_local(c1, max_expansions, None),
-                    s._exec_clauses_local(c2, max_expansions, None),
+                    s._lucene_scores(c1, max_expansions, None),
+                    s._lucene_scores(c2, max_expansions, None),
                 ))
                 for s in self.shards
             ]
