@@ -446,8 +446,8 @@ BASE, ANTI = "base", "left_anti"
 class _Plan:
     """A clause list planned against one index.
 
-    * ``terms`` — (occur, index terms, fields, boost) per term-like
-      clause, in query order;
+    * ``term_clauses`` — (occur, index terms, fields, boost) per
+      term-like clause, in query order;
     * ``empty`` — why nothing can match when a MUST clause expanded to
       no index term (planning stops there);
     * ``weights`` — clause-additive BM25 weight per (term, field);
@@ -462,7 +462,7 @@ class _Plan:
       can hold docs the scorer never checked against ``prohibited``,
       so they are filtered at the end."""
 
-    terms: list
+    term_clauses: list
     empty: str | None = None
     weights: dict = field(default_factory=dict)
     groups: list = field(default_factory=list)
@@ -627,17 +627,17 @@ def _explain_plan(
 
     if plan.empty:
         return miss(plan.empty)
-    all_terms = sorted({t for _o, ts, _f, _b in plan.terms for t in ts})
+    all_terms = sorted({t for _o, ts, _f, _b in plan.term_clauses for t in ts})
     found = tfdl(all_terms) if all_terms else {}
     # MUST_NOT term membership disqualifies
-    for occur, terms, fields, _boost in plan.terms:
+    for occur, terms, fields, _boost in plan.term_clauses:
         if occur != MUST_NOT:
             continue
         for (t, f) in found:
             if t in terms and f in fields:
                 return miss(f"doc contains prohibited term {t!r} in {f!r}")
     # term MUST groups: any member (term in any listed field) present
-    for occur, terms, fields, _boost in plan.terms:
+    for occur, terms, fields, _boost in plan.term_clauses:
         if occur == MUST and not any(
             t in terms and f in fields for (t, f) in found
         ):

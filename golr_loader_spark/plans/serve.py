@@ -1624,22 +1624,20 @@ class LocalSearcher:
                 scores, {d: s * float(node.boost) for d, s in part}, how
             )
         if plan.vet:
-            # drop docs holding any prohibited term (decode-only
-            # membership read; field-restricted members mask only their
-            # field's postings)
-            from golr_loader_spark.plans.facets import _match_bucket_factory
-
-            tmap: dict[str, list[str]] = {}
-            for m in plan.prohibited:
-                if isinstance(m, str):
-                    tmap[m] = list(self.cfg.fields)
-                else:
-                    tmap.setdefault(m[0], []).append(m[1])
-            blocks = self._read_blocks(sorted(tmap))
-            if len(blocks):
-                fn = _match_bucket_factory(tmap, None, self.tombstones)
-                neg = {int(d) for d in fn(blocks)["doc_id"].to_numpy()}
-                scores = {d: s for d, s in scores.items() if d not in neg}
+            # drop docs holding a prohibited member, read from the lists
+            # the scorer uses (a field-restricted member masks only its
+            # field's list)
+            bad = plan.prohibited
+            lists = self._bm25_lists(
+                sorted({m if isinstance(m, str) else m[0] for m in bad})
+            )
+            neg = {
+                int(d)
+                for (t, f), lst in lists.items()
+                if t in bad or (t, f) in bad
+                for d in lst[0]
+            }
+            scores = {d: s for d, s in scores.items() if d not in neg}
         return scores
 
     def _doc_tfdl(

@@ -10,7 +10,9 @@ evaluator. They pin, with ``==`` and no tolerance:
   (``_random_queries(seed=7, n=30)``), of its serving, explain and
   field/boost query lists, on each face;
 * the complete explain dict of every doc of the corpus (returned docs
-  and non-matches alike) for the explain query lists, on each face;
+  and non-matches alike) for the explain query lists on the serving
+  face, and on the Spark face for the docs that reach every reason
+  (each Spark explain runs several jobs);
 * fq match sets, pure-negative fqs included, on each face.
 
 Each section is serialized with sorted keys and ``repr`` floats (exact
@@ -111,6 +113,11 @@ FQS = [
     "+zzz* data",
 ]
 
+# Explained on the Spark face: between them these docs reach every
+# match/no-match reason of the explain sections.
+SPARK_EXPLAIN_DOCS = [0, 3, 6, 7]
+SPARK_FIELD_EXPLAIN_DOCS = [0, 1]
+
 # one digest per section: at the recording both faces produced the
 # same bytes in every section, errors included
 GOLDENS = {
@@ -118,6 +125,9 @@ GOLDENS = {
     "field_topk": "9e29240411a40742",
     "explain": "d07a6e235c54c299",
     "field_explain": "bf5ce97aa902f426",
+    # the SPARK_EXPLAIN_DOCS slices of the two sections above
+    "explain_some": "832e0cbdfaf92b08",
+    "field_explain_some": "212428e28b33bf86",
     "fq": "cab22b28a483e0e5",
 }
 
@@ -224,22 +234,24 @@ def test_field_topk_goldens(fix, fcfg, fls):
 
 def test_explain_goldens(ix, cfg, ls):
     docs = [d for d, _t in ROWS]
-    spark_ex = _explains(
-        lambda q, d: explain_lucene(ix, q, d, cfg=cfg), EXPLAIN_QUERIES, docs
-    )
-    assert _digest(spark_ex) == GOLDENS["explain"]
     serve_ex = _explains(ls.explain_query, EXPLAIN_QUERIES, docs)
     assert _digest(serve_ex) == GOLDENS["explain"]
+    spark_ex = _explains(
+        lambda q, d: explain_lucene(ix, q, d, cfg=cfg), EXPLAIN_QUERIES,
+        SPARK_EXPLAIN_DOCS,
+    )
+    assert _digest(spark_ex) == GOLDENS["explain_some"]
 
 
 def test_field_explain_goldens(fix, fcfg, fls):
     docs = [d for d, *_t in FROWS]
-    spark_ex = _explains(
-        lambda q, d: explain_lucene(fix, q, d, cfg=fcfg), FIELD_QUERIES, docs
-    )
-    assert _digest(spark_ex) == GOLDENS["field_explain"]
     serve_ex = _explains(fls.explain_query, FIELD_QUERIES, docs)
     assert _digest(serve_ex) == GOLDENS["field_explain"]
+    spark_ex = _explains(
+        lambda q, d: explain_lucene(fix, q, d, cfg=fcfg), FIELD_QUERIES,
+        SPARK_FIELD_EXPLAIN_DOCS,
+    )
+    assert _digest(spark_ex) == GOLDENS["field_explain_some"]
 
 
 def test_fq_goldens(ix, cfg, ls):
