@@ -17,8 +17,9 @@ Semantics implemented (the classic dismax core of edismax):
   idf(t,f) · (k1+1) · tf / (tf + k1·(1−b+b·dl/avgdl_f))`` — the
   engine's standard BM25 contribution with the qf boost multiplied
   into the field weight;
-* per word: ``score_w = max_f s_f + tie · (Σ_f s_f − max_f s_f)`` —
-  Lucene DisjunctionMaxQuery with tiebreak multiplier. ``tie=0`` is
+* per word: ``score_w = max_f s_f + tie · (Σ_f s_f − max_f s_f)``,
+  the max over the fields the doc matches the word in — Lucene
+  DisjunctionMaxQuery with tiebreak multiplier. ``tie=0`` is
   pure max (classic dismax); ``tie=1`` degrades to the plain sum
   (equivalent to the boolean scorer);
 * a doc MATCHES word w when any qf field contains any of its
@@ -39,25 +40,43 @@ Semantics implemented (the classic dismax core of edismax):
   ``bf`` (a phrase-matching doc ranked below k pre-boost must be
   able to rise into the page).
 
-**Plan shape** (the scale story): identical to ``bm25.search`` — one
-pruned scan of the query terms' posting blocks, one
-``groupBy(bucket)`` exchange, per-bucket numpy kernel, distributed
-TakeOrderedAndProject top-k. The dismax max/tie combination is a
-per-word reduction over per-field contribution arrays — no extra
-shuffle, no corpus read. Block-max pruning is NOT applied here (the
-max-per-word score of a doc is not bounded by any single list's
-block max once tie > 0 and mm gates matter); dismax queries are
-short (2-5 words × 2-3 qf fields), so the unpruned union decode is
-the WAND-disabled cost ``bm25.search(mode="and")`` already pays.
+Execution is one planner, one core and two thin executors. ``_plan``
+makes every decision a clause list implies — dismax runs it over the
+whitespace words as SHOULD terms, edismax over ``lucene.parse_lucene``
+— and records it in a ``_Plan``: Term/Phrase classification and the
+unsupported-node error, the qf/explicit-field override, word analysis
+with single-word query synonyms, MUST/SHOULD/MUST_NOT words, per-word
+boosts, ``mm_count``, weights, the prohibited (term, field) set, and
+the phrase steps: phrase clauses positives first, joined by the rule
+``lucene._plan`` uses (``lucene._Joins``), then each pf/pf2/pf3
+clause as a left-outer phrase step.
 
-The serving twin is ``serve.LocalSearcher.search_dismax`` — same
-factory, Spark-free.
+``_dismax_bucket_factory`` is the scoring core, pandas-free over
+``bm25._decode_lists`` output (``score_group.lists``) behind an
+applyInPandas face. It drops MUST_NOT members itself, like
+``bm25._score_lists``, so it truncates to k whenever no step follows;
+a final anti-join runs only when a join admitted docs the scorer never
+saw (``_Plan.vet``). The Spark executor (``_run``) is one pruned scan
+of the read terms' posting blocks, one ``groupBy(bucket)`` exchange,
+the core per bucket, ``phrase_search_positional`` per phrase step and
+field, and DataFrame joins (``lucene._join``); the dismax max/tie
+combination is a per-word reduction over per-field contribution arrays
+— no extra shuffle, no corpus read. Block-max pruning is NOT applied
+(the max-per-word score of a doc is not bounded by any single list's
+block max once tie > 0 and mm gates matter); dismax queries are short
+(2-5 words × 2-3 qf fields), so the unpruned union decode is the
+WAND-disabled cost ``bm25.search(mode="and")`` already pays.
+``LocalSearcher._run_dismax`` applies the same plan with the core run
+once over the cached whole-index ``_bm25_lists``, ``search_phrase``
+and dict joins (``serve._join_scores``) — no pandas object, so the two
+faces agree by construction.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass, field
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -114,117 +133,6 @@ def parse_mm(mm, n_clauses: int) -> int:
     return max(0, min(v, n_clauses))
 
 
-def _decode_contrib_lists(
-    pdf: pd.DataFrame,
-    weights: dict[tuple[str, str], float],
-    avgdl_by_field: dict[str, float],
-    cfg: IndexConfig,
-    excl,
-) -> dict[tuple[str, str], tuple[np.ndarray, np.ndarray]]:
-    """Decode each weighted (term, field) list of the group →
-    {(term, field): (doc_ids, bm25_contribs)} — ``bm25._decode_lists``
-    (deterministic block order, tombstone masking) plus the per-posting
-    BM25 contribution."""
-    k1, b = cfg.k1, cfg.b
-    out: dict[tuple[str, str], tuple[np.ndarray, np.ndarray]] = {}
-    for (term, field), (ids, tfs, dls, *_bounds) in _decode_lists(pdf, excl).items():
-        wt = weights.get((term, field))
-        if wt is None:
-            continue
-        avg = avgdl_by_field[field]
-        out[(term, field)] = (ids, wt * tfs / (tfs + k1 * ((1.0 - b) + b * dls / avg)))
-    return out
-
-
-def _dismax_bucket_factory(
-    qwords: list[dict[str, list[str]]],
-    weights: dict[tuple[str, str], float],
-    avgdl_by_field: dict[str, float],
-    cfg: IndexConfig,
-    k: int,
-    tie: float,
-    mm_count: int,
-    excl,
-    required: list[bool] | None = None,
-    word_boosts: list[float] | None = None,
-):
-    """Per-bucket dismax scorer shared by the distributed path and
-    ``LocalSearcher.search_dismax`` (the module's factory pattern —
-    both paths bit-identical by construction). ``qwords``: one dict
-    per query word mapping qf field → that field's analyzed subterms.
-    ``weights``: (term, field) → qf·cfg-boost·idf·(k1+1).
-
-    ``required`` (edismax): per-word MUST flags — a doc survives only
-    when every required word matches, and ``mm_count`` then gates the
-    OPTIONAL words only (Lucene BooleanQuery: mm applies to SHOULD
-    clauses; with no required words every word is optional and mm
-    gates them all, min 1). ``word_boosts``: per-word clause boosts
-    (edismax ``term^2``), multiplying that word's dismax score."""
-
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        def empty() -> pd.DataFrame:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": np.int64, "score": np.float64}
-            )
-
-        lists = _decode_contrib_lists(pdf, weights, avgdl_by_field, cfg, excl)
-        if not lists:
-            return empty()
-        uniq = np.unique(np.concatenate([ids for ids, _c in lists.values()]))
-        score = np.zeros(len(uniq), dtype=np.float64)
-        n_opt = np.zeros(len(uniq), dtype=np.int32)
-        req_ok = np.ones(len(uniq), dtype=bool)
-        any_match = np.zeros(len(uniq), dtype=bool)
-        for wi, per_field in enumerate(qwords):  # query word order
-            field_arrs: list[np.ndarray] = []
-            matched = np.zeros(len(uniq), dtype=bool)
-            for f in sorted(per_field):  # deterministic field order
-                arr = np.zeros(len(uniq), dtype=np.float64)
-                hit = np.zeros(len(uniq), dtype=bool)
-                for t in sorted(per_field[f]):
-                    got = lists.get((t, f))
-                    if got is None:
-                        continue
-                    idx = np.searchsorted(uniq, got[0])
-                    arr[idx] += got[1]
-                    hit[idx] = True
-                if hit.any():
-                    field_arrs.append(arr)
-                    matched |= hit
-            is_req = bool(required[wi]) if required else False
-            if not field_arrs:
-                if is_req:
-                    return empty()  # a required word absent everywhere
-                continue
-            m = np.vstack(field_arrs)
-            mx = m.max(axis=0)
-            if tie:
-                word_score = mx + tie * (m.sum(axis=0) - mx)
-            else:
-                word_score = mx
-            if word_boosts is not None:
-                word_score = word_score * word_boosts[wi]
-            score += np.where(matched, word_score, 0.0)
-            any_match |= matched
-            if is_req:
-                req_ok &= matched
-            else:
-                n_opt += matched
-        if required and any(required):
-            ok = req_ok & any_match & (n_opt >= mm_count)
-        else:
-            ok = n_opt >= max(mm_count, 1)
-        if not ok.any():
-            return empty()
-        docs, sc = uniq[ok], score[ok]
-        if k < len(docs):  # skip the sort when nothing truncates
-            order = np.lexsort((docs, -sc))[:k]
-            docs, sc = docs[order], sc[order]
-        return pd.DataFrame({"doc_id": docs, "score": sc})
-
-    return score_group
-
-
 def _word_synonyms(word: str, cfg: IndexConfig) -> list[str]:
     """Single-word query-time synonym targets for one dismax word
     clause (Lucene SynonymQuery analog: the alternatives extend the
@@ -254,41 +162,6 @@ def _analyzed_with_synonyms(
             if t not in terms:
                 terms.append(t)
     return terms
-
-
-def _analyze_qwords(
-    query: str, qf_map: dict[str, float], cfg: IndexConfig
-) -> list[dict[str, list[str]]]:
-    """Split the user query into words and analyze each per qf field
-    with that field's analyzer → one {field: subterms} dict per word
-    (words whose every field-analysis is empty are dropped, like
-    stopword-only clauses in Solr). Single-word query synonyms extend
-    each word's subterm list (_word_synonyms)."""
-    for f in qf_map:
-        if f not in cfg.fields:
-            raise ValueError(f"qf field {f!r} not in config ({list(cfg.fields)})")
-    qwords: list[dict[str, list[str]]] = []
-    for w in query.split():
-        per_field: dict[str, list[str]] = {}
-        for f in qf_map:
-            terms = _analyzed_with_synonyms(w, cfg.fields[f][0], cfg)
-            if terms:
-                per_field[f] = terms
-        if per_field:
-            qwords.append(per_field)
-    return qwords
-
-
-def _dismax_weights(
-    idf: dict[tuple[str, str], float],
-    qf_map: dict[str, float],
-    cfg: IndexConfig,
-) -> dict[tuple[str, str], float]:
-    return {
-        (t, f): cfg.fields[f][1] * qf_map[f] * i * (cfg.k1 + 1.0)
-        for (t, f), i in idf.items()
-        if f in qf_map
-    }
 
 
 def pf_clause_list(
@@ -351,32 +224,282 @@ def pf_clause_list(
     return out
 
 
-def _apply_pf_boosts(
-    base: DataFrame,
-    index: InvertedIndex,
-    clauses: list[tuple[str, str, float, int]],
-    cfg: IndexConfig,
-    exclude_ids,
-) -> DataFrame:
-    """LEFT-OUTER join each phrase-boost clause's scores onto the
-    (untruncated) main match set: ``score += Σ boost ×
-    phrase_score``. Docs matching only the phrase are dropped — the
-    main query is the MUST clause of Solr's boosted BooleanQuery."""
+@dataclass
+class _Plan:
+    """An eDisMax clause list planned against one index.
+
+    * ``words`` — one {qf field: analyzed terms} per scoring word, in
+      query order; ``required`` — its MUST flag; ``boosts`` — its
+      clause boost; ``mm_count`` — how many OPTIONAL words must match;
+    * ``weights`` — (term, field) → qf·cfg-boost·idf·(k1+1);
+    * ``prohibited`` — MUST_NOT (term, field) pairs, dropped inside
+      the scorer;
+    * ``steps`` — (occur, Phrase, {field: qf boost}, how) per phrase
+      clause, positives first, joined by ``lucene._Joins``, then one
+      left-outer step per pf/pf2/pf3 clause;
+    * ``none`` — nothing can match; ``vet`` — a join admitted docs the
+      scorer never checked against ``prohibited``."""
+
+    tie: float
+    words: list = field(default_factory=list)
+    required: list = field(default_factory=list)
+    boosts: list = field(default_factory=list)
+    mm_count: int = 0
+    weights: dict = field(default_factory=dict)
+    prohibited: set = field(default_factory=set)
+    steps: list = field(default_factory=list)
+    none: bool = True
+    vet: bool = False
+
+    @property
+    def read(self) -> list[str]:
+        """The terms the scorer reads: weighted and prohibited."""
+        return sorted({t for t, _f in self.weights} | {t for t, _f in self.prohibited})
+
+    def scorer_k(self, k: int, n_docs: int) -> int:
+        """The scorer may truncate to ``k`` only when no step follows."""
+        return k if not self.steps else n_docs
+
+
+def _plan(
+    query: str, edismax: bool, qf, cfg: IndexConfig, idf, tie, mm, pfs,
+) -> _Plan:
+    """Plan a dismax (the whitespace words as SHOULD terms) or edismax
+    (``lucene.parse_lucene``) query for every face. ``idf(terms)`` →
+    {(term, field): idf}; ``pfs`` = (pf, pf2, pf3, ps, ps2, ps3)."""
+    from golr_loader_spark.plans.lucene import (
+        MUST,
+        MUST_NOT,
+        SHOULD,
+        Phrase,
+        Term,
+        _Joins,
+        parse_lucene,
+    )
+
+    qf_map = parse_qf(qf)
+    for f in qf_map:
+        if f not in cfg.fields:
+            raise ValueError(f"qf field {f!r} not in config ({list(cfg.fields)})")
+    clauses = (
+        parse_lucene(query) if edismax
+        else [(SHOULD, Term(w)) for w in query.split()]
+    )
+    p = _Plan(float(tie))
+    phrases: list = []
+    pf_words: list[str] = []  # bare non-negative words, clause order
+    for occur, node in clauses:
+        if not isinstance(node, (Term, Phrase)):
+            raise ValueError(
+                f"edismax supports term and phrase clauses only, got "
+                f"{type(node).__name__} — use search_lucene"
+            )
+        if node.field and node.field not in cfg.fields:
+            raise ValueError(f"unknown field {node.field!r}")
+        if isinstance(node, Phrase):
+            phrases.append((occur, node))
+            continue
+        if occur != MUST_NOT and not node.field:
+            # Solr's pf shingling runs over the user's query words
+            # minus operators, MUST_NOT clauses, and explicit-field
+            # clauses (ExtendedDismaxQParser getQueryStringFromParser)
+            pf_words.append(node.text)
+        # explicit field: overrides qf (Solr); else dismax across qf
+        per_field: dict[str, list[str]] = {}
+        for f in [node.field] if node.field else qf_map:
+            terms = _analyzed_with_synonyms(node.text, cfg.fields[f][0], cfg)
+            if terms:
+                per_field[f] = terms
+        if occur == MUST_NOT:
+            p.prohibited |= {(t, f) for f, ts in per_field.items() for t in ts}
+        elif per_field:
+            p.words.append(per_field)
+            p.required.append(occur == MUST)
+            p.boosts.append(float(node.boost))
+        elif occur == MUST:
+            return p  # a required word that analyzes to nothing
+    if not p.words and not phrases:
+        return p
+    boost_clauses = pf_clause_list(pf_words, *pfs, cfg=cfg)
+    p.mm_count = parse_mm(mm, p.required.count(False))
+    terms = sorted({t for w in p.words for ts in w.values() for t in ts})
+    idfs = idf(terms) if terms else {}
+    # an explicit field scores under its qf boost, defaulting to 1.0
+    for w in p.words:
+        for f, ts in w.items():
+            for t in ts:
+                i = idfs.get((t, f))
+                if i is not None:
+                    p.weights[(t, f)] = (
+                        cfg.fields[f][1] * qf_map.get(f, 1.0) * i * (cfg.k1 + 1.0)
+                    )
+    if any(
+        req and not any((t, f) in p.weights for f, ts in w.items() for t in ts)
+        for w, req in zip(p.words, p.required)
+    ):
+        return p  # a required word with no indexed term
+    joins = _Joins(bool(p.weights), any(p.required))
+    for occur, ph in joins.order(phrases):
+        # the phrase runs per field, dismax-combined across them
+        fields = [ph.field] if ph.field else sorted(qf_map)
+        p.steps.append(
+            (occur, ph, {f: qf_map.get(f, 1.0) for f in fields}, joins.how(occur))
+        )
+    # the main query is the MUST clause of Solr's boosted BooleanQuery:
+    # a phrase boost adds to its docs and never admits one
+    p.steps += [
+        (SHOULD, Phrase(text, slop, f, b), {f: 1.0}, "left_outer")
+        for text, f, b, slop in boost_clauses
+    ]
+    p.none = not joins.has_base
+    p.vet = bool(p.prohibited) and joins.vet
+    return p
+
+
+def _dismax_bucket_factory(
+    plan: _Plan, avgdl_by_field: dict[str, float], cfg: IndexConfig, k: int,
+    excl,
+):
+    """The dismax scoring core: ``score_group.lists(decoded)`` over
+    ``bm25._decode_lists`` output (any set of buckets — serving runs it
+    once over whole-index lists) → top-k (doc_ids, scores), unsorted
+    when nothing truncates; ``score_group(pdf)`` is its applyInPandas
+    face (``phrase._pandas_face``). Exact per doc, since a doc's
+    postings never leave its bucket.
+
+    Per word (query order), per field (sorted), the word's terms' BM25
+    contributions (sorted term order) sum to ``s_f``; the word scores
+    ``boost · (max + tie·(Σ − max))`` over the fields the doc matches.
+    A doc survives when it matches every required word and ``mm_count``
+    optional ones (≥ 1 when no word is required), and holds no
+    prohibited (term, field) — so the core may truncate to ``k``.
+    ``excl`` is ``bm25._norm_excl``-normalized."""
+    from golr_loader_spark.plans.bm25 import _EMPTY, _topk_by_score
+    from golr_loader_spark.plans.phrase import _pandas_face
+
+    k1, b = cfg.k1, cfg.b
+    gated = any(plan.required)
+
+    def lists(decoded: dict) -> tuple[np.ndarray, np.ndarray]:
+        contrib = {}
+        for (t, f), (ids, tfs, dls, *_bounds) in decoded.items():
+            wt = plan.weights.get((t, f))
+            if wt is not None:
+                avg = avgdl_by_field[f]
+                contrib[(t, f)] = (
+                    ids, wt * tfs / (tfs + k1 * ((1.0 - b) + b * dls / avg))
+                )
+        if not contrib:
+            return _EMPTY
+        uniq = np.unique(np.concatenate([ids for ids, _c in contrib.values()]))
+        n = len(uniq)
+        score = np.zeros(n, dtype=np.float64)
+        n_opt = np.zeros(n, dtype=np.int32)
+        req_ok = np.ones(n, dtype=bool)
+        any_match = np.zeros(n, dtype=bool)
+        for per_field, req, boost in zip(plan.words, plan.required, plan.boosts):
+            matched = np.zeros(n, dtype=bool)
+            mx = np.zeros(n, dtype=np.float64)
+            total = np.zeros(n, dtype=np.float64)
+            for f in sorted(per_field):
+                arr = np.zeros(n, dtype=np.float64)
+                hit = np.zeros(n, dtype=bool)
+                for t in sorted(per_field[f]):
+                    got = contrib.get((t, f))
+                    if got is not None:
+                        idx = np.searchsorted(uniq, got[0])
+                        arr[idx] += got[1]
+                        hit[idx] = True
+                # the max runs over the fields the doc matches
+                mx = np.where(hit & (~matched | (arr > mx)), arr, mx)
+                total += arr
+                matched |= hit
+            if req:
+                req_ok &= matched
+            if not matched.any():
+                continue
+            word = mx + plan.tie * (total - mx) if plan.tie else mx
+            score += np.where(matched, word * boost, 0.0)
+            any_match |= matched
+            if not req:
+                n_opt += matched
+        if gated:
+            ok = req_ok & any_match & (n_opt >= plan.mm_count)
+        else:
+            ok = n_opt >= max(plan.mm_count, 1)
+        neg = [
+            lst[0] for key, lst in decoded.items() if key in plan.prohibited
+        ]
+        if neg:
+            ok &= ~np.isin(uniq, np.concatenate(neg))
+        return _topk_by_score(uniq[ok], score[ok], k)
+
+    return _pandas_face(lists, excl, _decode_lists)
+
+
+def _run(
+    index: InvertedIndex, plan: _Plan, cfg: IndexConfig, exclude_ids, k: int
+) -> DataFrame | None:
+    """Apply a plan with Spark → (doc_id, score), None when nothing
+    matches: word clauses through one bucket-grouped scorer job, each
+    phrase step per field through ``phrase_search_positional``
+    (complete, k = corpus size), dismax-combined and joined as the plan
+    says (``lucene._join``)."""
+    from golr_loader_spark.plans.lucene import _join, _vet
     from golr_loader_spark.plans.phrase import phrase_search_positional
 
-    out = base
-    for i, (text, f, b, slop) in enumerate(clauses):
-        pdf = phrase_search_positional(
-            index, text, k=index.n_docs, slop=slop, cfg=cfg,
-            exclude_ids=exclude_ids, field=f,
-        ).select(
-            "doc_id", (F.col("score") * F.lit(b)).alias(f"_pf{i}")
+    if plan.none:
+        return None
+    out = None
+    if plan.weights:
+        fn = _dismax_bucket_factory(
+            plan, _avgdl(index), cfg, plan.scorer_k(k, index.n_docs),
+            _norm_excl(exclude_ids),
         )
-        out = out.join(pdf, on="doc_id", how="left_outer").withColumn(
-            "score",
-            F.col("score") + F.coalesce(F.col(f"_pf{i}"), F.lit(0.0)),
-        ).drop(f"_pf{i}")
+        scanned = sorted({f for _t, f in (*plan.weights, *plan.prohibited)})
+        cand = index.postings.filter(
+            F.col("term").isin(plan.read) & F.col("field").isin(scanned)
+        )
+        out = cand.groupBy("bucket").applyInPandas(
+            fn, schema="doc_id long, score double"
+        )
+    for _occur, ph, fields, how in plan.steps:
+        merged = None
+        for i, (f, b) in enumerate(fields.items()):
+            part = phrase_search_positional(
+                index, ph.text, k=index.n_docs, slop=ph.slop, cfg=cfg,
+                exclude_ids=exclude_ids, field=f,
+            ).select("doc_id", (F.col("score") * F.lit(b)).alias(f"_s{i}"))
+            merged = part if merged is None else merged.join(
+                part, on="doc_id", how="full_outer"
+            )
+        cols = [F.coalesce(F.col(f"_s{i}"), F.lit(0.0)) for i in range(len(fields))]
+        mx = cols[0] if len(cols) == 1 else F.greatest(*cols)
+        total = cols[0]
+        for c in cols[1:]:
+            total = total + c
+        pscore = (mx + F.lit(plan.tie) * (total - mx)) * F.lit(float(ph.boost))
+        out = _join(out, merged.select("doc_id", pscore.alias("_ps")), how)
+    if plan.vet:
+        out = _vet(index, out, plan.prohibited, cfg, exclude_ids)
     return out
+
+
+def _search(
+    index: InvertedIndex, query: str, edismax: bool, qf, k, tie, mm, cfg,
+    exclude_ids, pfs,
+) -> DataFrame:
+    cfg = cfg or index.cfg
+    plan = _plan(
+        query, edismax, qf, cfg, lambda terms: _idf_table(index, terms), tie,
+        mm, pfs,
+    )
+    out = _run(index, plan, cfg, exclude_ids, k)
+    if out is None:
+        return index.postings.sparkSession.createDataFrame(
+            [], "doc_id long, score double"
+        )
+    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def search_dismax(
@@ -402,37 +525,10 @@ def search_dismax(
     POSITIONAL index — whole-query / word-pair / word-triple phrase
     scores, slop ``ps``/``ps2``/``ps3``, added to the main score for
     docs the main query already matches (see ``pf_clause_list``)."""
-    cfg = cfg or index.cfg
-    spark = index.postings.sparkSession
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    qf_map = parse_qf(qf)
-    qwords = _analyze_qwords(query, qf_map, cfg)
-    if not qwords:
-        return empty
-    boost_clauses = pf_clause_list(
-        query.split(), pf, pf2, pf3, ps, ps2, ps3, cfg=cfg
+    return _search(
+        index, query, False, qf, k, tie, mm, cfg, exclude_ids,
+        (pf, pf2, pf3, ps, ps2, ps3),
     )
-    mm_count = parse_mm(mm, len(qwords))
-    all_terms = sorted({t for pf_ in qwords for ts in pf_.values() for t in ts})
-    weights = _dismax_weights(_idf_table(index, all_terms), qf_map, cfg)
-    if not weights:
-        return empty
-    fn = _dismax_bucket_factory(
-        qwords, weights, _avgdl(index), cfg,
-        k if not boost_clauses else index.n_docs,
-        float(tie), mm_count, _norm_excl(exclude_ids),
-    )
-    cand = index.postings.filter(
-        F.col("term").isin(all_terms) & F.col("field").isin(list(qf_map))
-    )
-    per_bucket = cand.groupBy("bucket").applyInPandas(
-        fn, schema="doc_id long, score double"
-    )
-    if boost_clauses:
-        per_bucket = _apply_pf_boosts(
-            per_bucket, index, boost_clauses, cfg, exclude_ids
-        )
-    return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def search_edismax(
@@ -460,8 +556,8 @@ def search_edismax(
       clause boosts (``term^2``) multiply the word's dismax score;
     * ``+term`` / ``-term`` — MUST words gate the match set (all
       required words must match; ``mm`` then applies to the OPTIONAL
-      words only); MUST_NOT words disqualify via a decode-only
-      anti-join over every qf field;
+      words only); MUST_NOT words disqualify, inside the scorer, docs
+      holding them in any qf field;
     * ``field:term`` — an explicit field overrides qf (Solr
       semantics): the word scores on that field alone;
     * ``"a phrase"``/``~slop`` — the phrase runs per qf field on the
@@ -475,203 +571,8 @@ def search_edismax(
     ``search_lucene``): prefix/fuzzy/range clauses and parenthesized
     groups. Plan shape: ONE bucket-grouped job for all word clauses
     + one positional-phrase job per (phrase × qf field), combined
-    with the same semi/anti join shapes as ``search_lucene``."""
-    from golr_loader_spark.plans.lucene import (
-        MUST,
-        MUST_NOT,
-        Phrase,
-        Term,
-        parse_lucene,
+    with the same join shapes as ``search_lucene``."""
+    return _search(
+        index, query, True, qf, k, tie, mm, cfg, exclude_ids,
+        (pf, pf2, pf3, ps, ps2, ps3),
     )
-    from golr_loader_spark.plans.phrase import (
-        decode_postings,
-        phrase_search_positional,
-    )
-
-    cfg = cfg or index.cfg
-    spark = index.postings.sparkSession
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    qf_map = parse_qf(qf)
-    for f in qf_map:
-        if f not in cfg.fields:
-            raise ValueError(f"qf field {f!r} not in config ({list(cfg.fields)})")
-    clauses = parse_lucene(query)
-    if not clauses:
-        return empty
-
-    qwords: list[dict[str, list[str]]] = []
-    required: list[bool] = []
-    word_boosts: list[float] = []
-    prohibited_terms: set[tuple[str, str]] = set()
-    phrases: list[tuple[str, Phrase]] = []
-    pf_words: list[str] = []  # bare non-negative words, clause order
-    for occur, node in clauses:
-        if isinstance(node, Phrase):
-            phrases.append((occur, node))
-            continue
-        if not isinstance(node, Term):
-            raise ValueError(
-                f"edismax supports term and phrase clauses only, got "
-                f"{type(node).__name__} — use search_lucene"
-            )
-        if occur != MUST_NOT and not node.field:
-            # Solr's pf shingling runs over the user's query words
-            # minus operators, MUST_NOT clauses, and explicit-field
-            # clauses (ExtendedDismaxQParser getQueryStringFromParser)
-            pf_words.append(node.text)
-        # explicit field: overrides qf (Solr); else dismax across qf
-        fields = (
-            {node.field: qf_map.get(node.field, 1.0)}
-            if node.field
-            else qf_map
-        )
-        if node.field and node.field not in cfg.fields:
-            raise ValueError(f"unknown field {node.field!r}")
-        per_field: dict[str, list[str]] = {}
-        for f in fields:
-            terms = _analyzed_with_synonyms(node.text, cfg.fields[f][0], cfg)
-            if terms:
-                per_field[f] = terms
-        if occur == MUST_NOT:
-            for f in fields:
-                for t in per_field.get(f, []):
-                    prohibited_terms.add((t, f))
-            continue
-        if not per_field:
-            if occur == MUST:
-                return empty
-            continue
-        qwords.append(per_field)
-        required.append(occur == MUST)
-        word_boosts.append(float(node.boost))
-
-    if not qwords and not phrases:
-        return empty
-    boost_clauses = pf_clause_list(
-        pf_words, pf, pf2, pf3, ps, ps2, ps3, cfg=cfg
-    )
-    mm_count = parse_mm(mm, sum(1 for r in required if not r))
-
-    bool_df = None
-    if qwords:
-        all_terms = sorted({t for pf in qwords for ts in pf.values() for t in ts})
-        idf = _idf_table(index, all_terms)
-        # weights use the per-word field map (an explicit field: term
-        # scores under that field's qf boost, defaulting to 1.0)
-        weights: dict[tuple[str, str], float] = {}
-        for pf in qwords:
-            for f, ts in pf.items():
-                b = qf_map.get(f, 1.0)
-                for t in ts:
-                    i = idf.get((t, f))
-                    if i is not None:
-                        weights[(t, f)] = cfg.fields[f][1] * b * i * (cfg.k1 + 1.0)
-        if not weights and any(required):
-            return empty
-        if weights:
-            fn = _dismax_bucket_factory(
-                qwords, weights, _avgdl(index), cfg,
-                k
-                if not phrases and not prohibited_terms and not boost_clauses
-                else index.n_docs,
-                float(tie), mm_count, _norm_excl(exclude_ids),
-                required=required, word_boosts=word_boosts,
-            )
-            cand = index.postings.filter(
-                F.col("term").isin(all_terms)
-                & F.col("field").isin(sorted({f for pf in qwords for f in pf}))
-            )
-            bool_df = cand.groupBy("bucket").applyInPandas(
-                fn, schema="doc_id long, score double"
-            )
-        elif any(required):
-            return empty
-
-    out = bool_df
-    has_must = any(required)
-    phrases.sort(key=lambda c: c[0] == MUST_NOT)
-    for occur, ph in phrases:
-        # per-qf-field phrase scores, dismax-combined (max + tie·rest)
-        fields = [ph.field] if ph.field else sorted(qf_map)
-        parts = []
-        for i, f in enumerate(fields):
-            b = qf_map.get(f, 1.0)
-            parts.append(
-                phrase_search_positional(
-                    index, ph.text, k=index.n_docs, slop=ph.slop, cfg=cfg,
-                    exclude_ids=exclude_ids, field=f,
-                ).select(
-                    "doc_id",
-                    (F.col("score") * F.lit(float(b))).alias(f"_s{i}"),
-                )
-            )
-        merged = parts[0]
-        for p in parts[1:]:
-            merged = merged.join(p, on="doc_id", how="full_outer")
-        cols = [F.coalesce(F.col(f"_s{i}"), F.lit(0.0)) for i in range(len(parts))]
-        mx = cols[0] if len(cols) == 1 else F.greatest(*cols)
-        total = cols[0]
-        for c in cols[1:]:
-            total = total + c
-        pscore = (mx + F.lit(float(tie)) * (total - mx)) * F.lit(float(ph.boost))
-        pdf = merged.select("doc_id", pscore.alias("_ps"))
-        if occur == MUST_NOT:
-            if out is not None:
-                out = out.join(pdf.select("doc_id"), on="doc_id", how="left_anti")
-            continue
-        if out is None:
-            out = pdf.withColumnRenamed("_ps", "score")
-            if occur == MUST:
-                has_must = True
-            continue
-        if occur == MUST:
-            if has_must:
-                out = (
-                    out.join(pdf, on="doc_id", how="inner")
-                    .withColumn("score", F.col("score") + F.col("_ps"))
-                    .drop("_ps")
-                )
-            else:
-                out = (
-                    out.join(pdf, on="doc_id", how="right_outer")
-                    .withColumn(
-                        "score",
-                        F.coalesce(F.col("score"), F.lit(0.0)) + F.col("_ps"),
-                    )
-                    .drop("_ps")
-                )
-            has_must = True
-        else:
-            how = "left_outer" if has_must else "full_outer"
-            out = (
-                out.join(pdf, on="doc_id", how=how)
-                .withColumn(
-                    "score",
-                    F.coalesce(F.col("score"), F.lit(0.0))
-                    + F.coalesce(F.col("_ps"), F.lit(0.0)),
-                )
-                .drop("_ps")
-            )
-    if out is None:
-        return empty
-    if prohibited_terms:
-        # the dismax bucket factory never vets MUST_NOT members (they
-        # carry no weights), so prohibition is ALWAYS relational here:
-        # decode-only anti-join over the prohibited (term, field)s
-        neg = decode_postings(
-            index,
-            sorted({t for t, _f in prohibited_terms}),
-            cfg,
-            exclude_ids=exclude_ids,
-        )
-        cond = F.lit(False)
-        for t, f in sorted(prohibited_terms):
-            cond = cond | ((F.col("term") == t) & (F.col("field") == f))
-        out = out.join(
-            neg.filter(cond).select("doc_id").distinct(),
-            on="doc_id",
-            how="left_anti",
-        )
-    if boost_clauses:
-        out = _apply_pf_boosts(out, index, boost_clauses, cfg, exclude_ids)
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

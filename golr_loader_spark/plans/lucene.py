@@ -477,6 +477,40 @@ class _Plan:
         return k if k is not None and not self.steps else n_docs
 
 
+class _Joins:
+    """How each phrase or group clause joins the term result — the rule
+    ``_plan`` and ``dismax._plan`` share. Clauses come positives first
+    (``order``): a MUST_NOT clause subtracts (ANTI) from the final
+    positive set wherever it stands in the query. The first positive
+    clause over no term result becomes the result (BASE). A MUST clause
+    then intersects a MUST-gated result and right-outer joins a
+    SHOULD-only one (Lucene BooleanQuery: the MUST clause defines the
+    match set, the optional score coalesced to 0); a SHOULD clause
+    left-outer joins a MUST-gated result and full-outer joins a
+    SHOULD-only one. ``vet`` records that a join admitted docs the term
+    scorer never saw."""
+
+    def __init__(self, has_base: bool, has_must: bool):
+        self.has_base, self.has_must, self.vet = has_base, has_must, False
+
+    @staticmethod
+    def order(clauses: list) -> list:
+        return sorted(clauses, key=lambda c: c[0] == MUST_NOT)
+
+    def how(self, occur: str) -> str:
+        if occur == MUST_NOT:
+            return ANTI
+        if not self.has_base:
+            self.has_base, self.has_must, self.vet = True, occur == MUST, True
+            return BASE
+        admits = not self.has_must
+        self.vet = self.vet or admits
+        if occur == MUST:
+            self.has_must = True
+            return "right_outer" if admits else "inner"
+        return "full_outer" if admits else "left_outer"
+
+
 def _describe(node) -> str:
     """A multi-term node as the TooManyClauses message names it."""
     if isinstance(node, TermRange):
@@ -568,40 +602,22 @@ def _plan(
         prohib_terms = {m if isinstance(m, str) else m[0] for m in p.prohibited}
         p.read = sorted(should | prohib_terms)
 
-    has_base, has_must, vet = bool(should), bool(p.groups), False
-    # positives first: a MUST_NOT phrase/group must subtract from the
-    # final positive set regardless of its position in the query
-    for occur, node in sorted(rel, key=lambda c: c[0] == MUST_NOT):
+    joins = _Joins(bool(should), bool(p.groups))
+    for occur, node in joins.order(rel):
         sub = (
             _plan(list(node.clauses), cfg, expand, idf, max_expansions)
             if isinstance(node, Group) else None
         )
-        if sub is not None and sub.none:
-            how = None  # a group matching nothing contributes nothing
-        elif occur == MUST_NOT:
-            how = ANTI
-        elif not has_base:
-            # the clause's set is the result, never seen by the scorer
-            how, has_base, vet = BASE, True, True
-            has_must = occur == MUST
-        elif occur == MUST:
-            # a MUST-gated result intersects; a SHOULD-only one keeps
-            # every clause doc (Lucene BooleanQuery: the MUST clause
-            # defines the match set), its optional score coalesced to 0
-            how = "inner" if has_must else "right_outer"
-            vet = vet or not has_must
-            has_must = True
-        else:
-            how = "left_outer" if has_must else "full_outer"
-            vet = vet or not has_must
+        # a group matching nothing contributes nothing
+        how = None if sub is not None and sub.none else joins.how(occur)
         p.steps.append((occur, node, sub, how))
         if how is None and occur == MUST:
             # a required subquery matching nothing empties the whole
             # result, like any MUST clause
             none = True
             break
-    p.none = none or not has_base
-    p.vet = bool(p.prohibited) and vet
+    p.none = none or not joins.has_base
+    p.vet = bool(p.prohibited) and joins.vet
     return p
 
 
@@ -808,38 +824,52 @@ def _run(
         ).select(
             "doc_id", (F.col("score") * F.lit(float(node.boost))).alias("_ps")
         )
-        if how == BASE:
-            out = part.withColumnRenamed("_ps", "score")
-        elif how == ANTI:
-            out = out.join(part.select("doc_id"), on="doc_id", how=ANTI)
-        else:
-            out = out.join(part, on="doc_id", how=how).select(
-                "doc_id",
-                (
-                    F.coalesce(F.col("score"), F.lit(0.0))
-                    + F.coalesce(F.col("_ps"), F.lit(0.0))
-                ).alias("score"),
-            )
+        out = _join(out, part, how)
     if plan.vet:
-        # apply term MUST_NOTs relationally (decode only the prohibited
-        # terms' doc_id streams). Docs the scorer DID emit hold no
-        # prohibited term, so re-filtering them is a no-op.
-        from golr_loader_spark.plans.phrase import decode_postings
-
-        bare = sorted(m for m in plan.prohibited if isinstance(m, str))
-        pairs = sorted(m for m in plan.prohibited if not isinstance(m, str))
-        neg = decode_postings(
-            index,
-            sorted({*bare, *(t for t, _f in pairs)}),
-            cfg,
-            exclude_ids=exclude_ids,
-        )
-        cond = F.col("term").isin(bare) if bare else F.lit(False)
-        for t, f in pairs:
-            cond = cond | ((F.col("term") == t) & (F.col("field") == f))
-        neg = neg.filter(cond).select("doc_id").distinct()
-        out = out.join(neg, on="doc_id", how=ANTI)
+        out = _vet(index, out, plan.prohibited, cfg, exclude_ids)
     return out
+
+
+def _join(out: DataFrame | None, part: DataFrame, how: str) -> DataFrame:
+    """One plan step over DataFrames: ``part`` (doc_id, _ps) becomes the
+    result, is subtracted, or is joined with the scores added, a
+    missing side counting 0 (``serve._join_scores`` is the dict face)."""
+    if how == BASE:
+        return part.withColumnRenamed("_ps", "score")
+    if how == ANTI:
+        return out.join(part.select("doc_id"), on="doc_id", how=ANTI)
+    return out.join(part, on="doc_id", how=how).select(
+        "doc_id",
+        (
+            F.coalesce(F.col("score"), F.lit(0.0))
+            + F.coalesce(F.col("_ps"), F.lit(0.0))
+        ).alias("score"),
+    )
+
+
+def _vet(
+    index: InvertedIndex, out: DataFrame, prohibited: set, cfg: IndexConfig,
+    exclude_ids,
+) -> DataFrame:
+    """Apply term MUST_NOTs relationally (decode only the prohibited
+    terms' doc_id streams) to a result a join filled with docs the
+    scorer never saw. Docs the scorer DID emit hold no prohibited term,
+    so re-filtering them is a no-op."""
+    from golr_loader_spark.plans.phrase import decode_postings
+
+    bare = sorted(m for m in prohibited if isinstance(m, str))
+    pairs = sorted(m for m in prohibited if not isinstance(m, str))
+    neg = decode_postings(
+        index,
+        sorted({*bare, *(t for t, _f in pairs)}),
+        cfg,
+        exclude_ids=exclude_ids,
+    )
+    cond = F.col("term").isin(bare) if bare else F.lit(False)
+    for t, f in pairs:
+        cond = cond | ((F.col("term") == t) & (F.col("field") == f))
+    neg = neg.filter(cond).select("doc_id").distinct()
+    return out.join(neg, on="doc_id", how=ANTI)
 
 
 def _match(

@@ -604,13 +604,14 @@ def _match_counts(keys: np.ndarray, P: int, n_cand: int) -> np.ndarray:
     ).astype(np.float64)
 
 
-def _pandas_face(lists, excl):
+def _pandas_face(lists, excl, decode=_decode_positional_lists):
     """The applyInPandas face of a matcher core: decode the bucket
-    group, match, frame the rows. ``.lists`` is the pandas-free core
+    group (positional lists, or ``bm25._decode_lists`` for the dismax
+    core), match, frame the rows. ``.lists`` is the pandas-free core
     (the serving entry), so Spark and serving share one matcher."""
 
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        docs, sc = lists(_decode_positional_lists(pdf, excl))
+        docs, sc = lists(decode(pdf, excl))
         return pd.DataFrame({"doc_id": docs, "score": sc})
 
     score_group.lists = lists

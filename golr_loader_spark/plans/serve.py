@@ -661,72 +661,54 @@ class LocalSearcher:
     ) -> list[tuple[int, float]]:
         """Serving-path eDisMax (Solr defType=edismax analog — see
         ``plans.dismax`` for semantics): per-word DisjunctionMax
-        across the qf fields with tie breaker and mm gating, same
-        bucket factory as the distributed ``dismax.search_dismax``,
-        results identical by construction. ``pf``/``pf2``/``pf3``
-        (+ ``ps``/``ps2``/``ps3``) add Solr phrase boosting over a
-        positional index root (see ``dismax.pf_clause_list``)."""
-        from golr_loader_spark.plans.bm25 import _norm_excl
-        from golr_loader_spark.plans.dismax import (
-            _analyze_qwords,
-            _dismax_bucket_factory,
-            _dismax_weights,
-            parse_mm,
-            parse_qf,
-            pf_clause_list,
+        across the qf fields with tie breaker and mm gating.
+        ``pf``/``pf2``/``pf3`` (+ ``ps``/``ps2``/``ps3``) add Solr
+        phrase boosting over a positional index root (see
+        ``dismax.pf_clause_list``). The plan of the distributed
+        ``dismax.search_dismax``, applied by ``_run_dismax``."""
+        return self._run_dismax(
+            query, False, qf, k, tie, mm, (pf, pf2, pf3, ps, ps2, ps3)
         )
 
-        qf_map = parse_qf(qf)
-        qwords = _analyze_qwords(query, qf_map, self.cfg)
-        if not qwords:
-            return []
-        boost_clauses = pf_clause_list(
-            query.split(), pf, pf2, pf3, ps, ps2, ps3, cfg=self.cfg
-        )
-        mm_count = parse_mm(mm, len(qwords))
-        all_terms = sorted({t for pf_ in qwords for ts in pf_.values() for t in ts})
-        idf = {
-            (r["term"], r["field"]): bm25_idf(self.n_docs, int(r["df"]))
-            for r in self._term_rows(all_terms)
-        }
-        weights = _dismax_weights(idf, qf_map, self.cfg)
-        if not weights:
-            return []
-        score_group = _dismax_bucket_factory(
-            qwords, weights, self.avgdl, self.cfg,
-            k if not boost_clauses else self.n_docs,
-            float(tie), mm_count, _norm_excl(self.tombstones),
-        )
-        blocks = self._read_blocks(all_terms)
-        if not len(blocks):
-            return []
-        parts = [
-            score_group(pdf) for _b, pdf in blocks.groupby("bucket", sort=False)
-        ]
-        allp = pd.concat(parts, ignore_index=True)
-        scores = {
-            int(r.doc_id): float(r.score) for r in allp.itertuples(index=False)
-        }
-        scores = self._apply_pf_boosts_local(scores, boost_clauses)
-        out = sorted(scores.items(), key=lambda x: (-x[1], x[0]))[:k]
-        return [(d, s) for d, s in out]
+    def _run_dismax(
+        self, query: str, edismax: bool, qf, k: int, tie, mm, pfs
+    ) -> list[tuple[int, float]]:
+        """Apply a ``dismax._plan`` — the serving executor: the dismax
+        core run once over the cached whole-index ``_bm25_lists``, each
+        phrase step per field through ``search_phrase``, dismax-combined
+        and joined as the plan says (``_join_scores``). No pandas object
+        is built."""
+        from golr_loader_spark.plans.dismax import _dismax_bucket_factory, _plan
 
-    def _apply_pf_boosts_local(
-        self,
-        scores: dict[int, float],
-        boost_clauses: list[tuple[str, str, float, int]],
-    ) -> dict[int, float]:
-        """Serving twin of ``dismax._apply_pf_boosts``: add each
-        phrase clause's ``boost × phrase_score`` to docs ALREADY in
-        the main match set (left-outer semantics — phrase-only docs
-        are never admitted)."""
-        for text, f, b, slop in boost_clauses:
-            for d, s in self.search_phrase(
-                text, k=self.n_docs, slop=slop, field=f
-            ):
-                if d in scores:
-                    scores[d] += s * b
-        return scores
+        plan = _plan(query, edismax, qf, self.cfg, self._idf, tie, mm, pfs)
+        if plan.none:
+            return []
+        scores: dict[int, float] = {}
+        if plan.weights:
+            core = _dismax_bucket_factory(
+                plan, self.avgdl, self.cfg, plan.scorer_k(k, self.n_docs), None
+            )
+            ids, sc = core.lists(self._bm25_lists(plan.read))
+            scores = dict(zip(ids.tolist(), sc.tolist()))
+        for _occur, ph, fields, how in plan.steps:
+            per_f = [
+                {
+                    d: s * b
+                    for d, s in self.search_phrase(
+                        ph.text, k=self.n_docs, slop=ph.slop, field=f
+                    )
+                }
+                for f, b in fields.items()
+            ]
+            part: dict[int, float] = {}
+            for d in set().union(*per_f):
+                vals = [m.get(d, 0.0) for m in per_f]
+                mx = max(vals)
+                part[d] = (mx + plan.tie * (sum(vals) - mx)) * float(ph.boost)
+            scores = _join_scores(scores, part, how)
+        if plan.vet:
+            scores = self._vet(scores, plan.prohibited)
+        return sorted(scores.items(), key=lambda x: (-x[1], x[0]))[:k]
 
     def suggest(
         self,
@@ -932,191 +914,12 @@ class LocalSearcher:
         query syntax — see ``dismax.search_edismax``): term/phrase
         clauses with +/- occurs, explicit field: overrides, per-word
         clause boosts, dismax across qf with tie, mm over optional
-        words, pf/pf2/pf3 phrase boosting. Mirrors the distributed
-        path clause for clause."""
-        from golr_loader_spark.plans.bm25 import _norm_excl
-        from golr_loader_spark.plans.dismax import (
-            _dismax_bucket_factory,
-            parse_mm,
-            parse_qf,
-            pf_clause_list,
+        words, query-time single-word synonyms, pf/pf2/pf3 phrase
+        boosting. The plan of the distributed path, applied by
+        ``_run_dismax``."""
+        return self._run_dismax(
+            query, True, qf, k, tie, mm, (pf, pf2, pf3, ps, ps2, ps3)
         )
-        from golr_loader_spark.plans.facets import _match_bucket_factory
-        from golr_loader_spark.plans.lucene import Phrase, Term, parse_lucene
-
-        qf_map = parse_qf(qf)
-        for f in qf_map:
-            if f not in self.cfg.fields:
-                raise ValueError(
-                    f"qf field {f!r} not in config ({list(self.cfg.fields)})"
-                )
-        clauses = parse_lucene(query)
-        if not clauses:
-            return []
-
-        qwords: list[dict[str, list[str]]] = []
-        required: list[bool] = []
-        word_boosts: list[float] = []
-        prohibited: set[tuple[str, str]] = set()
-        phrases: list[tuple[str, "Phrase"]] = []
-        pf_words: list[str] = []  # bare non-negative words, clause order
-        for occur, node in clauses:
-            if isinstance(node, Phrase):
-                phrases.append((occur, node))
-                continue
-            if not isinstance(node, Term):
-                raise ValueError(
-                    f"edismax supports term and phrase clauses only, got "
-                    f"{type(node).__name__} — use query()"
-                )
-            if occur != "MUST_NOT" and not node.field:
-                pf_words.append(node.text)
-            fields = (
-                {node.field: qf_map.get(node.field, 1.0)}
-                if node.field
-                else qf_map
-            )
-            if node.field and node.field not in self.cfg.fields:
-                raise ValueError(f"unknown field {node.field!r}")
-            per_field: dict[str, list[str]] = {}
-            for f in fields:
-                terms = analyze_query(node.text, self.cfg.fields[f][0], self.cfg.chain)
-                if terms:
-                    per_field[f] = terms
-            if occur == "MUST_NOT":
-                for f in fields:
-                    for t in per_field.get(f, []):
-                        prohibited.add((t, f))
-                continue
-            if not per_field:
-                if occur == "MUST":
-                    return []
-                continue
-            qwords.append(per_field)
-            required.append(occur == "MUST")
-            word_boosts.append(float(node.boost))
-
-        if not qwords and not phrases:
-            return []
-        boost_clauses = pf_clause_list(
-            pf_words, pf, pf2, pf3, ps, ps2, ps3, cfg=self.cfg
-        )
-        mm_count = parse_mm(mm, sum(1 for r in required if not r))
-
-        scores: dict[int, float] = {}
-        matched_bool = False
-        if qwords:
-            all_terms = sorted(
-                {t for pf in qwords for ts in pf.values() for t in ts}
-            )
-            idf = {
-                (r["term"], r["field"]): bm25_idf(self.n_docs, int(r["df"]))
-                for r in self._term_rows(all_terms)
-            }
-            weights: dict[tuple[str, str], float] = {}
-            for pf in qwords:
-                for f, ts in pf.items():
-                    b = qf_map.get(f, 1.0)
-                    for t in ts:
-                        i = idf.get((t, f))
-                        if i is not None:
-                            weights[(t, f)] = (
-                                self.cfg.fields[f][1] * b * i
-                                * (self.cfg.k1 + 1.0)
-                            )
-            if not weights and any(required):
-                return []
-            if weights:
-                score_group = _dismax_bucket_factory(
-                    qwords, weights, self.avgdl, self.cfg, self.n_docs,
-                    float(tie), mm_count, _norm_excl(self.tombstones),
-                    required=required, word_boosts=word_boosts,
-                )
-                blocks = self._read_blocks(all_terms)
-                if len(blocks):
-                    parts = [
-                        score_group(pdf)
-                        for _b, pdf in blocks.groupby("bucket", sort=False)
-                    ]
-                    allp = pd.concat(parts, ignore_index=True)
-                    scores = {
-                        int(r.doc_id): float(r.score)
-                        for r in allp.itertuples(index=False)
-                    }
-                elif any(required):
-                    return []
-                matched_bool = True
-            elif any(required):
-                return []
-
-        has_must = any(required)
-        phrases.sort(key=lambda c: c[0] == "MUST_NOT")
-        for occur, ph in phrases:
-            fields = [ph.field] if ph.field else sorted(qf_map)
-            per_f: list[dict[int, float]] = []
-            for f in fields:
-                b = qf_map.get(f, 1.0)
-                per_f.append(
-                    {
-                        d: s * b
-                        for d, s in self.search_phrase(
-                            ph.text, k=self.n_docs, slop=ph.slop, field=f
-                        )
-                    }
-                )
-            pres: dict[int, float] = {}
-            for d in set().union(*per_f):
-                vals = [m.get(d, 0.0) for m in per_f]
-                mx = max(vals)
-                pres[d] = (mx + float(tie) * (sum(vals) - mx)) * float(
-                    ph.boost
-                )
-            if occur == "MUST_NOT":
-                if matched_bool or scores:
-                    scores = {
-                        d: s for d, s in scores.items() if d not in pres
-                    }
-                continue
-            if not matched_bool and not scores:
-                scores = dict(pres)
-                matched_bool = True
-                if occur == "MUST":
-                    has_must = True
-                continue
-            if occur == "MUST":
-                if has_must:
-                    scores = {
-                        d: s + pres[d]
-                        for d, s in scores.items()
-                        if d in pres
-                    }
-                else:
-                    scores = {
-                        d: scores.get(d, 0.0) + pv for d, pv in pres.items()
-                    }
-                has_must = True
-            else:
-                if has_must:
-                    scores = {
-                        d: s + pres.get(d, 0.0) for d, s in scores.items()
-                    }
-                else:
-                    for d, pv in pres.items():
-                        scores[d] = scores.get(d, 0.0) + pv
-        if prohibited and scores:
-            # always relational: the dismax factory never vets
-            # MUST_NOT members (they carry no weights)
-            tmap: dict[str, list[str]] = {}
-            for t, f in prohibited:
-                tmap.setdefault(t, []).append(f)
-            blocks = self._read_blocks(sorted(tmap))
-            if len(blocks):
-                fn = _match_bucket_factory(tmap, None, self.tombstones)
-                neg = {int(d) for d in fn(blocks)["doc_id"].to_numpy()}
-                scores = {d: s for d, s in scores.items() if d not in neg}
-        scores = self._apply_pf_boosts_local(scores, boost_clauses)
-        out = sorted(scores.items(), key=lambda x: (-x[1], x[0]))[:k]
-        return [(int(d), float(s)) for d, s in out]
 
     def more_like_this(
         self,
@@ -1624,21 +1427,23 @@ class LocalSearcher:
                 scores, {d: s * float(node.boost) for d, s in part}, how
             )
         if plan.vet:
-            # drop docs holding a prohibited member, read from the lists
-            # the scorer uses (a field-restricted member masks only its
-            # field's list)
-            bad = plan.prohibited
-            lists = self._bm25_lists(
-                sorted({m if isinstance(m, str) else m[0] for m in bad})
-            )
-            neg = {
-                int(d)
-                for (t, f), lst in lists.items()
-                if t in bad or (t, f) in bad
-                for d in lst[0]
-            }
-            scores = {d: s for d, s in scores.items() if d not in neg}
+            scores = self._vet(scores, plan.prohibited)
         return scores
+
+    def _vet(self, scores: dict[int, float], bad: set) -> dict[int, float]:
+        """Drop docs holding a prohibited member, read from the lists
+        the scorer uses (a field-restricted member masks only its
+        field's list) — the dict face of ``lucene._vet``."""
+        lists = self._bm25_lists(
+            sorted({m if isinstance(m, str) else m[0] for m in bad})
+        )
+        neg = {
+            int(d)
+            for (t, f), lst in lists.items()
+            if t in bad or (t, f) in bad
+            for d in lst[0]
+        }
+        return {d: s for d, s in scores.items() if d not in neg}
 
     def _doc_tfdl(
         self, terms: list[str], doc_id: int

@@ -525,3 +525,300 @@ def test_pf_serving_and_sharded_parity(tmp_path, spark, pix, pcfg):
     want = rows(search_edismax(pix, k=20, cfg=pcfg, **e))
     assert ls.search_edismax(k=20, **e) == want
     assert ss.search_edismax(k=20, **e) == want
+
+
+# ---------------------------------------------------------- plan shape
+
+
+def test_edismax_must_not_runs_in_the_scorer(ix, cfg, plan_nodes):
+    """A term MUST_NOT is dropped inside the one bucket-grouped scorer:
+    no second postings decode, no anti-join."""
+    from golr_loader_spark.plans.dismax import search_edismax
+
+    df = search_edismax(ix, "data -spark", "text title", k=10, cfg=cfg)
+    assert plan_nodes(df).count("FlatMapGroupsInPandas") == 1
+    assert "LeftAnti" not in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_edismax_unknown_phrase_field_raises_on_both_faces(pix, pcfg, ls_pix):
+    from golr_loader_spark.plans.dismax import search_edismax
+
+    for search in (
+        lambda q: search_edismax(pix, q, "text", k=5, cfg=pcfg),
+        lambda q: ls_pix.search_edismax(q, "text", k=5),
+    ):
+        with pytest.raises(ValueError, match="unknown field"):
+            search('data nosuch:"data query"')
+
+
+# ---------------------------------------------------------- serving goldens
+
+# sha256 digests (first 16 hex) of the serving face's answers, taken
+# from the tree in which LocalSearcher walked dismax/edismax clauses
+# with its own copy of the Spark code. Each section maps a case to its
+# top-k ([doc_id, score] with ``repr`` floats, an exact round trip) or
+# to the error it raised (type and the message up to the face's "use
+# ..." hint, which differed between the faces there).
+SERVING_GOLDENS = {
+    "dismax": "f9e385fa10909249",
+    "edismax": "c9f01f26bd127a0e",
+    "fuzz": "381622aeb2d6343c",
+    "pf": "181719c5b975bf41",
+}
+DISMAX_CASES = [
+    ("data query", "text title^2", 0.0, 0),
+    ("data query spark", "text title^1.5", 0.3, 2),
+    ("data", "text", 0.5, 0),
+    ("engine runs", "text title", 0.0, "100%"),
+]
+EDISMAX_CASES = [
+    ("data query", "text title^2", 0.3, 0),
+    ("+data spark", "text title", 0.0, 0),
+    ("data -spark", "text title", 0.0, 0),
+    ("title:data spark^2", "text title^2", 0.2, 0),
+    ('"data query" engine', "text title^2", 0.25, 0),
+    ('engine +"data query"', "text title", 0.1, 0),
+    ("data query spark", "text title", 0.0, 2),
+]
+PF_CASES = [
+    dict(query="data query", qf="text title^2", pf="text^2"),
+    dict(query="data query spark", qf="text", pf="text", pf2="title^2", ps=1),
+    dict(query="data query spark", qf="text title", pf3="text^4", ps3=2),
+    dict(query="data query", qf="text", pf="text title^3", tie=0.3, mm=1),
+]
+EDISMAX_PF_CASE = dict(
+    query="data query +spark", qf="text title", pf="text^2", ps=1
+)
+
+
+def _fuzz_cases(seed: int = 11, n: int = 25) -> list[tuple]:
+    """The (query, qf, tie, mm) stream of test_fuzz_edismax_serving_parity."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = ["data", "query", "spark", "engine", "runs", "build", "plan", "zzz"]
+
+    def clause():
+        occ = rng.choice(["", "", "", "+", "-"])
+        r = rng.random()
+        if r < 0.25:
+            ph = " ".join(rng.sample(vocab[:5], 2))
+            return f'{occ}"{ph}"'
+        w = rng.choice(vocab)
+        if r < 0.40:
+            return f"{occ}title:{w}"
+        if r < 0.50:
+            return f"{occ}{w}^2"
+        return occ + w
+
+    cases = []
+    for _ in range(n):
+        q = " ".join(clause() for _ in range(rng.randint(1, 4)))
+        qf = rng.choice(["text title", "text title^2", "text^0.5 title"])
+        tie = rng.choice([0.0, 0.2, 1.0])
+        mm = rng.choice([0, 1, "50%"])
+        cases.append((q, qf, tie, mm))
+    return cases
+
+
+def _served(fn) -> list:
+    try:
+        return [[int(d), float(s)] for d, s in fn()]
+    except ValueError as e:
+        return ["error", type(e).__name__, str(e).split(" — ")[0]]
+
+
+def _digest(obj) -> str:
+    import hashlib
+    import json
+
+    return hashlib.sha256(
+        json.dumps(obj, sort_keys=True).encode()
+    ).hexdigest()[:16]
+
+
+@pytest.fixture(scope="module")
+def ls_ix(ix, cfg, tmp_path_factory):
+    from golr_loader_spark.plans.build_index import write_index
+    from golr_loader_spark.plans.serve import LocalSearcher
+
+    root = str(tmp_path_factory.mktemp("dmx_goldens") / "ix")
+    write_index(ix, root, term_partitions=2)
+    return LocalSearcher(root, cfg)
+
+
+@pytest.fixture(scope="module")
+def ls_pix(pix, pcfg, tmp_path_factory):
+    from golr_loader_spark.plans.build_index import write_index
+    from golr_loader_spark.plans.serve import LocalSearcher
+
+    root = str(tmp_path_factory.mktemp("edx_goldens") / "pix")
+    write_index(pix, root, term_partitions=2)
+    return LocalSearcher(root, pcfg)
+
+
+def test_serving_goldens(ls_ix, ls_pix):
+    def run(search, cases):
+        return {
+            repr(c): _served(lambda c=c: search(*c[:2], k=20, tie=c[2], mm=c[3]))
+            for c in cases
+        }
+
+    sections = {
+        "dismax": run(ls_ix.search_dismax, DISMAX_CASES),
+        "edismax": run(ls_pix.search_edismax, EDISMAX_CASES),
+        "fuzz": run(ls_pix.search_edismax, _fuzz_cases()),
+        "pf": {
+            **{
+                repr(c): _served(lambda c=c: ls_pix.search_dismax(k=20, **c))
+                for c in PF_CASES
+            },
+            "edismax": _served(
+                lambda: ls_pix.search_edismax(k=20, **EDISMAX_PF_CASE)
+            ),
+        },
+    }
+    assert {n: _digest(v) for n, v in sections.items()} == SERVING_GOLDENS
+
+
+# ---------------------------------------------------------- plan shape
+
+
+def test_edismax_must_not_runs_in_the_scorer(ix, cfg, plan_nodes):
+    """A term MUST_NOT is dropped inside the one bucket-grouped scorer:
+    no second postings decode, no anti-join."""
+    from golr_loader_spark.plans.dismax import search_edismax
+
+    df = search_edismax(ix, "data -spark", "text title", k=10, cfg=cfg)
+    assert plan_nodes(df).count("FlatMapGroupsInPandas") == 1
+    assert "LeftAnti" not in df._jdf.queryExecution().executedPlan().toString()
+
+
+# ---------------------------------------------------------- serving goldens
+
+# sha256 digests (first 16 hex) of the serving face's answers, taken
+# from the tree in which LocalSearcher walked dismax/edismax clauses
+# with its own copy of the Spark code. Each section maps a case to its
+# top-k ([doc_id, score] with ``repr`` floats, an exact round trip) or
+# to the error it raised (type and the message up to the face's "use
+# ..." hint, which differed between the faces there).
+SERVING_GOLDENS = {
+    "dismax": "f9e385fa10909249",
+    "edismax": "c9f01f26bd127a0e",
+    "fuzz": "381622aeb2d6343c",
+    "pf": "181719c5b975bf41",
+}
+DISMAX_CASES = [
+    ("data query", "text title^2", 0.0, 0),
+    ("data query spark", "text title^1.5", 0.3, 2),
+    ("data", "text", 0.5, 0),
+    ("engine runs", "text title", 0.0, "100%"),
+]
+EDISMAX_CASES = [
+    ("data query", "text title^2", 0.3, 0),
+    ("+data spark", "text title", 0.0, 0),
+    ("data -spark", "text title", 0.0, 0),
+    ("title:data spark^2", "text title^2", 0.2, 0),
+    ('"data query" engine', "text title^2", 0.25, 0),
+    ('engine +"data query"', "text title", 0.1, 0),
+    ("data query spark", "text title", 0.0, 2),
+]
+PF_CASES = [
+    dict(query="data query", qf="text title^2", pf="text^2"),
+    dict(query="data query spark", qf="text", pf="text", pf2="title^2", ps=1),
+    dict(query="data query spark", qf="text title", pf3="text^4", ps3=2),
+    dict(query="data query", qf="text", pf="text title^3", tie=0.3, mm=1),
+]
+EDISMAX_PF_CASE = dict(
+    query="data query +spark", qf="text title", pf="text^2", ps=1
+)
+
+
+def _fuzz_cases(seed: int = 11, n: int = 25) -> list[tuple]:
+    """The (query, qf, tie, mm) stream of test_fuzz_edismax_serving_parity."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = ["data", "query", "spark", "engine", "runs", "build", "plan", "zzz"]
+
+    def clause():
+        occ = rng.choice(["", "", "", "+", "-"])
+        r = rng.random()
+        if r < 0.25:
+            ph = " ".join(rng.sample(vocab[:5], 2))
+            return f'{occ}"{ph}"'
+        w = rng.choice(vocab)
+        if r < 0.40:
+            return f"{occ}title:{w}"
+        if r < 0.50:
+            return f"{occ}{w}^2"
+        return occ + w
+
+    cases = []
+    for _ in range(n):
+        q = " ".join(clause() for _ in range(rng.randint(1, 4)))
+        qf = rng.choice(["text title", "text title^2", "text^0.5 title"])
+        tie = rng.choice([0.0, 0.2, 1.0])
+        mm = rng.choice([0, 1, "50%"])
+        cases.append((q, qf, tie, mm))
+    return cases
+
+
+def _served(fn) -> list:
+    try:
+        return [[int(d), float(s)] for d, s in fn()]
+    except ValueError as e:
+        return ["error", type(e).__name__, str(e).split(" — ")[0]]
+
+
+def _digest(obj) -> str:
+    import hashlib
+    import json
+
+    return hashlib.sha256(
+        json.dumps(obj, sort_keys=True).encode()
+    ).hexdigest()[:16]
+
+
+@pytest.fixture(scope="module")
+def ls_ix(ix, cfg, tmp_path_factory):
+    from golr_loader_spark.plans.build_index import write_index
+    from golr_loader_spark.plans.serve import LocalSearcher
+
+    root = str(tmp_path_factory.mktemp("dmx_goldens") / "ix")
+    write_index(ix, root, term_partitions=2)
+    return LocalSearcher(root, cfg)
+
+
+@pytest.fixture(scope="module")
+def ls_pix(pix, pcfg, tmp_path_factory):
+    from golr_loader_spark.plans.build_index import write_index
+    from golr_loader_spark.plans.serve import LocalSearcher
+
+    root = str(tmp_path_factory.mktemp("edx_goldens") / "pix")
+    write_index(pix, root, term_partitions=2)
+    return LocalSearcher(root, pcfg)
+
+
+def test_serving_goldens(ls_ix, ls_pix):
+    def run(search, cases):
+        return {
+            repr(c): _served(lambda c=c: search(*c[:2], k=20, tie=c[2], mm=c[3]))
+            for c in cases
+        }
+
+    sections = {
+        "dismax": run(ls_ix.search_dismax, DISMAX_CASES),
+        "edismax": run(ls_pix.search_edismax, EDISMAX_CASES),
+        "fuzz": run(ls_pix.search_edismax, _fuzz_cases()),
+        "pf": {
+            **{
+                repr(c): _served(lambda c=c: ls_pix.search_dismax(k=20, **c))
+                for c in PF_CASES
+            },
+            "edismax": _served(
+                lambda: ls_pix.search_edismax(k=20, **EDISMAX_PF_CASE)
+            ),
+        },
+    }
+    assert {n: _digest(v) for n, v in sections.items()} == SERVING_GOLDENS

@@ -215,3 +215,97 @@ def test_phrase_serving_with_decoded_cache_off(cfg, live_root):
         assert off.search_span_near(terms, 3) == on.search_span_near(terms, 3)
     for q in ('"data query" spark', '+data -"query data"'):
         assert off.query(q) == on.query(q), q
+
+
+# (edismax, query, options) over the one-field live root: term MUST_NOT,
+# phrase clauses and pf boosts, answered from changed segments
+DISMAX_CASES = [
+    (False, "data query", dict(tie=0.1)),
+    (False, "data query spark", dict(mm=2, pf="text^2", pf2="text", ps=1)),
+    (True, "data -spark", {}),
+    (True, '+data "query data"~2 -engine', dict(pf="text^3")),
+    (True, 'query "data query" -"data data"', dict(tie=0.3, pf3="text")),
+]
+
+
+def _dismax_serve(ls: LocalSearcher, edismax: bool, q: str, kw: dict):
+    search = ls.search_edismax if edismax else ls.search_dismax
+    return search(q, "text", k=10, **kw)
+
+
+def test_dismax_parity_on_live_root(spark, cfg, live_root):
+    from golr_loader_spark.plans.dismax import search_dismax, search_edismax
+
+    ix = read_index(spark, live_root, cfg)
+    excl = load_tombstones(spark, live_root)
+    ls = LocalSearcher(live_root, cfg)
+    for edismax, q, kw in DISMAX_CASES:
+        search = search_edismax if edismax else search_dismax
+        want = _rows(search(ix, q, "text", k=10, cfg=cfg, exclude_ids=excl, **kw))
+        assert want and not set(DELETED) & {d for d, _s in want}
+        assert _dismax_serve(ls, edismax, q, kw) == want, q
+        # a repeated query is answered from the decoded lists
+        misses = ls._list_cache.misses
+        assert _dismax_serve(ls, edismax, q, kw) == want, q
+        assert ls._list_cache.misses == misses, q
+
+
+def test_dismax_serving_builds_no_pandas(cfg, live_root, monkeypatch):
+    import pandas as pd
+
+    ls = LocalSearcher(live_root, cfg)
+
+    def built(*_a, **_kw):
+        raise AssertionError("serving dismax built a pandas object")
+
+    monkeypatch.setattr(pd, "DataFrame", built)
+    monkeypatch.setattr(pd, "Series", built)
+    for edismax, q, kw in DISMAX_CASES:
+        assert _dismax_serve(ls, edismax, q, kw), q
+
+
+# (edismax, query, options) over the one-field live root: term MUST_NOT,
+# phrase clauses and pf boosts, answered from changed segments
+DISMAX_CASES = [
+    (False, "data query", dict(tie=0.1)),
+    (False, "data query spark", dict(mm=2, pf="text^2", pf2="text", ps=1)),
+    (True, "data -spark", {}),
+    (True, '+data "query data"~2 -engine', dict(pf="text^3")),
+    (True, 'query "data query" -"data data"', dict(tie=0.3, pf3="text")),
+]
+
+
+def _dismax_serve(ls: LocalSearcher, edismax: bool, q: str, kw: dict):
+    search = ls.search_edismax if edismax else ls.search_dismax
+    return search(q, "text", k=10, **kw)
+
+
+def test_dismax_parity_on_live_root(spark, cfg, live_root):
+    from golr_loader_spark.plans.dismax import search_dismax, search_edismax
+
+    ix = read_index(spark, live_root, cfg)
+    excl = load_tombstones(spark, live_root)
+    ls = LocalSearcher(live_root, cfg)
+    for edismax, q, kw in DISMAX_CASES:
+        search = search_edismax if edismax else search_dismax
+        want = _rows(search(ix, q, "text", k=10, cfg=cfg, exclude_ids=excl, **kw))
+        assert want and not set(DELETED) & {d for d, _s in want}
+        assert _dismax_serve(ls, edismax, q, kw) == want, q
+        # a repeated query is answered from the decoded lists
+        misses = ls._list_cache.misses
+        assert _dismax_serve(ls, edismax, q, kw) == want, q
+        assert ls._list_cache.misses == misses, q
+
+
+def test_dismax_serving_builds_no_pandas(cfg, live_root, monkeypatch):
+    import pandas as pd
+
+    ls = LocalSearcher(live_root, cfg)
+
+    def built(*_a, **_kw):
+        raise AssertionError("serving dismax built a pandas object")
+
+    monkeypatch.setattr(pd, "DataFrame", built)
+    monkeypatch.setattr(pd, "Series", built)
+    for edismax, q, kw in DISMAX_CASES:
+        assert _dismax_serve(ls, edismax, q, kw), q

@@ -154,3 +154,37 @@ def test_dismax_single_word_synonym(setup, spark, corpus):
     got = rows(search_dismax(ix, "query", {"text": 1.0}, k=10, cfg=cfg_syn))
     # lookup-only docs (2, 4) match the expanded word clause
     assert {d for d, _s in got} >= {1, 2, 4}
+
+
+def test_serving_edismax_synonyms_equal_spark(setup):
+    """Serving edismax analyzes words with the single-word synonyms
+    too, so lookup-only docs match on both faces."""
+    from golr_loader_spark.plans.dismax import search_edismax
+    from golr_loader_spark.plans.serve import LocalSearcher
+
+    ix, root, _cfg_plain, cfg_syn = setup
+    ls = LocalSearcher(root, cfg_syn)
+    for q in ("query", "+query planner", "query -stream"):
+        want = [
+            (r["doc_id"], r["score"])
+            for r in search_edismax(ix, q, {"text": 1.0}, k=10, cfg=cfg_syn).collect()
+        ]
+        assert want
+        assert ls.search_edismax(q, {"text": 1.0}, k=10) == want, q
+
+
+def test_serving_edismax_synonyms_equal_spark(setup):
+    """Serving edismax analyzes words with the single-word synonyms
+    too, so lookup-only docs match on both faces."""
+    from golr_loader_spark.plans.dismax import search_edismax
+    from golr_loader_spark.plans.serve import LocalSearcher
+
+    ix, root, _cfg_plain, cfg_syn = setup
+    ls = LocalSearcher(root, cfg_syn)
+    for q in ("query", "+query planner", "query -stream"):
+        want = [
+            (r["doc_id"], r["score"])
+            for r in search_edismax(ix, q, {"text": 1.0}, k=10, cfg=cfg_syn).collect()
+        ]
+        assert want
+        assert ls.search_edismax(q, {"text": 1.0}, k=10) == want, q
