@@ -80,6 +80,17 @@ POSTINGS_SCHEMA = pa.schema(
 POSTINGS_SCHEMA_POS = POSTINGS_SCHEMA.append(pa.field("poss", pa.binary()))
 
 
+def _block_ddl(positions: bool) -> str:
+    """Spark DDL of the block table ``build_postings_packed`` declares
+    (before its ``segment`` column)."""
+    return (
+        "term string, field string, bucket int, block_id int, n int, "
+        "doc_id_first long, doc_ids binary, tfs binary, dls binary, "
+        "max_tf int, min_dl int, tf_sum long"
+        + (", poss binary" if positions else "")
+    )
+
+
 def bucket_of(doc_id_col, bucket_bits: int, id_space_bits: int = 64):
     """Monotone doc_id → bucket (arithmetic shift keeps sign order).
     ``id_space_bits``: 64 for hash ids, ceil(log2 N) for dense ids."""
@@ -661,16 +672,9 @@ def build_postings_packed(
     packed = documents.select(*cols).mapInArrow(
         _pack_batches(cfg, n_red, lut), "pid int, blob binary"
     )
-    spark_schema = (
-        "term string, field string, bucket int, block_id int, n int, "
-        "doc_id_first long, doc_ids binary, tfs binary, dls binary, "
-        "max_tf int, min_dl int, tf_sum long"
-    )
-    if cfg.positions:
-        spark_schema += ", poss binary"
     return (
         packed.repartition(n_red, F.col("pid"))
-        .mapInArrow(_unpack_encode(cfg, spill_bytes), spark_schema)
+        .mapInArrow(_unpack_encode(cfg, spill_bytes), _block_ddl(cfg.positions))
         .withColumn("segment", F.lit(0))
     )
 
@@ -772,6 +776,46 @@ def _write_config(cfg: IndexConfig, root: str) -> None:
         json.dump(cfg.to_dict(), fh, indent=1, sort_keys=True)
 
 
+def _write_postings(
+    postings: DataFrame, path: str, term_partitions: int, mode: str = "overwrite"
+) -> None:
+    """Write block rows range-partitioned and sorted by term: small row
+    groups on term-sorted files let per-row-group min/max stats prune
+    single-term lookups to a few groups instead of whole files (both for
+    Catalyst PushedFilters and the pyarrow LocalSearcher path)."""
+    (
+        postings.repartitionByRange(term_partitions, "term")
+        .sortWithinPartitions("term", "field", "bucket", "block_id")
+        .write.mode(mode)
+        .option("parquet.block.size", str(4 << 20))
+        .parquet(path)
+    )
+
+
+def _run_writes(writes: list) -> None:
+    """Run table writes that target disjoint directories and share no
+    lineage barrier as CONCURRENT jobs from a small driver thread pool
+    (guide §2.6): each write's straggler tail is back-filled by the next
+    table's tasks instead of idling the cluster between sequential jobs.
+    Returns once every write has finished; raises the first failure."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futs = [pool.submit(w) for w in writes]
+        for f in futs:
+            f.result()
+
+
+def _docs_manifest(documents: DataFrame) -> DataFrame:
+    """(doc_id, content_sha256) rows of the ``{root}/docs`` manifest."""
+    sha = (
+        F.col("content_sha256")
+        if "content_sha256" in documents.columns
+        else F.lit(None).cast("string")
+    )
+    return documents.select("doc_id", sha.alias("content_sha256"))
+
+
 def write_index(
     index: InvertedIndex,
     root: str,
@@ -790,25 +834,10 @@ def write_index(
     accounting (plans.maintenance.upsert_docs) and the per-row
     sha256 invariant surfaced at the index root.
 
-    The per-table writes target disjoint directories and share no
-    lineage barrier, so they run as CONCURRENT jobs from a small
-    driver thread pool (guide §2.6): each write's straggler tail is
-    back-filled by the next table's tasks instead of idling the
-    cluster between sequential jobs."""
-    from concurrent.futures import ThreadPoolExecutor
+    The per-table writes run concurrently (``_run_writes``)."""
 
     def _postings() -> None:
-        (
-            index.postings.repartitionByRange(term_partitions, "term")
-            .sortWithinPartitions("term", "field", "bucket", "block_id")
-            .write.mode("overwrite")
-            # small row groups: with term-sorted files, per-row-group
-            # min/max stats then prune single-term lookups to a few
-            # groups instead of whole files (both for Catalyst
-            # PushedFilters and the pyarrow LocalSearcher path)
-            .option("parquet.block.size", str(4 << 20))
-            .parquet(f"{root}/postings")
-        )
+        _write_postings(index.postings, f"{root}/postings", term_partitions)
 
     def _term_stats() -> None:
         (
@@ -823,16 +852,9 @@ def write_index(
 
     jobs = [_postings, _term_stats, _stats]
     if documents is not None:
-        sha = (
-            F.col("content_sha256")
-            if "content_sha256" in documents.columns
-            else F.lit(None).cast("string")
-        )
 
         def _docs() -> None:
-            documents.select("doc_id", sha.alias("content_sha256")).write.mode(
-                "overwrite"
-            ).parquet(f"{root}/docs")
+            _docs_manifest(documents).write.mode("overwrite").parquet(f"{root}/docs")
 
         jobs.append(_docs)
     if facets is not None:
@@ -863,26 +885,57 @@ def write_index(
             )
 
         jobs.append(_stored)
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [pool.submit(j) for j in jobs]
-        for f in futs:
-            f.result()  # propagate the first failure
+    _run_writes(jobs)
     _write_config(index.cfg, root)
+
+
+# Spark DDL of the engine's metadata tables, as their writers lay them out
+_TABLE_DDL = {
+    "term_stats": "term string, field string, df long, cf long",
+    "stats": "field string, avgdl double, n_docs long",
+    "docs": "doc_id long, content_sha256 string",
+}
+
+
+def _read_table(spark: SparkSession, root: str, table: str) -> DataFrame:
+    """One of the engine's own tables at ``root`` (postings, term_stats,
+    stats, docs), read with the schema its writer declared: the block
+    table's is ``build_postings_packed``'s plus ``segment``, with
+    ``poss`` iff the root's ``config.json`` says ``positions``. A known
+    schema spares Spark its schema-inference job. A root without
+    ``config.json`` keeps inference (postings with ``mergeSchema``: base
+    files may predate the ``segment`` column)."""
+    import json
+    import os
+
+    p = f"{root}/config.json"
+    if not os.path.exists(p):
+        reader = spark.read
+        if table == "postings":
+            reader = reader.option("mergeSchema", "true")
+        return reader.parquet(f"{root}/{table}")
+    if table == "postings":
+        with open(p) as fh:
+            positions = bool(json.load(fh).get("positions", False))
+        ddl = _block_ddl(positions) + ", segment int"
+    else:
+        ddl = _TABLE_DDL[table]
+    return spark.read.schema(ddl).parquet(f"{root}/{table}")
 
 
 def read_index(
     spark: SparkSession, root: str, cfg: IndexConfig | None = None
 ) -> InvertedIndex:
-    # mergeSchema: a root can mix base files and appended upsert
-    # segments; files predating the segment column read as null → 0
-    postings = spark.read.option("mergeSchema", "true").parquet(f"{root}/postings")
+    # a root can mix base files and appended upsert segments; files
+    # predating the segment column read as null → 0
+    postings = _read_table(spark, root, "postings")
     if "segment" not in postings.columns:
         postings = postings.withColumn("segment", F.lit(0))
     else:
         postings = postings.fillna({"segment": 0})
     return InvertedIndex(
         postings=postings,
-        term_stats=spark.read.parquet(f"{root}/term_stats"),
-        stats=spark.read.parquet(f"{root}/stats"),
+        term_stats=_read_table(spark, root, "term_stats"),
+        stats=_read_table(spark, root, "stats"),
         cfg=cfg or IndexConfig(),
     )

@@ -22,6 +22,8 @@ would not be stable across runs).
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -96,7 +98,8 @@ def assign_dense_ids(
       3. row_number within each bucket ordered by (hash, repo, path,
          commit) — the tie-break makes order total even under hash
          collisions;
-      4. dense_id = bucket_offset + row_number - 1.
+      4. dense_id = bucket_offset + row_number - 1, the offset joined
+         on the bucket.
 
     The mapping is a pure function of the corpus content — identical
     across runs and partitionings. The original hash id is kept as
@@ -113,7 +116,12 @@ def assign_dense_ids(
     decision costs nothing; above ``broadcast_threshold`` rows the
     mapping would strain driver/executor memory and the code falls
     back to the window-over-full-rows plan (one payload shuffle —
-    the same cost a doc_id-keyed merge join would pay anyway).
+    the same cost a doc_id-keyed merge join would pay anyway). On
+    both plans the step-2 offsets reach the executors as a
+    ``(_rb, _off)`` relation of at most ``range_buckets`` rows, built
+    from one Arrow batch (a ``LocalTableScan``) and broadcast-joined
+    on ``_rb`` after the window: no per-offset literal, no
+    Python-worker stage, and the window stays partitioned by ``_rb``.
     """
     from pyspark.sql import Window
 
@@ -140,20 +148,23 @@ def assign_dense_ids(
             f"assign_dense_ids: {dup_keys} duplicate (doc_id, repo, path, "
             "commit) keys; deduplicate the documents first"
         )
-    counts = {int(r["_rb"]): int(r["n"]) for r in per_range}
-    offsets, acc = {}, 0
-    for b in sorted(counts):
-        offsets[b] = acc
-        acc += counts[b]
-    omap = F.create_map(
-        *[F.lit(x) for b, o in sorted(offsets.items()) for x in (b, o)]
+    # per-range offsets as ONE small relation (≤ range_buckets rows,
+    # built from one Arrow batch → LocalTableScan), broadcast-joined on
+    # _rb by either plan below
+    rbs = np.array(sorted(int(r["_rb"]) for r in per_range), dtype=np.int64)
+    n_of = {int(r["_rb"]): int(r["n"]) for r in per_range}
+    n_rb = np.array([n_of[b] for b in rbs], dtype=np.int64)
+    offsets = F.broadcast(
+        documents.sparkSession.createDataFrame(
+            pa.table({"_rb": rbs, "_off": np.cumsum(n_rb) - n_rb})
+        )
     )
+    dense = (F.col("_off") + F.col("_rn") - 1).cast("long")
     w = Window.partitionBy("_rb").orderBy("doc_id", "repo", "path", "commit")
-    n_total = acc
-    if n_total <= broadcast_threshold:
-        dense = (F.element_at(omap, F.col("_rb")) + F.col("_rn") - 1).cast("long")
+    if int(n_rb.sum()) <= broadcast_threshold:
         mapping = (
             narrow.withColumn("_rn", F.row_number().over(w))
+            .join(offsets, "_rb")
             .select(
                 F.col("doc_id").alias("_m_hash"),
                 F.col("repo").alias("_m_repo"),
@@ -183,15 +194,15 @@ def assign_dense_ids(
         )
     # fallback at mapping sizes past broadcastability: the original
     # window-over-full-rows plan (payload shuffled once, by _rb)
-    with_rb = documents.withColumn("_rb", rb)
     return (
-        with_rb.withColumn("_rn", F.row_number().over(w))
-        .withColumn("doc_hash", F.col("doc_id"))
-        .withColumn(
-            "doc_id",
-            (F.element_at(omap, F.col("_rb")) + F.col("_rn") - 1).cast("long"),
+        documents.withColumn("_rb", rb)
+        .withColumn("_rn", F.row_number().over(w))
+        .join(offsets, "_rb")
+        .select(
+            *[dense.alias("doc_id") if c == "doc_id" else F.col(c)
+              for c in documents.columns],
+            F.col("doc_id").alias("doc_hash"),
         )
-        .drop("_rb", "_rn")
     )
 
 

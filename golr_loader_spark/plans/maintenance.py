@@ -53,7 +53,12 @@ from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.functions.codec import binary_stream, varint_decode
 from golr_loader_spark.plans.build_index import (
     InvertedIndex,
+    _block_ddl,
+    _docs_manifest,
     _encode_groups,
+    _read_table,
+    _run_writes,
+    _write_postings,
     derived_stats,
     derived_term_stats,
 )
@@ -280,18 +285,11 @@ def compact_postings(
         postings = postings.withColumn("segment", F.lit(0))
     cols = [*_LIST_KEY, "segment", "block_id", "n", "doc_id_first",
             "doc_ids", "tfs", "dls"] + (["poss"] if has_pos else [])
-    schema = (
-        "term string, field string, bucket int, block_id int, n int, "
-        "doc_id_first long, doc_ids binary, tfs binary, dls binary, "
-        "max_tf int, min_dl int, tf_sum long"
-        + (", poss binary" if has_pos else "")
-        + ", segment int"
-    )
     return (
         postings.select(*cols)
         .repartition(*_LIST_KEY)
         .sortWithinPartitions(*_LIST_KEY, "segment", "block_id")
-        .mapInArrow(_compact_batches(excl, cfg), schema)
+        .mapInArrow(_compact_batches(excl, cfg), _block_ddl(has_pos) + ", segment int")
     )
 
 
@@ -372,7 +370,7 @@ def upsert_docs(
             "upsert requires the {root}/docs manifest — persist with "
             "write_index(..., documents=flattened_docs)"
         )
-    meta = spark.read.parquet(docs_path)
+    meta = _read_table(spark, root, "docs")
     incoming = documents.select("doc_id").distinct()
     # ONE driver job resolves membership AND the id list: left-join
     # incoming against the manifest and collect the (id, known) pairs
@@ -418,17 +416,9 @@ def upsert_docs(
     )
     tmp = f"{root}/.upsert_tmp"
     new_meta = meta.join(incoming, "doc_id", "left_anti").unionByName(
-        documents.select(
-            "doc_id",
-            (
-                F.col("content_sha256")
-                if "content_sha256" in documents.columns
-                else F.lit(None).cast("string")
-            ).alias("content_sha256"),
-        )
+        _docs_manifest(documents)
     )
-    new_meta.write.mode("overwrite").parquet(f"{tmp}/docs")
-    write_index(new_ix, tmp)
+    write_index(new_ix, tmp, documents=new_meta)
     doc_tables = _rewrite_doc_tables(
         spark, root, tmp, documents, incoming_ids, cfg
     )
@@ -470,13 +460,13 @@ def _facet_field_names(spark: SparkSession, root: str) -> list[str]:
     return sorted(set(col.to_pylist()))
 
 
-def _append_doc_tables(
+def _doc_table_appends(
     spark: SparkSession,
     root: str,
     documents: DataFrame,
     cfg: IndexConfig,
     segment: int,
-) -> list[str]:
+) -> list:
     """Lucene's full update contract for the doc-side tables: stored
     fields and facet rows (docValues) are SEGMENT-scoped — an update
     appends the new doc's rows tagged ``_seg = segment`` and readers
@@ -485,13 +475,12 @@ def _append_doc_tables(
     liveDocs behave in Lucene. Base rows written by write_index carry
     no ``_seg`` column and read as segment 0.
 
-    Incoming docs must carry every stored / faceted field — Solr's
-    all-fields-stored atomic-update precondition, surfaced as a clear
-    error instead of silent nulls."""
-    import os as _os
-
-    touched: list[str] = []
-    if _os.path.isdir(f"{root}/stored"):
+    Returns the appends as writes for ``_run_writes``; nothing is
+    written here. Incoming docs must carry every stored / faceted field
+    — Solr's all-fields-stored atomic-update precondition, surfaced as
+    a clear error before any write instead of silent nulls."""
+    writes: list = []
+    if os.path.isdir(f"{root}/stored"):
         import pyarrow.parquet as _pq
 
         names: set[str] = set()
@@ -505,14 +494,9 @@ def _append_doc_tables(
                 f"incoming docs to carry them (missing: {missing}) — "
                 "the all-fields-stored update precondition"
             )
-        (
-            documents.select("doc_id", *cols)
-            .withColumn("_seg", F.lit(int(segment)))
-            .write.mode("append")
-            .parquet(f"{root}/stored")
-        )
-        touched.append("stored")
-    if _os.path.isdir(f"{root}/facets"):
+        stored = documents.select("doc_id", *cols).withColumn("_seg", F.lit(int(segment)))
+        writes.append(lambda: stored.write.mode("append").parquet(f"{root}/stored"))
+    if os.path.isdir(f"{root}/facets"):
         from golr_loader_spark.plans.facets import build_facets
 
         fnames = _facet_field_names(spark, root)
@@ -522,14 +506,11 @@ def _append_doc_tables(
                 f"upsert into a root with facets requires the incoming "
                 f"docs to carry the facet fields (missing: {missing})"
             )
-        (
-            build_facets(documents, fnames, cfg)
-            .withColumn("_seg", F.lit(int(segment)))
-            .write.mode("append")
-            .parquet(f"{root}/facets")
+        facets = build_facets(documents, fnames, cfg).withColumn(
+            "_seg", F.lit(int(segment))
         )
-        touched.append("facets")
-    return touched
+        writes.append(lambda: facets.write.mode("append").parquet(f"{root}/facets"))
+    return writes
 
 
 def _resolve_doc_table(df: DataFrame, per_doc: bool = True) -> DataFrame:
@@ -624,7 +605,18 @@ def compact_root(spark: SparkSession, root: str, cfg: IndexConfig | None = None)
     resolved, appended segments merged back to segment 0), rewrite
     postings/term_stats/stats, clear the tombstone table. Returns the
     number of docs removed (hard deletes only — resolving a
-    superseded copy does not remove a doc)."""
+    superseded copy does not remove a doc).
+
+    The docs manifest loses the hard-deleted ids by a broadcast
+    left-anti join against them (one Arrow batch → ``LocalTableScan``)
+    and is written beside postings, term_stats and stats by one
+    ``write_index`` call. Superseded-copy tombstones alone cannot change
+    the manifest, so without hard deletes ``{root}/docs`` is neither
+    rewritten nor swapped. The new tables land in ``.compact_tmp`` and
+    swap in together (``_swap_tables``); the tombstone table is removed
+    last, so a crash before that leaves it to be folded again by a
+    retry — idempotent, since the swapped postings no longer hold the
+    dead postings."""
     import shutil
 
     from golr_loader_spark.plans.build_index import read_index, write_index
@@ -636,29 +628,49 @@ def compact_root(spark: SparkSession, root: str, cfg: IndexConfig | None = None)
     tomb = t_ids[t_db == DEAD_EVERYWHERE]  # hard deletes: leave the corpus
     ix = read_index(spark, root, cfg)
     new_ix = compact_index(ix, (t_ids, t_db))
-    new_ix.postings.count()  # materialize BEFORE overwriting the source
-    tmp = f"{root}/.compact_tmp"
-    write_index(new_ix, tmp)
+    new_ix.postings.count()  # materialize once: every table write reuses it
     tables = ["postings", "term_stats", "stats"]
-    tables += _rewrite_doc_tables(
-        spark, root, tmp, None, [], cfg, drop_ids=[int(i) for i in tomb]
-    )
-    docs_path = f"{root}/docs"
-    if os.path.isdir(docs_path):
+    meta = None
+    if len(tomb) and os.path.isdir(f"{root}/docs"):
         # prune compacted-away ids from the docs manifest — a stale
         # entry would make a later upsert of that id count as
         # "updated" and undercount n_docs (corrupting idf/avgdl)
-        meta = spark.read.parquet(docs_path)
-        tomb_df = spark.createDataFrame(
-            [(int(i),) for i in tomb], "doc_id long"
+        dead = spark.createDataFrame(pa.table({"doc_id": tomb.astype(np.int64)}))
+        meta = _read_table(spark, root, "docs").join(
+            F.broadcast(dead), "doc_id", "left_anti"
         )
-        meta.join(tomb_df, "doc_id", "left_anti").write.mode(
-            "overwrite"
-        ).parquet(f"{tmp}/docs")
         tables.append("docs")
+    tmp = f"{root}/.compact_tmp"
+    write_index(new_ix, tmp, documents=meta)
+    tables += _rewrite_doc_tables(
+        spark, root, tmp, None, [], cfg, drop_ids=[int(i) for i in tomb]
+    )
     _swap_tables(root, tmp, tuple(tables))
     shutil.rmtree(f"{root}/tombstones", ignore_errors=True)
     return len(tomb)
+
+
+def _max_segment(root: str) -> int:
+    """Highest segment number in ``{root}/postings``, from the parquet
+    footers' column statistics: O(files), no Spark job. Files without a
+    ``segment`` column hold segment 0; a row group without statistics
+    has its column read."""
+    import pyarrow.parquet as pq
+
+    top = 0
+    for f in _doc_table_files(root, "postings"):
+        md = pq.ParquetFile(f).metadata
+        names = md.schema.names
+        if "segment" not in names:
+            continue
+        i = names.index("segment")
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(i).statistics
+            if st is None or not st.has_min_max:
+                top = max(top, pc.max(pq.read_table(f, columns=["segment"])[0]).as_py() or 0)
+                break
+            top = max(top, st.max)
+    return int(top)
 
 
 def upsert_docs_fast(
@@ -677,7 +689,8 @@ def upsert_docs_fast(
     tombstone the superseded copies with a SEGMENT-scoped liveDocs
     entry (dead_below = the new segment number), so queries mask the
     old copies immediately while the new ones — same doc_id, higher
-    segment — stay live.
+    segment — stay live. The segment number comes from the postings'
+    parquet footers (``_max_segment``), not from a scan.
 
     What stays exact: result membership and n_docs accounting.
     What goes stale until ``compact_root`` (exactly Lucene's contract
@@ -690,11 +703,17 @@ def upsert_docs_fast(
     O(batch) and costing a full-index rewrite; tombstone resolution is
     deferred to scheduled compactions, amortized across many batches.
 
-    Crash contract: postings append before tombstones. A crash in the
-    window leaves BOTH copies live (transient double-count of the
-    updated docs); retrying the upsert appends again and its
-    tombstones kill every copy but the newest — self-healing, never
-    data loss. Stats writes are last and swap atomically."""
+    Crash contract: the appends (postings, term stats, stored fields,
+    facet rows) and the new stats/docs written into ``.stats_tmp`` run
+    as concurrent writes (``_run_writes``), and ALL of them finish
+    before the tombstones are rewritten; stats and docs swap in last.
+    A crash before the tombstone rewrite leaves BOTH copies of an
+    updated doc live (transient double-count), and since the appends
+    run concurrently some of them may have landed and others not;
+    retrying the upsert appends everything again and its tombstones
+    kill every copy but the newest — self-healing, never data loss
+    (term stats an aborted attempt appended stay counted until
+    ``compact_root`` recomputes them, like any superseded copy's)."""
     import shutil
 
     import pyarrow.parquet as pq
@@ -708,7 +727,7 @@ def upsert_docs_fast(
             "upsert requires the {root}/docs manifest — persist with "
             "write_index(..., documents=flattened_docs)"
         )
-    meta = spark.read.parquet(docs_path)
+    meta = _read_table(spark, root, "docs")
     incoming = documents.select("doc_id").distinct()
     marked = incoming.join(
         meta.select("doc_id", F.lit(True).alias("_known")), "doc_id", "left"
@@ -716,13 +735,11 @@ def upsert_docs_fast(
     incoming_ids = [int(r["doc_id"]) for r in marked]
     existing_ids = sorted(int(r["doc_id"]) for r in marked if r["_known"])
     n_added = len(incoming_ids) - len(existing_ids)
-
-    cur = spark.read.option("mergeSchema", "true").parquet(f"{root}/postings")
-    if "segment" in cur.columns:
-        max_seg = cur.agg(F.max("segment")).collect()[0][0] or 0
-    else:
-        max_seg = 0
-    new_seg = int(max_seg) + 1
+    new_seg = _max_segment(root) + 1
+    # stored fields + facet rows ride the SAME segment (Lucene's update
+    # replaces them; readers resolve each doc to its latest segment);
+    # their precondition is checked here, before anything is written
+    doc_appends = _doc_table_appends(spark, root, documents, cfg, new_seg)
 
     from pyspark import StorageLevel
 
@@ -737,38 +754,9 @@ def upsert_docs_fast(
         r["field"]: int(r["s"])
         for r in fresh.groupBy("field").agg(F.sum("tf_sum").alias("s")).collect()
     }
-    # 1. append the segment (sorted small files: footer stats still
-    #    prune term lookups in both read paths)
-    (
-        fresh.repartitionByRange(max(1, term_partitions), "term")
-        .sortWithinPartitions("term", "field", "bucket", "block_id")
-        .write.mode("append")
-        .option("parquet.block.size", str(4 << 20))
-        .parquet(f"{root}/postings")
-    )
-    # 2. append the segment's term stats (readers SUM df/cf per
-    #    (term, field) across segments)
-    from golr_loader_spark.plans.build_index import derived_term_stats
-
-    derived_term_stats(fresh).write.mode("append").parquet(f"{root}/term_stats")
-    # 2b. stored fields + facet rows ride the SAME segment (Lucene's
-    #     update replaces them; readers resolve each doc to its latest
-    #     segment). Appended BEFORE tombstones — same crash contract
-    #     as the postings: a crash leaves both copies live, a retry
-    #     appends again and resolution picks the newest.
-    _append_doc_tables(spark, root, documents, cfg, new_seg)
-    # 3. tombstone the superseded copies (old segments only) and
-    #    withdraw any pending tombstones on re-upserted ids (revive)
-    t_ids, t_db = load_tombstones(spark, root)
-    still_dead = ~np.isin(t_ids, np.asarray(incoming_ids, dtype=np.int64))
-    rewrite_tombstones(
-        root,
-        np.concatenate([t_ids[still_dead], np.asarray(existing_ids, dtype=np.int64)]),
-        np.concatenate([t_db[still_dead], np.full(len(existing_ids), new_seg, dtype=np.int64)]),
-    )
-    # 4. stats: n_docs exact; avgdl numerator keeps the dead copies'
-    #    mass until compaction (documented staleness). Metadata-sized:
-    #    read and written on the driver, no Spark job
+    # stats: n_docs exact; avgdl numerator keeps the dead copies' mass
+    # until compaction (documented staleness). Metadata-sized: read and
+    # written on the driver, no Spark job
     old_stats = {
         r["field"]: (float(r["avgdl"]), int(r["n_docs"]))
         for r in pq.read_table(f"{root}/stats").to_pylist()
@@ -789,18 +777,36 @@ def upsert_docs_fast(
         pa.Table.from_pylist(stats_rows, schema=_STATS_SCHEMA),
         f"{tmp}/stats/part-00000.parquet",
     )
-    # 5. docs manifest rewrite (metadata-sized)
     new_meta = meta.join(incoming, "doc_id", "left_anti").unionByName(
-        documents.select(
-            "doc_id",
-            (
-                F.col("content_sha256")
-                if "content_sha256" in documents.columns
-                else F.lit(None).cast("string")
-            ).alias("content_sha256"),
-        )
+        _docs_manifest(documents)
     )
-    new_meta.write.mode("overwrite").parquet(f"{tmp}/docs")
+    _run_writes(
+        [
+            # the segment (sorted small files: footer stats still prune
+            # term lookups in both read paths)
+            lambda: _write_postings(
+                fresh, f"{root}/postings", max(1, term_partitions), mode="append"
+            ),
+            # its term stats (readers SUM df/cf per (term, field) across
+            # segments)
+            lambda: derived_term_stats(fresh)
+            .write.mode("append")
+            .parquet(f"{root}/term_stats"),
+            *doc_appends,
+            # the docs manifest (metadata-sized), swapped in with stats
+            lambda: new_meta.write.mode("overwrite").parquet(f"{tmp}/docs"),
+        ]
+    )
+    # tombstone the superseded copies (old segments only) and withdraw
+    # any pending tombstones on re-upserted ids (revive) — only once
+    # every append has landed
+    t_ids, t_db = load_tombstones(spark, root)
+    still_dead = ~np.isin(t_ids, np.asarray(incoming_ids, dtype=np.int64))
+    rewrite_tombstones(
+        root,
+        np.concatenate([t_ids[still_dead], np.asarray(existing_ids, dtype=np.int64)]),
+        np.concatenate([t_db[still_dead], np.full(len(existing_ids), new_seg, dtype=np.int64)]),
+    )
     _swap_tables(root, tmp, ("stats", "docs"))
     fresh.unpersist()
     return {

@@ -221,20 +221,12 @@ def test_edismax_explicit_field_overrides_qf(ix, cfg):
         assert got[d] == pytest.approx(want[d], rel=1e-12)
 
 
-def test_edismax_phrase_dismax_across_fields(spark, ix, cfg):
+def test_edismax_phrase_dismax_across_fields(pix, pcfg):
     from golr_loader_spark.plans.phrase import phrase_search_positional
     from golr_loader_spark.plans.dismax import search_edismax
 
     pytest.importorskip("numpy")
-    # positional two-field index
-    from golr_loader_spark.plans.build_index import build_index
-    from golr_loader_spark.config import IndexConfig
-
-    pcfg = IndexConfig(
-        fields={"text": ("simple", 1.0), "title": ("simple", 1.0)},
-        bucket_bits=2, id_space_bits=3, positions=True,
-    )
-    pix = build_index(spark.createDataFrame(ROWS, SCHEMA).cache(), pcfg)
+    # positional two-field index: the module's pix
     tie, bq = 0.25, {"text": 1.0, "title": 2.0}
     got = dict(rows(search_edismax(pix, '"data query"', bq, k=20, tie=tie, cfg=pcfg)))
     pt = {r["doc_id"]: r["score"] * 1.0 for r in phrase_search_positional(
@@ -259,19 +251,10 @@ def test_edismax_phrase_dismax_across_fields(spark, ix, cfg):
         search_edismax(pix, "dat* query", bq, k=5, cfg=pcfg)
 
 
-def test_edismax_serving_parity(tmp_path, spark, cfg):
-    from golr_loader_spark.plans.build_index import build_index, write_index
+def test_edismax_serving_parity(pix, pcfg, ls_pix):
     from golr_loader_spark.plans.dismax import search_edismax
-    from golr_loader_spark.plans.serve import LocalSearcher
 
-    pcfg = IndexConfig(
-        fields={"text": ("simple", 1.0), "title": ("simple", 1.0)},
-        bucket_bits=2, id_space_bits=3, positions=True,
-    )
-    pix = build_index(spark.createDataFrame(ROWS, SCHEMA).cache(), pcfg)
-    root = str(tmp_path / "edx")
-    write_index(pix, root, term_partitions=2)
-    ls = LocalSearcher(root, pcfg)
+    ls = ls_pix
     for q, qf, tie, mm in [
         ("data query", "text title^2", 0.3, 0),
         ("+data spark", "text title", 0.0, 0),
@@ -286,24 +269,15 @@ def test_edismax_serving_parity(tmp_path, spark, cfg):
         assert got == want, (q, qf, tie, mm)
 
 
-def test_fuzz_edismax_serving_parity(tmp_path, spark):
+def test_fuzz_edismax_serving_parity(pix, pcfg, ls_pix):
     """Randomized edismax fuzz: random term/phrase queries with
     random qf/tie/mm either raise the same error on both paths or
     return identical results (distributed vs serving)."""
     import random
 
-    from golr_loader_spark.plans.build_index import build_index, write_index
     from golr_loader_spark.plans.dismax import search_edismax
-    from golr_loader_spark.plans.serve import LocalSearcher
 
-    pcfg = IndexConfig(
-        fields={"text": ("simple", 1.0), "title": ("simple", 1.0)},
-        bucket_bits=2, id_space_bits=3, positions=True,
-    )
-    pix = build_index(spark.createDataFrame(ROWS, SCHEMA).cache(), pcfg)
-    root = str(tmp_path / "efz")
-    write_index(pix, root, term_partitions=2)
-    ls = LocalSearcher(root, pcfg)
+    ls = ls_pix
     rng = random.Random(11)
     vocab = ["data", "query", "spark", "engine", "runs", "build", "plan", "zzz"]
 
