@@ -148,15 +148,14 @@ def assign_dense_ids(
             f"assign_dense_ids: {dup_keys} duplicate (doc_id, repo, path, "
             "commit) keys; deduplicate the documents first"
         )
-    # per-range offsets as ONE small relation (≤ range_buckets rows,
-    # built from one Arrow batch → LocalTableScan), broadcast-joined on
-    # _rb by either plan below
-    rbs = np.array(sorted(int(r["_rb"]) for r in per_range), dtype=np.int64)
-    n_of = {int(r["_rb"]): int(r["n"]) for r in per_range}
-    n_rb = np.array([n_of[b] for b in rbs], dtype=np.int64)
+    # (_rb, n) in range order → (_rb, _off) as one Arrow batch
+    rb_n = np.array(
+        sorted((int(r["_rb"]), int(r["n"])) for r in per_range), dtype=np.int64
+    ).reshape(-1, 2)
+    n_rb = rb_n[:, 1]
     offsets = F.broadcast(
         documents.sparkSession.createDataFrame(
-            pa.table({"_rb": rbs, "_off": np.cumsum(n_rb) - n_rb})
+            pa.table({"_rb": rb_n[:, 0], "_off": np.cumsum(n_rb) - n_rb})
         )
     )
     dense = (F.col("_off") + F.col("_rn") - 1).cast("long")

@@ -614,9 +614,7 @@ def compact_root(spark: SparkSession, root: str, cfg: IndexConfig | None = None)
     the manifest, so without hard deletes ``{root}/docs`` is neither
     rewritten nor swapped. The new tables land in ``.compact_tmp`` and
     swap in together (``_swap_tables``); the tombstone table is removed
-    last, so a crash before that leaves it to be folded again by a
-    retry — idempotent, since the swapped postings no longer hold the
-    dead postings."""
+    last."""
     import shutil
 
     from golr_loader_spark.plans.build_index import read_index, write_index
