@@ -633,7 +633,7 @@ def compact_root(spark: SparkSession, root: str, cfg: IndexConfig | None = None)
         # prune compacted-away ids from the docs manifest — a stale
         # entry would make a later upsert of that id count as
         # "updated" and undercount n_docs (corrupting idf/avgdl)
-        dead = spark.createDataFrame(pa.table({"doc_id": tomb.astype(np.int64)}))
+        dead = spark.createDataFrame(pa.table({"doc_id": tomb}))
         meta = _read_table(spark, root, "docs").join(
             F.broadcast(dead), "doc_id", "left_anti"
         )
