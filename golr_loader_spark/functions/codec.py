@@ -146,12 +146,16 @@ def positions_encode(
     ``counts[i]`` values). Each segment is stored as first-absolute +
     ascending deltas, LEB128. Returns (uint8 stream, per-segment byte
     sizes) — one vectorized pass, shared by the tokenizer and the
-    compaction re-encoder."""
+    compaction re-encoder. Empty segments (tf 0: norms postings) get
+    size 0."""
+    sizes = np.zeros(len(counts), dtype=np.int64)
     if len(flat_pos) == 0:
-        return np.empty(0, dtype=np.uint8), np.zeros(len(counts), dtype=np.int64)
-    starts = (np.cumsum(counts) - counts).astype(np.int64)
+        return np.empty(0, dtype=np.uint8), sizes
+    nz = counts > 0
+    starts = (np.cumsum(counts) - counts).astype(np.int64)[nz]
     d = np.empty(len(flat_pos), dtype=np.uint64)
     d[1:] = (flat_pos[1:] - flat_pos[:-1]).astype(np.uint64)
     d[starts] = flat_pos[starts].astype(np.uint64)
     stream, nb = varint_encode_with_sizes(d)
-    return stream, np.add.reduceat(nb, starts)
+    sizes[nz] = np.add.reduceat(nb, starts)
+    return stream, sizes

@@ -41,7 +41,13 @@ from pyspark.sql import functions as F
 from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.functions.codec import varint_decode
 from golr_loader_spark.functions.tokenize import analyze_query
-from golr_loader_spark.plans.build_index import InvertedIndex
+from golr_loader_spark.plans.build_index import (
+    NORMS_TERM,
+    InvertedIndex,
+    block_scan,
+    decode_norms,
+    norms_dl,
+)
 from golr_loader_spark.plans.tombstones import DEAD_EVERYWHERE
 
 
@@ -232,14 +238,18 @@ def _live_of(ids: np.ndarray, segs: np.ndarray, excl) -> np.ndarray:
     return ~(hit & (segs < t_db[pos]))
 
 
-def _row_segments(rows: pd.DataFrame) -> np.ndarray:
-    """Per-block segment numbers (0 for pre-segment indexes)."""
-    if "segment" in rows.columns:
-        return rows["segment"].to_numpy(np.int64)
-    return np.zeros(len(rows), dtype=np.int64)
+def _split_norms(cols: dict, norms):
+    """(``cols`` without its norms blocks, the norms to read dl from):
+    ``norms`` when given, else those decoded from the norms blocks."""
+    is_norm = cols["term"] == NORMS_TERM
+    if norms is None:
+        norms = decode_norms(cols)
+    if is_norm.any():
+        cols = {c: v[~is_norm] for c, v in cols.items()}
+    return cols, norms
 
 
-def _decode_lists(cols, excl) -> dict[tuple[str, str], tuple]:
+def _decode_lists(cols, excl, norms=None) -> dict[tuple[str, str], tuple]:
     """Decode BM25 posting blocks → {(term, field): (doc_ids, tfs, dls,
     blk, max_tf, min_dl)} with tombstone/segment masking applied
     (``excl`` is ``_norm_excl``-normalized) — the BM25 twin of
@@ -258,9 +268,14 @@ def _decode_lists(cols, excl) -> dict[tuple[str, str], tuple]:
     bounds, so block-max pruning selects postings with ``keep[blk]``
     instead of decoding again. The stored bounds still cover masked
     postings, so pruning on them stays admissible. Lists with no live
-    posting are left out."""
+    posting are left out.
+
+    Each posting's dl comes from its field's norms list (``norms``, a
+    ``build_index.decode_norms`` result, or else the norms blocks among
+    ``cols``), which is never returned as a list."""
     if not isinstance(cols, dict):
         cols = {c: cols[c].to_numpy() for c in cols.columns}
+    cols, norms = _split_norms(cols, norms)
     n_rows = len(cols["term"])
     if not n_rows:
         return {}
@@ -277,7 +292,9 @@ def _decode_lists(cols, excl) -> dict[tuple[str, str], tuple]:
     g = np.cumsum(varint_decode(b"".join(cols["doc_ids"][order])).astype(np.int64))
     ids = g + np.repeat(firsts - g[np.cumsum(n_pb) - n_pb], n_pb)
     tfs = varint_decode(b"".join(cols["tfs"][order])).astype(np.float64)
-    dls = varint_decode(b"".join(cols["dls"][order])).astype(np.float64)
+    dls = norms_dl(
+        norms, cols["field"][order], seg[order], n_pb, ids
+    ).astype(np.float64)
     blk = np.repeat(np.arange(n_rows, dtype=np.int32), n_pb)
     if excl is not None:
         keep = _live_of(ids, seg[order][blk], excl)
@@ -683,9 +700,7 @@ def search(
         # strict MUST: a query term with no postings → empty result
         return spark.createDataFrame([], "doc_id long, score double")
     avgdl = _avgdl(index)
-    cand = index.postings.filter(
-        F.col("term").isin(terms) & F.col("field").isin(list(cfg.fields))
-    )
+    cand = index.postings.filter(block_scan(terms, cfg.fields))
     fn = _score_bucket_factory(
         weights, avgdl, cfg, k if fq is None else index.n_docs,
         required_terms=required, exclude_ids=exclude_ids,
@@ -744,9 +759,7 @@ def search_boolean(
     if required and not required <= {t for (t, _f) in weights}:
         return spark.createDataFrame([], "doc_id long, score double")
     avgdl = _avgdl(index)
-    cand = index.postings.filter(
-        F.col("term").isin(scoring + n_terms) & F.col("field").isin(list(cfg.fields))
-    )
+    cand = index.postings.filter(block_scan(scoring + n_terms, cfg.fields))
     fn = _score_bucket_factory(
         weights,
         avgdl,
@@ -820,9 +833,8 @@ def search_prefix(
         for (t, f), d in _df_sums(rows).items()
     }
     avgdl = _avgdl(index)
-    cand = index.postings.filter(
-        F.col("term").startswith(p) & F.col("field").isin(list(cfg.fields))
-    )
+    terms = sorted({t for t, _f in weights})
+    cand = index.postings.filter(block_scan(terms, cfg.fields))
     fn = _score_bucket_factory(weights, avgdl, cfg, k, exclude_ids=exclude_ids)
     per_bucket = cand.groupBy("bucket").applyInPandas(
         fn, schema="doc_id long, score double"
@@ -908,9 +920,7 @@ def search_wildcard(
         for (t, f), d in _df_sums(rows).items()
     }
     avgdl = _avgdl(index)
-    cand = index.postings.filter(
-        F.col("term").isin(terms) & F.col("field").isin(list(cfg.fields))
-    )
+    cand = index.postings.filter(block_scan(terms, cfg.fields))
     fn = _score_bucket_factory(weights, avgdl, cfg, k, exclude_ids=exclude_ids)
     per_bucket = cand.groupBy("bucket").applyInPandas(
         fn, schema="doc_id long, score double"
@@ -971,9 +981,7 @@ def search_fuzzy(
         for (t, f), d in _df_sums(rows).items()
     }
     avgdl = _avgdl(index)
-    cand = index.postings.filter(
-        F.col("term").isin(terms) & F.col("field").isin(list(cfg.fields))
-    )
+    cand = index.postings.filter(block_scan(terms, cfg.fields))
     fn = _score_bucket_factory(weights, avgdl, cfg, k, exclude_ids=exclude_ids)
     per_bucket = cand.groupBy("bucket").applyInPandas(
         fn, schema="doc_id long, score double"
@@ -1230,9 +1238,7 @@ def more_like_this(
     if exclude_self:
         excl = np.union1d(excl, np.array([doc_id], dtype=np.int64))
     avgdl = _avgdl(index)
-    pcand = index.postings.filter(
-        F.col("term").isin(terms) & F.col("field").isin(list(cfg.fields))
-    )
+    pcand = index.postings.filter(block_scan(terms, cfg.fields))
     fn = _score_bucket_factory(
         weights, avgdl, cfg, k, exclude_ids=excl if len(excl) else None
     )
@@ -1281,9 +1287,7 @@ def search_batch(
             # strict MUST: unmatched term → impossible requirement
             required[qid] = qt if qt <= present else {"\x00_absent_term"}
     avgdl = _avgdl(index)
-    cand = index.postings.filter(
-        F.col("term").isin(all_terms) & F.col("field").isin(list(cfg.fields))
-    )
+    cand = index.postings.filter(block_scan(all_terms, cfg.fields))
     fn = _score_bucket_multi_factory(
         weights, avgdl, cfg, k, required_terms=required, exclude_ids=exclude_ids,
     )

@@ -88,7 +88,7 @@ from golr_loader_spark.plans.bm25 import (
     _idf_table,
     _norm_excl,
 )
-from golr_loader_spark.plans.build_index import InvertedIndex
+from golr_loader_spark.plans.build_index import InvertedIndex, block_scan
 
 
 def parse_qf(qf) -> dict[str, float]:
@@ -457,9 +457,7 @@ def _run(
             _norm_excl(exclude_ids),
         )
         scanned = sorted({f for _t, f in (*plan.weights, *plan.prohibited)})
-        cand = index.postings.filter(
-            F.col("term").isin(plan.read) & F.col("field").isin(scanned)
-        )
+        cand = index.postings.filter(block_scan(plan.read, scanned))
         out = cand.groupBy("bucket").applyInPandas(
             fn, schema="doc_id long, score double"
         )

@@ -46,7 +46,7 @@ from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.functions.codec import varint_decode
 from golr_loader_spark.functions.tokenize import analyze_query
 from golr_loader_spark.plans.bm25 import query_analyzer
-from golr_loader_spark.plans.build_index import InvertedIndex, bucket_of
+from golr_loader_spark.plans.build_index import InvertedIndex, block_scan, bucket_of
 
 # instrumentation for the O(limit)-collect contract test: row count of
 # the last facet_counts_multiselect per-field collect (must be ≤ top,
@@ -195,20 +195,17 @@ def all_doc_ids(
     exclude_ids=None,
 ) -> DataFrame:
     """The live doc universe → (bucket, doc_id): Lucene's
-    MatchAllDocsQuery over this index. The only doc registry the index
-    keeps is the posting lists themselves, so the universe is the
-    per-bucket union of every list's decoded doc-id stream (tombstones
-    masked per segment). A doc whose content analyzed to zero tokens
-    is absent — it can never match any query, so pure-negative fq
-    excluding it is a no-op either way. Cost: one decode pass over the
-    block table, the same shape as matching a corpus-wide stop term."""
+    MatchAllDocsQuery over this index. The norms lists hold one posting
+    per doc with tokens in the field, so the universe is the per-bucket
+    union of the fields' norms doc-id streams (tombstones masked per
+    segment). A doc whose content analyzed to zero tokens is absent —
+    it can never match any query, so pure-negative fq excluding it is a
+    no-op either way. Cost: one decode of n_docs ids per field."""
     cfg = cfg or index.cfg
     sel = ["bucket", "term", "field", "doc_id_first", "doc_ids"]
     if "segment" in index.postings.columns:
         sel.append("segment")
-    cand = index.postings.filter(
-        F.col("field").isin(list(cfg.fields))
-    ).select(*sel)
+    cand = index.postings.filter(block_scan([], cfg.fields)).select(*sel)
     fn = _match_bucket_factory(None, None, exclude_ids)
     return (
         cand.groupBy("bucket")
@@ -886,9 +883,7 @@ def grouped_topk(
     required = set(terms) if mode == "and" else None
     if required and not required <= {t for (t, _f) in weights}:
         return spark.createDataFrame([], out_schema)
-    cand = index.postings.filter(
-        F.col("term").isin(terms) & F.col("field").isin(list(cfg.fields))
-    )
+    cand = index.postings.filter(block_scan(terms, cfg.fields))
     fn = _score_bucket_factory(
         weights, _avgdl(index), cfg, sys.maxsize,
         required_terms=required, exclude_ids=exclude_ids,

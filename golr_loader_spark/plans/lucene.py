@@ -88,7 +88,7 @@ from golr_loader_spark.plans.bm25 import (
     _score_bucket_factory,
     query_analyzer,
 )
-from golr_loader_spark.plans.build_index import InvertedIndex
+from golr_loader_spark.plans.build_index import InvertedIndex, block_scan
 
 MUST, SHOULD, MUST_NOT = "MUST", "SHOULD", "MUST_NOT"
 
@@ -795,10 +795,7 @@ def _run(
         return None
     out = None
     if plan.read:
-        cand = index.postings.filter(
-            F.col("term").isin(plan.read)
-            & F.col("field").isin(list(cfg.fields))
-        )
+        cand = index.postings.filter(block_scan(plan.read, cfg.fields))
         fn = _score_bucket_factory(
             plan.weights,
             _avgdl(index),
@@ -1016,8 +1013,7 @@ def _phrase_doc_score(
         return None
     pdf = (
         index.postings.filter(
-            F.col("term").isin(uterms)
-            & (F.col("field") == F.lit(field))
+            block_scan(uterms, [field])
             & (
                 F.col("bucket")
                 == bucket_of(

@@ -16,16 +16,20 @@ this module provides it with Lucene's two-phase semantics:
   surviving corpus (asserted in tests/test_maintenance.py) and the
   tombstone table resets.
 
-Compaction plan shape: the block table shuffles ONCE on its own
-(term, field, bucket) key — the same skew-safe bound as the build (a
-bucket holds ≤ n_docs/2**bucket_bits postings per term) — and each
-partition's block rows, sorted by (list, segment, block_id), stream
-through ONE ``mapInArrow`` kernel. Per Arrow batch it decodes every
-block's doc ids, tfs, dls and positions in one numpy pass, applies the
-liveDocs mask, lexsorts by (list, doc_id) and re-encodes all lists with
-one call of the build's vectorized encoder, also re-packing underfull
-blocks; a list cut by the batch boundary is carried into the next
-batch, so a task holds one batch plus one list. Python is entered once
+Compaction plan shape: the block table shuffles ONCE on (field,
+bucket) — a doc's postings in a field and its norms list (the field's
+doc lengths, see ``plans.build_index``) share that key, and a bucket
+holds ≤ n_docs/2**bucket_bits postings per term — and each partition's
+block rows, sorted by (field, bucket, then term with the norms list
+first, segment, block_id), stream through ONE
+``mapInArrow`` kernel. Per Arrow batch it decodes every block's doc
+ids, tfs and positions in one numpy pass, reads each posting's dl from
+the norms, applies the liveDocs mask (to the norms lists too),
+lexsorts by (list, doc_id) and re-encodes all lists with one call of
+the build's vectorized encoder, also re-packing underfull blocks; a
+list cut by the batch boundary is carried into the next batch, with
+its bucket's norms, so a task holds one batch plus one list and one
+bucket's norms. Python is entered once
 per partition, never once per list: in a per-list plan the Python-UDF
 boundary, not the codec, dominates the task time. The
 tombstone set rides a Spark broadcast (a delete batch of 10M ids is
@@ -52,15 +56,19 @@ from pyspark.sql import functions as F
 from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.functions.codec import binary_stream, varint_decode
 from golr_loader_spark.plans.build_index import (
+    NORMS_TERM,
     InvertedIndex,
     _block_ddl,
     _docs_manifest,
     _encode_groups,
     _read_table,
+    check_block_format,
     _run_writes,
     _write_postings,
+    decode_norms,
     derived_stats,
     derived_term_stats,
+    norms_dl,
 )
 from golr_loader_spark.plans.tombstones import (
     DEAD_EVERYWHERE,
@@ -114,13 +122,15 @@ def broadcast_tombstones(spark: SparkSession, root: str):
     return broadcast_excl(spark, load_tombstones(spark, root))
 
 
-def _swap_tables(root: str, tmp: str, tables: tuple) -> None:
+def _swap_tables(root: str, tmp: str, tables: tuple, drop: tuple = ()) -> None:
     """Move freshly-written tables from ``tmp`` into ``root`` with the
     narrowest practical crash window: each old table is atomically
     renamed ASIDE (never deleted before its replacement exists), the
     new one renamed in, and the aside copies removed only after every
-    table swapped. A crash mid-swap leaves the old table recoverable
-    in ``{root}/.gc`` (never a root with a missing table + no backup);
+    table swapped. The ``drop`` tables are renamed aside last, with no
+    replacement (compaction's tombstones). A crash mid-swap leaves the
+    old table recoverable in ``{root}/.gc`` (never a root with a
+    missing table + no backup);
     callers order the tombstone rewrite AFTER the swap so the worst
     crash outcome is conservative (a re-upserted doc stays masked
     until the idempotent operation is retried), never resurrection or
@@ -134,6 +144,9 @@ def _swap_tables(root: str, tmp: str, tables: tuple) -> None:
         if os.path.isdir(f"{root}/{t}"):
             os.rename(f"{root}/{t}", f"{gc}/{t}")
         os.rename(f"{tmp}/{t}", f"{root}/{t}")
+    for t in drop:
+        if os.path.isdir(f"{root}/{t}"):
+            os.rename(f"{root}/{t}", f"{gc}/{t}")
     shutil.rmtree(gc, ignore_errors=True)
     shutil.rmtree(tmp, ignore_errors=True)
 
@@ -153,17 +166,23 @@ def _list_starts(tbl: pa.Table) -> np.ndarray:
 
 
 def _compact_blocks(
-    tbl: pa.Table, starts: np.ndarray, excl, cfg: IndexConfig
-) -> pa.RecordBatch | None:
+    tbl: pa.Table, starts: np.ndarray, excl, cfg: IndexConfig, norms: dict
+) -> tuple[pa.RecordBatch | None, dict]:
     """Decode, mask and re-encode whole lists in one numpy pass.
 
     ``tbl`` holds complete lists, each in (segment, block_id) order and
-    beginning at ``starts``. Every block's doc ids, tfs, dls and
-    positions are decoded at once (varint streams concatenate), postings
-    dead under ``excl`` dropped, each list re-sorted by doc_id (a stable
-    sort: ties keep segment order) and all lists encoded by ONE
-    ``_encode_groups`` call — which re-packs underfull blocks and drops
-    lists with no survivors. None when nothing survives."""
+    beginning at ``starts``; a (field, bucket)'s norms list comes before
+    its other lists. Every block's doc ids, tfs and positions are
+    decoded at once (varint streams concatenate); each posting's dl is
+    read from the norms lists of ``tbl`` and ``norms`` (the norms of
+    the (field, bucket) the previous call ended in, as
+    ``decode_norms`` returns them). Postings dead under ``excl`` are
+    dropped — norms postings by the same liveDocs rule — each list is
+    re-sorted by doc_id (a stable sort: ties keep segment order) and all
+    lists are encoded by ONE ``_encode_groups`` call, which re-packs
+    underfull blocks and drops lists with no survivors. Returns the
+    blocks (None when nothing survives) and the norms of ``tbl``'s last
+    (field, bucket), for the next call."""
     from golr_loader_spark.functions.codec import positions_encode
     from golr_loader_spark.plans.bm25 import _live_of
     from golr_loader_spark.plans.phrase import _decode_positions
@@ -174,7 +193,32 @@ def _compact_blocks(
     g = np.cumsum(deltas)
     ids = g + np.repeat(firsts - g[np.cumsum(n) - n], n)
     tfs = varint_decode(binary_stream(tbl.column("tfs"))[0]).astype(np.int64)
-    dls = varint_decode(binary_stream(tbl.column("dls"))[0]).astype(np.int64)
+    blk_segs = tbl.column("segment").to_numpy().astype(np.int64)
+    fields = tbl.column("field").to_numpy(zero_copy_only=False)
+    norm_blk = pc.equal(tbl.column("term"), NORMS_TERM).to_numpy(zero_copy_only=False)
+    if norm_blk.any():
+        nt = tbl.filter(pa.array(norm_blk))
+        here = decode_norms(
+            {c: nt.column(c).to_numpy(zero_copy_only=False)
+             for c in ("term", "field", "bucket", "segment", "block_id", "n",
+                       "doc_id_first", "doc_ids", "dls")}
+        )
+        # the carried norms are the previous (field, bucket): lower ids
+        norms = {
+            k: tuple(np.concatenate([norms[k][i], v[i]]) for i in (0, 1))
+            if k in norms else v
+            for k, v in {**norms, **here}.items()
+        }
+    # every posting's dl, the norms postings' own included
+    dls = norms_dl(norms, fields, blk_segs, n, ids)
+    # the norms the next call may need: those of the last (field, bucket)
+    shift = np.int64(max(0, cfg.id_space_bits - cfg.bucket_bits))
+    last_f, last_b = fields[-1], int(tbl.column("bucket")[-1].as_py())
+    carry = {}
+    for (f, sg), (nids, ndls) in norms.items():
+        if f == last_f:
+            m = np.right_shift(nids, shift) == last_b
+            carry[(f, sg)] = (nids[m], ndls[m])
     has_pos = "poss" in tbl.column_names
     if has_pos:
         # absolute positions survive compaction unchanged; only the
@@ -184,13 +228,12 @@ def _compact_blocks(
     is_start[starts] = 1
     lid = np.repeat(np.cumsum(is_start) - 1, n)
     if excl is not None:
-        segs = np.repeat(tbl.column("segment").to_numpy().astype(np.int64), n)
-        keep = _live_of(ids, segs, excl)
+        keep = _live_of(ids, np.repeat(blk_segs, n), excl)
         if has_pos:
             pos_flat = pos_flat[np.repeat(keep, tfs)]
         ids, tfs, dls, lid = ids[keep], tfs[keep], dls[keep], lid[keep]
     if not len(ids):
-        return None
+        return None, carry
     # multi-segment lists (upsert appends) interleave doc ranges across
     # blocks — re-sort so each compacted list is globally doc_id-ordered
     # (smallest deltas, format contract)
@@ -223,18 +266,21 @@ def _compact_blocks(
     # all survivors land in segment 0
     return rb.append_column(
         "segment", pa.array(np.zeros(rb.num_rows, dtype=np.int32))
-    )
+    ), carry
 
 
 def _compact_batches(excl, cfg: IndexConfig) -> "callable":
-    """mapInArrow body over block rows sorted by (term, field, bucket,
-    segment, block_id): each Arrow batch's complete lists go through
-    ``_compact_blocks`` together; the batch's last list may continue in
-    the next batch, so its rows are carried over and prepended to it.
-    A task holds one batch plus one list."""
+    """mapInArrow body over block rows sorted by (field, bucket, term
+    with the norms list first, segment, block_id): each Arrow batch's
+    complete lists go through ``_compact_blocks`` together; the batch's
+    last list may continue in the next batch, so its rows are carried
+    over and prepended to it, and so are the norms of the (field,
+    bucket) it belongs to. A task holds one batch plus one list and one
+    bucket's norms."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         carry: pa.Table | None = None
+        norms: dict = {}
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -245,11 +291,15 @@ def _compact_batches(excl, cfg: IndexConfig) -> "callable":
             last = int(starts[-1])
             carry = tbl.slice(last)
             if last:
-                out = _compact_blocks(tbl.slice(0, last), starts[:-1], excl, cfg)
+                out, norms = _compact_blocks(
+                    tbl.slice(0, last), starts[:-1], excl, cfg, norms
+                )
                 if out is not None:
                     yield out
         if carry is not None:
-            out = _compact_blocks(carry, np.zeros(1, dtype=np.int64), excl, cfg)
+            out, _ = _compact_blocks(
+                carry, np.zeros(1, dtype=np.int64), excl, cfg, norms
+            )
             if out is not None:
                 yield out
 
@@ -270,10 +320,11 @@ def compact_postings(
     segment 0 (the Lucene merge: segment tombstones from fast upserts
     are resolved physically).
 
-    Plan: one exchange of the block rows on (term, field, bucket), a
-    sort of the block rows within partitions, then ONE ``mapInArrow``
-    task per partition (``_compact_batches``) — no Python call per
-    list.
+    Plan: one exchange of the block rows on (field, bucket), a sort of
+    the block rows within partitions by (field, bucket, norms first,
+    term, segment, block_id) — each (field, bucket)'s norms list, the
+    dl source of its other lists, comes first — then ONE ``mapInArrow`` task per
+    partition (``_compact_batches``) — no Python call per list.
 
     ``tombstone_ids``: plain id array (dead everywhere) or the
     ``(ids, dead_below)`` pair from ``load_tombstones``."""
@@ -287,8 +338,11 @@ def compact_postings(
             "doc_ids", "tfs", "dls"] + (["poss"] if has_pos else [])
     return (
         postings.select(*cols)
-        .repartition(*_LIST_KEY)
-        .sortWithinPartitions(*_LIST_KEY, "segment", "block_id")
+        .repartition("field", "bucket")
+        .sortWithinPartitions(
+            "field", "bucket", F.col("term") != NORMS_TERM, "term", "segment",
+            "block_id",
+        )
         .mapInArrow(_compact_batches(excl, cfg), _block_ddl(has_pos) + ", segment int")
     )
 
@@ -613,19 +667,34 @@ def compact_root(spark: SparkSession, root: str, cfg: IndexConfig | None = None)
     ``write_index`` call. Superseded-copy tombstones alone cannot change
     the manifest, so without hard deletes ``{root}/docs`` is neither
     rewritten nor swapped. The new tables land in ``.compact_tmp`` and
-    swap in together (``_swap_tables``); the tombstone table is removed
-    last."""
-    import shutil
+    swap in together (``_swap_tables``), the tombstone table's removal
+    last in the same swap.
 
+    Safe to retry after a crash that left the tombstones behind the
+    swapped tables: hard deletes count only while the docs manifest
+    holds them, and a segment tombstone above the highest segment left
+    is stale (its doc's live copy was merged down) and is dropped."""
     from golr_loader_spark.plans.build_index import read_index, write_index
 
     cfg = cfg or IndexConfig()
+    check_block_format(root)
     t_ids, t_db = load_tombstones(spark, root)
     if not len(t_ids):
         return 0
+    fresh = (t_db == DEAD_EVERYWHERE) | (t_db <= _max_segment(root))
+    t_ids, t_db = t_ids[fresh], t_db[fresh]
     tomb = t_ids[t_db == DEAD_EVERYWHERE]  # hard deletes: leave the corpus
+    if len(tomb) and os.path.isdir(f"{root}/docs"):
+        # only hard deletes the docs manifest still holds leave the
+        # corpus now (a retried compaction already removed the others)
+        import pyarrow.dataset as pads
+
+        held = pads.dataset(f"{root}/docs", format="parquet").to_table(
+            columns=["doc_id"], filter=pc.field("doc_id").isin(tomb)
+        )
+        tomb = np.intersect1d(tomb, held["doc_id"].to_numpy())
     ix = read_index(spark, root, cfg)
-    new_ix = compact_index(ix, (t_ids, t_db))
+    new_ix = compact_index(ix, (t_ids, t_db), n_docs_removed=len(tomb))
     new_ix.postings.count()  # materialize once: every table write reuses it
     tables = ["postings", "term_stats", "stats"]
     meta = None
@@ -643,8 +712,7 @@ def compact_root(spark: SparkSession, root: str, cfg: IndexConfig | None = None)
     tables += _rewrite_doc_tables(
         spark, root, tmp, None, [], cfg, drop_ids=[int(i) for i in tomb]
     )
-    _swap_tables(root, tmp, tuple(tables))
-    shutil.rmtree(f"{root}/tombstones", ignore_errors=True)
+    _swap_tables(root, tmp, tuple(tables), drop=("tombstones",))
     return len(tomb)
 
 

@@ -65,8 +65,6 @@ from its cached per-term lists, so both paths agree bit-for-bit.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -76,7 +74,12 @@ from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.functions.codec import varint_decode
 from golr_loader_spark.functions.tokenize import analyze_phrase, analyze_query
 from golr_loader_spark.plans.bm25 import _idf_table, query_analyzer
-from golr_loader_spark.plans.build_index import InvertedIndex, bucket_of
+from golr_loader_spark.plans.build_index import (
+    InvertedIndex,
+    block_scan,
+    bucket_of,
+    norms_dl,
+)
 from golr_loader_spark.plans.facets import matching_doc_ids
 
 
@@ -88,62 +91,41 @@ def decode_postings(
 ) -> DataFrame:
     """Flatten the given terms' posting blocks back to row form →
     (term, field, bucket, doc_id, tf, dl). Reads only the matching
-    blocks (parquet row-group pruning via the term predicate); useful
-    for index introspection and for scoring an externally-filtered
-    doc set without re-tokenizing the corpus. ``exclude_ids`` (either
+    blocks (parquet row-group pruning via the term predicate) plus the
+    fields' norms lists, grouped by bucket so each group holds the
+    norms its postings read dl from; useful for index introspection
+    and for scoring an externally-filtered doc set without
+    re-tokenizing the corpus. ``exclude_ids`` (either
     bm25._norm_excl shape) masks tombstoned/superseded postings by
     each block's segment — a fast-upserted doc decodes from its newest
     copy only."""
-    from golr_loader_spark.plans.bm25 import _live_of, _norm_excl, _row_segments
+    from golr_loader_spark.plans.bm25 import _decode_lists, _norm_excl
 
     cfg = cfg or index.cfg
     excl = _norm_excl(exclude_ids)
-    sel = ["term", "field", "bucket", "n", "doc_id_first", "doc_ids", "tfs", "dls"]
-    if "segment" in index.postings.columns:
-        sel.append("segment")
-    cand = index.postings.filter(
-        F.col("term").isin(list(terms)) & F.col("field").isin(list(cfg.fields))
-    ).select(*sel)
+    cand = index.postings.filter(block_scan(terms, cfg.fields))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # all of a batch's blocks decode in three varint calls (the
-        # streams are self-delimiting, so concatenated buffers decode
-        # in one vectorized pass; per-block doc_id bases re-applied
-        # with a segmented cumsum) — same shape as bm25.decode_list,
-        # no per-block pandas construction
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            n_pb = pdf["n"].to_numpy(np.int64)
-            firsts = pdf["doc_id_first"].to_numpy(np.int64)
-            g = np.cumsum(varint_decode(b"".join(pdf["doc_ids"])).astype(np.int64))
-            starts = np.concatenate([[0], np.cumsum(n_pb)])[:-1]
-            ids = g + np.repeat(firsts - g[starts], n_pb)
-            tfs = varint_decode(b"".join(pdf["tfs"])).astype(np.int32)
-            dls = varint_decode(b"".join(pdf["dls"])).astype(np.int32)
-            terms_r = np.repeat(pdf["term"].to_numpy(object), n_pb)
-            fields_r = np.repeat(pdf["field"].to_numpy(object), n_pb)
-            buckets_r = np.repeat(pdf["bucket"].to_numpy(np.int32), n_pb)
-            if excl is not None:
-                keep = _live_of(ids, np.repeat(_row_segments(pdf), n_pb), excl)
-                if not keep.all():
-                    ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                    terms_r, fields_r, buckets_r = (
-                        terms_r[keep], fields_r[keep], buckets_r[keep],
-                    )
-            if len(ids):
-                yield pd.DataFrame(
-                    {
-                        "term": terms_r,
-                        "field": fields_r,
-                        "bucket": buckets_r,
-                        "doc_id": ids,
-                        "tf": tfs,
-                        "dl": dls,
-                    }
-                )
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        # the BM25 decoder's lists, flattened back to rows
+        lists = _decode_lists(pdf, excl)
+        keys = list(lists)
+        n = np.array([len(lists[k][0]) for k in keys], dtype=np.int64)
 
-    return cand.mapInPandas(
+        def flat(i, dtype):
+            if not keys:
+                return np.empty(0, dtype=dtype)
+            return np.concatenate([lists[k][i] for k in keys]).astype(dtype)
+
+        return pd.DataFrame({
+            "term": np.repeat(np.array([t for t, _f in keys], dtype=object), n),
+            "field": np.repeat(np.array([f for _t, f in keys], dtype=object), n),
+            "bucket": np.full(int(n.sum()), pdf["bucket"].iloc[0], dtype=np.int32),
+            "doc_id": flat(0, np.int64),
+            "tf": flat(1, np.int32),
+            "dl": flat(2, np.int32),
+        })
+
+    return cand.groupBy("bucket").applyInPandas(
         run,
         schema="term string, field string, bucket int, doc_id long, tf int, dl int",
     )
@@ -244,13 +226,16 @@ def _decode_positions(blob: bytes, tfs: np.ndarray) -> np.ndarray:
     positions (length Σtf). Posting i's segment has exactly tf_i
     varints (first absolute, rest ascending deltas), so the stream
     needs no length metadata: split at cumsum(tfs), un-delta with a
-    segmented cumsum — all vectorized."""
-    if len(tfs) == 0:
-        return np.empty(0, dtype=np.int64)
+    segmented cumsum — all vectorized. A tf-0 posting (norms) has an
+    empty segment."""
     vals = varint_decode(blob).astype(np.int64)
-    starts = np.concatenate([[0], np.cumsum(tfs)[:-1]])
+    if len(vals) == 0:
+        return np.empty(0, dtype=np.int64)
+    nz = tfs > 0
+    starts = (np.cumsum(tfs) - tfs)[nz]
     c = np.cumsum(vals)
-    base = c[starts] - vals[starts]
+    base = np.zeros(len(tfs), dtype=np.int64)
+    base[nz] = c[starts] - vals[starts]
     return c - np.repeat(base, tfs)
 
 
@@ -327,16 +312,14 @@ def phrase_search_positional(
     if score_group is None:
         return spark.createDataFrame([], "doc_id long, score double")
 
-    cand = index.postings.filter(
-        F.col("term").isin(uterms) & (F.col("field") == F.lit(field))
-    )
+    cand = index.postings.filter(block_scan(uterms, [field]))
     per_bucket = cand.groupBy("bucket").applyInPandas(
         score_group, schema="doc_id long, score double"
     )
     return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
-def _decode_positional_lists(cols, excl) -> dict[str, tuple]:
+def _decode_positional_lists(cols, excl, norms=None) -> dict[str, tuple]:
     """Decode positional posting blocks → {term: (doc_ids, tfs, dls,
     flat_positions)} with tombstone/segment masking applied (``excl``
     is bm25._norm_excl-normalized). ``cols`` is a DataFrame (an
@@ -349,11 +332,13 @@ def _decode_positional_lists(cols, excl) -> dict[str, tuple]:
     streams are self-delimiting, so concatenated buffers decode in one
     pass; per-block doc_id bases are re-applied with a segmented
     cumsum, and the position stream splits at cumsum(tfs) since each
-    block holds exactly Σtf varints)."""
-    from golr_loader_spark.plans.bm25 import _live_of
+    block holds exactly Σtf varints). dl comes from the norms list, as
+    in ``bm25._decode_lists``."""
+    from golr_loader_spark.plans.bm25 import _live_of, _split_norms
 
     if not isinstance(cols, dict):
         cols = {c: cols[c].to_numpy() for c in cols.columns}
+    cols, norms = _split_norms(cols, norms)
     zeros = np.zeros(len(cols["term"]), dtype=np.int64)
     seg = cols["segment"].astype(np.int64) if "segment" in cols else zeros
     bucket = cols["bucket"].astype(np.int64) if "bucket" in cols else zeros
@@ -364,7 +349,7 @@ def _decode_positional_lists(cols, excl) -> dict[str, tuple]:
     g = np.cumsum(varint_decode(b"".join(cols["doc_ids"][order])).astype(np.int64))
     ids = g + np.repeat(firsts - g[np.cumsum(n_pb) - n_pb], n_pb)
     tfs = varint_decode(b"".join(cols["tfs"][order])).astype(np.int64)
-    dls = varint_decode(b"".join(cols["dls"][order])).astype(np.int64)
+    dls = norms_dl(norms, cols["field"][order], seg[order], n_pb, ids)
     pos = _decode_positions(b"".join(cols["poss"][order]), tfs)
     tid = np.repeat(t_codes[order], n_pb)
     if excl is not None:
@@ -825,9 +810,7 @@ def span_near_search(
     )
     if score_group is None:
         return spark.createDataFrame([], "doc_id long, score double")
-    cand = index.postings.filter(
-        F.col("term").isin(uterms) & (F.col("field") == F.lit(field))
-    )
+    cand = index.postings.filter(block_scan(uterms, [field]))
     per_bucket = cand.groupBy("bucket").applyInPandas(
         score_group, schema="doc_id long, score double"
     )

@@ -39,6 +39,11 @@ from golr_loader_spark.plans.bm25 import (
     check_expansion,
     query_analyzer,
 )
+from golr_loader_spark.plans.build_index import (
+    NORMS_TERM,
+    check_block_format,
+    decode_norms,
+)
 
 
 def _lev_le(a: str, b: str, m: int) -> bool:
@@ -188,6 +193,7 @@ class LocalSearcher:
         # originals, for refresh(): cfg BEFORE default resolution so a
         # reopen re-reads config.json exactly like a fresh open would
         self._init_args = (root, cfg, preload_term_stats)
+        check_block_format(root)
         if cfg is None:
             # the index root persists its own IndexConfig (Solr ships
             # schema.xml inside the core for the same reason): queries
@@ -212,6 +218,9 @@ class LocalSearcher:
         self._term_blocks = DecodedListCache(max_entries=4096)
         self.postings = pads.dataset(f"{root}/postings", format="parquet")
         self._rgix = _RowGroupIndex(f"{root}/postings")
+        # each field's norms list (every doc's dl), decoded once per
+        # open: every list decode and explain reads dl from it
+        self._norms = decode_norms(self._read_rows([NORMS_TERM], self._NORMS_COLS))
         self.term_stats = pads.dataset(f"{root}/term_stats", format="parquet")
         # tombstones (plans.maintenance.delete_docs): Lucene liveDocs —
         # deleted docs are masked out of every result until compaction.
@@ -293,6 +302,32 @@ class LocalSearcher:
         "doc_ids", "tfs", "dls", "max_tf", "min_dl", "segment", "poss",
     ]
 
+    # the columns ``build_index.decode_norms`` reads
+    _NORMS_COLS = [
+        "term", "field", "n", "doc_id_first", "doc_ids", "dls", "segment",
+    ]
+
+    def _read_rows(self, terms: list[str], columns: list[str]) -> dict:
+        """``columns`` of the block rows of ``terms`` in the cfg fields
+        as {column: numpy array}, from one row-group read (a dataset
+        scan on roots without usable footer stats)."""
+        raw = self._rgix.read(terms, columns=columns)
+        if raw is None:
+            names = set(self.postings.schema.names)
+            raw = self.postings.to_table(
+                filter=pc.field("term").isin(terms),
+                columns=[c for c in columns if c in names],
+            )
+        mask = pc.and_(
+            pc.is_in(raw["term"], value_set=pa.array(terms)),
+            pc.is_in(raw["field"], value_set=pa.array(list(self.cfg.fields))),
+        )
+        tbl = raw.filter(mask)
+        return {
+            name: tbl[name].to_numpy(zero_copy_only=False)
+            for name in tbl.column_names
+        }
+
     def _read_score_cols(self, terms: list[str]) -> dict:
         """Raw block rows of ``terms`` (cfg fields only) as {column:
         numpy array}, concatenated over the terms; {} when none has
@@ -302,8 +337,7 @@ class LocalSearcher:
         are one ``_term_blocks`` entry (the Lucene terms-dictionary-to-
         blocks analog, one level rawer than the decoded lists; immutable
         between refresh() calls, which rebuild the cache); the terms
-        that miss there share one row-group read. Roots without usable
-        footer stats fall back to a dataset scan."""
+        that miss there share one ``_read_rows`` call."""
         cache = self._term_blocks
         have: dict[str, dict | bool] = {}
         missing = []
@@ -314,22 +348,7 @@ class LocalSearcher:
             else:
                 have[t] = v
         if missing:
-            raw = self._rgix.read(missing, columns=self._SCORE_COLS)
-            if raw is None:
-                names = set(self.postings.schema.names)
-                raw = self.postings.to_table(
-                    filter=pc.field("term").isin(missing),
-                    columns=[c for c in self._SCORE_COLS if c in names],
-                )
-            mask = pc.and_(
-                pc.is_in(raw["term"], value_set=pa.array(missing)),
-                pc.is_in(raw["field"], value_set=pa.array(list(self.cfg.fields))),
-            )
-            tbl = raw.filter(mask)
-            cols = {
-                name: tbl[name].to_numpy(zero_copy_only=False)
-                for name in tbl.column_names
-            }
+            cols = self._read_rows(missing, self._SCORE_COLS)
             tarr = cols["term"]
             order = np.argsort(tarr, kind="stable")
             sorted_cols = {k: v[order] for k, v in cols.items()}
@@ -390,7 +409,9 @@ class LocalSearcher:
             for t in missing:
                 per_term[t] = {}
             if cols:
-                decoded = _decode_lists(cols, _norm_excl(self.tombstones))
+                decoded = _decode_lists(
+                    cols, _norm_excl(self.tombstones), self._norms
+                )
                 for (t, f), lst in decoded.items():
                     per_term[t][f] = lst
             if cache is not None:
@@ -581,6 +602,7 @@ class LocalSearcher:
                 decoded = _decode_positional_lists(
                     {c: v[here] for c, v in cols.items()},
                     _norm_excl(self.tombstones),
+                    self._norms,
                 )
             for t in missing:
                 # () caches a term with no live posting in ``field``
@@ -1300,25 +1322,21 @@ class LocalSearcher:
 
     def _all_doc_ids_local(self) -> set[int]:
         """Live doc universe (serving twin of ``facets.all_doc_ids``):
-        union of every posting list's decoded doc-id stream,
-        tombstone-masked. One pass over the block table, memoized per
-        searcher instance (invalidated with the searcher, like any
+        union of the fields' norms doc ids, tombstone-masked. Memoized
+        per searcher instance (invalidated with the searcher, like any
         Lucene reader-scoped cache)."""
         cached = getattr(self, "_all_ids_cache", None)
         if cached is not None:
             return cached
-        from golr_loader_spark.plans.facets import _match_bucket_factory
+        from golr_loader_spark.plans.bm25 import _live_of
 
-        blocks = self.postings.to_table(
-            filter=pc.field("field").isin(list(self.cfg.fields))
-        ).to_pandas()
-        if not len(blocks):
-            self._all_ids_cache = set()
-            return self._all_ids_cache
-        fn = _match_bucket_factory(None, None, self.tombstones)
-        self._all_ids_cache = {
-            int(d) for d in fn(blocks)["doc_id"].to_numpy()
-        }
+        excl = _norm_excl(self.tombstones)
+        ids = set()
+        for (_f, seg), (nids, _dls) in self._norms.items():
+            if excl is not None:
+                nids = nids[_live_of(nids, np.full(len(nids), seg), excl)]
+            ids.update(int(d) for d in nids)
+        self._all_ids_cache = ids
         return self._all_ids_cache
 
     def _fq_ids_local(self, fq, max_expansions: int = 1024) -> set[int]:
@@ -1450,12 +1468,13 @@ class LocalSearcher:
     ) -> dict[tuple[str, str], tuple[int, int]]:
         """Point lookup: (tf, dl) per (term, field) for ONE doc —
         reads only the given terms' blocks in the doc's own bucket,
-        tombstone-masked. Shared by ``explain`` and
-        ``explain_query``."""
+        tombstone-masked, with dl from the field's norms. Shared by
+        ``explain`` and ``explain_query``."""
         import numpy as _np
 
         from golr_loader_spark.functions.codec import varint_decode
-        from golr_loader_spark.plans.bm25 import _live_of, _norm_excl
+        from golr_loader_spark.plans.bm25 import _live_of
+        from golr_loader_spark.plans.build_index import norms_dl
 
         found: dict[tuple[str, str], tuple[int, int]] = {}
         if not terms:
@@ -1476,15 +1495,15 @@ class LocalSearcher:
             i = int(_np.searchsorted(ids, doc_id))
             if i >= len(ids) or ids[i] != doc_id:
                 continue
-            if excl is not None:
-                seg = _np.int64(getattr(r, "segment", 0) or 0)
-                if not _live_of(
-                    ids[i : i + 1], _np.array([seg]), excl
-                )[0]:
-                    continue
+            seg = _np.array([getattr(r, "segment", 0) or 0], dtype=_np.int64)
+            if excl is not None and not _live_of(ids[i : i + 1], seg, excl)[0]:
+                continue
             tfs = varint_decode(r.tfs).astype(_np.int64)
-            dls = varint_decode(r.dls).astype(_np.int64)
-            found[(r.term, r.field)] = (int(tfs[i]), int(dls[i]))
+            dl = norms_dl(
+                self._norms, _np.array([r.field]), seg, _np.ones(1, _np.int64),
+                ids[i : i + 1],
+            )[0]
+            found[(r.term, r.field)] = (int(tfs[i]), int(dl))
         return found
 
     def explain(self, query: str, doc_id: int) -> dict:

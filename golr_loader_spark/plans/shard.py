@@ -180,7 +180,7 @@ def shard_index(
     * ``stored`` / ``facets`` / ``docs`` — filtered by the owning
       shard of ``doc_id``, keeping their doc_id sort;
     * ``stats`` / ``term_stats`` / ``tombstones`` — copied whole
-      (global statistics; see module docstring).
+      (global statistics; see module docstring), as is ``config.json``.
     """
     cfg = cfg or IndexConfig()
     if n_shards < 1:
@@ -203,6 +203,9 @@ def shard_index(
             shutil.copytree(
                 f"{root}/{tbl}", f"{sroot}/{tbl}", dirs_exist_ok=True
             )
+        if os.path.exists(f"{root}/config.json"):
+            # the analyzer chain and the block-format marker
+            shutil.copy2(f"{root}/config.json", f"{sroot}/config.json")
         if os.path.isdir(f"{root}/tombstones"):
             shutil.copytree(
                 f"{root}/tombstones", f"{sroot}/tombstones", dirs_exist_ok=True

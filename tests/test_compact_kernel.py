@@ -3,13 +3,14 @@
 * Golden parity: the block table ``compact_postings`` writes for a
   positional, multi-segment, tombstoned root is pinned by its
   fingerprint (xor of ``xxhash64`` over all columns — the same figure
-  the benchmark records for the build). The pinned value is the output
-  of the per-list ``applyInPandas`` kernel this one replaced; the
-  partition-wide kernel must reproduce it byte for byte, including a
+  the benchmark records for the build) and by what it decodes to. The
+  decoded digests are the output of the per-list ``applyInPandas``
+  kernel this one replaced, from before doc lengths moved into norms
+  lists; the partition-wide kernel must reproduce them, including a
   list that loses every posting and lists longer than one Arrow batch
-  (so the carry-over between batches runs).
-* Plan shape: compaction is one exchange on (term, field, bucket) under
-  a ``MapInArrow``, with no grouped pandas UDF; the upsert builds its
+  (so the carry-over between batches runs, norms included).
+* Plan shape: compaction is one exchange on (field, bucket) under a
+  ``MapInArrow``, with no grouped pandas UDF; the upsert builds its
   segment on the packed path, with no Tungsten sort of flat token rows.
 """
 
@@ -35,9 +36,11 @@ VANISH = 17  # its content is replaced by a term no other doc has, then deleted
 DELETED = [VANISH, 3, 101, 202]
 
 # fingerprint of the compacted block table (blocks, postings, xor of
-# xxhash64 over the sorted columns), as the per-list applyInPandas
-# kernel computed it
-GOLDEN = (3800, 43388, "182f07a08e9a0c92")
+# xxhash64 over the sorted columns) in the norms layout
+GOLDEN = (3834, 43920, "1855841ce8ddfa54")
+# what it decodes to (conftest._logical_digests), as the per-list
+# applyInPandas kernel computed it when every posting stored its dl
+LOGICAL_GOLDEN = ("8b7b86cb57497364", "8258207e83721836")
 
 
 @pytest.fixture(scope="module")
@@ -77,7 +80,9 @@ def root(spark, cfg, everything, tmp_path_factory):
     return root
 
 
-def test_compaction_block_table_matches_golden(spark, cfg, root, block_fingerprint):
+def test_compaction_block_table_matches_golden(
+    spark, cfg, root, block_fingerprint, logical_digests
+):
     postings = read_index(spark, root, cfg).postings
     assert postings.filter(F.col("term") == "zzvanish").count() > 0
     # every list with more than 4 blocks crosses an Arrow batch
@@ -89,6 +94,7 @@ def test_compaction_block_table_matches_golden(spark, cfg, root, block_fingerpri
         assert out.filter(F.col("term") == "zzvanish").count() == 0
         assert out.select("segment").distinct().collect() == [(0,)]
         assert block_fingerprint(out) == GOLDEN
+        assert logical_digests(out) == LOGICAL_GOLDEN
         out.unpersist()
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")

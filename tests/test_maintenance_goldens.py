@@ -4,8 +4,17 @@
   root holds after ``upsert_docs_fast`` → ``delete_docs`` (postings,
   term_stats, stats, docs, tombstones) and again after ``compact_root``,
   on a plain and a positional root, recorded before the metadata paths
-  were reworked; the dense-id mapping of ``assign_dense_ids`` on both of
-  its plans likewise.
+  were reworked (postings: re-recorded in the norms layout, whose
+  decoded rows and block metadata, ``LOGICAL_GOLDENS``, were recorded
+  with per-posting dl); the dense-id mapping of ``assign_dense_ids`` on
+  both of its plans likewise.
+* Norms: after the upsert and the deletes, and after the compaction,
+  every live doc has exactly one live norms entry per field, holding
+  the tokenizer's dl.
+* ``compact_root`` is safe to retry after a crash between its table
+  swap and the tombstone removal, and every Spark job the upsert and
+  the compaction start carries the caller's job group.
+* A root without the norms format marker is refused.
 * Guards: the metadata-sized steps of those calls reach Spark without a
   Python-list ``createDataFrame`` (a Python-RDD scan), without one
   ``create_map`` literal per dense-id range, and without a Spark scan of
@@ -30,7 +39,13 @@ from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.corpus import synth_corpus
 from golr_loader_spark.plans.build_index import build_index, write_index
 from golr_loader_spark.plans.documents import assign_dense_ids, flatten_documents
-from golr_loader_spark.plans.maintenance import compact_root, delete_docs, upsert_docs_fast
+from golr_loader_spark.plans.maintenance import (
+    compact_root,
+    delete_docs,
+    snapshot_index,
+    upsert_docs_fast,
+)
+from golr_loader_spark.plans.tombstones import read_tombstones
 
 N0 = 24
 TABLES = ("postings", "term_stats", "stats", "docs", "tombstones")
@@ -41,14 +56,14 @@ DELETED = [5, 11]
 GOLDENS = {
     "plain": {
         "deleted": {
-            "postings": "d4b2f79d9abf27b4",
+            "postings": "abc2711184e6ceb7",
             "term_stats": "34ea95515cc6ca63",
             "stats": "a44f5efeb0a1be1e",
             "docs": "5454da35efbb4d9b",
             "tombstones": "0c8eab9331638dc9",
         },
         "compacted": {
-            "postings": "84a29c4b9af98511",
+            "postings": "0f34a6e3281c17a9",
             "term_stats": "55af883f5ab96850",
             "stats": "e4e5179f1f981acd",
             "docs": "cd6c55007cc33a35",
@@ -57,19 +72,32 @@ GOLDENS = {
     },
     "positional": {
         "deleted": {
-            "postings": "f49f73ddf45dd8c9",
+            "postings": "7e69332105e1590f",
             "term_stats": "34ea95515cc6ca63",
             "stats": "a44f5efeb0a1be1e",
             "docs": "5454da35efbb4d9b",
             "tombstones": "0c8eab9331638dc9",
         },
         "compacted": {
-            "postings": "a07e522aa559e540",
+            "postings": "c54b0c7ed9b34b40",
             "term_stats": "55af883f5ab96850",
             "stats": "e4e5179f1f981acd",
             "docs": "cd6c55007cc33a35",
             "tombstones": "e3b0c44298fc1c14",
         },
+    },
+}
+
+# conftest._logical_digests of the postings, per root flavour and stage,
+# recorded when every posting stored its own dl
+LOGICAL_GOLDENS = {
+    "plain": {
+        "deleted": ("77d2414d435a0739", "e0a6eb4d393adf2e"),
+        "compacted": ("0119822ab707987d", "6e1bdde57aa0aec8"),
+    },
+    "positional": {
+        "deleted": ("f5f701988bcb4dc5", "e0a6eb4d393adf2e"),
+        "compacted": ("779a8fe0dce4ac60", "6e1bdde57aa0aec8"),
     },
 }
 
@@ -99,6 +127,30 @@ def _table_digest(path: str) -> str:
 
 def _digests(root: str) -> dict[str, str]:
     return {t: _table_digest(f"{root}/{t}") for t in TABLES}
+
+
+def _postings(root: str) -> pa.Table:
+    files = sorted(glob.glob(f"{root}/postings/*.parquet"))
+    return pa.concat_tables([pq.read_table(f) for f in files], promote_options="default")
+
+
+def _in_group(spark, name: str, call):
+    """Run ``call()`` under Spark job group ``name`` → (its result, the
+    group's job ids, ids of jobs it started outside any group)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty(10_000)
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(name, name)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty(10_000)
+    grouped = set(tracker.getJobIdsForGroup(name))
+    return out, grouped, set(tracker.getJobIdsForGroup(None)) - before
 
 
 def _watch(mp: pytest.MonkeyPatch) -> dict[str, list]:
@@ -138,25 +190,135 @@ def lifecycle(request, spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp(f"mg_{flavour}") / "root")
     write_index(build_index(base, cfg), root, term_partitions=2, documents=base)
     batch = _docs(spark, UPSERT)
-    out = {"flavour": flavour, "root": root, "seen": {}}
+    out = {"flavour": flavour, "root": root, "cfg": cfg, "seen": {}, "jobs": {}}
     with pytest.MonkeyPatch.context() as mp:
         out["seen"]["upsert"] = _watch(mp)
-        out["upserted"] = upsert_docs_fast(spark, root, batch, cfg)
+        out["upserted"], *out["jobs"]["upsert"] = _in_group(
+            spark, f"mg-upsert-{flavour}",
+            lambda: upsert_docs_fast(spark, root, batch, cfg),
+        )
     delete_docs(spark, root, DELETED)
     out["deleted"] = _digests(root)
+    out["postings"] = {"deleted": _postings(root)}
+    # a copy of the root with the deletes pending (hard links)
+    out["pending"] = str(tmp_path_factory.mktemp(f"mg_{flavour}_pending") / "root")
+    snapshot_index(root, out["pending"])
     with pytest.MonkeyPatch.context() as mp:
         out["seen"]["compact"] = _watch(mp)
-        out["removed"] = compact_root(spark, root, cfg)
+        out["removed"], *out["jobs"]["compact"] = _in_group(
+            spark, f"mg-compact-{flavour}", lambda: compact_root(spark, root, cfg)
+        )
     out["compacted"] = _digests(root)
+    out["postings"]["compacted"] = _postings(root)
     return out
 
 
-def test_upsert_delete_compact_tables_match_goldens(lifecycle):
+def test_upsert_delete_compact_tables_match_goldens(lifecycle, logical_digests):
     assert lifecycle["upserted"] == {"updated": 1, "added": 1, "segment": 1}
     assert lifecycle["removed"] == len(DELETED)
     want = GOLDENS[lifecycle["flavour"]]
     assert lifecycle["deleted"] == want["deleted"]
     assert lifecycle["compacted"] == want["compacted"]
+    for stage, blocks in lifecycle["postings"].items():
+        assert logical_digests(blocks) == LOGICAL_GOLDENS[lifecycle["flavour"]][stage]
+
+
+def _live_norms(blocks: pa.Table, tombstones) -> dict:
+    """(field, doc_id) → [dl of each live norms posting]."""
+    import numpy as np
+
+    from golr_loader_spark.plans.bm25 import _live_of, _norm_excl
+    from golr_loader_spark.plans.build_index import decode_norms
+
+    cols = {c: blocks[c].to_numpy(zero_copy_only=False) for c in blocks.column_names}
+    excl = _norm_excl(tombstones)
+    out: dict = {}
+    for (field, seg), (ids, dls) in decode_norms(cols).items():
+        live = (
+            np.ones(len(ids), dtype=bool) if excl is None
+            else _live_of(ids, np.full(len(ids), seg), excl)
+        )
+        for d, dl in zip(ids[live], dls[live]):
+            out.setdefault((field, int(d)), []).append(int(dl))
+    return out
+
+
+def test_one_live_norms_entry_per_doc_and_field(lifecycle):
+    """After the upsert and the deletes (superseded copies masked by
+    their segment tombstones) and after the compaction, each live doc
+    has one norms entry per field, holding its analyzed token count."""
+    from golr_loader_spark.functions.tokenize import analyze_with_tf
+
+    texts = {i: f"common filler uid{i} words here" for i in range(N0)}
+    texts.update(dict(UPSERT))
+    for d in DELETED:
+        del texts[d]
+    want = {
+        ("text", d): [sum(analyze_with_tf(t, "simple").values())]
+        for d, t in texts.items()
+    }
+    pending = read_tombstones(lifecycle["pending"])
+    assert _live_norms(lifecycle["postings"]["deleted"], pending) == want
+    assert _live_norms(lifecycle["postings"]["compacted"], None) == want
+
+
+def test_compact_root_retry_after_crash_counts_deletes_once(spark, lifecycle, monkeypatch):
+    """A crash after the new tables swapped in but before the tombstone
+    table is removed leaves the deletes pending; the retry must neither
+    subtract the hard deletes from n_docs again nor apply the
+    superseded-copy tombstones to the merged segment."""
+    from golr_loader_spark.plans import maintenance
+
+    root, cfg = lifecycle["pending"], lifecycle["cfg"]
+    swap = maintenance._swap_tables
+
+    def swap_then_crash(root_, tmp, tables, **_drop):
+        swap(root_, tmp, tables)
+        raise OSError("crash before the tombstones are removed")
+
+    monkeypatch.setattr(maintenance, "_swap_tables", swap_then_crash)
+    with pytest.raises(OSError):
+        compact_root(spark, root, cfg)
+    monkeypatch.undo()
+    assert os.path.isdir(f"{root}/tombstones")
+    assert compact_root(spark, root, cfg) == 0
+    n_docs = pq.read_table(f"{root}/stats")["n_docs"].to_pylist()
+    assert n_docs == [pq.read_table(f"{root}/docs").num_rows] * len(n_docs)
+    assert _table_digest(f"{root}/stats") == lifecycle["compacted"]["stats"]
+    assert _table_digest(f"{root}/postings") == lifecycle["compacted"]["postings"]
+
+
+def test_maintenance_jobs_carry_the_callers_job_group(lifecycle):
+    """Jobs the upsert and the compaction submit from their write pool
+    inherit the calling thread's job group."""
+    for stage, (grouped, ungrouped) in lifecycle["jobs"].items():
+        assert grouped, stage
+        assert not ungrouped, stage
+
+
+def test_root_without_norms_format_is_refused(spark, lifecycle, tmp_path):
+    import json
+
+    from golr_loader_spark.plans.build_index import read_index
+    from golr_loader_spark.plans.serve import LocalSearcher
+
+    root = str(tmp_path / "old")
+    snapshot_index(lifecycle["root"], root)
+    conf_path = f"{root}/config.json"
+    with open(conf_path) as fh:
+        conf = json.load(fh)
+    del conf["block_format"]
+    os.remove(conf_path)  # a hard link: do not write through it
+    with open(conf_path, "w") as fh:
+        json.dump(conf, fh)
+    for call in (
+        lambda: read_index(spark, root),
+        lambda: LocalSearcher(root),
+        lambda: compact_root(spark, root),
+        lambda: upsert_docs_fast(spark, root, _docs(spark, UPSERT[:1])),
+    ):
+        with pytest.raises(ValueError, match="rebuild"):
+            call()
 
 
 def test_maintenance_hands_spark_no_python_list(lifecycle):

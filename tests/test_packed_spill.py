@@ -202,7 +202,9 @@ def test_skewed_spill_encodes_identically_in_process():
     assert blocks(1) == blocks(0)
 
 
-def test_skewed_vocabulary_spilled_equals_flat(spark, block_fingerprint, flat_goldens):
+def test_skewed_vocabulary_spilled_equals_flat(
+    spark, block_fingerprint, flat_goldens, logical_digests, logical_goldens
+):
     # a term in every doc, dominating its doc-id buckets
     rows = [
         (d, " ".join(["hot"] * (1 + d % 5) + [f"w{d % 7}", f"u{d}"]))
@@ -216,3 +218,5 @@ def test_skewed_vocabulary_spilled_equals_flat(spark, block_fingerprint, flat_go
     for spill_mb in ("0.001", "0"):
         got = _built_with_spill(spill_mb, docs, cfg, block_fingerprint)
         assert got == flat_goldens["skewed_positional"], spill_mb
+    got = _built_with_spill("0.001", docs, cfg, logical_digests)
+    assert got == logical_goldens["skewed_positional"]

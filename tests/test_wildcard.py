@@ -134,3 +134,39 @@ def test_explain_wildcard_pins_scores(ix, cfg):
             ex = explain_lucene(ix, q, d, cfg=cfg)
             assert ex["matches"], (q, d, ex.get("reason"))
             assert ex["score"] == pytest.approx(s, rel=1e-12), (q, d)
+
+
+def test_no_expansion_yields_the_norms_term(spark, ix, cfg, tmp_path):
+    """Every doc's length lives in its field's norms list, a list under a
+    reserved term: no multi-term expansion, term enumeration or MLT
+    selection may return it, on either face, and each face's expansion
+    is exactly the indexed vocabulary."""
+    from golr_loader_spark.plans.bm25 import terms_enum
+    from golr_loader_spark.plans.build_index import NORMS_TERM
+    from golr_loader_spark.plans.lucene import Fuzzy, TermRange, Wildcard, _expand
+    from golr_loader_spark.plans.mlt import seed_term_freqs, select_interesting_terms
+    from golr_loader_spark.plans.serve import LocalSearcher, _wildcard_terms
+
+    root = str(tmp_path / "ix")
+    write_index(ix, root, term_partitions=2)
+    ls = LocalSearcher(root, cfg)
+    fields = list(cfg.fields)
+    nodes = {
+        "wildcard": Wildcard("*"),
+        "open range": TermRange(None, None),
+        "fuzzy": Fuzzy(NORMS_TERM.strip(), max_edits=1),
+    }
+    for name, node in nodes.items():
+        for face in (_expand(ix, node, fields, 10_000), ls._expand(node, fields, 10_000)):
+            assert NORMS_TERM not in face, name
+            if name != "fuzzy":
+                assert sorted(face) == VOCAB, name
+    assert _wildcard_terms(ls._vocab_terms(), "*") == VOCAB  # the regex ^.*$
+    assert NORMS_TERM not in {t for t, _d in ls.terms(limit=10_000)}
+    assert NORMS_TERM not in {
+        r["term"] for r in terms_enum(ix, limit=10_000, cfg=cfg).collect()
+    }
+    tf = seed_term_freqs(f"{NORMS_TERM} {NORMS_TERM} data data", "simple")
+    df = {t: d for t, d in ls.terms(limit=10_000)}
+    picked = select_interesting_terms(tf, df, ls.n_docs, min_tf=1, min_df=1)
+    assert picked and NORMS_TERM not in {t for t, _b in picked}
