@@ -1325,8 +1325,8 @@ def explain(
     restricted to the doc's OWN bucket (bucket is a function of
     doc_id), decoded and filtered to the doc — a point lookup, not a
     corpus pass."""
-    from golr_loader_spark.plans.build_index import bucket_of
-    from golr_loader_spark.plans.phrase import decode_postings
+    from golr_loader_spark.plans.build_index import block_scan, bucket_of
+    from golr_loader_spark.plans.phrase import _flat_postings
 
     cfg = cfg or index.cfg
     terms = analyze_query(query, query_analyzer(cfg), cfg.chain)
@@ -1335,15 +1335,14 @@ def explain(
         return out
     idf = _idf_table(index, terms)
     avgdl = _avgdl(index)
+    own = F.col("bucket") == bucket_of(
+        F.lit(int(doc_id)), cfg.bucket_bits, cfg.id_space_bits
+    )
     flat = (
-        decode_postings(index, terms, cfg, exclude_ids=exclude_ids)
-        .filter(
-            (F.col("doc_id") == int(doc_id))
-            & (
-                F.col("bucket")
-                == bucket_of(F.lit(int(doc_id)), cfg.bucket_bits, cfg.id_space_bits)
-            )
+        _flat_postings(
+            index.postings.filter(block_scan(terms, cfg.fields) & own), exclude_ids
         )
+        .filter(F.col("doc_id") == int(doc_id))
         .collect()
     )
     rows = sorted(flat, key=lambda r: (r["field"], r["term"]))

@@ -171,16 +171,25 @@ def matching_doc_ids(
         }
         if not required <= present:
             return spark.createDataFrame([], "bucket int, doc_id long")
+    return _doc_ids(
+        index,
+        F.col("term").isin(terms) & F.col("field").isin(list(cfg.fields)),
+        cfg,
+        _match_bucket_factory(
+            {t: list(cfg.fields) for t in terms}, required, exclude_ids
+        ),
+    )
+
+
+def _doc_ids(index: InvertedIndex, cond, cfg: IndexConfig, fn) -> DataFrame:
+    """(bucket, doc_id) of the blocks under ``cond``, matched per bucket
+    by ``fn`` (``_match_bucket_factory``): doc_id streams only."""
     sel = ["bucket", "term", "field", "doc_id_first", "doc_ids"]
     if "segment" in index.postings.columns:
         sel.append("segment")
-    cand = index.postings.filter(
-        F.col("term").isin(terms) & F.col("field").isin(list(cfg.fields))
-    ).select(*sel)
-    term_fields = {t: list(cfg.fields) for t in terms}
-    fn = _match_bucket_factory(term_fields, required, exclude_ids)
     return (
-        cand.groupBy("bucket")
+        index.postings.filter(cond).select(*sel)
+        .groupBy("bucket")
         .applyInPandas(fn, schema="doc_id long")
         .withColumn(
             "bucket", bucket_of(F.col("doc_id"), cfg.bucket_bits, cfg.id_space_bits)
@@ -202,18 +211,9 @@ def all_doc_ids(
     it can never match any query, so pure-negative fq excluding it is a
     no-op either way. Cost: one decode of n_docs ids per field."""
     cfg = cfg or index.cfg
-    sel = ["bucket", "term", "field", "doc_id_first", "doc_ids"]
-    if "segment" in index.postings.columns:
-        sel.append("segment")
-    cand = index.postings.filter(block_scan([], cfg.fields)).select(*sel)
-    fn = _match_bucket_factory(None, None, exclude_ids)
-    return (
-        cand.groupBy("bucket")
-        .applyInPandas(fn, schema="doc_id long")
-        .withColumn(
-            "bucket", bucket_of(F.col("doc_id"), cfg.bucket_bits, cfg.id_space_bits)
-        )
-        .select("bucket", "doc_id")
+    return _doc_ids(
+        index, block_scan([], cfg.fields), cfg,
+        _match_bucket_factory(None, None, exclude_ids),
     )
 
 

@@ -849,24 +849,22 @@ def _vet(
     exclude_ids,
 ) -> DataFrame:
     """Apply term MUST_NOTs relationally (decode only the prohibited
-    terms' doc_id streams) to a result a join filled with docs the
-    scorer never saw. Docs the scorer DID emit hold no prohibited term,
-    so re-filtering them is a no-op."""
-    from golr_loader_spark.plans.phrase import decode_postings
+    terms' doc_id streams, ``facets._doc_ids``) to a result a join
+    filled with docs the scorer never saw. Docs the scorer DID emit
+    hold no prohibited term, so re-filtering them is a no-op."""
+    from golr_loader_spark.plans.facets import _doc_ids, _match_bucket_factory
 
     bare = sorted(m for m in prohibited if isinstance(m, str))
-    pairs = sorted(m for m in prohibited if not isinstance(m, str))
-    neg = decode_postings(
-        index,
-        sorted({*bare, *(t for t, _f in pairs)}),
-        cfg,
-        exclude_ids=exclude_ids,
-    )
     cond = F.col("term").isin(bare) if bare else F.lit(False)
-    for t, f in pairs:
+    for t, f in sorted(m for m in prohibited if not isinstance(m, str)):
         cond = cond | ((F.col("term") == t) & (F.col("field") == f))
-    neg = neg.filter(cond).select("doc_id").distinct()
-    return out.join(neg, on="doc_id", how=ANTI)
+    neg = _doc_ids(
+        index,
+        cond & F.col("field").isin(list(cfg.fields)),
+        cfg,
+        _match_bucket_factory(None, None, exclude_ids),
+    )
+    return out.join(neg.select("doc_id"), on="doc_id", how=ANTI)
 
 
 def _match(

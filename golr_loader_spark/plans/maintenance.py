@@ -79,6 +79,10 @@ from golr_loader_spark.plans.tombstones import (
 
 _LIST_KEY = ("term", "field", "bucket")
 
+# in a root from the moment a compaction's tables have swapped in until
+# its tombstone table is gone (``compact_root``)
+_COMPACTED = ".compacted"
+
 _STATS_SCHEMA = pa.schema(
     [("field", pa.string()), ("avgdl", pa.float64()), ("n_docs", pa.int64())]
 )
@@ -90,6 +94,7 @@ def delete_docs(
     query time: the mask is a set union). ``dead_below`` defaults to
     "dead in every segment" (a hard delete); fast upserts pass their
     new segment number so only OLDER copies of the doc die."""
+    _finish_compaction(root)
     append_tombstones(
         root,
         [int(i) for i in ids],
@@ -323,8 +328,10 @@ def compact_postings(
     Plan: one exchange of the block rows on (field, bucket), a sort of
     the block rows within partitions by (field, bucket, norms first,
     term, segment, block_id) — each (field, bucket)'s norms list, the
-    dl source of its other lists, comes first — then ONE ``mapInArrow`` task per
-    partition (``_compact_batches``) — no Python call per list.
+    dl source of its other lists, comes first — then ONE ``mapInArrow``
+    task per partition (``_compact_batches``) — no Python call per list.
+    At most len(fields) * 2**bucket_bits partitions hold rows, so that
+    product caps the compaction's parallelism.
 
     ``tombstone_ids``: plain id array (dead everywhere) or the
     ``(ids, dead_below)`` pair from ``load_tombstones``."""
@@ -418,6 +425,7 @@ def upsert_docs(
     )
 
     cfg = cfg or IndexConfig()
+    _finish_compaction(root)
     docs_path = f"{root}/docs"
     if not os.path.isdir(docs_path):
         raise ValueError(
@@ -670,31 +678,23 @@ def compact_root(spark: SparkSession, root: str, cfg: IndexConfig | None = None)
     swap in together (``_swap_tables``), the tombstone table's removal
     last in the same swap.
 
-    Safe to retry after a crash that left the tombstones behind the
-    swapped tables: hard deletes count only while the docs manifest
-    holds them, and a segment tombstone above the highest segment left
-    is stale (its doc's live copy was merged down) and is dropped."""
+    Safe to retry after a crash behind the table swap: the swap moves a
+    ``_COMPACTED`` marker in after the tables and removes it after the
+    tombstones, so a root that still holds the marker holds tombstones
+    its postings already folded; this call (and every other maintenance
+    write, ``_finish_compaction``) drops them before doing anything
+    else."""
     from golr_loader_spark.plans.build_index import read_index, write_index
 
     cfg = cfg or IndexConfig()
     check_block_format(root)
+    _finish_compaction(root)
     t_ids, t_db = load_tombstones(spark, root)
     if not len(t_ids):
         return 0
-    fresh = (t_db == DEAD_EVERYWHERE) | (t_db <= _max_segment(root))
-    t_ids, t_db = t_ids[fresh], t_db[fresh]
     tomb = t_ids[t_db == DEAD_EVERYWHERE]  # hard deletes: leave the corpus
-    if len(tomb) and os.path.isdir(f"{root}/docs"):
-        # only hard deletes the docs manifest still holds leave the
-        # corpus now (a retried compaction already removed the others)
-        import pyarrow.dataset as pads
-
-        held = pads.dataset(f"{root}/docs", format="parquet").to_table(
-            columns=["doc_id"], filter=pc.field("doc_id").isin(tomb)
-        )
-        tomb = np.intersect1d(tomb, held["doc_id"].to_numpy())
     ix = read_index(spark, root, cfg)
-    new_ix = compact_index(ix, (t_ids, t_db), n_docs_removed=len(tomb))
+    new_ix = compact_index(ix, (t_ids, t_db))
     new_ix.postings.count()  # materialize once: every table write reuses it
     tables = ["postings", "term_stats", "stats"]
     meta = None
@@ -712,8 +712,20 @@ def compact_root(spark: SparkSession, root: str, cfg: IndexConfig | None = None)
     tables += _rewrite_doc_tables(
         spark, root, tmp, None, [], cfg, drop_ids=[int(i) for i in tomb]
     )
-    _swap_tables(root, tmp, tuple(tables), drop=("tombstones",))
+    os.makedirs(f"{tmp}/{_COMPACTED}")
+    _swap_tables(
+        root, tmp, (*tables, _COMPACTED), drop=("tombstones", _COMPACTED)
+    )
     return len(tomb)
+
+
+def _finish_compaction(root: str) -> None:
+    """Finish a compaction that crashed after its tables swapped in:
+    drop the tombstones they already folded, then the marker."""
+    if os.path.isdir(f"{root}/{_COMPACTED}"):
+        _swap_tables(
+            root, f"{root}/.compact_tmp", (), drop=("tombstones", _COMPACTED)
+        )
 
 
 def _max_segment(root: str) -> int:
@@ -787,6 +799,7 @@ def upsert_docs_fast(
     from golr_loader_spark.plans.build_index import build_postings_packed
 
     cfg = cfg or IndexConfig()
+    _finish_compaction(root)
     docs_path = f"{root}/docs"
     if not os.path.isdir(docs_path):
         raise ValueError(

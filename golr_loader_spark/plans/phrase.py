@@ -99,11 +99,17 @@ def decode_postings(
     bm25._norm_excl shape) masks tombstoned/superseded postings by
     each block's segment — a fast-upserted doc decodes from its newest
     copy only."""
+    cfg = cfg or index.cfg
+    cand = index.postings.filter(block_scan(terms, cfg.fields))
+    return _flat_postings(cand, exclude_ids)
+
+
+def _flat_postings(cand: DataFrame, exclude_ids) -> DataFrame:
+    """``decode_postings`` over the block rows ``cand`` (a
+    ``block_scan`` selection: its buckets' norms included)."""
     from golr_loader_spark.plans.bm25 import _decode_lists, _norm_excl
 
-    cfg = cfg or index.cfg
     excl = _norm_excl(exclude_ids)
-    cand = index.postings.filter(block_scan(terms, cfg.fields))
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         # the BM25 decoder's lists, flattened back to rows

@@ -142,7 +142,9 @@ class _RowGroupIndex:
             self.files[fi].read_row_groups(sorted(rgs), columns=columns)
             for fi, rgs in hits.items()
         ]
-        return pa.concat_tables(parts)
+        # files differ in the segment column's nullability (a fast
+        # upsert writes it NOT NULL)
+        return pa.concat_tables(parts, promote_options="default")
 
 
 def _join_scores(
@@ -183,6 +185,10 @@ def _load_config(root: str) -> IndexConfig | None:
         return IndexConfig.from_dict(json.load(fh))
 
 
+def _numpy_cols(tbl: pa.Table) -> dict:
+    return {c: tbl[c].to_numpy(zero_copy_only=False) for c in tbl.column_names}
+
+
 class LocalSearcher:
     """Driver-/service-side BM25 top-k over a persisted index root
     (written by write_index or build_index_checkpointed)."""
@@ -193,16 +199,13 @@ class LocalSearcher:
         # originals, for refresh(): cfg BEFORE default resolution so a
         # reopen re-reads config.json exactly like a fresh open would
         self._init_args = (root, cfg, preload_term_stats)
-        check_block_format(root)
-        if cfg is None:
-            # the index root persists its own IndexConfig (Solr ships
-            # schema.xml inside the core for the same reason): queries
-            # MUST be analyzed with the index-time analyzer chain —
-            # a builder/searcher stopword-stemmer-synonym mismatch
-            # silently changes results. Explicit cfg still wins (old
-            # roots without config.json keep working).
-            cfg = _load_config(root)
-        self.cfg = cfg or IndexConfig()
+        conf = check_block_format(root)
+        # the index root persists its own IndexConfig (Solr ships
+        # schema.xml inside the core for the same reason): queries MUST
+        # be analyzed with the index-time analyzer chain — a
+        # builder/searcher stopword-stemmer-synonym mismatch silently
+        # changes results. Explicit cfg still wins.
+        self.cfg = cfg or IndexConfig.from_dict(conf)
         self._root = root
         self._facet_arrays = None
         # decoded-postings LRU (bm25.DecodedListCache): valid for this
@@ -220,7 +223,9 @@ class LocalSearcher:
         self._rgix = _RowGroupIndex(f"{root}/postings")
         # each field's norms list (every doc's dl), decoded once per
         # open: every list decode and explain reads dl from it
-        self._norms = decode_norms(self._read_rows([NORMS_TERM], self._NORMS_COLS))
+        self._norms = decode_norms(
+            _numpy_cols(self._read_rows([NORMS_TERM], self._NORMS_COLS))
+        )
         self.term_stats = pads.dataset(f"{root}/term_stats", format="parquet")
         # tombstones (plans.maintenance.delete_docs): Lucene liveDocs —
         # deleted docs are masked out of every result until compaction.
@@ -279,18 +284,7 @@ class LocalSearcher:
         return [{"term": t, "field": f, "df": d} for (t, f), d in agg.items()]
 
     def _read_blocks(self, terms: list[str]) -> pd.DataFrame:
-        raw = self._rgix.read(terms)
-        if raw is not None:
-            mask = pc.and_(
-                pc.is_in(raw["term"], value_set=pa.array(terms)),
-                pc.is_in(raw["field"], value_set=pa.array(list(self.cfg.fields))),
-            )
-            return raw.filter(mask).to_pandas()
-        # missing footer stats → per-query dataset scan fallback
-        return self.postings.to_table(
-            filter=pc.field("term").isin(terms)
-            & pc.field("field").isin(list(self.cfg.fields)),
-        ).to_pandas()
+        return self._read_rows(terms).to_pandas()
 
     # the block columns serving reads: BM25 scoring's, plus the
     # positional ``poss`` blobs the phrase and span matchers decode
@@ -307,26 +301,24 @@ class LocalSearcher:
         "term", "field", "n", "doc_id_first", "doc_ids", "dls", "segment",
     ]
 
-    def _read_rows(self, terms: list[str], columns: list[str]) -> dict:
-        """``columns`` of the block rows of ``terms`` in the cfg fields
-        as {column: numpy array}, from one row-group read (a dataset
-        scan on roots without usable footer stats)."""
+    def _read_rows(
+        self, terms: list[str], columns: list[str] | None = None
+    ) -> pa.Table:
+        """The block rows of ``terms`` in the cfg fields (``columns`` of
+        them, all by default), from one row-group read (a dataset scan
+        on roots without usable footer stats)."""
         raw = self._rgix.read(terms, columns=columns)
         if raw is None:
             names = set(self.postings.schema.names)
             raw = self.postings.to_table(
                 filter=pc.field("term").isin(terms),
-                columns=[c for c in columns if c in names],
+                columns=None if columns is None else [c for c in columns if c in names],
             )
         mask = pc.and_(
             pc.is_in(raw["term"], value_set=pa.array(terms)),
             pc.is_in(raw["field"], value_set=pa.array(list(self.cfg.fields))),
         )
-        tbl = raw.filter(mask)
-        return {
-            name: tbl[name].to_numpy(zero_copy_only=False)
-            for name in tbl.column_names
-        }
+        return raw.filter(mask)
 
     def _read_score_cols(self, terms: list[str]) -> dict:
         """Raw block rows of ``terms`` (cfg fields only) as {column:
@@ -348,7 +340,7 @@ class LocalSearcher:
             else:
                 have[t] = v
         if missing:
-            cols = self._read_rows(missing, self._SCORE_COLS)
+            cols = _numpy_cols(self._read_rows(missing, self._SCORE_COLS))
             tarr = cols["term"]
             order = np.argsort(tarr, kind="stable")
             sorted_cols = {k: v[order] for k, v in cols.items()}
@@ -1643,18 +1635,7 @@ class LocalSearcher:
                        if r["field"] in self.cfg.fields}
             if not required <= present:
                 return _np.empty(0, dtype=_np.int64)
-        raw = self._rgix.read(terms)
-        if raw is not None:
-            mask = pc.and_(
-                pc.is_in(raw["term"], value_set=pa.array(terms)),
-                pc.is_in(raw["field"], value_set=pa.array(list(self.cfg.fields))),
-            )
-            blocks = raw.filter(mask).to_pandas()
-        else:
-            blocks = self.postings.to_table(
-                filter=pc.field("term").isin(terms)
-                & pc.field("field").isin(list(self.cfg.fields)),
-            ).to_pandas()
+        blocks = self._read_blocks(terms)
         if not len(blocks):
             return _np.empty(0, dtype=_np.int64)
         # the matcher unions per-term membership across ALL buckets

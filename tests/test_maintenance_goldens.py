@@ -12,8 +12,9 @@
   every live doc has exactly one live norms entry per field, holding
   the tokenizer's dl.
 * ``compact_root`` is safe to retry after a crash between its table
-  swap and the tombstone removal, and every Spark job the upsert and
-  the compaction start carries the caller's job group.
+  swap and the tombstone removal, removes a copy that an update to an
+  empty doc superseded, and every Spark job the upsert and the
+  compaction start carries the caller's job group.
 * A root without the norms format marker is refused.
 * Guards: the metadata-sized steps of those calls reach Spark without a
   Python-list ``createDataFrame`` (a Python-RDD scan), without one
@@ -282,10 +283,31 @@ def test_compact_root_retry_after_crash_counts_deletes_once(spark, lifecycle, mo
     monkeypatch.undo()
     assert os.path.isdir(f"{root}/tombstones")
     assert compact_root(spark, root, cfg) == 0
+    assert not os.path.exists(f"{root}/.compacted")
     n_docs = pq.read_table(f"{root}/stats")["n_docs"].to_pylist()
     assert n_docs == [pq.read_table(f"{root}/docs").num_rows] * len(n_docs)
     assert _table_digest(f"{root}/stats") == lifecycle["compacted"]["stats"]
     assert _table_digest(f"{root}/postings") == lifecycle["compacted"]["postings"]
+
+
+def test_compact_root_drops_copies_an_empty_update_superseded(spark, lifecycle, tmp_path):
+    """A fast upsert that empties a doc (null text: no tokens) writes
+    no postings, not even norms, only the tombstone; the compaction
+    must still remove the doc's old copy. A later upsert's segment
+    (NOT NULL segment column) next to the compacted files must not
+    break the searcher's reads."""
+    from golr_loader_spark.plans.serve import LocalSearcher
+
+    root, cfg = str(tmp_path / "root"), lifecycle["cfg"]
+    snapshot_index(lifecycle["root"], root)
+    assert upsert_docs_fast(spark, root, _docs(spark, [(3, None)]), cfg)["updated"] == 1
+    for stage in ("upserted", "compacted"):
+        hits = LocalSearcher(root, cfg).search("novelword common", k=100)
+        assert hits and 3 not in {d for d, _ in hits}, stage
+        compact_root(spark, root, cfg)
+    upsert_docs_fast(spark, root, _docs(spark, [(40, "novelword again")]), cfg)
+    hits = LocalSearcher(root, cfg).search("novelword", k=100)
+    assert [d for d, _ in hits] == [40]
 
 
 def test_maintenance_jobs_carry_the_callers_job_group(lifecycle):
