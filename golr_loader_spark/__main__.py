@@ -6,6 +6,7 @@ Usage (cluster):
       golr_loader_spark/__main__.py build --corpus <path> --out <index_root>
   spark-submit ... __main__.py query --index <index_root> --q "user_data scan" -k 10
   spark-submit ... __main__.py synth --out <path> --docs 1000000
+  python -m golr_loader_spark du <index_root>   (no Spark: parquet footers)
 
 In cluster mode the SparkSession comes from spark-submit's conf
 (master/executors set on the command line, N vs 4N by
@@ -113,6 +114,68 @@ def cmd_query(args) -> None:
     }))
 
 
+def root_usage(root: str) -> dict:
+    """Compressed bytes of an index root, read from parquet footers:
+    ``{"docs", "bytes", "tables": [{"table", "files", "row_groups",
+    "codecs", "bytes", "columns": {column: bytes}}]}``. ``bytes`` counts
+    every file under the root (as perfbench's ``index_bytes_per_doc``
+    does) or under the table, footers and checksums included; a
+    column's bytes are its column chunks' compressed sizes. ``docs`` is
+    the stats table's n_docs."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    def tree_bytes(path: str) -> int:
+        return sum(
+            os.path.getsize(os.path.join(d, f))
+            for d, _s, files in os.walk(path)
+            for f in files
+        )
+
+    stats = pq.read_table(f"{root}/stats", columns=["n_docs"])["n_docs"].to_pylist()
+    tables = []
+    for tdir in sorted(glob.glob(f"{root}/*/")):
+        files = sorted(glob.glob(f"{tdir}**/*.parquet", recursive=True))
+        if not files:
+            continue
+        row_groups, codecs, columns = 0, set(), {}
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            row_groups += md.num_row_groups
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                for c in range(rg.num_columns):
+                    ch = rg.column(c)
+                    codecs.add(ch.compression)
+                    columns[ch.path_in_schema] = (
+                        columns.get(ch.path_in_schema, 0) + ch.total_compressed_size
+                    )
+        tables.append({
+            "table": os.path.basename(os.path.normpath(tdir)),
+            "files": len(files),
+            "row_groups": row_groups,
+            "codecs": sorted(codecs),
+            "bytes": tree_bytes(tdir),
+            "columns": columns,
+        })
+    return {"docs": max(stats, default=0), "bytes": tree_bytes(root), "tables": tables}
+
+
+def cmd_du(args) -> None:
+    u = root_usage(args.root)
+    per = max(1, u["docs"])
+    print(f"{args.root}: {u['docs']} docs, {u['bytes']} bytes, "
+          f"{u['bytes'] / per:.1f} B/doc")
+    print(f"{'table / column':<24}{'files':>7}{'row groups':>12}  {'codec':<14}{'B/doc':>10}")
+    for t in u["tables"]:
+        print(f"{t['table']:<24}{t['files']:>7}{t['row_groups']:>12}  "
+              f"{','.join(t['codecs']):<14}{t['bytes'] / per:>10.1f}")
+        for c, b in sorted(t["columns"].items(), key=lambda kv: -kv[1]):
+            print(f"  {c:<22}{'':>7}{'':>12}  {'':<14}{b / per:>10.1f}")
+
+
 def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(prog="golr_loader_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -189,6 +252,12 @@ def main(argv: list[str] | None = None) -> None:
         help="Solr filter query: non-scoring match-set restriction",
     )
     q.set_defaults(fn=cmd_query)
+
+    d = sub.add_parser(
+        "du", help="compressed bytes per doc of an index root, by table and column"
+    )
+    d.add_argument("root")
+    d.set_defaults(fn=cmd_du)
 
     args = p.parse_args(argv)
     args.fn(args)

@@ -16,6 +16,13 @@ from dataclasses import dataclass, field
 BM25_K1 = 1.2
 BM25_B = 0.75
 
+# Parquet codec of every table the engine writes (Spark and pyarrow
+# writers alike). Iceberg's default: zstd gets about 30% more out of
+# varint streams and hex digests than Spark's snappy (BENCH.md). Readers
+# take the codec from each column chunk, so roots written with another
+# codec still open.
+PARQUET_CODEC = "zstd"
+
 _UNSET = object()  # chain-cache sentinel (None is a valid cached value)
 
 

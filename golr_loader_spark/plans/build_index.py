@@ -56,7 +56,7 @@ import pyarrow.compute  # noqa: F401 — binds pa.compute in Python workers
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from golr_loader_spark.config import IndexConfig
+from golr_loader_spark.config import PARQUET_CODEC, IndexConfig
 from golr_loader_spark.functions.codec import (
     binary_from_segments as _binary_from_segments,
     binary_stream as _binary_stream,
@@ -917,18 +917,36 @@ def check_block_format(root: str) -> dict:
     return conf
 
 
+# Parquet row-group size of the block table. A LocalSearcher read
+# that misses its caches reads whole row groups, ``poss`` included, so
+# the size bounds the bytes a single-term lookup decompresses (BENCH.md
+# compares 4 MB, 1 MB and 256 KB).
+POSTINGS_ROW_GROUP_BYTES = 256 << 10
+
+
+def _writer(df: DataFrame, mode: str = "overwrite"):
+    """``df.write`` in ``mode`` with the engine's codec
+    (``config.PARQUET_CODEC``), set on the write itself so that it holds
+    in any caller's session."""
+    return df.write.mode(mode).option("compression", PARQUET_CODEC)
+
+
 def _write_postings(
     postings: DataFrame, path: str, term_partitions: int, mode: str = "overwrite"
 ) -> None:
     """Write block rows range-partitioned and sorted by term: small row
     groups on term-sorted files let per-row-group min/max stats prune
     single-term lookups to a few groups instead of whole files (both for
-    Catalyst PushedFilters and the pyarrow LocalSearcher path)."""
+    Catalyst PushedFilters and the pyarrow LocalSearcher path). Every
+    block-table write goes through here: one-shot, checkpointed and
+    streaming builds, upsert segments, compaction and shards."""
     (
-        postings.repartitionByRange(term_partitions, "term")
-        .sortWithinPartitions("term", "field", "bucket", "block_id")
-        .write.mode(mode)
-        .option("parquet.block.size", str(4 << 20))
+        _writer(
+            postings.repartitionByRange(term_partitions, "term")
+            .sortWithinPartitions("term", "field", "bucket", "block_id"),
+            mode,
+        )
+        .option("parquet.block.size", str(POSTINGS_ROW_GROUP_BYTES))
         .parquet(path)
     )
 
@@ -987,21 +1005,19 @@ def write_index(
         _write_postings(index.postings, f"{root}/postings", term_partitions)
 
     def _term_stats() -> None:
-        (
+        _writer(
             index.term_stats.repartitionByRange(max(2, term_partitions // 4), "term")
             .sortWithinPartitions("term", "field")
-            .write.mode("overwrite")
-            .parquet(f"{root}/term_stats")
-        )
+        ).parquet(f"{root}/term_stats")
 
     def _stats() -> None:
-        index.stats.coalesce(1).write.mode("overwrite").parquet(f"{root}/stats")
+        _writer(index.stats.coalesce(1)).parquet(f"{root}/stats")
 
     jobs = [_postings, _term_stats, _stats]
     if documents is not None:
 
         def _docs() -> None:
-            _docs_manifest(documents).write.mode("overwrite").parquet(f"{root}/docs")
+            _writer(_docs_manifest(documents)).parquet(f"{root}/docs")
 
         jobs.append(_docs)
     if facets is not None:
@@ -1009,12 +1025,10 @@ def write_index(
         # — doc_id-sorted within files so the serving path can
         # searchsorted-join matched ids without a per-query sort
         def _facets() -> None:
-            (
+            _writer(
                 facets.repartitionByRange(max(2, term_partitions // 2), "doc_id")
                 .sortWithinPartitions("doc_id")
-                .write.mode("overwrite")
-                .parquet(f"{root}/facets")
-            )
+            ).parquet(f"{root}/facets")
 
         jobs.append(_facets)
     if documents is not None and store_fields:
@@ -1023,10 +1037,11 @@ def write_index(
         # row-group-pruned point reads, never a table scan
         def _stored() -> None:
             (
-                documents.select("doc_id", *store_fields)
-                .repartitionByRange(max(2, term_partitions // 2), "doc_id")
-                .sortWithinPartitions("doc_id")
-                .write.mode("overwrite")
+                _writer(
+                    documents.select("doc_id", *store_fields)
+                    .repartitionByRange(max(2, term_partitions // 2), "doc_id")
+                    .sortWithinPartitions("doc_id")
+                )
                 .option("parquet.block.size", str(4 << 20))
                 .parquet(f"{root}/stored")
             )

@@ -53,7 +53,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from golr_loader_spark.config import IndexConfig
+from golr_loader_spark.config import PARQUET_CODEC, IndexConfig
 from golr_loader_spark.functions.codec import binary_stream, varint_decode
 from golr_loader_spark.plans.build_index import (
     NORMS_TERM,
@@ -65,6 +65,7 @@ from golr_loader_spark.plans.build_index import (
     check_block_format,
     _run_writes,
     _write_postings,
+    _writer,
     decode_norms,
     derived_stats,
     derived_term_stats,
@@ -557,7 +558,7 @@ def _doc_table_appends(
                 "the all-fields-stored update precondition"
             )
         stored = documents.select("doc_id", *cols).withColumn("_seg", F.lit(int(segment)))
-        writes.append(lambda: stored.write.mode("append").parquet(f"{root}/stored"))
+        writes.append(lambda: _writer(stored, "append").parquet(f"{root}/stored"))
     if os.path.isdir(f"{root}/facets"):
         from golr_loader_spark.plans.facets import build_facets
 
@@ -571,7 +572,7 @@ def _doc_table_appends(
         facets = build_facets(documents, fnames, cfg).withColumn(
             "_seg", F.lit(int(segment))
         )
-        writes.append(lambda: facets.write.mode("append").parquet(f"{root}/facets"))
+        writes.append(lambda: _writer(facets, "append").parquet(f"{root}/facets"))
     return writes
 
 
@@ -627,12 +628,9 @@ def _rewrite_doc_tables(
                     f"upsert requires incoming stored fields {missing}"
                 )
             keep = keep.unionByName(documents.select("doc_id", *cols))
-        (
-            keep.repartitionByRange(2, "doc_id")
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/stored")
-        )
+        _writer(
+            keep.repartitionByRange(2, "doc_id").sortWithinPartitions("doc_id")
+        ).parquet(f"{tmp}/stored")
         written.append("stored")
     if _os.path.isdir(f"{root}/facets"):
         from golr_loader_spark.plans.facets import build_facets
@@ -651,12 +649,9 @@ def _rewrite_doc_tables(
             keep = keep.unionByName(
                 build_facets(documents, fnames, cfg).select(*cur.columns)
             )
-        (
-            keep.repartitionByRange(2, "doc_id")
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/facets")
-        )
+        _writer(
+            keep.repartitionByRange(2, "doc_id").sortWithinPartitions("doc_id")
+        ).parquet(f"{tmp}/facets")
         written.append("facets")
     return written
 
@@ -855,6 +850,7 @@ def upsert_docs_fast(
     pq.write_table(
         pa.Table.from_pylist(stats_rows, schema=_STATS_SCHEMA),
         f"{tmp}/stats/part-00000.parquet",
+        compression=PARQUET_CODEC,
     )
     new_meta = meta.join(incoming, "doc_id", "left_anti").unionByName(
         _docs_manifest(documents)
@@ -868,12 +864,12 @@ def upsert_docs_fast(
             ),
             # its term stats (readers SUM df/cf per (term, field) across
             # segments)
-            lambda: derived_term_stats(fresh)
-            .write.mode("append")
-            .parquet(f"{root}/term_stats"),
+            lambda: _writer(derived_term_stats(fresh), "append").parquet(
+                f"{root}/term_stats"
+            ),
             *doc_appends,
             # the docs manifest (metadata-sized), swapped in with stats
-            lambda: new_meta.write.mode("overwrite").parquet(f"{tmp}/docs"),
+            lambda: _writer(new_meta).parquet(f"{tmp}/docs"),
         ]
     )
     # tombstone the superseded copies (old segments only) and withdraw

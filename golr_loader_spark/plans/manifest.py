@@ -40,6 +40,8 @@ from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.plans.build_index import (
     InvertedIndex,
     _write_config,
+    _write_postings,
+    _writer,
     bucket_of,
     build_postings_packed,
     derived_stats,
@@ -90,10 +92,11 @@ def _append_manifest(
     checksum: int,
     wall_ms: int,
 ) -> None:
-    spark.createDataFrame(
+    row = spark.createDataFrame(
         [(phase, split, "done", rows_in, rows_out, checksum, wall_ms)],
         MANIFEST_SCHEMA,
-    ).coalesce(1).write.mode("append").parquet(f"{root}/manifest")
+    )
+    _writer(row.coalesce(1), "append").parquet(f"{root}/manifest")
 
 
 def _bucket_groups(cfg: IndexConfig, n_groups: int) -> list[list[int]]:
@@ -157,17 +160,9 @@ def build_index_checkpointed(
         sub = documents.filter(bucket.between(buckets[0], buckets[-1]))
         lineage = sub.agg(*_lineage_aggs()).collect()[0]
         out = f"{root}/postings/group={g}"
-        (
-            build_postings_packed(sub, cfg)
-            .repartitionByRange(4, "term")
-            .sortWithinPartitions("term", "field", "bucket", "block_id")
-            .write.mode("overwrite")
-            # small row groups → term-sorted stats prune point lookups
-            .option("parquet.block.size", str(4 << 20))
-            .parquet(out)
-        )
+        _write_postings(build_postings_packed(sub, cfg), out, 4)
         written = spark.read.parquet(out)
-        derived_term_stats(written).write.mode("overwrite").parquet(
+        _writer(derived_term_stats(written)).parquet(
             f"{root}/term_stats_partial/group={g}"
         )
         _append_manifest(
@@ -185,7 +180,7 @@ def build_index_checkpointed(
             f"{root}/postings/group=*"
         )
         stats = derived_stats(post_all.drop("group"), n_docs)
-        stats.coalesce(1).write.mode("overwrite").parquet(f"{root}/stats")
+        _writer(stats.coalesce(1)).parquet(f"{root}/stats")
         _append_manifest(
             spark, root, "stats", 0, n_docs, stats.count(), 0,
             int((time.perf_counter() - t0) * 1000),
@@ -201,12 +196,9 @@ def build_index_checkpointed(
         merged = partials.groupBy("term", "field").agg(
             F.sum("df").alias("df"), F.sum("cf").alias("cf")
         )
-        (
-            merged.repartitionByRange(2, "term")
-            .sortWithinPartitions("term", "field")
-            .write.mode("overwrite")
-            .parquet(f"{root}/term_stats")
-        )
+        _writer(
+            merged.repartitionByRange(2, "term").sortWithinPartitions("term", "field")
+        ).parquet(f"{root}/term_stats")
         _append_manifest(
             spark, root, "finalize", 0, -1, merged.count(), 0,
             int((time.perf_counter() - t0) * 1000),

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import glob
 import math
+from bisect import bisect_left, bisect_right
 
 import numpy as np
 import pandas as pd
@@ -80,9 +81,9 @@ def _wildcard_terms(vocab, pattern: str) -> list[str]:
 
 class _RowGroupIndex:
     """One-time footer scan over a term-sorted parquet directory: keeps
-    memory-mapped ``ParquetFile`` handles open and a [(term_min,
-    term_max) → row group] interval table, so a query reads exactly the
-    row groups whose stats cover its terms — no per-query dataset /
+    memory-mapped ``ParquetFile`` handles open and each file's
+    [(term_min, term_max) → row group] bounds, so a query reads exactly
+    the row groups whose stats cover its terms — no per-query dataset /
     fragment / expression machinery, and repeat reads come from the OS
     page cache. This is the Lucene-style "open once, seek per query"
     serving discipline; the distributed path keeps using Catalyst
@@ -90,11 +91,10 @@ class _RowGroupIndex:
 
     def __init__(self, path: str):
         self.files: list[pq.ParquetFile] = []
-        # parallel arrays over row groups: file idx, rg idx, bounds
-        self._fi: list[int] = []
-        self._rg: list[int] = []
-        self._lo: list[str] = []
-        self._hi: list[str] = []
+        # per file: (row groups, their term mins, their term maxes,
+        # whether both bound lists ascend — true of every file
+        # build_index._write_postings writes)
+        self._bounds: list[tuple[list[int], list[str], list[str], bool]] = []
         self.complete = True  # all row groups carry usable term stats
         for fp in sorted(glob.glob(f"{path}/*.parquet")):
             pf = pq.ParquetFile(fp, memory_map=True)
@@ -103,17 +103,39 @@ class _RowGroupIndex:
                 i for i in range(md.num_columns)
                 if md.schema.column(i).name == "term"
             )
-            fi = len(self.files)
             self.files.append(pf)
+            rgs, lo, hi = [], [], []
             for rg in range(md.num_row_groups):
                 st = md.row_group(rg).column(term_col).statistics
                 if st is None or not st.has_min_max:
                     self.complete = False
                     continue
-                self._fi.append(fi)
-                self._rg.append(rg)
-                self._lo.append(st.min)
-                self._hi.append(st.max)
+                rgs.append(rg)
+                lo.append(st.min)
+                hi.append(st.max)
+            self._bounds.append((rgs, lo, hi, lo == sorted(lo) and hi == sorted(hi)))
+
+    def select(self, terms: list[str]) -> dict[int, list[int]]:
+        """{file index: ascending row groups} whose [min, max] holds any
+        of ``terms``. In a file whose bounds ascend, the groups holding
+        term t run from the first with max ≥ t to the last with
+        min ≤ t, so two bisections find them; other files test each
+        group."""
+        hits: dict[int, list[int]] = {}
+        for fi, (rgs, lo, hi, ascending) in enumerate(self._bounds):
+            if ascending:
+                sel = {
+                    i for t in terms
+                    for i in range(bisect_left(hi, t), bisect_right(lo, t))
+                }
+            else:
+                sel = {
+                    i for i in range(len(rgs))
+                    if any(lo[i] <= t <= hi[i] for t in terms)
+                }
+            if sel:
+                hits[fi] = [rgs[i] for i in sorted(sel)]
+        return hits
 
     def read(
         self, terms: list[str], columns: list[str] | None = None
@@ -127,24 +149,79 @@ class _RowGroupIndex:
         if columns is not None:
             avail = set(self.files[0].schema_arrow.names) if self.files else set()
             columns = [c for c in columns if c in avail]
-        hits: dict[int, list[int]] = {}
-        for fi, rg, lo, hi in zip(self._fi, self._rg, self._lo, self._hi):
-            for t in terms:
-                if lo <= t <= hi:
-                    hits.setdefault(fi, []).append(rg)
-                    break
+        hits = self.select(terms)
         if not hits:
             if not self.files:
                 return None
             empty = self.files[0].schema_arrow.empty_table()
             return empty.select(columns) if columns is not None else empty
         parts = [
-            self.files[fi].read_row_groups(sorted(rgs), columns=columns)
+            self.files[fi].read_row_groups(rgs, columns=columns)
             for fi, rgs in hits.items()
         ]
         # files differ in the segment column's nullability (a fast
         # upsert writes it NOT NULL)
         return pa.concat_tables(parts, promote_options="default")
+
+
+class _TermDict:
+    """The preloaded term dictionary (the analog of Lucene's in-memory
+    terms index) over a term_stats table's (term, field, df) rows. Fast
+    upserts append one row per SEGMENT per (term, field), so df is
+    summed per (term, field), in Arrow. ``vocab`` lists the terms in
+    the order they first appear and ``by_field`` maps each field to a
+    {term: df} dict. ``rows`` yields a term's fields in the order its
+    (term, field) pairs first appear: ``fields`` (sorted) for almost
+    every term, and ``odd`` for the few whose fields appear in another
+    order (on an upserted root, a term can reach a field first in an
+    appended segment's file)."""
+
+    def __init__(self, tbl: pa.Table):
+        # Arrow's group_by promises no output order: each pair keeps
+        # the first row it appears in, and the pairs are put in that order
+        g = (
+            tbl.append_column("row", pa.array(np.arange(tbl.num_rows)))
+            .group_by(["term", "field"])
+            .aggregate([("df", "sum"), ("row", "min")])
+            .sort_by("row_min")
+        )
+        terms = g["term"].to_numpy(zero_copy_only=False)
+        uniq, first, inv = np.unique(terms, return_index=True, return_inverse=True)
+        seen = np.argsort(first)  # unique terms in first-seen order
+        rank = np.empty(len(uniq), dtype=np.int64)
+        rank[seen] = np.arange(len(uniq))
+        # the pairs term by term; a stable sort keeps each term's pairs
+        # in their first-seen order
+        by_term = np.argsort(rank[inv], kind="stable")
+        tcode = rank[inv][by_term]
+        terms = terms[by_term]
+        fields, fcode = np.unique(
+            g["field"].to_numpy(zero_copy_only=False)[by_term], return_inverse=True
+        )
+        dfs = g["df_sum"].to_numpy()[by_term]
+        self.vocab: list[str] = uniq[seen].tolist()
+        self.fields: list[str] = fields.tolist()
+        self.by_field = {
+            f: dict(zip(terms[fcode == j].tolist(), dfs[fcode == j].tolist()))
+            for j, f in enumerate(self.fields)
+        }
+        out_of_order = (tcode[1:] == tcode[:-1]) & (fcode[1:] <= fcode[:-1])
+        odd = np.unique(tcode[1:][out_of_order])
+        starts = np.searchsorted(tcode, odd, "left")
+        ends = np.searchsorted(tcode, odd, "right")
+        self.odd = {
+            self.vocab[c]: [self.fields[j] for j in fcode[a:b]]
+            for c, a, b in zip(odd, starts, ends)
+        }
+
+    def rows(self, terms: list[str]) -> list[dict]:
+        by_field = self.by_field
+        return [
+            {"term": t, "field": f, "df": by_field[f][t]}
+            for t in terms
+            for f in self.odd.get(t, self.fields)
+            if t in by_field[f]
+        ]
 
 
 def _join_scores(
@@ -238,21 +315,15 @@ class LocalSearcher:
         stats = pq.read_table(f"{root}/stats").to_pylist()
         self.avgdl = {r["field"]: float(r["avgdl"]) for r in stats}
         self.n_docs = max(int(r["n_docs"]) for r in stats) if stats else 0
-        # term_stats is vocabulary-sized metadata (the analog of
-        # Lucene's in-memory term dictionary) — preload it into a dict
-        # so each query pays ONE pruned parquet read (the postings),
-        # not two. Disable for truly huge vocabularies. Fast upserts
-        # append one row per SEGMENT per (term, field): df sums across
-        # them (Lucene's stale-df contract until compaction).
-        self._ts: dict[str, dict[str, int]] | None = None
+        # term_stats is vocabulary-sized metadata — preload it so each
+        # query pays ONE pruned parquet read (the postings), not two.
+        # Disable for truly huge vocabularies. df sums across segments
+        # (Lucene's stale-df contract until compaction).
+        self._ts: _TermDict | None = None
         if preload_term_stats:
-            tbl = self.term_stats.to_table(columns=["term", "field", "df"])
-            self._ts = {}
-            for t, f, d in zip(
-                tbl["term"].to_pylist(), tbl["field"].to_pylist(), tbl["df"].to_pylist()
-            ):
-                by_field = self._ts.setdefault(t, {})
-                by_field[f] = by_field.get(f, 0) + int(d)
+            self._ts = _TermDict(
+                self.term_stats.to_table(columns=["term", "field", "df"])
+            )
 
     def refresh(self) -> "LocalSearcher":
         """Re-open against the CURRENT on-disk state — Lucene's
@@ -268,11 +339,7 @@ class LocalSearcher:
 
     def _term_rows(self, terms: list[str]) -> list[dict]:
         if self._ts is not None:
-            return [
-                {"term": t, "field": f, "df": d}
-                for t in terms
-                for (f, d) in self._ts.get(t, {}).items()
-            ]
+            return self._ts.rows(terms)
         rows = self.term_stats.to_table(
             filter=pc.field("term").isin(terms),
             columns=["term", "field", "df"],
@@ -490,7 +557,7 @@ class LocalSearcher:
 
     def _vocab_terms(self) -> list[str]:
         if self._ts is not None:
-            return list(self._ts)
+            return list(self._ts.vocab)
         tbl = self.term_stats.to_table(columns=["term"])
         return list(dict.fromkeys(tbl["term"].to_pylist()))
 

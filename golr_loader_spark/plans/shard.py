@@ -53,6 +53,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from golr_loader_spark.config import IndexConfig
+from golr_loader_spark.plans.build_index import _write_postings, _writer
 from golr_loader_spark.plans.serve import LocalSearcher
 
 _BIG = 1 << 60  # "untruncated" top for per-shard facet requests
@@ -173,10 +174,10 @@ def shard_index(
     return their paths.
 
     Table handling:
-    * ``postings`` — filtered by ``bucket % n_shards``, rewritten with
-      the same term-range partitioning + in-file (term, field, bucket,
-      block_id) sort as ``write_index`` so per-shard row-group pruning
-      and the ``_RowGroupIndex`` fast path keep working;
+    * ``postings`` — filtered by ``bucket % n_shards``, rewritten by
+      ``write_index``'s block-table writer (``_write_postings``) so
+      per-shard row-group pruning and the ``_RowGroupIndex`` fast path
+      keep working;
     * ``stored`` / ``facets`` / ``docs`` — filtered by the owning
       shard of ``doc_id``, keeping their doc_id sort;
     * ``stats`` / ``term_stats`` / ``tombstones`` — copied whole
@@ -191,13 +192,10 @@ def shard_index(
     shift = max(0, cfg.id_space_bits - cfg.bucket_bits)
 
     for s, sroot in enumerate(roots):
-        (
-            postings.filter(shard_col == s)
-            .repartitionByRange(max(1, term_partitions), "term")
-            .sortWithinPartitions("term", "field", "bucket", "block_id")
-            .write.mode("overwrite")
-            .option("parquet.block.size", str(4 << 20))
-            .parquet(f"{sroot}/postings")
+        _write_postings(
+            postings.filter(shard_col == s),
+            f"{sroot}/postings",
+            max(1, term_partitions),
         )
         for tbl in ("stats", "term_stats"):
             shutil.copytree(
@@ -212,7 +210,7 @@ def shard_index(
             )
         if os.path.isdir(f"{root}/vectors"):
             vdf = spark.read.parquet(f"{root}/vectors")
-            (
+            _writer(
                 vdf.filter(
                     F.pmod(
                         F.shiftright(F.col("vec_id"), shift), F.lit(n_shards)
@@ -221,9 +219,7 @@ def shard_index(
                 )
                 .repartitionByRange(max(1, term_partitions // 2), "vec_id")
                 .sortWithinPartitions("vec_id")
-                .write.mode("overwrite")
-                .parquet(f"{sroot}/vectors")
-            )
+            ).parquet(f"{sroot}/vectors")
         for tbl in ("stored", "facets", "docs"):
             if not os.path.isdir(f"{root}/{tbl}"):
                 continue
@@ -238,14 +234,11 @@ def shard_index(
                 F.pmod(F.shiftright(F.col("doc_id"), shift), F.lit(n_shards))
                 == s
             )
-            (
+            _writer(
                 owned.repartitionByRange(
                     max(1, term_partitions // 2), "doc_id"
-                )
-                .sortWithinPartitions("doc_id")
-                .write.mode("overwrite")
-                .parquet(f"{sroot}/{tbl}")
-            )
+                ).sortWithinPartitions("doc_id")
+            ).parquet(f"{sroot}/{tbl}")
     return roots
 
 

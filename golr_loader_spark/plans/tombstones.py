@@ -24,6 +24,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from golr_loader_spark.config import PARQUET_CODEC
+
 DEAD_EVERYWHERE = np.iinfo(np.int64).max
 
 _SCHEMA = pa.schema([("doc_id", pa.int64()), ("dead_below", pa.int64())])
@@ -80,6 +82,7 @@ def append_tombstones(root: str, ids, dead_below) -> None:
     pq.write_table(
         pa.Table.from_arrays([pa.array(ids), pa.array(np.ascontiguousarray(db))], schema=_SCHEMA),
         tmp,
+        compression=PARQUET_CODEC,
     )
     os.replace(tmp, os.path.join(path, name))
 

@@ -42,11 +42,13 @@ def write_vectors(
     the row count."""
     from pyspark.sql import functions as F
 
+    from golr_loader_spark.plans.build_index import _writer
+
     out = embeddings.select(
         F.col(id_col).cast("long").alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("embedding"),
     )
-    out.write.mode("overwrite").parquet(f"{root}/vectors")
+    _writer(out).parquet(f"{root}/vectors")
     if ivf_cells:
         from golr_loader_spark.operators.similarity import train_ivf_centroids
 
@@ -57,7 +59,7 @@ def write_vectors(
             F.col("cell").cast("long").alias("cell"),
             F.col("cvec").cast("array<double>").alias("cvec"),
         )
-        cents.write.mode("overwrite").parquet(f"{root}/vectors_centroids")
+        _writer(cents).parquet(f"{root}/vectors_centroids")
     return out.count()
 
 

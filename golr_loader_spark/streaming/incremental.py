@@ -31,7 +31,12 @@ from pyspark.sql import functions as F
 from golr_loader_spark.config import IndexConfig
 from golr_loader_spark.corpus import CORPUS_SCHEMA
 from golr_loader_spark.functions.tokenize import tokenize
-from golr_loader_spark.plans.build_index import build_postings_packed, doc_lengths
+from golr_loader_spark.plans.build_index import (
+    _write_postings,
+    _writer,
+    build_postings_packed,
+    doc_lengths,
+)
 from golr_loader_spark.plans.documents import flatten_documents
 
 
@@ -69,18 +74,11 @@ def incremental_index_stream(
         postings = build_postings_packed(
             flatten_documents(batch_df), cfg
         ).withColumn("segment", F.lit(int(epoch_id)))
-        (
-            postings.write.mode("overwrite").parquet(
-                f"{index_root}/postings/epoch={epoch_id}"
-            )
-        )
+        out = f"{index_root}/postings/epoch={epoch_id}"
+        _write_postings(postings, out, 2)
         # derive from the written block table, not a token re-scan
-        tstats = derived_term_stats(
-            spark.read.parquet(f"{index_root}/postings/epoch={epoch_id}")
-        )
-        tstats.write.mode("overwrite").parquet(
-            f"{index_root}/term_stats_partial/epoch={epoch_id}"
-        )
+        tstats = derived_term_stats(spark.read.parquet(out))
+        _writer(tstats).parquet(f"{index_root}/term_stats_partial/epoch={epoch_id}")
 
     writer = stream.writeStream.foreachBatch(fold).trigger(availableNow=True)
     if checkpoint_dir:

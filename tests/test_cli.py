@@ -87,3 +87,41 @@ def test_query_uses_the_index_config(spark, tmp_path, capsys):
     main(["query", "--index", root, "--q", phrase, "--phrase", "-k", "5"])
     (got,) = _json_lines(capsys.readouterr().out)
     assert got["hits"] == want
+
+
+def test_du_reports_bytes_by_table_and_column(spark, tmp_path, capsys):
+    """``du ROOT`` reads the parquet footers of a root: bytes per doc by
+    table and by column, with each table's files, row groups and codecs
+    (``root_usage`` holds the same figures)."""
+    from golr_loader_spark.__main__ import root_usage
+    from golr_loader_spark.config import PARQUET_CODEC, IndexConfig
+    from golr_loader_spark.plans.build_index import build_index, write_index
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma{i % 5} delta{i}") for i in range(40)],
+        "doc_id long, text string",
+    )
+    cfg = IndexConfig(fields={"text": ("simple", 1.0)}, bucket_bits=1, id_space_bits=6)
+    root = str(tmp_path / "root")
+    write_index(build_index(docs, cfg), root, term_partitions=2, documents=docs)
+
+    u = root_usage(root)
+    assert u["docs"] == 40
+    tables = {t["table"]: t for t in u["tables"]}
+    assert set(tables) == {"postings", "term_stats", "stats", "docs"}
+    post = tables["postings"]
+    assert post["codecs"] == [PARQUET_CODEC.upper()]
+    assert post["row_groups"] >= post["files"] >= 1
+    assert {"term", "doc_ids", "tfs", "dls"} <= set(post["columns"])
+    assert 0 < sum(post["columns"].values()) < post["bytes"]
+    assert sum(t["bytes"] for t in u["tables"]) < u["bytes"]
+
+    main(["du", root])
+    out = capsys.readouterr().out.splitlines()
+    assert out[0].startswith(f"{root}: 40 docs, {u['bytes']} bytes")
+    post_line = next(ln for ln in out if ln.startswith("postings "))
+    assert post_line.split()[1:4] == [
+        str(post["files"]), str(post["row_groups"]), PARQUET_CODEC.upper()
+    ]
+    assert float(post_line.split()[-1]) == pytest.approx(post["bytes"] / 40, abs=0.05)
+    assert any(ln.split()[0] == "doc_ids" for ln in out)

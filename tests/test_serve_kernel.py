@@ -107,8 +107,7 @@ def _stream(ls: LocalSearcher, seed: int) -> list[tuple[str, str]]:
     """``STREAM`` queries of 1–4 distinct content terms drawn Zipf
     (s = 1.1) over the document-frequency rank; a third of them AND."""
     vocab = sorted(
-        ((t, by_f["content"]) for t, by_f in ls._ts.items() if "content" in by_f),
-        key=lambda td: (-td[1], td[0]),
+        ls._ts.by_field.get("content", {}).items(), key=lambda td: (-td[1], td[0])
     )
     terms = [t for t, _d in vocab]
     rng = np.random.RandomState(seed)
