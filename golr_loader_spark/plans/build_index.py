@@ -918,10 +918,11 @@ def check_block_format(root: str) -> dict:
 
 
 # Parquet row-group size of the block table. A LocalSearcher read
-# that misses its caches reads whole row groups, ``poss`` included, so
-# the size bounds the bytes a single-term lookup decompresses (BENCH.md
-# compares 4 MB, 1 MB and 256 KB).
-POSTINGS_ROW_GROUP_BYTES = 256 << 10
+# that misses its caches decompresses whole row groups, ``poss``
+# included, and zstd decompresses more slowly than snappy did, so the
+# groups are sized for point reads (BENCH.md compares 4 MB, 1 MB,
+# 256 KB and 64 KB).
+POSTINGS_ROW_GROUP_BYTES = 64 << 10
 
 
 def _writer(df: DataFrame, mode: str = "overwrite"):
@@ -947,6 +948,9 @@ def _write_postings(
             mode,
         )
         .option("parquet.block.size", str(POSTINGS_ROW_GROUP_BYTES))
+        # plain pages: one compressed page per column chunk instead of
+        # a dictionary page beside it, fewer bytes and faster point reads
+        .option("parquet.enable.dictionary", "false")
         .parquet(path)
     )
 
