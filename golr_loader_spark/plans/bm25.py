@@ -328,8 +328,9 @@ class DecodedListCache:
       positional list (``phrase._decode_positional_lists``); ``()``
       caches an absent one.
 
-    A second instance (``_term_blocks``) keyed by the bare term holds
-    the raw block rows both shapes are decoded from. All three scopes
+    A second instance (``_term_blocks``) keyed by (term, positions)
+    holds the raw block rows each shape is decoded from (the BM25 shape's
+    without the ``poss`` column). All the scopes
     are one term over every bucket, so a query of n terms misses at
     most n entries of each. ``max_entries`` counts entries, not bytes:
     a ("bm25", term) entry holds every bucket's postings of the term.

@@ -918,11 +918,12 @@ def check_block_format(root: str) -> dict:
 
 
 # Parquet row-group size of the block table. A LocalSearcher read
-# that misses its caches decompresses whole row groups, ``poss``
-# included, and zstd decompresses more slowly than snappy did, so the
-# groups are sized for point reads (BENCH.md compares 4 MB, 1 MB,
-# 256 KB and 64 KB).
-POSTINGS_ROW_GROUP_BYTES = 64 << 10
+# that misses its caches decompresses the row groups holding its
+# terms, only the columns it uses (BM25 reads skip ``poss``). Smaller
+# groups read faster at a few thousand docs but multiply the row
+# groups, footers and open time of a large root (BENCH.md compares
+# 4 MB, 1 MB, 256 KB and 64 KB).
+POSTINGS_ROW_GROUP_BYTES = 4 << 20
 
 
 def _writer(df: DataFrame, mode: str = "overwrite"):
@@ -948,9 +949,6 @@ def _write_postings(
             mode,
         )
         .option("parquet.block.size", str(POSTINGS_ROW_GROUP_BYTES))
-        # plain pages: one compressed page per column chunk instead of
-        # a dictionary page beside it, fewer bytes and faster point reads
-        .option("parquet.enable.dictionary", "false")
         .parquet(path)
     )
 

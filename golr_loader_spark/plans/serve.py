@@ -91,11 +91,11 @@ class _RowGroupIndex:
 
     def __init__(self, path: str):
         self.files: list[pq.ParquetFile] = []
-        # per file: (row groups, their term mins, their term maxes,
-        # whether both bound lists ascend — true of every file
-        # build_index._write_postings writes)
-        self._bounds: list[tuple[list[int], list[str], list[str], bool]] = []
-        self.complete = True  # all row groups carry usable term stats
+        # per file: (row groups, their term mins, their term maxes)
+        self._bounds: list[tuple[list[int], list[str], list[str]]] = []
+        # all row groups carry usable term stats, and each file's bounds
+        # ascend (true of every file build_index._write_postings writes)
+        self.complete = True
         for fp in sorted(glob.glob(f"{path}/*.parquet")):
             pf = pq.ParquetFile(fp, memory_map=True)
             md = pf.metadata
@@ -113,26 +113,21 @@ class _RowGroupIndex:
                 rgs.append(rg)
                 lo.append(st.min)
                 hi.append(st.max)
-            self._bounds.append((rgs, lo, hi, lo == sorted(lo) and hi == sorted(hi)))
+            if lo != sorted(lo) or hi != sorted(hi):
+                self.complete = False
+            self._bounds.append((rgs, lo, hi))
 
     def select(self, terms: list[str]) -> dict[int, list[int]]:
         """{file index: ascending row groups} whose [min, max] holds any
         of ``terms``. In a file whose bounds ascend, the groups holding
         term t run from the first with max ≥ t to the last with
-        min ≤ t, so two bisections find them; other files test each
-        group."""
+        min ≤ t, so two bisections find them."""
         hits: dict[int, list[int]] = {}
-        for fi, (rgs, lo, hi, ascending) in enumerate(self._bounds):
-            if ascending:
-                sel = {
-                    i for t in terms
-                    for i in range(bisect_left(hi, t), bisect_right(lo, t))
-                }
-            else:
-                sel = {
-                    i for i in range(len(rgs))
-                    if any(lo[i] <= t <= hi[i] for t in terms)
-                }
+        for fi, (rgs, lo, hi) in enumerate(self._bounds):
+            sel = {
+                i for t in terms
+                for i in range(bisect_left(hi, t), bisect_right(lo, t))
+            }
             if sel:
                 hits[fi] = [rgs[i] for i in sorted(sel)]
         return hits
@@ -141,7 +136,8 @@ class _RowGroupIndex:
         self, terms: list[str], columns: list[str] | None = None
     ) -> pa.Table | None:
         """All row groups whose [min,max] may contain any query term,
-        read grouped per file. None ⇒ stats were unusable, fall back.
+        read grouped per file. None ⇒ stats were unusable or a file is
+        not term-sorted: fall back.
         ``columns`` prunes the read (e.g. BM25 scoring never needs the
         positional ``poss`` blobs or ``tf_sum``)."""
         if not self.complete:
@@ -168,50 +164,22 @@ class _TermDict:
     """The preloaded term dictionary (the analog of Lucene's in-memory
     terms index) over a term_stats table's (term, field, df) rows. Fast
     upserts append one row per SEGMENT per (term, field), so df is
-    summed per (term, field), in Arrow. ``vocab`` lists the terms in
-    the order they first appear and ``by_field`` maps each field to a
-    {term: df} dict. ``rows`` yields a term's fields in the order its
-    (term, field) pairs first appear: ``fields`` (sorted) for almost
-    every term, and ``odd`` for the few whose fields appear in another
-    order (on an upserted root, a term can reach a field first in an
-    appended segment's file)."""
+    summed per (term, field), in Arrow. ``vocab`` lists the distinct
+    terms, sorted, and ``by_field`` maps each field to a {term: df}
+    dict."""
 
     def __init__(self, tbl: pa.Table):
-        # Arrow's group_by promises no output order: each pair keeps
-        # the first row it appears in, and the pairs are put in that order
-        g = (
-            tbl.append_column("row", pa.array(np.arange(tbl.num_rows)))
-            .group_by(["term", "field"])
-            .aggregate([("df", "sum"), ("row", "min")])
-            .sort_by("row_min")
-        )
+        g = tbl.group_by(["term", "field"]).aggregate([("df", "sum")])
         terms = g["term"].to_numpy(zero_copy_only=False)
-        uniq, first, inv = np.unique(terms, return_index=True, return_inverse=True)
-        seen = np.argsort(first)  # unique terms in first-seen order
-        rank = np.empty(len(uniq), dtype=np.int64)
-        rank[seen] = np.arange(len(uniq))
-        # the pairs term by term; a stable sort keeps each term's pairs
-        # in their first-seen order
-        by_term = np.argsort(rank[inv], kind="stable")
-        tcode = rank[inv][by_term]
-        terms = terms[by_term]
         fields, fcode = np.unique(
-            g["field"].to_numpy(zero_copy_only=False)[by_term], return_inverse=True
+            g["field"].to_numpy(zero_copy_only=False), return_inverse=True
         )
-        dfs = g["df_sum"].to_numpy()[by_term]
-        self.vocab: list[str] = uniq[seen].tolist()
+        dfs = g["df_sum"].to_numpy()
+        self.vocab: list[str] = np.unique(terms).tolist()
         self.fields: list[str] = fields.tolist()
         self.by_field = {
             f: dict(zip(terms[fcode == j].tolist(), dfs[fcode == j].tolist()))
             for j, f in enumerate(self.fields)
-        }
-        out_of_order = (tcode[1:] == tcode[:-1]) & (fcode[1:] <= fcode[:-1])
-        odd = np.unique(tcode[1:][out_of_order])
-        starts = np.searchsorted(tcode, odd, "left")
-        ends = np.searchsorted(tcode, odd, "right")
-        self.odd = {
-            self.vocab[c]: [self.fields[j] for j in fcode[a:b]]
-            for c, a, b in zip(odd, starts, ends)
         }
 
     def rows(self, terms: list[str]) -> list[dict]:
@@ -219,7 +187,7 @@ class _TermDict:
         return [
             {"term": t, "field": f, "df": by_field[f][t]}
             for t in terms
-            for f in self.odd.get(t, self.fields)
+            for f in self.fields
             if t in by_field[f]
         ]
 
@@ -291,8 +259,8 @@ class LocalSearcher:
         from golr_loader_spark.plans.bm25 import DecodedListCache
 
         self._list_cache = DecodedListCache()
-        # raw-block LRU keyed by TERM (all of a term's block rows as
-        # numpy arrays): repeated query terms skip the parquet
+        # raw-block LRU keyed by (term, positions) (a term's block rows
+        # as numpy arrays): repeated query terms skip the parquet
         # row-group read entirely — the terms-dictionary analog one
         # level below DecodedListCache. Rebuilt by refresh().
         self._term_blocks = DecodedListCache(max_entries=4096)
@@ -354,14 +322,15 @@ class LocalSearcher:
         return self._read_rows(terms).to_pandas()
 
     # the block columns serving reads: BM25 scoring's, plus the
-    # positional ``poss`` blobs the phrase and span matchers decode
-    # (absent on non-positional roots) — never ``tf_sum`` (pruned at
-    # the parquet read, guide §6: ReadSchema should list only what is
-    # used)
-    _SCORE_COLS = [
+    # positional ``poss`` blobs only the phrase and span matchers decode
+    # (absent on non-positional roots; most of a positional table's
+    # bytes) — never ``tf_sum`` (pruned at the parquet read, guide §6:
+    # ReadSchema should list only what is used)
+    _BM25_COLS = [
         "term", "field", "bucket", "block_id", "n", "doc_id_first",
-        "doc_ids", "tfs", "dls", "max_tf", "min_dl", "segment", "poss",
+        "doc_ids", "tfs", "dls", "max_tf", "min_dl", "segment",
     ]
+    _SCORE_COLS = _BM25_COLS + ["poss"]
 
     # the columns ``build_index.decode_norms`` reads
     _NORMS_COLS = [
@@ -387,27 +356,32 @@ class LocalSearcher:
         )
         return raw.filter(mask)
 
-    def _read_score_cols(self, terms: list[str]) -> dict:
+    def _read_score_cols(self, terms: list[str], positions: bool = False) -> dict:
         """Raw block rows of ``terms`` (cfg fields only) as {column:
         numpy array}, concatenated over the terms; {} when none has
-        blocks. This is the read under both decoded shapes of
+        blocks. ``positions`` adds the ``poss`` column; BM25 reads go
+        without it, so a cache miss decompresses only the columns it
+        scores. This is the read under both decoded shapes of
         ``_list_cache`` (``_bm25_lists``, ``_positional_topk``), so it
         runs only for terms whose decoded entry missed. Each term's rows
-        are one ``_term_blocks`` entry (the Lucene terms-dictionary-to-
-        blocks analog, one level rawer than the decoded lists; immutable
-        between refresh() calls, which rebuild the cache); the terms
-        that miss there share one ``_read_rows`` call."""
+        are one ``_term_blocks`` entry under (term, positions) (the
+        Lucene terms-dictionary-to-blocks analog, one level rawer than
+        the decoded lists; immutable between refresh() calls, which
+        rebuild the cache); the terms that miss there share one
+        ``_read_rows`` call."""
         cache = self._term_blocks
         have: dict[str, dict | bool] = {}
         missing = []
         for t in terms:
-            v = cache.get(t)
+            v = cache.get((t, positions))
             if v is None:
                 missing.append(t)
             else:
                 have[t] = v
         if missing:
-            cols = _numpy_cols(self._read_rows(missing, self._SCORE_COLS))
+            cols = _numpy_cols(self._read_rows(
+                missing, self._SCORE_COLS if positions else self._BM25_COLS
+            ))
             tarr = cols["term"]
             order = np.argsort(tarr, kind="stable")
             sorted_cols = {k: v[order] for k, v in cols.items()}
@@ -423,7 +397,7 @@ class LocalSearcher:
                 # cache miss, which reads as None)
                 p = present.get(t, False)
                 have[t] = p
-                cache.put(t, p)
+                cache.put((t, positions), p)
         parts = [p for p in (have[t] for t in terms) if p]
         if not parts:
             return {}
@@ -649,7 +623,7 @@ class LocalSearcher:
         }
         missing = [t for t, v in per_term.items() if v is None]
         if missing:
-            cols = self._read_score_cols(missing)
+            cols = self._read_score_cols(missing, positions=True)
             if cols and "poss" not in cols:
                 raise ValueError(
                     f"{what} needs a positional index root — build "

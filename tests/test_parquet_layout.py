@@ -7,12 +7,12 @@
 * A root written with snappy (the codec before zstd) still opens,
   upserts and compacts, with both codecs in one table on the way, and
   serves what the same root written with zstd serves.
-* ``_RowGroupIndex.select`` (bisection over each file's bounds) picks
-  the row groups the linear rule picks: every group whose [min, max]
-  holds a query term.
-* The preloaded term dictionary (``_TermDict``) answers ``_term_rows``
-  and ``_vocab_terms`` exactly as summing the term_stats rows one by one
-  does, on an upserted root too.
+* ``_RowGroupIndex.select`` (bisection over each term-sorted file's
+  bounds) picks every row group whose [min, max] holds a query term; a
+  file whose bounds do not ascend sends ``read`` to the dataset scan.
+* The preloaded term dictionary (``_TermDict``) holds the df summed per
+  (term, field), on an upserted root too, and a searcher serves with it
+  what a searcher reading term_stats per query serves.
 """
 
 from __future__ import annotations
@@ -24,13 +24,13 @@ import shutil
 import tempfile
 
 import pyarrow as pa
-import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+import golr_loader_spark.plans.build_index as build_index_module
 from golr_loader_spark.config import PARQUET_CODEC, IndexConfig
 from golr_loader_spark.plans.build_index import (
     POSTINGS_ROW_GROUP_BYTES,
@@ -121,18 +121,29 @@ def _assert_all_zstd(root: str) -> None:
     assert not bad, bad
 
 
+def _row_group_sizes(path: str) -> list[int]:
+    (md,) = [pq.ParquetFile(f).metadata for f in glob.glob(f"{path}/*.parquet")]
+    return [md.row_group(g).total_byte_size for g in range(md.num_row_groups)]
+
+
 def test_every_table_is_zstd_and_postings_row_groups_keep_the_size(
-    spark, base, tmp_path
+    spark, base, tmp_path, monkeypatch
 ):
-    (pf,) = [pq.ParquetFile(f) for f in glob.glob(f"{base}/postings/*.parquet")]
-    md = pf.metadata
-    # the one file (~200 KB) spans several row groups, each within the
-    # constant: the writer closes a group once its buffered size reaches
-    # it (checking at least every 100 rows; this root's rows are small
-    # enough that no group passes it)
-    assert md.num_row_groups >= 2
-    sizes = [md.row_group(g).total_byte_size for g in range(md.num_row_groups)]
-    assert max(sizes) <= POSTINGS_ROW_GROUP_BYTES, sizes
+    assert max(_row_group_sizes(f"{base}/postings")) <= POSTINGS_ROW_GROUP_BYTES
+    # the one file (~200 KB) is one row group at the constant; written
+    # again under a 64 KB constant it spans several groups, each within
+    # it: the writer closes a group once its buffered size reaches the
+    # constant (checking at least every 100 rows; this root's rows are
+    # small enough that no group passes it)
+    small = 64 << 10
+    monkeypatch.setattr(build_index_module, "POSTINGS_ROW_GROUP_BYTES", small)
+    build_index_module._write_postings(
+        spark.read.parquet(f"{base}/postings"), str(tmp_path / "small"), 1
+    )
+    sizes = _row_group_sizes(str(tmp_path / "small"))
+    assert len(sizes) >= 2 and max(sizes) <= small, sizes
+    _assert_all_zstd(str(tmp_path / "small"))
+    monkeypatch.undo()
     _assert_all_zstd(base)
 
     root = str(tmp_path / "root")
@@ -154,6 +165,20 @@ def test_every_table_is_zstd_and_postings_row_groups_keep_the_size(
     build_index_checkpointed(docs, ck, CFG, n_bucket_groups=2)
     assert os.path.isdir(f"{ck}/manifest")
     _assert_all_zstd(ck)
+
+
+def test_bm25_reads_skip_positions(base):
+    """A BM25 cache miss reads the block rows without ``poss``; a phrase
+    query on the same terms then reads them with it and serves what a
+    fresh searcher serves."""
+    ls = LocalSearcher(base)
+    ls.search("w0007 w0100", k=10)
+    bm25_rows = ls._term_blocks.get(("w0007", False))
+    assert bm25_rows and "poss" not in bm25_rows
+    assert ls._term_blocks.get(("w0007", True)) is None
+    got = ls.search_phrase("w0007 w0100", k=10)
+    assert "poss" in ls._term_blocks.get(("w0007", True))
+    assert got == LocalSearcher(base).search_phrase("w0007 w0100", k=10)
 
 
 def _rewrite_snappy(root: str) -> None:
@@ -206,46 +231,54 @@ def test_snappy_root_upserts_and_compacts_like_a_zstd_root(spark, base, tmp_path
     _assert_all_zstd(f"{s}/postings")
 
 
-def _term_rows_by_loop(root: str, terms: list[str]) -> tuple[list[dict], list[str]]:
-    """``_term_rows`` and ``_vocab_terms`` as summing each term_stats
-    row into a {term: {field: df}} dict one row at a time gives them."""
-    tbl = pads.dataset(f"{root}/term_stats", format="parquet").to_table(
-        columns=["term", "field", "df"]
-    )
-    ts: dict[str, dict[str, int]] = {}
-    for t, f, d in zip(
-        tbl["term"].to_pylist(), tbl["field"].to_pylist(), tbl["df"].to_pylist()
-    ):
-        by_field = ts.setdefault(t, {})
-        by_field[f] = by_field.get(f, 0) + int(d)
-    rows = [
-        {"term": t, "field": f, "df": d}
-        for t in terms
-        for f, d in ts.get(t, {}).items()
-    ]
-    return rows, list(ts)
+def _summed(rows) -> dict[tuple[str, str], int]:
+    """{(term, field): df summed over ``rows``}, one row at a time."""
+    out: dict[tuple[str, str], int] = {}
+    for t, f, d in rows:
+        out[(t, f)] = out.get((t, f), 0) + int(d)
+    return out
 
 
-def test_term_dictionary_matches_the_row_loop_on_an_upserted_root(
-    spark, base, tmp_path
-):
+def _as_summed(term_rows: list[dict]) -> dict[tuple[str, str], int]:
+    pairs = [(r["term"], r["field"]) for r in term_rows]
+    assert len(pairs) == len(set(pairs))
+    return {(r["term"], r["field"]): r["df"] for r in term_rows}
+
+
+def test_term_dictionary_sums_df_on_an_upserted_root(spark, base, tmp_path):
     root = str(tmp_path / "root")
     shutil.copytree(base, root)
     upsert_docs_fast(spark, root, _batch(spark), CFG)
+    tbl = pq.read_table(f"{root}/term_stats", columns=["term", "field", "df"])
+    want = _summed(
+        zip(tbl["term"].to_pylist(), tbl["field"].to_pylist(), tbl["df"].to_pylist())
+    )
     # two segments' rows: df is summed across them
-    n_rows = pq.read_table(f"{root}/term_stats").num_rows
+    assert tbl.num_rows > len(want)
     ls = LocalSearcher(root)
     vocab = ls._vocab_terms()
-    assert n_rows > len(ls._term_rows(vocab))
-    terms = vocab + ["absent", WORDS[-1]]
+    assert vocab == sorted({t for t, _f in want})
+    terms = list(dict.fromkeys(vocab + ["absent", WORDS[-1]]))
     random.Random(5).shuffle(terms)
-    want_rows, want_vocab = _term_rows_by_loop(root, terms)
-    assert ls._term_rows(terms) == want_rows
-    assert vocab == want_vocab
-    assert all(type(r["df"]) is int for r in want_rows)
+    rows = ls._term_rows(terms)
+    assert _as_summed(rows) == want
+    assert all(type(r["df"]) is int for r in rows)
 
-
-_TERM = st.text(alphabet="abcd", max_size=3)
+    # what the serving faces built on the dictionary return equals what
+    # a searcher reading term_stats per query returns
+    scan = LocalSearcher(root, preload_term_stats=False)
+    assert scan._ts is None
+    for s in (ls, scan):
+        s.got = {
+            "bm25": [s.search(q, k=10) for q in QUERIES],
+            "and": [s.search(q, k=10, mode="and") for q in QUERIES],
+            "terms": s.terms(prefix="w00", limit=20),
+            "prefix": s.search_prefix("w01", k=10),
+            "wildcard": s.search_wildcard("w0?5*", k=10),
+            "fuzzy": s.search_fuzzy("w0150", max_edits=1),
+            "mlt": s.more_like_this(doc_id=11),
+        }
+    assert ls.got == scan.got
 
 
 @settings(max_examples=200, deadline=None)
@@ -257,21 +290,26 @@ _TERM = st.text(alphabet="abcd", max_size=3)
     ),
     st.lists(st.text(alphabet="abcdefg", max_size=3), max_size=8),
 )
-def test_term_dict_matches_the_row_loop(rows, query):
+def test_term_dict_sums_df_per_term_and_field(rows, query):
     tbl = pa.table({
         "term": pa.array([r[0] for r in rows], pa.string()),
         "field": pa.array([r[1] for r in rows], pa.string()),
         "df": pa.array([r[2] for r in rows], pa.int64()),
     })
-    ts: dict[str, dict[str, int]] = {}
-    for t, f, d in rows:
-        ts.setdefault(t, {})
-        ts[t][f] = ts[t].get(f, 0) + d
+    want = _summed(rows)
     td = _TermDict(tbl)
-    assert td.vocab == list(ts)
-    assert td.rows(query) == [
-        {"term": t, "field": f, "df": d} for t in query for f, d in ts.get(t, {}).items()
+    assert td.vocab == sorted({t for t, _f in want})
+    asked = list(dict.fromkeys(query))
+    assert _as_summed(td.rows(asked)) == {
+        k: d for k, d in want.items() if k[0] in asked
+    }
+    # one row per (query term, field) pair, in query order
+    assert [r["term"] for r in td.rows(query)] == [
+        t for t in query for f in "xyz" if (t, f) in want
     ]
+
+
+_TERM = st.text(alphabet="abcd", max_size=3)
 
 
 def _write_row_groups(path: str, groups: list[list[str]]) -> None:
@@ -284,7 +322,7 @@ def _write_row_groups(path: str, groups: list[list[str]]) -> None:
 def _linear(ix: _RowGroupIndex, terms: list[str]) -> dict[int, list[int]]:
     """The rule ``select`` implements, group by group."""
     hits: dict[int, list[int]] = {}
-    for fi, (rgs, lo, hi, _asc) in enumerate(ix._bounds):
+    for fi, (rgs, lo, hi) in enumerate(ix._bounds):
         for rg, a, b in zip(rgs, lo, hi):
             if any(a <= t <= b for t in terms):
                 hits.setdefault(fi, []).append(rg)
@@ -293,29 +331,21 @@ def _linear(ix: _RowGroupIndex, terms: list[str]) -> dict[int, list[int]]:
 
 @settings(max_examples=150, deadline=None)
 @given(
-    st.lists(
-        st.tuples(
-            st.booleans(),
-            st.lists(st.lists(_TERM, min_size=1, max_size=4), max_size=5),
-        ),
-        max_size=4,
-    ),
+    st.lists(st.lists(st.lists(_TERM, min_size=1, max_size=4), max_size=5), max_size=4),
     st.lists(_TERM, max_size=5),
     st.data(),
 )
 def test_row_group_select_matches_the_linear_rule(files, extra, data):
     with tempfile.TemporaryDirectory() as d:
         every: list[str] = []
-        for i, (term_sorted, groups) in enumerate(files):
-            if term_sorted:
-                # a term-sorted file: the sorted terms cut at the same sizes
-                flat = iter(sorted(t for g in groups for t in g))
-                groups = [[next(flat) for _ in g] for g in groups]
-            else:
-                groups = [sorted(g) for g in groups]
+        for i, groups in enumerate(files):
+            # a term-sorted file: the sorted terms cut at the same sizes
+            flat = iter(sorted(t for g in groups for t in g))
+            groups = [[next(flat) for _ in g] for g in groups]
             every += [t for g in groups for t in g]
             _write_row_groups(f"{d}/part-{i:05d}.parquet", groups)
         ix = _RowGroupIndex(d)
+        assert ix.complete
         # bounds themselves, terms between them and terms outside all
         pool = sorted(set(every + extra + ["", "zzz"]))
         terms = data.draw(st.lists(st.sampled_from(pool), max_size=6))
@@ -330,6 +360,14 @@ def test_row_group_select_matches_the_linear_rule(files, extra, data):
                 for rg in rgs
             )
             assert got.num_rows == want
+
+
+def test_a_file_not_sorted_by_term_falls_back_to_the_scan(tmp_path):
+    _write_row_groups(str(tmp_path / "part-00000.parquet"), [["a", "b"], ["c"]])
+    _write_row_groups(str(tmp_path / "part-00001.parquet"), [["m", "n"], ["c", "d"]])
+    ix = _RowGroupIndex(str(tmp_path))
+    assert not ix.complete
+    assert ix.read(["c"]) is None
 
 
 def test_row_group_index_over_no_postings(tmp_path):
