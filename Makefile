@@ -25,8 +25,12 @@ plans:
 sanity:
 	python scripts/sanity_check.py $(SF_DIR) --timeout $(TIMEOUT)
 
+# ROADMAP's Tier-1 command, with the 25 slowest tests and fixtures
+# listed against its timeout
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors \
+	  -p no:cacheprovider --durations=25
 
 bench:
 	python bench.py

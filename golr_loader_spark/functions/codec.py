@@ -98,11 +98,25 @@ def encode_block(doc_ids: np.ndarray, tfs: np.ndarray) -> tuple[int, bytes, byte
     return int(ids[0]), varint_encode(deltas), varint_encode(tf), int(tf.max())
 
 
+def decode_doc_ids(n: np.ndarray, doc_id_first: np.ndarray, doc_ids) -> np.ndarray:
+    """Doc ids of many blocks at once: ``n`` postings per block,
+    ``doc_id_first`` the blocks' bases and ``doc_ids`` their varint
+    delta streams back to back (bytes, or the uint8 view
+    ``binary_stream`` returns). One varint pass and a cumsum segmented
+    at the block starts → int64 ids in block order."""
+    g = np.cumsum(varint_decode(doc_ids).astype(np.int64))
+    return g + np.repeat(doc_id_first - g[np.cumsum(n) - n], n)
+
+
 def decode_block(doc_id_first: int, doc_ids_buf: bytes, tfs_buf: bytes) -> tuple[np.ndarray, np.ndarray]:
     """Inverse of encode_block → (doc_ids int64 sorted, tfs int64)."""
-    deltas = varint_decode(doc_ids_buf).astype(np.int64)
-    ids = np.cumsum(deltas) + np.int64(doc_id_first)
-    return ids, varint_decode(tfs_buf).astype(np.int64)
+    tfs = varint_decode(tfs_buf).astype(np.int64)
+    ids = decode_doc_ids(
+        np.array([len(tfs)], dtype=np.int64),
+        np.array([doc_id_first], dtype=np.int64),
+        doc_ids_buf,
+    )
+    return ids, tfs
 
 
 def binary_from_segments(data: np.ndarray, seg_bytes: np.ndarray):

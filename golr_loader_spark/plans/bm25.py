@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from golr_loader_spark.config import IndexConfig
-from golr_loader_spark.functions.codec import varint_decode
+from golr_loader_spark.functions.codec import decode_doc_ids, varint_decode
 from golr_loader_spark.functions.tokenize import analyze_query
 from golr_loader_spark.plans.build_index import (
     NORMS_TERM,
@@ -289,8 +289,7 @@ def _decode_lists(cols, excl, norms=None) -> dict[tuple[str, str], tuple]:
     order = np.lexsort((cols["block_id"].astype(np.int64), seg, bucket, lid))
     n_pb = cols["n"].astype(np.int64)[order]
     firsts = cols["doc_id_first"].astype(np.int64)[order]
-    g = np.cumsum(varint_decode(b"".join(cols["doc_ids"][order])).astype(np.int64))
-    ids = g + np.repeat(firsts - g[np.cumsum(n_pb) - n_pb], n_pb)
+    ids = decode_doc_ids(n_pb, firsts, b"".join(cols["doc_ids"][order]))
     tfs = varint_decode(b"".join(cols["tfs"][order])).astype(np.float64)
     dls = norms_dl(
         norms, cols["field"][order], seg[order], n_pb, ids

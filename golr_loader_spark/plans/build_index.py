@@ -60,6 +60,7 @@ from golr_loader_spark.config import PARQUET_CODEC, IndexConfig
 from golr_loader_spark.functions.codec import (
     binary_from_segments as _binary_from_segments,
     binary_stream as _binary_stream,
+    decode_doc_ids,
     varint_decode,
     varint_encode_with_sizes,
 )
@@ -141,8 +142,7 @@ def decode_norms(cols: dict) -> dict[tuple[str, int], tuple[np.ndarray, np.ndarr
         return {}
     n_pb = cols["n"][sel].astype(np.int64)
     firsts = cols["doc_id_first"][sel].astype(np.int64)
-    g = np.cumsum(varint_decode(b"".join(cols["doc_ids"][sel])).astype(np.int64))
-    ids = g + np.repeat(firsts - g[np.cumsum(n_pb) - n_pb], n_pb)
+    ids = decode_doc_ids(n_pb, firsts, b"".join(cols["doc_ids"][sel]))
     dls = varint_decode(b"".join(cols["dls"][sel])).astype(np.int64)
     f_uniq, f_codes = np.unique(cols["field"][sel], return_inverse=True)
     seg = (cols["segment"][sel].astype(np.int64) if "segment" in cols

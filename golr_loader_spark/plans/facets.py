@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from golr_loader_spark.config import IndexConfig
-from golr_loader_spark.functions.codec import varint_decode
+from golr_loader_spark.functions.codec import decode_doc_ids
 from golr_loader_spark.functions.tokenize import analyze_query
 from golr_loader_spark.plans.bm25 import query_analyzer
 from golr_loader_spark.plans.build_index import InvertedIndex, block_scan, bucket_of
@@ -97,47 +97,43 @@ def _match_bucket_factory(
     exclude_ids,
 ):
     """Per-bucket matcher: decode doc_id streams only. pdf columns
-    used: term, field, doc_id_first, doc_ids (+ segment). Membership
-    of a term = union over its configured fields (a MUST term is
-    satisfied by any field, mirroring the scorer's conjunctive
-    filter). ``exclude_ids`` takes either exclusion shape
-    (bm25._norm_excl) — per-segment liveDocs mask each block by ITS
-    segment, so a fast-upserted doc matches through its newest copy
-    only."""
+    used: term, n, doc_id_first, doc_ids (+ segment). Membership of a
+    term = union over its configured fields (a MUST term is satisfied
+    by any field, mirroring the scorer's conjunctive filter); with no
+    ``term_fields`` every block's term counts. ``exclude_ids`` takes
+    either exclusion shape (bm25._norm_excl) — per-segment liveDocs
+    mask each posting by ITS block's segment, so a fast-upserted doc
+    matches through its newest copy only. The bucket group decodes in
+    one ``decode_doc_ids`` call under one liveDocs mask."""
     from golr_loader_spark.plans.bm25 import _live_of, _norm_excl
 
     excl = _norm_excl(exclude_ids)
 
     def match_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        has_seg = "segment" in pdf.columns
-        per_term: dict[str, list[np.ndarray]] = {}
-        for (term, _field), rows in pdf.groupby(["term", "field"], sort=False):
-            if term_fields is not None and term not in term_fields:
-                continue
-            segs = (
-                rows["segment"].to_numpy(np.int64)
-                if has_seg
-                else np.zeros(len(rows), dtype=np.int64)
-            )
-            for first, buf, seg in zip(rows["doc_id_first"], rows["doc_ids"], segs):
-                ids = np.cumsum(varint_decode(buf).astype(np.int64)) + np.int64(first)
-                if excl is not None:
-                    ids = ids[_live_of(ids, np.full(len(ids), seg), excl)]
-                if len(ids):
-                    per_term.setdefault(term, []).append(ids)
-        if not per_term:
-            return pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64)})
-        sets = {t: np.unique(np.concatenate(a)) for t, a in per_term.items()}
-        if required is not None:
-            if not required <= set(sets):
-                return pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64)})
+        if term_fields is not None:
+            pdf = pdf[pdf["term"].isin(list(term_fields))]
+        n = pdf["n"].to_numpy(np.int64)
+        ids = decode_doc_ids(
+            n, pdf["doc_id_first"].to_numpy(np.int64),
+            b"".join(pdf["doc_ids"].to_numpy()),
+        )
+        terms = np.repeat(pdf["term"].to_numpy(), n)
+        if excl is not None:
+            segs = (pdf["segment"].to_numpy(np.int64) if "segment" in pdf.columns
+                    else np.zeros(len(n), dtype=np.int64))
+            live = _live_of(ids, np.repeat(segs, n), excl)
+            ids, terms = ids[live], terms[live]
+        if required is None:
+            out = np.unique(ids)
+        elif not required <= set(terms):
+            out = np.empty(0, dtype=np.int64)
+        else:
             out = None
             for t in sorted(required):
-                out = sets[t] if out is None else np.intersect1d(out, sets[t], assume_unique=True)
+                t_ids = np.unique(ids[terms == t])
+                out = t_ids if out is None else np.intersect1d(out, t_ids, assume_unique=True)
                 if not len(out):
                     break
-        else:
-            out = np.unique(np.concatenate(list(sets.values())))
         return pd.DataFrame({"doc_id": out.astype(np.int64)})
 
     return match_group
@@ -184,7 +180,7 @@ def matching_doc_ids(
 def _doc_ids(index: InvertedIndex, cond, cfg: IndexConfig, fn) -> DataFrame:
     """(bucket, doc_id) of the blocks under ``cond``, matched per bucket
     by ``fn`` (``_match_bucket_factory``): doc_id streams only."""
-    sel = ["bucket", "term", "field", "doc_id_first", "doc_ids"]
+    sel = ["bucket", "term", "n", "doc_id_first", "doc_ids"]
     if "segment" in index.postings.columns:
         sel.append("segment")
     return (

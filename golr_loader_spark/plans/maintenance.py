@@ -54,7 +54,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from golr_loader_spark.config import PARQUET_CODEC, IndexConfig
-from golr_loader_spark.functions.codec import binary_stream, varint_decode
+from golr_loader_spark.functions.codec import (
+    binary_stream,
+    decode_doc_ids,
+    varint_decode,
+)
 from golr_loader_spark.plans.build_index import (
     NORMS_TERM,
     InvertedIndex,
@@ -195,9 +199,7 @@ def _compact_blocks(
 
     n = tbl.column("n").to_numpy().astype(np.int64)
     firsts = tbl.column("doc_id_first").to_numpy().astype(np.int64)
-    deltas = varint_decode(binary_stream(tbl.column("doc_ids"))[0]).astype(np.int64)
-    g = np.cumsum(deltas)
-    ids = g + np.repeat(firsts - g[np.cumsum(n) - n], n)
+    ids = decode_doc_ids(n, firsts, binary_stream(tbl.column("doc_ids"))[0])
     tfs = varint_decode(binary_stream(tbl.column("tfs"))[0]).astype(np.int64)
     blk_segs = tbl.column("segment").to_numpy().astype(np.int64)
     fields = tbl.column("field").to_numpy(zero_copy_only=False)

@@ -4,12 +4,15 @@ The distributed ``plans.bm25.search`` is the right tool for query
 SETS (one Spark job amortized over many queries), but a single
 interactive query pays ~1 s of job scheduling. ``LocalSearcher``
 serves the SAME persisted postings without launching Spark jobs at
-all: pyarrow dataset reads with a term predicate — the files are
-range-partitioned and sorted by term (plans.build_index.write_index /
-plans.manifest), so parquet row-group statistics prune the scan the
-same way Catalyst's PushedFilters do — then the exact same numpy
-scoring kernel as the distributed path. Results are identical by
-construction (same blocks, same weights, same float order).
+all: the postings files are range-partitioned and sorted by term
+(plans.build_index.write_index / plans.manifest), so a query reads
+exactly the row groups whose footer term bounds cover its terms
+(``_RowGroupIndex``, two bisections per file, opened once; a pyarrow
+dataset scan with a term predicate is the fallback for files without
+usable bounds), decodes each term's lists once into a cache, then runs
+the exact same numpy scoring kernel as the distributed path. Results
+are identical by construction (same blocks, same weights, same float
+order).
 
 This is the Solr-server analog of the reference's stack
 (GolrLoader.java:498-515 POSTs to a serving instance; here the
@@ -253,6 +256,8 @@ class LocalSearcher:
         self.cfg = cfg or IndexConfig.from_dict(conf)
         self._root = root
         self._facet_arrays = None
+        # the live universe (_all_doc_ids_local), memoized per open
+        self._all_ids_cache: set[int] | None = None
         # decoded-postings LRU (bm25.DecodedListCache): valid for this
         # searcher lifetime — refresh() re-runs __init__ and replaces
         # it along with the datasets and the tombstone mask
@@ -318,8 +323,14 @@ class LocalSearcher:
             agg[key] = agg.get(key, 0) + int(r["df"])
         return [{"term": t, "field": f, "df": d} for (t, f), d in agg.items()]
 
-    def _read_blocks(self, terms: list[str]) -> pd.DataFrame:
-        return self._read_rows(terms).to_pandas()
+    def _df_by_term(self, terms: list[str], fields) -> dict[str, int]:
+        """{term: df summed over ``fields``} for those of ``terms``
+        indexed in any of ``fields``."""
+        dfs: dict[str, int] = {}
+        for r in self._term_rows(terms):
+            if r["field"] in fields:
+                dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
+        return dfs
 
     # the block columns serving reads: BM25 scoring's, plus the
     # positional ``poss`` blobs only the phrase and span matchers decode
@@ -337,18 +348,16 @@ class LocalSearcher:
         "term", "field", "n", "doc_id_first", "doc_ids", "dls", "segment",
     ]
 
-    def _read_rows(
-        self, terms: list[str], columns: list[str] | None = None
-    ) -> pa.Table:
+    def _read_rows(self, terms: list[str], columns: list[str]) -> pa.Table:
         """The block rows of ``terms`` in the cfg fields (``columns`` of
-        them, all by default), from one row-group read (a dataset scan
-        on roots without usable footer stats)."""
+        them), from one row-group read (a dataset scan on roots without
+        usable footer stats)."""
         raw = self._rgix.read(terms, columns=columns)
         if raw is None:
             names = set(self.postings.schema.names)
             raw = self.postings.to_table(
                 filter=pc.field("term").isin(terms),
-                columns=None if columns is None else [c for c in columns if c in names],
+                columns=[c for c in columns if c in names],
             )
         mask = pc.and_(
             pc.is_in(raw["term"], value_set=pa.array(terms)),
@@ -789,10 +798,7 @@ class LocalSearcher:
             and abs(len(t) - len(q)) <= max_edits
             and _lev_le(q, t, max_edits)
         ]
-        dfs: dict[str, int] = {}
-        for r in self._term_rows(cand):
-            if r["field"] in self.cfg.fields:
-                dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
+        dfs = self._df_by_term(cand, self.cfg.fields)
         out = [(t, d) for t, d in dfs.items() if d >= min_df]
         out.sort(key=lambda x: (-x[1], x[0]))
         return out[:k]
@@ -813,10 +819,7 @@ class LocalSearcher:
         cand = self._vocab_terms()
         if prefix:
             cand = [t for t in cand if t.startswith(prefix)]
-        dfs: dict[str, int] = {}
-        for r in self._term_rows(cand):
-            if r["field"] in fields:
-                dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
+        dfs = self._df_by_term(cand, fields)
         out = [(t, d) for t, d in dfs.items() if d >= min_df]
         if sort == "index":
             out.sort(key=lambda x: x[0])
@@ -840,10 +843,7 @@ class LocalSearcher:
         if not text:
             return []
         tf = analyze_with_tf(text, self.cfg.fields[field][0], self.cfg.chain)
-        dfs: dict[str, int] = {}
-        for r in self._term_rows(sorted(tf)):
-            if r["field"] == field:
-                dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
+        dfs = self._df_by_term(sorted(tf), [field])
         return [(t, int(tf[t]), int(dfs.get(t, 0))) for t in sorted(tf)]
 
     def stats_field(
@@ -1018,13 +1018,10 @@ class LocalSearcher:
             text, self.cfg.fields[field][0], self.cfg.min_term_len,
             self.cfg.chain,
         )
-        df_map: dict[str, int] = {}
-        for r in self._term_rows(sorted(tf_map)):
-            if r["field"] == field:
-                df_map[r["term"]] = df_map.get(r["term"], 0) + int(r["df"])
         selected = select_interesting_terms(
-            tf_map, df_map, self.n_docs, max_query_terms, min_tf, min_df,
-            max_df, min_word_len, max_word_len, boost,
+            tf_map, self._df_by_term(sorted(tf_map), [field]), self.n_docs,
+            max_query_terms, min_tf, min_df, max_df, min_word_len,
+            max_word_len, boost,
         )
         qs = mlt_query_string(selected, field)
         if qs is None:
@@ -1181,14 +1178,9 @@ class LocalSearcher:
         words = analyze_query(query, query_analyzer(self.cfg), self.cfg.chain)
         if not words:
             return []
-        present = {
-            w
-            for w in words
-            if any(r["field"] in self.cfg.fields for r in self._term_rows([w]))
-        }
         cands = _collation_candidates(
             words,
-            present,
+            set(self._df_by_term(words, self.cfg.fields)),
             lambda w: [
                 t
                 for t, _df in self.suggest(
@@ -1358,9 +1350,8 @@ class LocalSearcher:
         union of the fields' norms doc ids, tombstone-masked. Memoized
         per searcher instance (invalidated with the searcher, like any
         Lucene reader-scoped cache)."""
-        cached = getattr(self, "_all_ids_cache", None)
-        if cached is not None:
-            return cached
+        if self._all_ids_cache is not None:
+            return self._all_ids_cache
         from golr_loader_spark.plans.bm25 import _live_of
 
         excl = _norm_excl(self.tombstones)
@@ -1423,7 +1414,7 @@ class LocalSearcher:
         else:
             t0 = node.text.lower()
             cand = [t for t in vocab if _lev_le(t0, t, node.max_edits)]
-        terms = {r["term"] for r in self._term_rows(cand) if r["field"] in fields}
+        terms = set(self._df_by_term(cand, fields))
         check_expansion(len(terms), max_expansions, _describe(node))
         return terms
 
@@ -1499,44 +1490,15 @@ class LocalSearcher:
     def _doc_tfdl(
         self, terms: list[str], doc_id: int
     ) -> dict[tuple[str, str], tuple[int, int]]:
-        """Point lookup: (tf, dl) per (term, field) for ONE doc —
-        reads only the given terms' blocks in the doc's own bucket,
-        tombstone-masked, with dl from the field's norms. Shared by
-        ``explain`` and ``explain_query``."""
-        import numpy as _np
-
-        from golr_loader_spark.functions.codec import varint_decode
-        from golr_loader_spark.plans.bm25 import _live_of
-        from golr_loader_spark.plans.build_index import norms_dl
-
+        """Point lookup: (tf, dl) per (term, field) for ONE doc, from
+        the decoded lists ``_bm25_lists`` keeps (tombstone-masked, cfg
+        fields only, dl from the field's norms). Shared by ``explain``
+        and ``explain_query``."""
         found: dict[tuple[str, str], tuple[int, int]] = {}
-        if not terms:
-            return found
-        blocks = self._read_blocks(terms)
-        if not len(blocks):
-            return found
-        shift = max(0, self.cfg.id_space_bits - self.cfg.bucket_bits)
-        bucket = int(_np.int64(doc_id) >> shift)
-        blocks = blocks[blocks["bucket"] == bucket]
-        excl = _norm_excl(self.tombstones)
-        for r in blocks.itertuples(index=False):
-            if not (r.doc_id_first <= doc_id):
-                continue
-            ids = _np.cumsum(
-                varint_decode(r.doc_ids).astype(_np.int64)
-            ) + _np.int64(r.doc_id_first)
-            i = int(_np.searchsorted(ids, doc_id))
-            if i >= len(ids) or ids[i] != doc_id:
-                continue
-            seg = _np.array([getattr(r, "segment", 0) or 0], dtype=_np.int64)
-            if excl is not None and not _live_of(ids[i : i + 1], seg, excl)[0]:
-                continue
-            tfs = varint_decode(r.tfs).astype(_np.int64)
-            dl = norms_dl(
-                self._norms, _np.array([r.field]), seg, _np.ones(1, _np.int64),
-                ids[i : i + 1],
-            )[0]
-            found[(r.term, r.field)] = (int(tfs[i]), int(dl))
+        for key, (ids, tfs, dls, *_bounds) in self._bm25_lists(terms).items():
+            hit = np.flatnonzero(ids == doc_id)
+            if len(hit):
+                found[key] = (int(tfs[hit[0]]), int(dls[hit[0]]))
         return found
 
     def explain(self, query: str, doc_id: int) -> dict:
@@ -1544,7 +1506,7 @@ class LocalSearcher:
         per-term score breakdown of ``doc_id`` for ``query`` — same
         fields and fold order as the distributed ``bm25.explain``,
         values identical by construction (same decoded postings, same
-        formula). The read prunes to the doc's own bucket."""
+        formula)."""
         terms = analyze_query(query, query_analyzer(self.cfg), self.cfg.chain)
         out: dict = {"doc_id": int(doc_id), "score": 0.0, "terms": []}
         if not terms:
@@ -1604,7 +1566,7 @@ class LocalSearcher:
         sorted by doc_id. Facet tables are docs × facet-fields rows —
         the serving-node analog of Lucene doc values; the distributed
         plans.facets.facet_counts is the path for corpus-scale tables."""
-        if getattr(self, "_facet_arrays", None) is not None:
+        if self._facet_arrays is not None:
             return self._facet_arrays
         import glob as _glob
         import numpy as _np
@@ -1658,34 +1620,26 @@ class LocalSearcher:
         )
         return self._facet_arrays
 
-    def matching_ids(self, query: str, mode: str = "or"):
-        """All doc_ids matching the analyzed query (no scores) — the
-        decode-only membership read, mirroring the distributed
-        plans.facets.matching_doc_ids semantics (incl. tombstone
-        masking and strict conjunctive empties)."""
-        import numpy as _np
-
-        from golr_loader_spark.plans.facets import _match_bucket_factory
-
+    def matching_ids(self, query: str, mode: str = "or") -> np.ndarray:
+        """All doc_ids matching the analyzed query (no scores), sorted —
+        the union of each term's decoded lists (``_bm25_lists``, so
+        tombstone-masked and limited to the cfg fields), intersected
+        over the terms for ``mode="and"``: the serving twin of
+        ``plans.facets.matching_doc_ids``, strict conjunctive empties
+        included (a term with no live list empties the result)."""
         terms = analyze_query(query, query_analyzer(self.cfg), self.cfg.chain)
-        if not terms:
-            return _np.empty(0, dtype=_np.int64)
-        required = set(terms) if mode == "and" else None
-        if required is not None:
-            present = {r["term"] for r in self._term_rows(terms)
-                       if r["field"] in self.cfg.fields}
-            if not required <= present:
-                return _np.empty(0, dtype=_np.int64)
-        blocks = self._read_blocks(terms)
-        if not len(blocks):
-            return _np.empty(0, dtype=_np.int64)
-        # the matcher unions per-term membership across ALL buckets
-        # before intersecting terms, so one call over the whole block
-        # set is exactly the per-bucket union of the distributed path
-        fn = _match_bucket_factory(
-            {t: list(self.cfg.fields) for t in terms}, required, self.tombstones
-        )
-        return fn(blocks)["doc_id"].to_numpy(_np.int64)
+        per_term: dict[str, list[np.ndarray]] = {t: [] for t in terms}
+        for (t, _f), lst in self._bm25_lists(terms).items():
+            per_term[t].append(lst[0])
+        sets = [np.unique(np.concatenate(a)) for a in per_term.values() if a]
+        if not sets or (mode == "and" and len(sets) < len(terms)):
+            return np.empty(0, dtype=np.int64)
+        if mode != "and":
+            return np.unique(np.concatenate(sets))
+        out = sets[0]
+        for ids in sets[1:]:
+            out = np.intersect1d(out, ids, assume_unique=True)
+        return out
 
     # ------------------------------------------------ {!join} parser
 

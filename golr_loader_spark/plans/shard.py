@@ -459,12 +459,9 @@ class ShardedSearcher:
                 raise ValueError(f"doc_id {doc_id} not found in stored")
             text = stored[int(doc_id)].get(field) or ""
         tf_map = seed_term_freqs(text, cfg.fields[field][0], cfg.min_term_len, cfg.chain)
-        df_map: dict[str, int] = {}
-        for r in s0._term_rows(sorted(tf_map)):
-            if r["field"] == field:
-                df_map[r["term"]] = df_map.get(r["term"], 0) + int(r["df"])
         selected = select_interesting_terms(
-            tf_map, df_map, s0.n_docs, **selection
+            tf_map, s0._df_by_term(sorted(tf_map), [field]), s0.n_docs,
+            **selection,
         )
         qs = mlt_query_string(selected, field)
         if qs is None:
@@ -865,14 +862,9 @@ class ShardedSearcher:
         words = analyze_query(query, query_analyzer(self.cfg), self.cfg.chain)
         if not words:
             return []
-        present = {
-            w
-            for w in words
-            if any(r["field"] in self.cfg.fields for r in s0._term_rows([w]))
-        }
         cands = _collation_candidates(
             words,
-            present,
+            set(s0._df_by_term(words, self.cfg.fields)),
             lambda w: [
                 t
                 for t, _df in s0.suggest(

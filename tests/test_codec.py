@@ -6,7 +6,10 @@ import numpy as np
 import pytest
 
 from golr_loader_spark.functions.codec import (
+    binary_from_segments,
+    binary_stream,
     decode_block,
+    decode_doc_ids,
     encode_block,
     varint_decode,
     varint_encode,
@@ -61,3 +64,22 @@ def test_block_single_posting():
     first, idbuf, tfbuf, max_tf = encode_block(np.array([-42]), np.array([3]))
     rids, rtfs = decode_block(first, idbuf, tfbuf)
     assert rids.tolist() == [-42] and rtfs.tolist() == [3]
+
+
+def test_decode_doc_ids_over_many_blocks():
+    """The engine's many-block decoder, on bytes and on the uint8 view
+    of an Arrow binary column, equals the per-block round trip."""
+    rng = np.random.default_rng(3)
+    ids = np.unique(rng.integers(-(2**62), 2**62, size=700, dtype=np.int64))
+    n = np.array([1, 128, 5, 300, len(ids) - 434], dtype=np.int64)
+    blocks = np.split(ids, np.cumsum(n)[:-1])
+    enc = [encode_block(b, np.ones(len(b), dtype=np.int64)) for b in blocks]
+    firsts = np.array([e[0] for e in enc], dtype=np.int64)
+    stream = b"".join(e[1] for e in enc)
+    assert np.array_equal(decode_doc_ids(n, firsts, stream), ids)
+    col = binary_from_segments(
+        np.frombuffer(stream, dtype=np.uint8), np.array([len(e[1]) for e in enc])
+    )
+    assert np.array_equal(decode_doc_ids(n, firsts, binary_stream(col)[0]), ids)
+    empty = np.empty(0, dtype=np.int64)
+    assert len(decode_doc_ids(empty, empty, b"")) == 0

@@ -277,6 +277,8 @@ def test_term_dictionary_sums_df_on_an_upserted_root(spark, base, tmp_path):
             "wildcard": s.search_wildcard("w0?5*", k=10),
             "fuzzy": s.search_fuzzy("w0150", max_edits=1),
             "mlt": s.more_like_this(doc_id=11),
+            "suggest": s.suggest("w015x", k=8),
+            "collate": s.collate("w0007 w015x"),
         }
     assert ls.got == scan.got
 

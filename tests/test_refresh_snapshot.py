@@ -59,6 +59,19 @@ def test_refresh_picks_up_delete_and_fast_upsert(spark, cfg, root):
     assert 5 in _hits(ls, "replacement")
 
 
+def test_refresh_renews_the_live_universe(spark, cfg, root):
+    """A pure-negative fq keeps the live universe minus its matches;
+    the universe is read once per open, so refresh() must renew it."""
+    ls = LocalSearcher(root, cfg)
+    assert 3 not in {d for d, _s in ls.query("common", k=50, fq="-uid3")}
+    upsert_docs_fast(spark, root, _docs(spark, [(40, "common newcomer")]), cfg)
+    ls.refresh()
+    assert 40 in _hits(ls, "common")
+    got = ls.query("common", k=50, fq="-uid3")
+    assert 40 in {d for d, _s in got}
+    assert got == LocalSearcher(root, cfg).query("common", k=50, fq="-uid3")
+
+
 def test_refresh_noop_keeps_results(spark, cfg, root):
     ls = LocalSearcher(root, cfg)
     before = ls.search("common", k=10)

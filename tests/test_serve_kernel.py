@@ -16,7 +16,14 @@ core per bucket.
 * parity: served ``search_boolean`` with MUST_NOT and ``search_prefix``
   equal the Spark plans on the same roots;
 * cache scope: a cold query of n terms adds at most n BM25 entries to
-  the decoded-list cache.
+  the decoded-list cache;
+* live-root goldens: on the fast-upserted and deleted root, the
+  membership sets (``matching_ids`` / ``matching_doc_ids``), the live
+  universe, ``explain`` and ``explain_query`` of untouched, superseded,
+  deleted and new docs, and a query whose prohibited term is applied
+  after a join (``lucene._vet`` on both faces). They were recorded
+  from the per-block matcher and explain reads that serving used before
+  it read the decoded lists.
 """
 
 from __future__ import annotations
@@ -63,6 +70,16 @@ def _id_bits(n: int) -> int:
     return max(2, (n - 1).bit_length())
 
 
+def _mutated() -> tuple[list[int], list[int]]:
+    """(updated ids, deleted ids) of the live root."""
+    chosen = np.random.RandomState(11).choice(
+        N, size=UPSERTS // 2 + DELETES, replace=False
+    )
+    return [int(i) for i in chosen[: UPSERTS // 2]], [
+        int(i) for i in chosen[UPSERTS // 2 :]
+    ]
+
+
 def _build(spark, docs, cfg, root: str) -> str:
     write_index(build_index(docs, cfg), root, term_partitions=4, documents=docs)
     return root
@@ -80,9 +97,7 @@ def roots(spark, tmp_path_factory):
 
     cfg = IndexConfig(bucket_bits=1, id_space_bits=_id_bits(N + UPSERTS // 2))
     root = _build(spark, dense, cfg, str(base / "b1"))
-    rng = np.random.RandomState(11)
-    chosen = rng.choice(N, size=UPSERTS // 2 + DELETES, replace=False)
-    upd, dele = chosen[: UPSERTS // 2], [int(i) for i in chosen[UPSERTS // 2 :]]
+    upd, dele = _mutated()
     # rows past N carry new content: the first half lands on existing
     # ids (updates), the rest keep their own (new) ids
     ids = {N + j: int(upd[j]) for j in range(UPSERTS // 2)}
@@ -180,3 +195,92 @@ def test_cold_query_adds_one_entry_per_term(roots):
         ls.search(q, k=10)
         n_terms = len(set(analyze_query(q, query_analyzer(cfg), cfg.chain)))
         assert len(ls._list_cache._d) - before <= n_terms, q
+
+
+# membership, explain and vetted-join answers on the live root (two
+# fields, superseded and deleted copies), pinned before serving match
+# and explain moved onto the decoded lists
+MATCH_QUERIES = [
+    ("def return", "or"), ("def return", "and"), ("util main", "or"),
+    ("util main", "and"), ("return index scan", "or"), ("def zzabsent", "and"),
+]
+# a SHOULD group full-outer joins the term result, so the prohibited
+# term is applied to docs the scorer never saw (``lucene._vet``)
+VET_QUERY = "def (return OR util) -main"
+EXPLAIN_QUERIES = ["def return util", VET_QUERY, "+return +def path"]
+# the serving and Spark faces share the matching, universe and vetted
+# query digests
+LIVE_GOLDENS = {
+    "matching": "34cc40e5af2616320c4a0382baa5985560dc7fe6d87314179062a9265ff1ad0a",
+    "universe": "39bccf21bd1cb587283bc2293da160b9a5448ed8ce97f59307bd7613ecff8441",
+    "explain": "12f181f081a6cb313ef531a749e65143fbb387960f59e77feccd979af7cd35db",
+    "explain_query": "3107c3d128954001b0ac1a63bb11cfc5282c6c88e52581e2dfdebddabc185e16",
+    "vet_query": "25c9808f2c57d1df5df73fb7ec00c5b1cf4e73c56d8282ad92c651d407f3eeea",
+}
+# every match of VET_QUERY: more than the root's docs
+VET_K = N + UPSERTS
+
+
+def _explained_docs() -> list[int]:
+    """Two untouched docs, every updated (superseded) and deleted doc,
+    and two new ids."""
+    upd, dele = _mutated()
+    live = [i for i in range(N) if i not in upd and i not in dele][:2]
+    return live + upd + dele + [N + UPSERTS // 2, N + UPSERTS // 2 + 1]
+
+
+def _sha(obj) -> str:
+    return hashlib.sha256(repr(obj).encode()).hexdigest()
+
+
+def test_live_root_match_and_explain_goldens(roots):
+    root, cfg = roots["dense_b1_live"]
+    ls = LocalSearcher(root, cfg)
+    docs = _explained_docs()
+    got = {
+        "matching": _sha(
+            [ls.matching_ids(q, mode).tolist() for q, mode in MATCH_QUERIES]
+        ),
+        "universe": _sha(sorted(ls._all_doc_ids_local())),
+        "explain": _sha(
+            [ls.explain(q, d) for q in EXPLAIN_QUERIES for d in docs]
+        ),
+        "explain_query": _sha(
+            [ls.explain_query(q, d) for q in EXPLAIN_QUERIES for d in docs]
+        ),
+        "vet_query": _digest([ls.query(VET_QUERY, k=VET_K)]),
+    }
+    assert got == {k: LIVE_GOLDENS[k] for k in got}
+
+
+def test_live_root_spark_match_goldens(spark, roots):
+    from golr_loader_spark.plans.facets import all_doc_ids, matching_doc_ids
+    from golr_loader_spark.plans.lucene import search_lucene
+
+    root, cfg = roots["dense_b1_live"]
+    ix = read_index(spark, root, cfg)
+    excl = load_tombstones(spark, root)
+    ls = LocalSearcher(root, cfg)
+
+    def ids(df) -> list[int]:
+        return sorted(r["doc_id"] for r in df.collect())
+
+    matching = []
+    for q, mode in MATCH_QUERIES:
+        got = ids(matching_doc_ids(ix, q, cfg=cfg, mode=mode, exclude_ids=excl))
+        assert got == ls.matching_ids(q, mode).tolist(), (q, mode)
+        matching.append(got)
+    universe = ids(all_doc_ids(ix, cfg=cfg, exclude_ids=excl))
+    assert universe == sorted(ls._all_doc_ids_local())
+    hits = [
+        (r["doc_id"], r["score"])
+        for r in search_lucene(
+            ix, VET_QUERY, k=VET_K, cfg=cfg, exclude_ids=excl
+        ).collect()
+    ]
+    got = {
+        "matching": _sha(matching),
+        "universe": _sha(universe),
+        "vet_query": _digest([hits]),
+    }
+    assert got == {k: LIVE_GOLDENS[k] for k in got}

@@ -194,6 +194,27 @@ def test_matching_ids_parity(pair):
         assert np.array_equal(a, b), mode
 
 
+def test_serving_match_and_explain_build_no_pandas(roots, cfg, monkeypatch):
+    """Serving membership, explain and stats read the decoded lists and
+    Arrow tables only: no pandas object is built."""
+    import pandas as pd
+
+    ls = LocalSearcher(roots[0], cfg)
+
+    def built(*_a, **_kw):
+        raise AssertionError("serving built a pandas object")
+
+    monkeypatch.setattr(pd, "DataFrame", built)
+    monkeypatch.setattr(pd, "Series", built)
+    q = "def return"
+    ids = ls.matching_ids(q, mode="and")
+    assert len(ids) and len(ls.matching_ids(q)) >= len(ids)
+    d = int(ids[0])
+    assert ls.explain(q, d)["terms"]
+    assert ls.explain_query("(def OR util) return", d)["score"] > 0
+    assert ls.stats_field(q, "content_len")["n"] == len(ls.matching_ids(q))
+
+
 def test_parallel_scatter_optin_identical(roots, cfg):
     """parallel=True (process-per-shard scatter since round 5; see
     test_shard_process.py for the full surface) is an opt-in transport
