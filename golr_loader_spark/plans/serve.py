@@ -1516,7 +1516,7 @@ class LocalSearcher:
         total = 0.0
         for (t, f) in sorted(found, key=lambda k: (k[1], k[0])):
             i = idf.get((t, f))
-            if i is None or f not in self.cfg.fields:
+            if i is None:
                 continue
             tf, dl = found[(t, f)]
             wt = (self.cfg.fields[f][1] * i) * (self.cfg.k1 + 1.0)
@@ -1541,7 +1541,7 @@ class LocalSearcher:
         """Serving-path full-query explanation (Solr debugQuery over
         every clause type): ``lucene._explain_plan`` — the explain of
         both faces — over the plan ``query`` runs, with this searcher's
-        point reads (``_doc_tfdl``, ``search_phrase``). Same dict as
+        per-doc lookups (``_doc_tfdl``, ``search_phrase``). Same dict as
         ``lucene.explain_lucene``; totals reproduce
         ``LocalSearcher.query``'s score for the doc."""
         from golr_loader_spark.plans.lucene import _explain_plan, parse_lucene
